@@ -15,60 +15,81 @@ import org.apache.spark.storage.StorageLevel
   * deterministic, unlike the reference's per-run random uuid
   * (code/recipes.py:2040-2048), and therefore oracle-checkable.
   *
-  * Scale: each round is one shuffle on the edge key; rounds = graph
-  * diameter (entity-resolution "clique" graphs are shallow — near-dup
-  * clusters have tiny diameter, so 3-6 rounds in practice). Labels are
-  * persisted and localCheckpoint'ed each round to truncate lineage.
-  * For adversarial high-diameter graphs, swap in the large-star/small-star
-  * variant (Kiveris et al., "Connected Components in MapReduce and
-  * Beyond") — same DataFrame skeleton.
+  * Shape: the symmetrized edge list is clustered on its source once and
+  * persisted. Round 1 is the SEED: the aggregate that materializes the
+  * edges already computes min(self, neighbours), so no round starts from
+  * identity labels. Every later round is ONE propagation action — the
+  * labels meet the edges on the edges' own clustering key, the
+  * neighbour labels regroup on the node (one shuffle) — that carries the
+  * old label beside the new one and localCheckpoints the result; the
+  * fixpoint test is then a narrow scan of that checkpoint for a changed
+  * row, not a second join. Labels settle within diameter-many rounds
+  * (one more confirms the fixpoint), and entity-resolution "clique"
+  * graphs are shallow — near-dup clusters have tiny diameter, so 3-6
+  * rounds in practice. For adversarial high-diameter graphs use
+  * [[runStarContraction]] (Kiveris et al., "Connected Components in
+  * MapReduce and Beyond"), O(log n) rounds.
   */
 object ConnectedComponents {
 
-  /** @param edges two-column DataFrame (src, dst) — any numeric/string ids
+  /** @param edges   two-column DataFrame (src, dst) — any numeric/string ids
+    * @param maxIter rounds allowed, the seed round included; a graph whose
+    *                labels still change in round `maxIter` fails loudly
     * @return DataFrame (node, component) where component = min node id of
     *         the component (same type as the ids)
     */
   def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    require(maxIter >= 1, s"maxIter must be at least 1 (the seed round), got $maxIter")
     val Array(srcC, dstC) = edges.columns.take(2)
-    // symmetrize + distinct once
+    // symmetrize + distinct once, clustered on src: the seed aggregate
+    // reads it in place, and every round joins the labels on that key
     val sym = edges.select(col(srcC).as("src"), col(dstC).as("dst"))
       .union(edges.select(col(dstC).as("src"), col(srcC).as("dst")))
+      .repartition(col("src"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("comp", col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count() // materialize
-
-    var converged = false
-    var iter = 0
+    // round 1 (seed): min(self, neighbours); the old label is the node
+    // itself, so the seed "changed" a node iff it has a smaller neighbour
+    var labels = sym.groupBy("src")
+      .agg(least(col("src"), min("dst")).as("comp"))
+      .select(col("src").as("node"), col("comp"), col("src").as("old"))
+      .localCheckpoint(eager = true)
+    var converged = unchanged(labels)
+    var iter = 1
+    val noOld = lit(null).cast(labels.schema("old").dataType)
     while (!converged && iter < maxIter) {
-      // propagate: each node takes min(own, neighbors') label
-      val next = sym.join(labels, sym("dst") === labels("node"))
-        .select(sym("src").as("node"), col("comp"))
-        .union(labels)
-        .groupBy("node").agg(min("comp").as("comp"))
+      // propagate: each node takes min(own, neighbors') label. sym is
+      // symmetric, so joining on src and emitting dst reaches the same
+      // (node, neighbour label) rows as joining on dst — and src is the
+      // key the persisted edges are clustered on, so only labels move
+      labels = sym.join(labels, sym("src") === labels("node"))
+        .select(sym("dst").as("node"), labels("comp"), noOld.as("old"))
+        .union(labels.select(col("node"), col("comp"), col("comp").as("old")))
+        .groupBy("node").agg(min("comp").as("comp"), max("old").as("old"))
         .localCheckpoint(eager = true)
-      val changed = next.alias("n")
-        .join(labels.alias("o"), col("n.node") === col("o.node"))
-        .filter(col("n.comp") =!= col("o.comp"))
-        .limit(1).count()
-      labels.unpersist()
-      labels = next
-      converged = changed == 0
+      converged = unchanged(labels)
       iter += 1
     }
     sym.unpersist()
     // fail LOUD on non-convergence: partial labels would silently split
     // one component into several (min-label moves one hop per round, so
-    // diameter > maxIter graphs need runStarContraction instead)
+    // diameter >= maxIter graphs need runStarContraction instead)
     require(converged,
       s"connected components did not converge in $maxIter rounds — " +
         "graph diameter exceeds maxIter; raise it or use runStarContraction")
-    labels
+    labels.select("node", "comp")
   }
+
+  /** The fixpoint test: one narrow job over the round's checkpoint that
+    * stops each partition at its first changed label. A NULL node never
+    * equi-joins its neighbours, so its label is not part of the fixpoint
+    * (it follows theirs). */
+  private def unchanged(labels: DataFrame): Boolean =
+    !labels.filter(col("node").isNotNull && col("comp") =!= col("old"))
+      .queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(rows.hasNext))
+      .collect().contains(true)
 
   /** Alternating large-star/small-star contraction (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond") — O(log n) rounds

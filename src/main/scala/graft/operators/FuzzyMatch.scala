@@ -20,6 +20,15 @@ import org.apache.spark.sql.functions._
   *      finds walking a sorted vocabulary (distance 0 preferred, then 1,
   *      code/recipes.py:2200-2204).
   *
+  * Steps 1-3 are [[vocabPairs]], the ONE fuzzy expansion every matcher
+  * shares (bestMatch here, MatchJoin.topK and MatchQuery's fuzzy
+  * clauses): it runs over the term dictionary — distinct query tokens ×
+  * distinct vocabulary tokens — as Lucene's FuzzyQuery expands a term
+  * against the dictionary before it reads any postings. The search joins
+  * fan the resulting (query token, vocabulary token) pairs out to their
+  * rows and postings afterwards, so the variant blow-up is paid once per
+  * distinct token, never per posting.
+  *
   * Everything is DataFrame ops: at 100 TB the variant join shuffles on
   * short variant strings and AQE handles skew; no per-executor automaton
   * state is needed.
@@ -27,10 +36,10 @@ import org.apache.spark.sql.functions._
 object FuzzyMatch {
 
   /** SQL expression producing the distinct delete-≤d variant array of
-    * column `c`. Uses only codegen'd builtins. SHARED by every
-    * deletion-blocking site (FuzzyMatch, MatchJoin, MatchQuery): the
-    * blocking invariant — distance-d pairs share a delete-≤d variant —
-    * lives in exactly one expression. */
+    * column `c`. Uses only codegen'd builtins; its one engine caller is
+    * [[vocabPairs]], so the blocking invariant — distance-d pairs share
+    * a delete-≤d variant — lives in exactly one expression (package-
+    * visible for the recall property spec). */
   private[operators] def deleteVariants(cn: String, d: Int): org.apache.spark.sql.Column = {
     require(d >= 1 && d <= 2, s"maxDist must be 1 or 2, got $d")
     val self = array(col(cn))
@@ -73,6 +82,35 @@ object FuzzyMatch {
         (-col("__best.__negsim")).as("__sim"))
   }
 
+  /** The fuzzy expansion over the term dictionary: every (query token,
+    * vocabulary token) pair within edit distance `maxDist`, found by ONE
+    * delete-variant meet over the two token sets (steps 1-3 above).
+    *
+    * @param queries single-column DataFrame `__q` (distinct tokens)
+    * @param vocab   DataFrame keyed by the distinct token column `__w`;
+    *                its other columns are a per-term payload (a search
+    *                join's IDF weight — what a term dictionary stores
+    *                beside each term) that rides along with every pair
+    * @return distinct (`__q`, `__w`, `__dist`, payload…) rows, `__dist`
+    *         ≤ maxDist
+    */
+  def vocabPairs(
+      queries: DataFrame,
+      vocab: DataFrame,
+      maxDist: Int,
+      broadcastVocab: Boolean = false): DataFrame = {
+    val qv = queries.select(col("__q"), explode(deleteVariants("__q", maxDist)).as("__v"))
+    val wvRaw = vocab.select(col("*"), explode(deleteVariants("__w", maxDist)).as("__v"))
+    val wv = if (broadcastVocab) broadcast(wvRaw) else wvRaw
+    // verify BEFORE the distinct: pairs sharing several variants (every
+    // exact pair shares all of them) collapse after the cheap filter
+    qv.join(wv, "__v")
+      .withColumn("__dist", levenshtein(col("__q"), col("__w")))
+      .filter(col("__dist") <= maxDist)
+      .drop("__v")
+      .distinct()
+  }
+
   /** Best fuzzy match of each query against the vocabulary.
     *
     * @param queries single-column DataFrame `__q` (distinct, non-null)
@@ -84,21 +122,11 @@ object FuzzyMatch {
       queries: DataFrame,
       vocab: DataFrame,
       maxDist: Int = 1,
-      broadcastVocab: Boolean = true): DataFrame = {
-
-    val qv = queries.select(col("__q"), explode(deleteVariants("__q", maxDist)).as("__v"))
-    val wvRaw = vocab.select(col("__w"), explode(deleteVariants("__w", maxDist)).as("__v"))
-    val wv = if (broadcastVocab) broadcast(wvRaw) else wvRaw
-
-    qv.join(wv, "__v")
-      .select(col("__q"), col("__w"))
-      .distinct()
-      .withColumn("__dist", levenshtein(col("__q"), col("__w")))
-      .filter(col("__dist") <= maxDist)
+      broadcastVocab: Boolean = true): DataFrame =
+    vocabPairs(queries, vocab, maxDist, broadcastVocab)
       // winner = min (dist, word) — lexicographic tie-break like the
       // sorted-vocab automaton walk
       .groupBy(col("__q"))
       .agg(min(struct(col("__dist"), col("__w"))).as("__best"))
       .select(col("__q"), col("__best.__w").as("__match"), col("__best.__dist").as("__dist"))
-  }
 }

@@ -12,9 +12,12 @@ import org.apache.spark.sql.expressions.Window
   * Design (SURVEY.md §2.4.3): instead of per-row network searches against
   * an ES index, build the "index" as DataFrames —
   *   1. tokenize the right side into postings (token → doc),
-  *   2. candidate generation = explode left tokens (+ optional fuzzy
-  *      delete-variants for edit-distance-1 recall, mirroring
-  *      `fuzziness: 1`), equi-join the postings, one shuffle on token,
+  *   2. candidate generation = explode left tokens, equi-join the
+  *      postings, one shuffle on token. Fuzzy mode (edit-distance-1
+  *      recall, mirroring `fuzziness: 1`) first expands each distinct
+  *      query token over the term dictionary — the corpus vocabulary,
+  *      as Lucene's FuzzyQuery does (FuzzyMatch.vocabPairs) — and only
+  *      then reads postings, so no posting is ever variant-exploded,
   *   3. score candidates by IDF-weighted token overlap (deterministic;
   *      ES BM25 values are NOT reproduced — the reference's own pipeline
   *      re-scores from raw fields downstream and only thresholds the
@@ -56,7 +59,7 @@ object MatchJoin {
     * @param k             hits per left row (reference default size=10)
     * @param keepUnmatched keep left rows with no hit (hit cols null)
     * @param fuzzy         also match tokens at edit distance 1
-    *                      (delete-variant blocking like FuzzyMatch)
+    *                      (FuzzyMatch.vocabPairs over the vocabulary)
     * @param maxDocFreq    drop tokens appearing in more right docs than
     *                      this (0 = no cap) — skew guard at scale
     * @param scoring       "idf" (reference contract: candidate recall,
@@ -127,53 +130,49 @@ object MatchJoin {
           log(lit(1.0) + (col("__n") - col("__df") + 0.5) / (col("__df") + 0.5)))
       .select("__tok", "__idf", "__avgdl")
 
-    // ---- left tokens (+ fuzzy variants at distance ≤1)
+    // ---- left tokens
     // distinct: left ids need not be unique rows (YAML `match` steps key
     // by content-derived ids, so duplicate rows can share an id) —
     // without it a duplicated row's tokens are emitted twice and its
-    // hit_score doubles (same guard MatchQuery carries)
+    // hit_score doubles (same guard MatchQuery carries). Clustered on
+    // the token: both the exact postings join and the fuzzy fan-out read
+    // it in place.
     val qtokBase = left.select(col(leftId).as("__lid"),
       explode(array_distinct(col(leftTokens))).as("__qtok"))
+      .repartition(col("__qtok"))
       .distinct()
+    // shuffle-hash pinned on purpose: Catalyst's size estimate for an
+    // exploded postings table ignores row multiplication, so the static
+    // planner can broadcast a "small-looking" postings side that is
+    // really GBs (AQE cannot demote a statically planned broadcast); and
+    // without the hint preferSortMergeJoin adds a full sort of the
+    // largest intermediate. ~1s slower at sf0.1 than planner-chosen
+    // broadcast, but safe at any scale.
     val cand0 =
-      if (!fuzzy) {
-        // shuffle-hash pinned on purpose: Catalyst's size estimate for
-        // an exploded postings table ignores row multiplication, so the
-        // static planner can broadcast a "small-looking" postings side
-        // that is really GBs (AQE cannot demote a statically planned
-        // broadcast); and without the hint preferSortMergeJoin adds a
-        // full sort of the largest intermediate. ~1s slower at sf0.1
-        // than planner-chosen broadcast, but safe at any scale.
+      if (!fuzzy)
         // IDF rides the postings side (vocab-sized broadcast onto the
         // postings table) so the candidate stream — orders of magnitude
-        // larger than postings — needs no second join pass.
+        // larger than postings — needs no second join pass
         qtokBase.withColumn("__tok", col("__qtok"))
           .join(postings.join(broadcast(idf), Seq("__tok")).hint("shuffle_hash"),
             Seq("__tok"))
-      } else {
-        // delete-variant meet: qtok and tok within edit distance 1 share
-        // a delete-≤1 variant (the ONE shared FuzzyMatch expression);
-        // verify with true levenshtein
-        val qv = qtokBase.select(col("__lid"), col("__qtok"),
-          explode(FuzzyMatch.deleteVariants("__qtok", 1)).as("__v"))
-        val pv = postings.select(col("__rid"), col("__tok"),
-          explode(FuzzyMatch.deleteVariants("__tok", 1)).as("__v"))
-        // dedup on (lid, rid, tok): one doc token counts ONCE per left
-        // row even when several query tokens (or several delete
-        // variants) reach it — keeping __qtok here would double-count
-        // its IDF after the projection below
-        // the fuzzy path must dedup on (lid, rid, tok) BEFORE attaching
-        // IDF (several variants can reach the same token), so the idf
-        // join stays after the distinct here
-        qv.join(pv, Seq("__v"))
-          .filter(levenshtein(col("__qtok"), col("__tok")) <= 1)
-          .select("__lid", "__tok", "__rid").distinct()
-          // tf/dl were dropped before the variant meet (several variants
-          // reach the same token — carrying them through would multiply
-          // rows before the distinct); re-attach from postings now that
-          // (lid, rid, tok) is unique
-          .join(postings, Seq("__rid", "__tok"))
-          .join(broadcast(idf), Seq("__tok"))
+      else {
+        // fuzzy expansion over the term dictionary: ONE delete-variant
+        // meet of the distinct query tokens × the IDF table (the corpus
+        // vocabulary, each term carrying its weight), fanned out to the
+        // left rows. The (lid, tok) distinct counts a doc token ONCE per
+        // left row even when several query tokens reach it; it runs
+        // under the token clustering the postings join needs anyway, and
+        // that join comes after it, so duplicate right ids keep their
+        // multiplicity, as in the exact branch.
+        val pairs = FuzzyMatch.vocabPairs(
+          qtokBase.select(col("__qtok").as("__q")).distinct(),
+          idf.withColumnRenamed("__tok", "__w"), maxDist = 1)
+        qtokBase.join(pairs, col("__qtok") === col("__q"))
+          .select(col("__lid"), col("__w").as("__tok"), col("__idf"), col("__avgdl"))
+          .repartition(col("__tok"))
+          .distinct()
+          .join(postings.hint("shuffle_hash"), Seq("__tok"))
       }
 
     // ---- score: sum of per-token weights (each left token counts once
@@ -182,9 +181,11 @@ object MatchJoin {
     // quantized to 1e-4 integer units — every input (idf, tf, dl,
     // avgdl) is fixed per row, so the floor is order-independent and
     // the integer sum stays bit-deterministic across partitionings.
-    // Non-fuzzy triples are already unique (both token sets are
-    // array_distinct'ed before exploding) — the extra distinct would be
-    // a pure-overhead shuffle; the fuzzy path dedups in cand0 itself.
+    // (lid, tok) is unique in both branches (the exact token sets are
+    // array_distinct'ed before exploding; the fuzzy stream dedups before
+    // its postings join), so no (lid, tok, rid) distinct — and no
+    // exchange on it — is needed: the __lid exchange below is the only
+    // one between the postings join and the top-K windows.
     // the two k1/b products fold in Scala; the oracle's SQL spells the
     // same folds (1.2*(1-0.75), 1.2*0.75) so both engines hit identical
     // doubles in identical operation order

@@ -78,8 +78,8 @@ object MatchQuery {
       mOk && (sCnt >= lit(msm))
   }
 
-  // delete-variant blocking rides the ONE shared expression
-  // (FuzzyMatch.deleteVariants) so the recall invariant can't drift
+  // fuzzy clauses expand over the term dictionary with the ONE shared
+  // helper (FuzzyMatch.vocabPairs) so the recall invariant can't drift
   // between the three matchers
 
   def run(left: DataFrame, right: DataFrame, spec: Spec,
@@ -140,11 +140,13 @@ object MatchQuery {
     // distinct: left ids need not be unique rows (the YAML template
     // join keys by content hash, so duplicate rows share an id) —
     // without it a duplicated row's tokens are emitted twice and its
-    // hit_score doubles
+    // hit_score doubles. Clustered on the token: both the exact postings
+    // join and a fuzzy clause's fan-out read it in place.
     def qtokFor(leftTokens: String): DataFrame =
       qtokCache.getOrElseUpdate(leftTokens,
         left.select(col(leftId).as("__lid"),
           explode(array_distinct(col(leftTokens))).as("__qtok"))
+          .repartition(col("__qtok"))
           .distinct())
 
     // per-leaf candidate scores (lid, rid, leafIdx, score)
@@ -152,10 +154,10 @@ object MatchQuery {
       val (postings, dfCounts) = postingsFor(cl.rightTokens, cl.firstPosition)
       val idf = dfCounts
         .crossJoin(nDocs)
-        .withColumn("__w",
+        .withColumn("__idf",
           floor((log((col("__n") + 1) / (col("__df") + 1)) + 1) * 10000 * cl.boost)
             .cast("long"))
-        .select("__tok", "__w")
+        .select("__tok", "__idf")
       val qtok = qtokFor(cl.leftTokens)
       val cand =
         if (cl.fuzziness <= 0)
@@ -165,21 +167,28 @@ object MatchQuery {
           qtok.withColumn("__tok", col("__qtok"))
             .join(postings.hint("shuffle_hash"), Seq("__tok"))
             .select("__lid", "__rid", "__tok")
+            .join(broadcast(idf), Seq("__tok"))
         else {
           // blocking depth matches the clause's fuzziness (ES caps at 2):
           // delete-1 variants alone would silently miss most distance-2
-          // pairs while the levenshtein filter admits them
-          val qv = qtok.select(col("__lid"), col("__qtok"),
-            explode(FuzzyMatch.deleteVariants("__qtok", cl.fuzziness)).as("__v"))
-          val pv = postings.select(col("__rid"), col("__tok"),
-            explode(FuzzyMatch.deleteVariants("__tok", cl.fuzziness)).as("__v"))
-          qv.join(pv, Seq("__v"))
-            .filter(levenshtein(col("__qtok"), col("__tok")) <= cl.fuzziness)
-            .select("__lid", "__rid", "__tok").distinct()
+          // pairs while the levenshtein filter admits them. The meet runs
+          // over distinct query tokens × the clause's IDF table (the
+          // field vocabulary, each term carrying its weight); the pairs
+          // fan out to the left rows and, through the postings, to the
+          // docs. The (lid, tok) stream moves once, onto the token
+          // clustering the postings join needs, and the (lid, rid, tok)
+          // dedup runs in place after it.
+          val pairs = FuzzyMatch.vocabPairs(
+            qtok.select(col("__qtok").as("__q")).distinct(),
+            idf.withColumnRenamed("__tok", "__w"), cl.fuzziness)
+          qtok.join(pairs, col("__qtok") === col("__q"))
+            .select(col("__lid"), col("__w").as("__tok"), col("__idf"))
+            .repartition(col("__tok"))
+            .join(postings.hint("shuffle_hash"), Seq("__tok"))
+            .select("__lid", "__rid", "__tok", "__idf").distinct()
         }
-      cand.join(broadcast(idf), Seq("__tok"))
-        .groupBy("__lid", "__rid")
-        .agg(sum("__w").as("__cscore"))
+      cand.groupBy("__lid", "__rid")
+        .agg(sum("__idf").as("__cscore"))
         .withColumn("__leaf", lit(idx))
     }
 

@@ -792,7 +792,9 @@ object Ann {
     // rationale): the verdict set is data-dependent, so hint broadcast
     // only when it is provably executor-safe
     val n = hits.count()
-    val verdicts = graft.engine.AutoUnpersist.cache(hits)
+    // persist → act → register: the count's own listener event must not
+    // release the entry (drainFirst, the contaminatedIds ordering)
+    val verdicts = graft.engine.AutoUnpersist.cache(hits, drainFirst = true)
     val side = if (n <= 1000000L) broadcast(verdicts) else verdicts
     corpus.join(side, col(idCol) === col("__cid"), "left")
       .withColumn("contaminated", col("__cid").isNotNull)

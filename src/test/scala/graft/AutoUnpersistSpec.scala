@@ -44,6 +44,44 @@ class AutoUnpersistSpec extends SparkSpec {
     assert(graft.engine.AutoUnpersist.pendingCount == 0)
   }
 
+  test("persist → act → register: the operator's own action never releases the entry") {
+    // semanticContaminationFlagsLsh persists its verdicts, counts them
+    // (the broadcast gate), THEN registers them. A slow listener holds
+    // the count's completion event in the bus past the registration: a
+    // registration that does not drain first is released by that stale
+    // event and the caller's action recomputes the verdicts
+    graft.engine.AutoUnpersist.releaseAll()
+    spark.catalog.clearCache()
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"persist-act-register-${System.nanoTime}"
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val slow = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          ours.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (ours.contains(e.jobId)) Thread.sleep(200)
+    }
+    val corpus = (1L to 20L).map(i => (i, Seq(1f, i.toFloat, 0f))).toDF("id", "v")
+    val test = Seq(Tuple1(Seq(1f, 1f, 0f))).toDF("tv")
+    sc.addSparkListener(slow)
+    sc.setJobGroup(group, "persist-act-register ordering")
+    val flags = try graft.sim.Ann.semanticContaminationFlagsLsh(
+      corpus, "id", "v", test, "tv", threshold = 0.99)
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc, 30000L)
+      sc.removeSparkListener(slow)
+    }
+    assert(graft.engine.AutoUnpersist.pendingCount == 1,
+      "the verdict cache was released by the operator's own count")
+    assert(flags.filter(col("contaminated")).count() >= 1)
+    assert(awaitEmptyCache(),
+      "cacheManager still holds entries 30s after the consuming action")
+    assert(graft.engine.AutoUnpersist.pendingCount == 0)
+  }
+
   test("never-executed plans cannot grow the registry past its bound") {
     import org.apache.spark.sql.functions.lit
     graft.engine.AutoUnpersist.releaseAll()

@@ -445,6 +445,35 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), s"a join stopped hashing:\n$p")
   }
 
+  test("fuzzy match join expands over the vocabulary, not the postings") {
+    // the delete-variant meet runs over the two token vocabularies; no
+    // Generate explodes variants next to a row id, the (lid, tok) dedup
+    // needs no (lid, tok, rid) exchange, and ONE __lid exchange feeds the
+    // score sum and both top-K windows
+    val left = Seq((1L, Seq("martin", "dubois")), (2L, Seq("martn", "lea")),
+      (2L, Seq("martn", "lea"))).toDF("lid", "toks")
+    val right = Seq((10L, Seq("martin", "lea")), (11L, Seq("duboi", "x")),
+      (11L, Seq("marti"))).toDF("rid", "toks")
+    for (scoring <- Seq("idf", "bm25")) {
+      val p = MatchJoin.topK(left, right, "toks", "toks", "lid", "rid",
+        k = 3, fuzzy = true, scoring = scoring).queryExecution.executedPlan.toString
+      val fams = "Exchange hashpartitioning\\(([^)]*)\\)".r
+        .findAllMatchIn(p).map(_.group(1)).toSeq
+        .map(_.split(",\\s*").toSeq.dropRight(1)
+          .map(_.replaceAll("#\\d+L?", "").trim).sorted.mkString(","))
+      assert(!fams.contains("__lid,__rid,__tok"),
+        s"$scoring: the candidate triples re-shuffle for their dedup:\n$p")
+      assert(fams.count(_ == "__lid") == 1,
+        s"$scoring: expected one __lid exchange, got ${fams.count(_ == "__lid")}:\n$p")
+      val variantGens = p.linesIterator
+        .filter(l => l.contains("Generate") && l.contains("__v")).toSeq
+      assert(variantGens.nonEmpty, s"$scoring: no variant expansion at all:\n$p")
+      assert(variantGens.forall(g => !g.contains("__rid") && !g.contains("__lid")),
+        s"$scoring: delete-variants exploded over rows, not the vocabulary:\n" +
+          variantGens.mkString("\n"))
+    }
+  }
+
   test("minhashDedup keeps one representative per near-dup cluster") {
     val base = "the quick brown fox jumps over the lazy dog and runs far away today"
     val df = Seq(
