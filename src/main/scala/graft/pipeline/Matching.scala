@@ -27,6 +27,10 @@ import graft.graph.ConnectedComponents
   * Everything is composed DataFrame plans: one shuffle for candidates
   * (token key), windows for ranking, broadcast for the tiny IDF table —
   * the same plan scales to the full-corpus sizes the reference targets.
+  * The one exception is [[matchBest]]'s result, which is materialized:
+  * the matched pairs have two consumers (the clusters and the linked
+  * output), and a lazy plan would run dataprep, the match join, the
+  * re-scoring and the decision window once for each of them.
   */
 object Matching {
 
@@ -73,6 +77,15 @@ object Matching {
       .withColumn("confiance", floor(col("matchid_hit_score") * 100).cast("int"))
 
   /** Full pipeline: candidates → re-score → threshold → best per left.
+    *
+    * The result is materialized (an eager local checkpoint, the lineage
+    * cut ConnectedComponents.run uses for its label rounds): the call
+    * runs the whole match once, and [[clusters]], the join back onto the
+    * pairs and any later action read those rows instead of re-running
+    * it — so the clusters and the written pairs come from one
+    * evaluation. It holds at most one row per left record; its blocks
+    * are released by Spark's ContextCleaner once the DataFrame is
+    * dropped.
     * @param fuzzy widen candidate recall to edit-distance-1 tokens
     *              (the ES `fuzziness: 1` analogue) */
   def matchBest(left: DataFrame, right: DataFrame, k: Int = 5,
@@ -86,6 +99,7 @@ object Matching {
     scored.withColumn("decision_rank", row_number().over(w))
       .filter(col("decision_rank") === 1)
       .drop("decision_rank")
+      .localCheckpoint(eager = true)
   }
 
   /** Dedup clusters over accepted matches: connected components labeled
