@@ -289,23 +289,23 @@ object RecipeConf {
     // would otherwise silently mix two grids in one index).
     case "ann_index" if mode == "append" =>
       val spark = df.sparkSession
-      graft.sim.Ann.readManifest(spark, ds.path).foreach { mf =>
-        def drift(knob: String, declared: String, actual: String): Unit =
-          if (declared != actual) sys.error(
-            s"ann_index append: options.$knob declares '$declared' but " +
-              s"the index at ${ds.path} was built with '$actual' — " +
-              "drifted geometry; rebuild (mode overwrite) to change it")
-        ds.options.get("nlist").foreach(v => drift("nlist", v, mf.nlist.toString))
-        ds.options.get("quantize").foreach { v =>
-          val built = mf.quant match {
-            case 0 => "false"; case 1 => "sq8"
-            case _ => if (mf.pqRes == 1) "pqr" else "pq" }
-          val norm = if (v == "true") "sq8" else v
-          drift("quantize", norm, built)
-        }
-        ds.options.get("pq_m").foreach(v => drift("pq_m", v, mf.pqM.toString))
-        ds.options.get("pq_ksub").foreach(v => drift("pq_ksub", v, mf.pqKsub.toString))
+      val mf = graft.sim.Ann.IvfManifest(
+        graft.sim.Ann.ivf(spark, ds.path).certified("ann_index append"))
+      def drift(knob: String, declared: String, actual: String): Unit =
+        if (declared != actual) sys.error(
+          s"ann_index append: options.$knob declares '$declared' but " +
+            s"the index at ${ds.path} was built with '$actual' — " +
+            "drifted geometry; rebuild (mode overwrite) to change it")
+      ds.options.get("nlist").foreach(v => drift("nlist", v, mf.nlist.toString))
+      ds.options.get("quantize").foreach { v =>
+        val built = mf.quant match {
+          case 0 => "false"; case 1 => "sq8"
+          case _ => if (mf.pqRes == 1) "pqr" else "pq" }
+        val norm = if (v == "true") "sq8" else v
+        drift("quantize", norm, built)
       }
+      ds.options.get("pq_m").foreach(v => drift("pq_m", v, mf.pqM.toString))
+      ds.options.get("pq_ksub").foreach(v => drift("pq_ksub", v, mf.pqKsub.toString))
       graft.sim.Ann.appendIvfIndex(df,
         cId = ds.options.getOrElse("id",
           sys.error("ann_index sink needs options.id (vector id column)")),
@@ -411,19 +411,18 @@ object RecipeConf {
     // silently band-mismatch every probe against the appended rows)
     case "neardup_index" if mode == "append" =>
       val spark = df.sparkSession
-      graft.dedup.Dedup.readNearDupManifest(spark, ds.path).foreach {
-        case (ss, nh, nb, _) =>
-          def drift(knob: String, declared: String, actual: String): Unit =
-            if (declared != actual) sys.error(
-              s"neardup_index append: options.$knob declares '$declared' " +
-                s"but the index at ${ds.path} was built with '$actual' — " +
-                "drifted signature; rebuild (mode overwrite) to change it")
-          ds.options.get("shingle_size")
-            .foreach(v => drift("shingle_size", v, ss.toString))
-          ds.options.get("num_hashes")
-            .foreach(v => drift("num_hashes", v, nh.toString))
-          ds.options.get("bands").foreach(v => drift("bands", v, nb.toString))
-      }
+      val (ss, nh, nb, _) = graft.dedup.Dedup.nearDupSignature(spark,
+        ds.path, "neardup_index append")
+      def drift(knob: String, declared: String, actual: String): Unit =
+        if (declared != actual) sys.error(
+          s"neardup_index append: options.$knob declares '$declared' " +
+            s"but the index at ${ds.path} was built with '$actual' — " +
+            "drifted signature; rebuild (mode overwrite) to change it")
+      ds.options.get("shingle_size")
+        .foreach(v => drift("shingle_size", v, ss.toString))
+      ds.options.get("num_hashes")
+        .foreach(v => drift("num_hashes", v, nh.toString))
+      ds.options.get("bands").foreach(v => drift("bands", v, nb.toString))
       graft.dedup.Dedup.appendToNearDupIndex(df,
         idCol = ds.options.getOrElse("id",
           sys.error("neardup_index sink needs options.id (doc id column)")),

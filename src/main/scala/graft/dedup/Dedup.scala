@@ -507,35 +507,20 @@ object Dedup {
     * exchange — so, exactly like `Ann.writeIvfIndex`, the corpus-side
     * work is computed ONCE into a layout probes reuse: `shingles/`
     * (id, sorted shingle hashes) and `bands/` (id, band, bucket), with
-    * a manifest written LAST certifying a complete build and carrying
-    * the signature parameters (a probe re-deriving them from its own
-    * defaults could silently band-mismatch the index). Appending a
-    * kept batch means signing ONLY the batch and appending its rows to
-    * both tables — each increment costs the increment. */
+    * a certificate written LAST carrying the signature parameters (a
+    * probe re-deriving them from its own defaults could silently
+    * band-mismatch the index). Appending a kept batch means signing
+    * ONLY the batch and appending its rows to both tables — each
+    * increment costs the increment. The lifecycle (certificate, writer
+    * markers, staged swaps, tombstones, stream epochs, grace) is
+    * [[graft.engine.LayoutFs]]'s. */
   def writeNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, shingleSize: Int = 3, numHashes: Int = 64,
       bands: Int = 16): Unit = {
     require(bands >= 1 && numHashes % bands == 0,
       s"bands must divide numHashes (got bands=$bands, numHashes=$numHashes)")
-    // a REBUILD that dies between the table writes must not leave the
-    // PREVIOUS build's manifest certifying the new half-written tables
-    // (worst case: old band count vs new band tables — every probe
-    // silently finds nothing). Retract the certificate first; it is
-    // re-issued only after both tables land.
-    val mf = nearDupManifestFile(path)
-    val fsIdx = mf.getFileSystem(
-      corpus.sparkSession.sparkContext.hadoopConfiguration)
-    fsIdx.delete(mf, false)
-    // stale tombstones go with the tables: the rebuild's corpus is the
-    // caller's authority on membership (compactNearDupIndex's purge
-    // point, and the one way to resurrect a taken-down id)
-    fsIdx.delete(new org.apache.hadoop.fs.Path(s"$path/deletes"), true)
-    // streamed epochs too, and the fresh manifest resets the marks
-    // (the appendIvfIndexStream rebuild discipline): stop any live
-    // stream first — an in-flight epoch landing after this clear would
-    // add docs the rebuild's corpus did not authorize
-    fsIdx.delete(new org.apache.hadoop.fs.Path(s"$path/stream_shingles"), true)
-    fsIdx.delete(new org.apache.hadoop.fs.Path(s"$path/stream_bands"), true)
+    val art = bandIndex(corpus.sparkSession, path)
+    art.rebuild()
     val base = shingleFrame(corpus, idCol, textCol, shingleSize, "__cid")
       .filter(size(col("sh")) > 0)
     base.write.mode("overwrite").parquet(s"$path/shingles")
@@ -544,440 +529,144 @@ object Dedup {
     val written = corpus.sparkSession.read.parquet(s"$path/shingles")
     bandFrame(written, "__cid", numHashes, bands, keepSh = false)
       .write.mode("overwrite").parquet(s"$path/bands")
-    val rows = written.count()
-    writeNearDupManifest(corpus.sparkSession, path,
-      shingleSize, numHashes, bands, rows)
+    art.write(graft.engine.LayoutFs.Manifest(written.count(),
+      geometry = Seq("shingle_size" -> shingleSize.toLong,
+        "num_hashes" -> numHashes.toLong, "bands" -> bands.toLong)))
   }
 
-  private def nearDupManifestFile(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.json")
+  private val StreamTables = Seq("shingles", "bands")
 
-  private def writeNearDupManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, shingleSize: Int, numHashes: Int, bands: Int,
-      rows: Long, marks: Map[String, Long] = Map.empty,
-      version: Long = 0L,
-      dead: Map[String, Seq[String]] = Map.empty): Unit = {
-    val p = nearDupManifestFile(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // mark keys sanitized on write (the Ann manifest discipline): the
-    // stream tag is an MD5 prefix, but a hand-edited manifest must not
-    // smuggle JSON through the parser's regex
-    val marksJson = marks.toSeq.sortBy(_._1).map { case (k, v) =>
-      s""""${k.replaceAll("[^0-9a-zA-Z]", "")}": $v""" }
-      .mkString("{", ", ", "}")
-    val out = fs.create(p, true)
-    try out.write(
-      (s"""{"shingle_size": $shingleSize, "num_hashes": $numHashes, """ +
-        s""""bands": $bands, "rows": $rows, """ +
-        s""""version": $version, """ +
-        s""""stream_marks": $marksJson, """ +
-        s""""dead_files": ${graft.engine.LayoutFs.deadFilesJson(dead)}, """ +
-        s""""built_ms": ${System.currentTimeMillis()}}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** The band index as a lifecycle artifact: `shingles/` + `bands/`
+    * keyed on `__cid`, streamed epochs under `stream_shingles/` and
+    * `stream_bands/`. */
+  private[graft] def bandIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String) =
+    new graft.engine.LayoutFs.Artifact(spark, path, "near-dup band index",
+      "writeNearDupIndex", "__cid", StreamTables,
+      StreamTables.map(t => s"stream_$t"))
 
-  /** The manifest's monotonic re-issue counter — the openers' snapshot
-    * bracket key ([[graft.engine.LayoutFs.consistentSnapshot]]): every
-    * maintenance re-issue (append, fold, purge) bumps it, so a stable
-    * version across an opener's listing proves no swap interleaved.
-    * Pre-versioning manifests read as 0 (the first maintenance write
-    * moves them to 1). None when the manifest is absent. */
-  private[graft] def readNearDupVersion(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : Option[Long] = {
-    val p = nearDupManifestFile(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(""""version":\s*(\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong).getOrElse(0L))
-    }
-  }
-
-  /** The openers' snapshot-bracket key: the version MIXED with the
-    * manifest's build stamp — a REBUILD resets the version counter,
-    * so version alone could alias across one (ABA); the stamp breaks
-    * the tie. */
-  private[graft] def readNearDupSnapshotKey(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : Option[Long] = {
-    val p = nearDupManifestFile(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      def f(k: String): Long =
-        (s""""$k":\\s*(\\d+)""").r.findFirstMatchIn(txt)
-          .map(_.group(1).toLong).getOrElse(0L)
-      Some(f("version") * 0x9E3779B97F4A7CL + f("built_ms"))
-    }
-  }
-
-  /** The manifest's dead-file grace list per table (a purge's
-    * replaced files, retained on disk one maintenance cycle for
-    * in-flight readers — [[compactNearDupIndex]]): openers exclude
-    * them from the listing, the next maintenance entry collects them
-    * physically. Empty for pre-grace manifests or mid-grace absence. */
-  private[graft] def readNearDupDead(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : Map[String, Seq[String]] = {
-    val p = nearDupManifestFile(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    graft.engine.LayoutFs.parseDeadFiles(txt)
-  }
-
-  /** The compaction watermarks from the band-index manifest: max
-    * FOLDED epoch per stream tag ([[graft.sim.Ann.IvfManifest]]'s
-    * `streamMarks` twin). Pre-streaming manifests (no key) read as
-    * empty. */
-  private[graft] def readNearDupMarks(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : Map[String, Long] = {
-    val p = nearDupManifestFile(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val obj = """"stream_marks":\s*\{([^}]*)\}""".r
-      .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-    """"([0-9a-zA-Z]+)":\s*(-?\d+)""".r.findAllMatchIn(obj)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-  }
-
-  /** [[readNearDupManifest]] with a SHORT bounded retry on absence
-    * (the [[graft.sim.Ann.readManifestPatient]] discipline): a
-    * compaction retracts the certificate for its narrow swap windows,
-    * and a live probe or stream batch landing inside one must ride it
-    * out — while a PERMANENT absence still fails after ~1 s. */
-  private[graft] def readNearDupManifestPatient(
-      spark: org.apache.spark.sql.SparkSession, path: String)
+  private def signature(m: graft.engine.LayoutFs.Manifest)
       : Option[(Int, Int, Int, Long)] =
-    graft.engine.LayoutFs.patiently(readNearDupManifest(spark, path))
+    for (s <- m.geom("shingle_size"); h <- m.geom("num_hashes");
+         b <- m.geom("bands"))
+      yield (s.toInt, h.toInt, b.toInt, m.rows)
 
-  /** [[readNearDupMarks]] riding out a retraction window the same way:
-    * an ABSENT manifest must not read as "no marks" — that is exactly
-    * the state mid-swap, and treating it as empty would let a probe
-    * double-count a just-folded epoch or a replay rewrite one. Returns
-    * empty only when the manifest is PERMANENTLY absent (the caller's
-    * own manifest read then refuses loudly). */
-  private[graft] def readNearDupMarksPatient(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : Map[String, Long] =
-    graft.engine.LayoutFs.patiently {
-      val p = nearDupManifestFile(path)
-      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(p)) None
-      else Some(readNearDupMarks(spark, path))
-    }.getOrElse(Map.empty)
-
+  /** The certificate's (shingle_size, num_hashes, bands, rows); None
+    * when absent. */
   private[graft] def readNearDupManifest(
       spark: org.apache.spark.sql.SparkSession, path: String)
-      : Option[(Int, Int, Int, Long)] = {
-    val p = nearDupManifestFile(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def f(k: String): Option[Long] =
-      (s""""$k":\\s*(-?\\d+)""").r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    for (s <- f("shingle_size"); h <- f("num_hashes"); b <- f("bands");
-         r <- f("rows"))
-      yield (s.toInt, h.toInt, b.toInt, r)
-  }
+      : Option[(Int, Int, Int, Long)] =
+    bandIndex(spark, path).manifest().flatMap(signature)
 
-  /** DELETE for the band index — the takedown verb
-    * ([[graft.sim.Ann.deleteFromIvfIndex]]'s sibling, r13 verdict #2):
-    * tombstoned corpus ids append to a tiny `deletes/` table and every
-    * [[incrementalNearDupsIndexed]] probe anti-joins it broadcast, so
-    * a removed document stops vetoing new near-duplicates immediately,
-    * without re-signing the corpus. Physical purge happens at the next
-    * [[compactNearDupIndex]] (or a full rebuild — writeNearDupIndex
-    * clears deletes/ with the tables it rewrites). Idempotent; unknown
-    * ids are legal. Terminality is scoped to the PRE-PURGE window
-    * (r14 advice): while its tombstone stands, a re-appended id stays
-    * suppressed probe-side and the next purge removes the re-added
-    * rows too — but a purge CONSUMES tombstones that matched nothing
-    * still live, after which a plain re-append resurrects the id (and
-    * a rebuild always does: the new corpus is the caller's authority
-    * on membership). Callers needing a permanent ban keep their own
-    * denylist and filter at ingest. */
+  /** [[readNearDupManifest]] read patiently, refusing loudly when the
+    * index is not certified. */
+  private[graft] def nearDupSignature(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      verb: String): (Int, Int, Int, Long) =
+    signature(bandIndex(spark, path).certified(verb)).getOrElse(
+      throw new IllegalStateException(s"$verb: the manifest at '$path' " +
+        "carries no band signature — not a near-dup band index; " +
+        "rebuild with writeNearDupIndex"))
+
+  /** DELETE for the band index — the takedown verb: tombstoned corpus
+    * ids append to `deletes/` and every [[incrementalNearDupsIndexed]]
+    * probe anti-joins them, so a removed document stops vetoing new
+    * near-duplicates immediately, without re-signing the corpus.
+    * Physical purge at the next [[compactNearDupIndex]] (or rebuild).
+    * Idempotent; unknown ids are legal. Terminality is scoped to the
+    * PRE-PURGE window: while its tombstone stands, a re-appended id
+    * stays suppressed probe-side and the next purge removes the
+    * re-added rows too — but a purge CONSUMES tombstones that matched
+    * nothing still live, after which a plain re-append resurrects the
+    * id (and a rebuild always does: the new corpus is the caller's
+    * authority on membership). Callers needing a permanent ban keep
+    * their own denylist and filter at ingest. */
   def deleteFromNearDupIndex(ids: DataFrame, idCol: String,
-      path: String): Unit = {
-    val spark = ids.sparkSession
-    readNearDupManifest(spark, path).getOrElse(sys.error(
-      s"deleteFromNearDupIndex: no near-dup index manifest at $path " +
-        "(incomplete build? rebuild with writeNearDupIndex)"))
-    val idType = spark.read.parquet(s"$path/bands").schema("__cid").dataType
-    ids.select(col(idCol).cast(idType).as("__cid"))
-      .filter(col("__cid").isNotNull).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path/deletes")
-  }
+      path: String): Unit =
+    bandIndex(ids.sparkSession, path)
+      .deleteIds(ids, idCol, "deleteFromNearDupIndex")
 
-  /** APPEND for the band index — extend, never re-sign
-    * ([[graft.sim.Ann.appendIvfIndex]]'s sibling): the batch is signed
-    * under the MANIFEST's stored (shingle_size, num_hashes, bands) —
-    * never caller defaults, the same stored-geometry discipline as the
-    * ANN append — and its rows append to both tables, so each
-    * increment costs the increment while a 100-TB corpus is never
-    * re-signed. The signing pass runs ONCE (the batch frame is
-    * persisted across the two table writes; shingle/minhash derivation
-    * is deterministic, so an evicted partition recomputes identically
-    * and the tables cannot disagree). Row accounting is incremental:
-    * new total = certified + batch (an O(batch) count, no re-list of
-    * the table footers).
-    *
-    * Torn-append discipline, STAGED (r14 advice): the batch's shingle
-    * and band files write to side dirs first — the long, O(batch)
-    * part, with the certificate intact so concurrent probes and
-    * stream micro-batches never block on it — then the manifest is
-    * retracted only for the fast file moves and re-issued after (the
-    * fold's stage-before-retract shape). A crash mid-move leaves no
-    * certificate and every probe fails loudly instead of silently
-    * missing the batch's bands. Duplicate ids are
+  /** APPEND for the band index — extend, never re-sign: the batch is
+    * signed under the certificate's STORED (shingle_size, num_hashes,
+    * bands) — never caller defaults — staged, and swapped into both
+    * tables, so each increment costs the increment. The signing pass
+    * runs ONCE (the batch frame is persisted across the two table
+    * writes; derivation is deterministic, so an evicted partition
+    * recomputes identically and the tables cannot disagree). Row
+    * accounting is incremental: certified + batch. Duplicate ids are
     * the CALLER's contract (append kept rows — run the incremental
-    * dedup gate first, the q107 discipline); an append never dedups.
-    * Single-maintenance-writer: refuses while a fold's `_COMPACTING`
-    * marker exists and holds `_APPENDING` for its run, which
-    * [[compactNearDupIndex]] refuses on — interleaved, the fold's file
-    * swap could delete freshly appended rows. */
+    * dedup gate first, the q107 discipline); an append never dedups. */
   def appendToNearDupIndex(batch: DataFrame, idCol: String,
       textCol: String, path: String): Unit = {
     val spark = batch.sparkSession
-    val (shingleSize, numHashes, bands, rows) =
-      readNearDupManifest(spark, path).getOrElse(sys.error(
-        s"appendToNearDupIndex: no near-dup index manifest at $path — " +
-          "appends extend a COMPLETE index (build with " +
-          "writeNearDupIndex first)"))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val compactingP = new org.apache.hadoop.fs.Path(s"$path/_COMPACTING")
-    val appendingP = new org.apache.hadoop.fs.Path(s"$path/_APPENDING")
-    graft.engine.LayoutFs.acquireMarker(fs, appendingP, compactingP,
-      refuseOpposite =
-        s"appendToNearDupIndex: a compaction is rewriting table files " +
-          s"at '$path' (${compactingP.getName} exists) — rows appended " +
-          "now could be deleted by its swap (single-maintenance-writer " +
-          "contract); wait for the fold to finish, or delete the marker " +
-          "if it crashed mid-run",
-      refuseOwn =
-        s"appendToNearDupIndex: another append is already running at " +
-          s"'$path' (${appendingP.getName} exists) — wait for it to " +
-          "finish, or delete the marker if it crashed mid-run")
-    try {
+    val verb = "appendToNearDupIndex"
+    val (shingleSize, numHashes, bands, _) =
+      nearDupSignature(spark, path, verb)
+    val art = bandIndex(spark, path)
+    art.writer(verb, compacting = false) {
       val base = shingleFrame(batch, idCol, textCol, shingleSize, "__cid")
         .filter(size(col("sh")) > 0)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val n = base.count()
         if (n > 0) {
-          // STAGE both tables' files first (the long signing part,
-          // certificate intact — probes and stream batches keep
-          // reading); retract the manifest only for the renames below
-          val stagedSh =
-            new org.apache.hadoop.fs.Path(s"$path/shingles_append")
-          val stagedBd =
-            new org.apache.hadoop.fs.Path(s"$path/bands_append")
-          fs.delete(stagedSh, true) // a crashed previous append's
-          fs.delete(stagedBd, true) // leftovers
+          val stagedSh = art.stage("shingles", "append")
+          val stagedBd = art.stage("bands", "append")
           base.write.mode("overwrite").parquet(stagedSh.toString)
           bandFrame(base, "__cid", numHashes, bands, keepSh = false)
             .write.mode("overwrite").parquet(stagedBd.toString)
-          val marks = readNearDupMarks(spark, path)
-          // carried through, not collected: dead-file grace collection
-          // is the COMPACT entry's job (one verb owns the deletes);
-          // an append mid-grace must keep excluding the purge's
-          // replaced files. Version bumps on every re-issue — the
-          // openers' snapshot bracket key.
-          val dead = readNearDupDead(spark, path)
-          val ver = readNearDupVersion(spark, path).getOrElse(0L) + 1
-          // fresh total under the marker (the pre-acquire read could
-          // predate a maintenance run that finished since)
-          val rowsNow = readNearDupManifest(spark, path)
-            .map(_._4).getOrElse(rows)
-          fs.delete(nearDupManifestFile(path), false)
-          Seq(("shingles", stagedSh), ("bands", stagedBd)).foreach {
-            case (table, stagedP) =>
-              fs.listStatus(stagedP).toSeq
-                .filter(st => st.isFile &&
-                  st.getPath.getName.endsWith(".parquet"))
-                .foreach { st =>
-                  fs.rename(st.getPath,
-                    new org.apache.hadoop.fs.Path(
-                      s"$path/$table/${st.getPath.getName}"))
-                }
-              fs.delete(stagedP, true)
-          }
-          writeNearDupManifest(spark, path,
-            shingleSize, numHashes, bands, rowsNow + n, marks,
-            version = ver, dead = dead)
+          val m = art.certified(verb)
+          art.swap(Seq("shingles" -> stagedSh, "bands" -> stagedBd),
+            m.next(rows = m.rows + n))
         }
       } finally { base.unpersist(); () }
-    } finally { fs.delete(appendingP, false); () }
+    }
   }
-
-  /** The streamed epoch partition dirs under `path/stream_<table>`:
-    * (streamTag, epoch, dir) triples — the SNAPSHOT unit the fold
-    * consumes ([[graft.sim.Ann]]'s listStreamEpochs twin; this layout
-    * was born two-level, so no legacy refusal is needed). A
-    * non-alphanumeric tag dir (an out-of-band writer's) refuses
-    * LOUDLY: the manifest sanitizes mark keys on write, so such a tag
-    * could never match its own watermark — every fold would re-append
-    * its rows forever. */
-  private def nearDupStreamEpochs(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, table: String)
-      : Seq[(String, Long, org.apache.hadoop.fs.Path)] = {
-    val streamP = new org.apache.hadoop.fs.Path(s"$path/stream_$table")
-    if (!fs.exists(streamP)) return Nil
-    for {
-      sd <- fs.listStatus(streamP).toSeq
-      if sd.isDirectory && sd.getPath.getName.startsWith("__stream=")
-      tag = sd.getPath.getName.stripPrefix("__stream=")
-      _ = require(tag.matches("[0-9a-zA-Z]+"),
-        s"stream_$table at '$path' holds a non-alphanumeric stream " +
-          s"tag dir '__stream=$tag' — not written by this sink " +
-          "(manifest mark keys could never match it); remove it or " +
-          "rebuild the index")
-      ed <- fs.listStatus(sd.getPath).toSeq
-      if ed.isDirectory && ed.getPath.getName.startsWith("__epoch=")
-    } yield (tag,
-      ed.getPath.getName.stripPrefix("__epoch=").toLong, ed.getPath)
-  }
-
-  /** The LIVE (not yet folded, actually data-bearing) epoch dirs of
-    * one stream table: marks-filtered and husk-guarded. */
-  private def liveNearDupEpochs(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String, table: String,
-      marks: Map[String, Long])
-      : Seq[(String, Long, org.apache.hadoop.fs.Path)] =
-    nearDupStreamEpochs(fs, path, table)
-      .filter(e => graft.engine.LayoutFs.hasVisibleParquetFile(fs, e._3))
-      .filterNot { case (tag, ep, _) => marks.get(tag).exists(ep <= _) }
 
   /** The one table-open point for the band index's probe readers:
-    * main table ∪ live streamed epochs
-    * ([[graft.sim.Ann]]'s openIvfIndex discipline) — a probe landing
+    * main table ∪ live streamed epochs, version-stable
+    * ([[graft.engine.LayoutFs.Artifact.open]]) — a probe landing
     * between a stream batch and its fold sees the union, and after
     * the fold the same rows from the main table; the verdicts cannot
     * depend on WHEN the fold ran. `excludeEpoch` carves out one
     * (tag, epoch) partition: the self-growing admit gate probes a
     * batch against everything EXCEPT its own epoch's previous
     * incarnation, so an at-least-once replay recomputes the same
-    * verdicts instead of being vetoed by itself.
-    *
-    * VERSION-STABLE (r15 purge-grace work): the whole open — marks
-    * read, dead-file exclusion, main listing, epoch listing, and the
-    * optional eager tombstone snapshot — runs inside a
-    * [[graft.engine.LayoutFs.consistentSnapshot]] bracket keyed on
-    * the manifest's re-issue counter, closing the listing-vs-swap
-    * race the per-field patient reads could not (a fold renaming
-    * staged files in while this opener lists the directory would
-    * hand it old AND new copies of the same rows). A purge's
-    * replaced files sit in the manifest's `dead_files` grace list:
-    * excluded here, still on disk for readers whose listing predates
-    * the purge (their tombstone anti-join keeps them exact), and
-    * physically collected one maintenance cycle later.
-    *
-    * `suppressDeletes` applies the takedown anti-join INSIDE the
-    * bracket from an EAGER tombstone snapshot (the ids collect to
-    * the driver — the deletes table is declared-small, the same
-    * contract as the broadcast it feeds): a purge consuming the
-    * tombstone files mid-probe must not fail the probe's lazy read,
-    * and a bands listing from before the purge must never pair with
-    * an after-the-purge empty tombstone set (purged rows would
-    * resurface for exactly that probe). */
+    * verdicts instead of being vetoed by itself. `suppressDeletes`
+    * applies the takedown anti-join inside the bracket from the eager
+    * tombstone snapshot. */
   private[graft] def openNearDupTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
       table: String,
       excludeEpoch: Option[(String, Long)] = None,
       suppressDeletes: Boolean = false): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.engine.LayoutFs.consistentSnapshot(
-        s"openNearDupTable($table) at '$path'",
-        readNearDupSnapshotKey(spark, path)) {
-      val deadT = readNearDupDead(spark, path)
-        .getOrElse(table, Nil).toSet
-      val main =
-        if (deadT.isEmpty) spark.read.parquet(s"$path/$table")
-        else {
-          val livePaths = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$path/$table")).toSeq
-            .filter(st => st.isFile &&
-              st.getPath.getName.endsWith(".parquet") &&
-              !deadT(st.getPath.getName))
-            .map(_.getPath.toString)
-          if (livePaths.isEmpty)
-            // every file replaced mid-grace: schema from the dir (dead
-            // files share it), zero rows
-            spark.read.parquet(s"$path/$table").limit(0)
-          else spark.read.parquet(livePaths: _*)
-        }
-      val live = liveNearDupEpochs(spark, fs, path, table,
-          readNearDupMarksPatient(spark, path))
-        .filterNot { case (tag, ep, _) =>
-          excludeEpoch.contains((tag, ep)) }
-      val unioned =
-        if (live.isEmpty) main
-        else {
-          val cols = main.columns.toIndexedSeq.map(col)
-          main.unionByName(
-            spark.read.option("basePath", s"$path/stream_$table")
-              .parquet(live.map(_._3.toString): _*)
-              .select(cols: _*))
-        }
-      if (!suppressDeletes) unioned
-      else {
-        val delP = new org.apache.hadoop.fs.Path(s"$path/deletes")
-        if (!graft.engine.LayoutFs.hasVisibleParquetFile(fs, delP))
-          unioned
-        else {
-          val delDf = spark.read.parquet(delP.toString)
-            .select(col("__cid")).distinct()
-          val ids = delDf.collect().toIndexedSeq
-          if (ids.isEmpty) unioned
-          else unioned.join(
-            broadcast(spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](
-                scala.jdk.CollectionConverters.SeqHasAsJava(ids).asJava),
-              delDf.schema)),
-            Seq("__cid"), "left_anti")
-        }
-      }
+    val art = bandIndex(spark, path)
+    art.open(s"openNearDupTable($table)") { m =>
+      val unioned = art.withLiveEpochs(art.liveTable(table, m),
+        s"stream_$table", m.streamMarks, excludeEpoch)
+      if (suppressDeletes) art.suppress(unioned, art.tombstoneSnapshot())
+      else unioned
     }
   }
 
   /** One micro-batch of the band-index STREAM append
     * ([[graft.streaming.EventStream.appendNearDupIndexStream]]'s
     * core; package-visible so the replay spec drives the exact
-    * at-least-once cases). The batch signs under the manifest's
+    * at-least-once cases). The batch signs under the certificate's
     * STORED signature — `pre` is the stream-start (shingleSize,
-    * numHashes, bands), re-checked against the current manifest every
-    * batch as the mid-stream-rebuild tripwire — and lands in
+    * numHashes, bands), re-checked against the current certificate
+    * every batch as the mid-stream-rebuild tripwire — and lands in
     * `stream_shingles/` + `stream_bands/` partitioned by
     * (__stream=checkpoint-tag, __epoch): dynamic partition overwrite
     * makes an at-least-once replay rewrite its own epoch rather than
     * duplicate it, a FOLDED epoch's replay is skipped against the
-    * manifest's stream_marks (and taken back by the post-write
-    * re-verify if a fold won the race — the appendIvfBatch discipline,
-    * both sides), and the data files carry exactly the main tables'
-    * schema so the fold is a plain append-and-delete. The manifest
-    * stays untouched (rows accounting happens at the fold); duplicate
-    * ids across epochs are the caller's contract — dedup at ingest
-    * first, or use the admit gate. */
+    * watermark (and taken back by the post-write re-verify if a fold
+    * won the race — the appendIvfBatch discipline, both sides), and
+    * the data files carry exactly the main tables' schema so the fold
+    * is a plain append. The certificate stays untouched (rows
+    * accounting happens at the fold); duplicate ids across epochs are
+    * the caller's contract — dedup at ingest first, or use the admit
+    * gate. */
   private[graft] def appendNearDupStreamBatch(batch: DataFrame,
       path: String, idCol: String, textCol: String, tag: String,
       epoch: Long, pre: (Int, Int, Int)): Unit = {
@@ -985,18 +674,19 @@ object Dedup {
       s"appendNearDupStreamBatch: stream tag '$tag' must be " +
         "alphanumeric (manifest mark keys are)")
     val spark = batch.sparkSession
+    val art = bandIndex(spark, path)
     val (ss, nh, nb, _) =
-      readNearDupManifestPatient(spark, path).getOrElse(sys.error(
-        s"appendNearDupIndexStream: the manifest at $path vanished " +
-          "mid-stream — index being rebuilt? stop the stream during " +
-          "rebuilds (single-writer contract)"))
+      nearDupSignature(spark, path, "appendNearDupIndexStream")
     require((ss, nh, nb) == pre,
       s"appendNearDupIndexStream: the index at $path was REBUILT " +
         s"mid-stream with a different signature (($ss, $nh, $nb) != " +
         s"stream-start $pre) — rows signed under the old parameters " +
         "must not mix in; restart the stream against the new index")
-    if (readNearDupMarksPatient(spark, path).get(tag).exists(epoch <= _))
-      return
+    // PATIENT: an absent-mid-swap certificate read as "no marks" would
+    // skip the take-back exactly when a fold is running
+    def folded = art.manifestPatient()
+      .exists(_.streamMarks.get(tag).exists(epoch <= _))
+    if (folded) return
     if (batch.isEmpty) return
     val base = shingleFrame(batch, idCol, textCol, ss, "__cid")
       .filter(size(col("sh")) > 0)
@@ -1015,54 +705,34 @@ object Dedup {
         // post-write re-verify: a fold that banked this epoch's
         // previous dir between our marks read and our writes has its
         // rows in the main tables already — take the re-created dirs
-        // back (the fold's resurrected-epoch sweep closes the same
-        // race from its side). PATIENT: an absent-mid-swap manifest
-        // read as "no marks" would skip the take-back exactly when a
-        // fold is running.
-        if (readNearDupMarksPatient(spark, path).get(tag)
-            .exists(epoch <= _)) {
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          Seq("shingles", "bands").foreach { t =>
-            fs.delete(new org.apache.hadoop.fs.Path(
-              s"$path/stream_$t/__stream=$tag/__epoch=$epoch"), true)
-          }
+        // back (the fold's entry collection closes the same race from
+        // its side)
+        if (folded) StreamTables.foreach { t =>
+          art.fs.delete(
+            art.at(s"stream_$t/__stream=$tag/__epoch=$epoch"), true)
         }
       }
     } finally { base.unpersist(); () }
   }
 
   /** COMPACT for the band index — the stream fold AND the physical
-    * tombstone purge ([[graft.sim.Ann.compactIvfIndex]]'s sibling).
-    * Streamed epochs ([[appendNearDupStreamBatch]]) fold FIRST: their
-    * data files carry exactly the main tables' schema, so the fold
-    * appends them — O(streamed rows), the main tables' existing files
-    * untouched — recording each tag's max folded epoch in the
-    * manifest's `stream_marks` (replay watermark). The folded epoch
-    * dirs are RETAINED under that watermark for one fold cycle (r15
-    * probe grace, the live-race soak): probes in flight across the
-    * fold finish against intact files, post-mark probes skip them,
-    * and the next fold's entry collection deletes them.
-    * The purge is then FILE-scoped the way the ANN fold is
-    * cell-scoped: the tables are flat (no partition key), so it
-    * locates the files actually holding a tombstoned row (one
-    * id-column-only scan over `_metadata.file_path`), rewrites ONLY
-    * those files' survivors, and swaps them in — untouched files are
-    * never read again nor rewritten, so a bounded takedown against a
-    * 100-TB index costs O(touched files), not O(index). Tombstone
-    * files and epoch dirs are snapshotted at entry (the ANN
-    * discipline): a delete or epoch landing mid-fold survives to the
-    * next one, still suppressed/visible probe-side meanwhile
-    * ([[openNearDupTable]] unions live epochs).
-    *
-    * Crash-safety is the certificate, not atomic renames: the
-    * manifest is retracted for the swap window (stage survivors →
-    * move staged files in → delete doomed files → consume tombstones
-    * → re-issue manifest with the purged count), so a crash mid-swap
-    * leaves a loudly-unprobable index, never a silent double-count or
-    * resurrection. Refuses while `_APPENDING` exists and holds
-    * `_COMPACTING` (single-maintenance-writer, both ways). No-op when
-    * no tombstones exist.
+    * tombstone purge. Streamed epochs ([[appendNearDupStreamBatch]])
+    * fold FIRST: their data files carry exactly the main tables'
+    * schema, so the fold stages and swaps them in — O(streamed rows),
+    * the main tables' existing files untouched — recording each tag's
+    * max folded epoch as its watermark. The folded epoch dirs are
+    * RETAINED under that watermark for one fold cycle (probe grace):
+    * probes in flight across the fold finish against intact files,
+    * post-mark probes skip them, and the next fold's entry collection
+    * deletes them. The purge is then FILE-scoped the way the ANN fold
+    * is cell-scoped: it locates the files actually holding a
+    * tombstoned row (one id-column-only scan over
+    * `_metadata.file_path`), stages ONLY those files' survivors, and
+    * swaps them in — so a bounded takedown against a 100-TB index
+    * costs O(touched files), not O(index). Tombstone files and epoch
+    * dirs are snapshotted at entry: a delete or epoch landing mid-fold
+    * survives to the next one, still suppressed/visible probe-side
+    * meanwhile ([[openNearDupTable]] unions live epochs).
     *
     * Returns the count of tombstone-matched DOCS physically purged —
     * 0 for a fold-only run — so compliance receipts (the YAML
@@ -1070,413 +740,93 @@ object Dedup {
     * the purge's existing shingles-side job, no extra scan. */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delDir = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    val delFiles: Seq[org.apache.hadoop.fs.Path] =
-      if (!fs.exists(delDir)) Nil
-      else fs.listStatus(delDir).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
-    val marks0 = readNearDupMarksPatient(spark, path)
-    // GRACE COLLECTION (r15, the live-race soak): epoch dirs a
-    // PREVIOUS fold banked were retained under the watermark so
-    // probes in flight across that fold could finish their reads
-    // (marks make them invisible to every later probe). A full fold
-    // cycle later, collect them — this also sweeps replay-resurrected
-    // dirs the sink's own post-write re-verify lost the race on.
-    Seq("shingles", "bands").foreach { t =>
-      nearDupStreamEpochs(fs, path, t).foreach { case (tg, ep, d) =>
-        if (marks0.get(tg).exists(ep <= _)) { fs.delete(d, true); () }
+    val art = bandIndex(spark, path)
+    val verb = "compactNearDupIndex"
+    val delFiles = art.tombstoneFiles()
+    val marks0 = art.manifestPatient().map(_.streamMarks).getOrElse(Map.empty)
+    // GRACE COLLECTION: epoch dirs a PREVIOUS fold banked were retained
+    // under the watermark for probes in flight across that fold; a
+    // full fold cycle later, collect them — this also sweeps
+    // replay-resurrected dirs the sink's own re-verify lost the race on
+    StreamTables.foreach { t =>
+      art.streamEpochs(s"stream_$t").foreach { case (tg, ep, d) =>
+        if (marks0.get(tg).exists(ep <= _)) { art.fs.delete(d, true); () }
       }
     }
-    sweepStreamHusks(fs, path)
-    val epochsSh = liveNearDupEpochs(spark, fs, path, "shingles", marks0)
-    val epochsBd = liveNearDupEpochs(spark, fs, path, "bands", marks0)
+    art.sweepStreamHusks()
+    val epochsSh = art.liveEpochs("stream_shingles", marks0)
+    val epochsBd = art.liveEpochs("stream_bands", marks0)
     if (delFiles.isEmpty && epochsSh.isEmpty && epochsBd.isEmpty) {
-      // nothing to fold or purge — still a maintenance ENTRY, so a
-      // previous purge's dead-file grace list is collected here too
-      // (marker-guarded; silently deferred if a writer holds the
-      // index — the next entry gets it)
-      collectNearDupDeadStandalone(spark, fs, path)
-      sweepDeletesDir(fs, delDir)
-      sweepStreamHusks(fs, path)
+      // nothing to fold or purge — still a maintenance ENTRY
+      art.collectDeadStandalone()
+      art.sweepDeletes()
       return 0L
     }
-    val (shingleSize, numHashes, bands, rows0) =
-      readNearDupManifest(spark, path).getOrElse(sys.error(
-        s"compactNearDupIndex: no near-dup index manifest at $path — " +
-          "nothing certified to compact; rebuild with writeNearDupIndex"))
-    val appendingP = new org.apache.hadoop.fs.Path(s"$path/_APPENDING")
-    val compactingP = new org.apache.hadoop.fs.Path(s"$path/_COMPACTING")
-    graft.engine.LayoutFs.acquireMarker(fs, compactingP, appendingP,
-      refuseOpposite =
-        s"compactNearDupIndex: a batch append is running at '$path' " +
-          s"(${appendingP.getName} exists) — its freshly appended files " +
-          "could be deleted by this fold's swap (single-maintenance-" +
-          "writer contract); wait for the append to finish, or delete " +
-          "the marker if it crashed mid-run",
-      refuseOwn =
-        s"compactNearDupIndex: another compaction is already running " +
-          s"at '$path' (${compactingP.getName} exists) — wait for it " +
-          "to finish, or delete the marker if it crashed mid-run")
-    try {
-      // DEAD-FILE GRACE COLLECTION (r15): a previous purge's replaced
-      // files were kept on disk for readers whose listing predated it
-      // (openNearDupTable excludes them via the manifest's dead list);
-      // one maintenance cycle later — here, under the marker — they
-      // are physically collected. Idempotent: a missing name is a
-      // no-op delete.
-      readNearDupDead(spark, path).foreach { case (table, names) =>
-        names.foreach { n =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$table/$n"),
-            false)
-        }
-      }
-      // fresh accounting under the marker: the pre-acquire read's
-      // totals could predate an append that finished between the
-      // read and the acquisition
-      val (_, _, _, rowsFresh) =
-        readNearDupManifest(spark, path).getOrElse(
-          (shingleSize, numHashes, bands, rows0))
-      var ver = readNearDupVersion(spark, path).getOrElse(0L)
-      var rows = rowsFresh
-      var marks = marks0
-      // STEP 1 — fold the streamed epoch SNAPSHOT into the main
-      // tables: the stream data files carry exactly the main schema
-      // (__stream/__epoch are directory-encoded), so the fold stages
-      // the rows (the long part, certificate intact — the ANN
-      // stage-before-retract discipline), then renames the staged
-      // files in, deletes the epoch dirs, and re-issues the manifest
-      // with the watermarks — the retraction window covers only fast
-      // file moves, which the patient readers ride out. O(streamed
-      // rows); the main tables' existing files are never read nor
-      // rewritten.
-      //
-      // Only epochs data-bearing in BOTH tables fold: a shingles-only
-      // or bands-only epoch is a crash remnant torn between the
-      // sink's two writes (necessarily its tag's NEWEST epoch — the
-      // crashed batch committed no offset, so no later epoch exists),
-      // and folding the half that landed while marking the epoch
-      // would permanently block the restarted stream's healing
-      // replay. Torn epochs are left untouched below the mark: the
+    nearDupSignature(spark, path, verb)
+    art.writer(verb, compacting = true) {
+      var m = art.collectDead(art.certified(verb))
+      // STEP 1 — fold the streamed epoch SNAPSHOT. Only epochs
+      // data-bearing in BOTH tables fold: a shingles-only or bands-only
+      // epoch is a crash remnant torn between the sink's two writes
+      // (necessarily its tag's NEWEST epoch — the crashed batch
+      // committed no offset), and folding the half that landed while
+      // marking the epoch would permanently block the restarted
+      // stream's healing replay. Torn epochs stay below the mark: the
       // replay overwrites both dirs and the next fold takes them;
-      // meanwhile they are probe-invisible (verdicts need both
-      // tables). They are also never DELETED here — the "torn" dir
-      // may be a LIVE batch mid-write between its two table writes.
-      val completeEpochs = {
-        val bdSet = epochsBd.map(e => (e._1, e._2)).toSet
-        epochsSh.filter(e => bdSet((e._1, e._2)))
-      }
-      if (completeEpochs.nonEmpty) {
-        val keys = completeEpochs.map(e => (e._1, e._2)).toSet
+      // meanwhile they are probe-invisible (verdicts need both tables).
+      // They are never DELETED here — the "torn" dir may be a LIVE
+      // batch mid-write between its two table writes.
+      val keys = epochsSh.map(e => (e._1, e._2)).toSet
+        .intersect(epochsBd.map(e => (e._1, e._2)).toSet)
+      if (keys.nonEmpty) {
         def staged(table: String,
             eps: Seq[(String, Long, org.apache.hadoop.fs.Path)])
             : org.apache.hadoop.fs.Path = {
-          val stagedP =
-            new org.apache.hadoop.fs.Path(s"$path/${table}_fold")
-          fs.delete(stagedP, true) // a crashed previous fold's leftover
+          val stagedP = art.stage(table, "fold")
           val cols = spark.read.parquet(s"$path/$table")
             .columns.toIndexedSeq.map(col)
-          spark.read.option("basePath", s"$path/stream_$table")
-            .parquet(eps.map(_._3.toString): _*).select(cols: _*)
+          art.readEpochs(s"stream_$table",
+              eps.filter(e => keys((e._1, e._2))))
+            .select(cols: _*)
             .write.mode("overwrite").parquet(stagedP.toString)
           stagedP
         }
-        val epochsBdC = epochsBd.filter(e => keys((e._1, e._2)))
-        val stagedSh = staged("shingles", completeEpochs)
-        val stagedBd = staged("bands", epochsBdC)
-        // accounting from the staged footprint — no second full scan
-        // of the stream files, and it counts exactly what swaps in
+        val stagedSh = staged("shingles", epochsSh)
+        val stagedBd = staged("bands", epochsBd)
+        // accounting from the staged footprint — it counts exactly
+        // what swaps in
         val folded = spark.read.parquet(stagedSh.toString).count()
-        fs.delete(nearDupManifestFile(path), false)
-        Seq(("shingles", stagedSh), ("bands", stagedBd)).foreach {
-          case (table, stagedP) =>
-            fs.listStatus(stagedP).toSeq
-              .filter(st =>
-                st.isFile && st.getPath.getName.endsWith(".parquet"))
-              .foreach { st =>
-                fs.rename(st.getPath,
-                  new org.apache.hadoop.fs.Path(
-                    s"$path/$table/${st.getPath.getName}"))
-              }
-            fs.delete(stagedP, true)
-        }
-        // the folded epoch dirs are RETAINED under the watermark
-        // written below (r15 grace, the live-race soak): no file a
-        // pre-fold probe listed is ever deleted by this fold — the
-        // main tables only GAIN files, the marks make the folded
-        // epochs invisible to every post-mark probe, and the next
-        // fold's entry-time grace collection removes the dirs. (The
-        // replay-resurrection race the old same-fold sweep closed is
-        // still covered: the sink's post-write re-verify deletes its
-        // own epoch when a mark overtook it, and the entry collection
-        // catches the residue one cycle later.)
-        sweepStreamHusks(fs, path)
-        rows += folded
-        marks = marks ++ completeEpochs.groupBy(_._1).map {
+        val marks = m.streamMarks ++ keys.groupBy(_._1).map {
           case (tag, es) =>
-            tag -> math.max(es.map(_._2).max, marks.getOrElse(tag, -1L))
+            tag -> math.max(es.map(_._2).max, m.streamMarks.getOrElse(tag, -1L))
         }
-        ver += 1
-        writeNearDupManifest(spark, path,
-          shingleSize, numHashes, bands, rows, marks, version = ver)
+        m = art.swap(Seq("shingles" -> stagedSh, "bands" -> stagedBd),
+          m.next(rows = m.rows + folded, streamMarks = marks))
+        art.sweepStreamHusks()
       }
       // STEP 2 — the file-scoped tombstone purge, now covering the
       // freshly folded rows too (the doomed-file scan runs on the
       // post-fold tables)
-      if (delFiles.nonEmpty) {
-        val dels = spark.read.parquet(delFiles.map(_.toString): _*)
-          .select(col("__cid").as("__del_id")).distinct()
-        // the touched file set per table: an id-and-path-only scan
-        // (parquet reads just __cid; file_path is scan metadata)
-        def doomedFiles(table: String): Seq[String] =
-          spark.read.parquet(s"$path/$table")
-            .select(col("__cid"), col("_metadata.file_path").as("__f"))
-            .join(broadcast(dels), col("__cid") === col("__del_id"),
-              "left_semi")
-            .select("__f").distinct().collect().map(_.getString(0)).toSeq
-        val doomed = Seq("shingles", "bands").map(t => t -> doomedFiles(t))
-        if (doomed.forall(_._2.isEmpty)) {
-          // tombstones matching nothing in the MAIN tables: consume the
-          // snapshot files — except ids still living in a remaining
-          // stream epoch (torn, or landed after this fold's snapshot),
-          // whose tombstones are retained (r14 advice: consuming them
-          // here would let the id resurface once a later fold banks
-          // that epoch, with no tombstone left to suppress it)
-          retainStreamTombstones(spark, fs, path, dels)
-          delFiles.foreach(f => fs.delete(f, false))
-          sweepDeletesDir(fs, delDir)
-          return 0L
-        }
-        // stage every touched file's survivors FIRST (the long part);
-        // the certificate-retraction window covers only the file moves
-        var purgedDocs = 0L
-        val staged = doomed.map { case (table, files) =>
-          val stagedP =
-            new org.apache.hadoop.fs.Path(s"$path/${table}_compact")
-          fs.delete(stagedP, true) // a crashed previous fold's leftover
-          if (files.nonEmpty) {
-            val touched = spark.read.parquet(files: _*)
-            if (table == "shingles")
-              purgedDocs = touched
-                .join(broadcast(dels), col("__cid") === col("__del_id"),
-                  "left_semi").count()
-            touched.join(broadcast(dels), col("__cid") === col("__del_id"),
-                "left_anti")
-              .write.mode("overwrite").parquet(stagedP.toString)
-          }
-          (table, files, stagedP)
-        }
-        fs.delete(nearDupManifestFile(path), false)
-        staged.foreach { case (table, files, stagedP) =>
-          if (files.nonEmpty) {
-            fs.listStatus(stagedP).toSeq
-              .filter(st =>
-                st.isFile && st.getPath.getName.endsWith(".parquet"))
-              .foreach { st =>
-                fs.rename(st.getPath,
-                  new org.apache.hadoop.fs.Path(
-                    s"$path/$table/${st.getPath.getName}"))
-              }
-          }
-          fs.delete(stagedP, true)
-        }
-        // the replaced files are NOT deleted — they enter the
-        // manifest's dead-file grace list below (r15, the purge-soak
-        // finding): a reader whose listing predates this purge
-        // finishes against intact files (its eager tombstone snapshot
-        // keeps it exact), every later reader excludes them by name,
-        // and the NEXT maintenance entry collects them physically —
-        // the same one-cycle grace the folded epoch dirs ride.
-        val deadNow: Map[String, Seq[String]] = doomed.collect {
-          case (table, files) if files.nonEmpty =>
-            table -> files.map(f =>
-              new org.apache.hadoop.fs.Path(f).getName)
-        }.toMap
-        // re-issue the certificate FIRST (the retraction window stays
-        // file-moves-only), then retain-and-consume the tombstone
-        // snapshot: an id still living in a remaining stream epoch
-        // (torn between the sink's two table writes, or landed after
-        // this fold's snapshot) keeps a tombstone — consuming it would
-        // let the id resurface once a later fold banks that epoch (r14
-        // advice). A crash between the re-issue and the consumption
-        // below just leaves the tombstones standing: still suppressed
-        // probe-side, re-purged idempotently by the next fold.
-        ver += 1
-        writeNearDupManifest(spark, path,
-          shingleSize, numHashes, bands, rows - purgedDocs, marks,
-          version = ver, dead = deadNow)
-        retainStreamTombstones(spark, fs, path, dels)
-        delFiles.foreach(f => fs.delete(f, false))
-        sweepDeletesDir(fs, delDir)
-        purgedDocs
-      } else 0L
-    } finally { fs.delete(compactingP, false); () }
+      if (delFiles.isEmpty) 0L
+      else art.purgeFiles(m, delFiles, art.tombstoneIds(delFiles))
+    }
   }
 
-  /** Dead-file grace collection for a maintenance entry that has no
-    * other work ([[compactNearDupIndex]]'s early return): acquires
-    * the `_COMPACTING` marker just for the collection (a concurrent
-    * writer defers it to the next entry — this is opportunistic
-    * hygiene, never worth failing a no-op compact over), deletes the
-    * manifest's dead files, and re-issues the certificate with the
-    * list cleared so openers stop paying the exclusion listing. */
-  private def collectNearDupDeadStandalone(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val dead = readNearDupDead(spark, path)
-    if (dead.forall(_._2.isEmpty)) return
-    val appendingP = new org.apache.hadoop.fs.Path(s"$path/_APPENDING")
-    val compactingP = new org.apache.hadoop.fs.Path(s"$path/_COMPACTING")
-    try graft.engine.LayoutFs.acquireMarker(fs, compactingP, appendingP,
-      refuseOpposite = "busy", refuseOwn = "busy")
-    catch { case _: IllegalArgumentException => return }
-    try {
-      readNearDupManifest(spark, path).foreach {
-        case (ss, nh, nb, rows) =>
-          dead.foreach { case (table, names) =>
-            names.foreach { n =>
-              fs.delete(
-                new org.apache.hadoop.fs.Path(s"$path/$table/$n"), false)
-            }
-          }
-          val marks = readNearDupMarks(spark, path)
-          val ver = readNearDupVersion(spark, path).getOrElse(0L) + 1
-          fs.delete(nearDupManifestFile(path), false)
-          writeNearDupManifest(spark, path, ss, nh, nb, rows, marks,
-            version = ver)
-      }
-    } finally { fs.delete(compactingP, false); () }
-  }
-
-  /** Re-write (as a fresh tombstone file, BEFORE the snapshot files
-    * are consumed — no window of absence) the tombstoned ids that
-    * still match a row in a REMAINING stream epoch dir: torn epochs
-    * (data-bearing in one table only — probe-invisible, but their
-    * healing replay lands both tables and a later fold banks them)
-    * and epochs landed after the calling fold's snapshot. Without
-    * this, consuming the snapshot would silently break the takedown
-    * for exactly those ids (r14 advice). The scan is column-pruned
-    * (__cid only) over the stream backlog — bounded by the
-    * compaction policy, zero when no epochs remain (the common
-    * case: one cheap listing). An epoch landing AFTER this scan and
-    * before the caller deletes the snapshot files can still slip
-    * through the ms-wide gap — the terminal-takedown contract is
-    * pre-purge-scoped for that reason (see
-    * [[deleteFromNearDupIndex]]). */
-  private def retainStreamTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      dels: DataFrame): Unit = {
-    val stillIds = Seq("shingles", "bands").flatMap { t =>
-      val dirs = nearDupStreamEpochs(fs, path, t)
-        .filter(e => graft.engine.LayoutFs.hasVisibleParquetFile(fs, e._3))
-        .map(_._3.toString)
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("basePath", s"$path/stream_$t")
-        .parquet(dirs: _*).select(col("__cid")))
-    }
-    if (stillIds.isEmpty) return
-    val retained = dels.join(stillIds.reduce(_ union _),
-      col("__del_id") === col("__cid"), "left_semi")
-    if (!retained.isEmpty)
-      retained.select(col("__del_id").as("__cid")).distinct()
-        .coalesce(1).write.mode("append").parquet(s"$path/deletes")
-  }
-
-  /** Remove empty stream-epoch husk dirs (a fully folded tag's empty
-    * `__stream=` dir; a `stream_*` root left with only `_SUCCESS`) —
-    * never a dir still holding anything: a live epoch, or one landing
-    * mid-sweep, survives. */
-  private def sweepStreamHusks(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit =
-    Seq("shingles", "bands").foreach { t =>
-      val root = new org.apache.hadoop.fs.Path(s"$path/stream_$t")
-      if (fs.exists(root)) {
-        fs.listStatus(root).toSeq.filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("__stream=")).foreach { sd =>
-          if (fs.listStatus(sd.getPath).isEmpty) {
-            fs.delete(sd.getPath, true); ()
-          }
-        }
-        if (!fs.listStatus(root).exists(_.isDirectory)) {
-          fs.delete(root, true); ()
-        }
-      }
-    }
-
-  /** Remove a deletes/ dir holding no parquet DATA file (a `_SUCCESS`
-    * marker alone is a husk) — but never one where a fresh tombstone
-    * landed after this fold's snapshot. */
-  private def sweepDeletesDir(fs: org.apache.hadoop.fs.FileSystem,
-      delDir: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(delDir) && !fs.listStatus(delDir).exists(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet"))) {
-      fs.delete(delDir, true); ()
-    }
-
-  /** Auto-purge policy for the band index (the
-    * [[graft.sim.Ann.maybeCompactIvfIndex]] discipline at the DELETE
-    * boundary): fold when the tombstone backlog crosses a declared
-    * threshold — `afterDeletes` (tombstone rows ≥ N, an O(tombstones)
-    * count) or `afterDeletesPct` (tombstone rows ≥ X% of the
-    * manifest-certified total — no table re-list, the certified count
-    * is free). Checked by the YAML `neardup_index` delete mode.
-    * `afterEpochs` trips the same fold on the STREAM backlog instead
-    * (live epoch dirs ≥ N — a pure directory listing, checked by the
-    * streaming sink after each micro-batch lands, the
-    * [[graft.sim.Ann.maybeCompactIvfIndex]] epoch rule). Returns true
+  /** Auto-purge policy for the band index: fold when the tombstone
+    * backlog crosses `afterDeletes` rows or `afterDeletesPct` of the
+    * certified total (checked by the YAML `neardup_index` delete mode),
+    * or when the STREAM backlog reaches `afterEpochs` live epochs
+    * (checked by the streaming sinks after each micro-batch lands) —
+    * [[graft.engine.LayoutFs.Artifact.autoCompact]]. Returns true
     * when a fold ran. */
   def maybeCompactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, afterDeletes: Option[Long] = None,
       afterDeletesPct: Option[Double] = None,
-      afterEpochs: Option[Int] = None): Boolean = {
-    if (afterDeletes.isEmpty && afterDeletesPct.isEmpty &&
-      afterEpochs.isEmpty) return false
-    afterDeletes.foreach(n => require(n >= 1,
-      s"purge_after_deletes must be >= 1, got $n"))
-    afterDeletesPct.foreach(p => require(p > 0,
-      s"purge_after_deletes_pct must be > 0, got $p"))
-    afterEpochs.foreach(n => require(n >= 1,
-      s"compact_after_epochs must be >= 1, got $n"))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a policy check riding a stream micro-batch or a YAML delete must
-    // DEFER under a live maintenance writer, not die: throwing the
-    // single-writer refusal inside foreachBatch would kill the
-    // streaming query over a fold that can simply run next batch (r14
-    // advice). The residual marker-lands-after-this-check race is the
-    // acquireMarker refusal — loud, and only reachable from a manual
-    // concurrent launch, never from this deferring path.
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_APPENDING")) ||
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/_COMPACTING")))
-      return false
-    val epochTrip = afterEpochs.exists { n =>
-      val marks = readNearDupMarks(spark, path)
-      liveNearDupEpochs(spark, fs, path, "shingles", marks).size >= n
+      afterEpochs: Option[Int] = None): Boolean =
+    bandIndex(spark, path).autoCompact(afterEpochs = afterEpochs,
+      afterDeletes = afterDeletes, afterDeletesPct = afterDeletesPct) {
+      compactNearDupIndex(spark, path); ()
     }
-    val delTrip = !epochTrip && {
-      val delP = new org.apache.hadoop.fs.Path(s"$path/deletes")
-      (afterDeletes.nonEmpty || afterDeletesPct.nonEmpty) &&
-      // hasVisibleParquetFile, not exists: a deletes/ dir holding only
-      // a crashed write's husks must read as "no backlog", not crash
-      // the YAML delete boundary on schema inference (r14 advice — the
-      // Ann.maybeCompactIvfIndex rule)
-      graft.engine.LayoutFs.hasVisibleParquetFile(fs, delP) && {
-        val nDel = spark.read.parquet(delP.toString).count()
-        nDel > 0 && (afterDeletes.exists(nDel >= _) ||
-          afterDeletesPct.exists { pct =>
-            val total =
-              readNearDupManifest(spark, path).map(_._4).getOrElse(0L)
-            total > 0 && nDel * 100.0 >= pct * total
-          })
-      }
-    }
-    val hit = epochTrip || delTrip
-    if (hit) compactNearDupIndex(spark, path)
-    hit
-  }
 
   /** [[incrementalNearDups]] against a PERSISTED index: verdicts are
     * identical (GraphDedupSpec pins parity), but the corpus side is a
@@ -1507,9 +857,7 @@ object Dedup {
       excludeEpoch: Option[(String, Long)]): DataFrame = {
     val spark = batch.sparkSession
     val (shingleSize, numHashes, bands, _) =
-      readNearDupManifestPatient(spark, indexPath).getOrElse(sys.error(
-        s"no near-dup index manifest at $indexPath (incomplete build? " +
-          "rebuild with writeNearDupIndex)"))
+      nearDupSignature(spark, indexPath, "incrementalNearDupsIndexed")
     // registered with AutoUnpersist at the END, like the direct path:
     // the bloom branch's count/build actions would release an
     // already-registered entry (bBuckets is an unpersisted projection)
@@ -1901,10 +1249,8 @@ object Dedup {
   def incrementalNearDedupIndexed(batch: DataFrame, indexPath: String,
       idCol: String, textCol: String, threshold: Double = 0.6,
       bloomFpp: Option[Double] = None): DataFrame = {
-    val (shingleSize, numHashes, bands, _) =
-      readNearDupManifest(batch.sparkSession, indexPath).getOrElse(sys.error(
-        s"no near-dup index manifest at $indexPath (incomplete build? " +
-          "rebuild with writeNearDupIndex)"))
+    val (shingleSize, numHashes, bands, _) = nearDupSignature(
+      batch.sparkSession, indexPath, "incrementalNearDedupIndexed")
     val verdicts = incrementalNearDupsIndexed(batch, indexPath, idCol,
       textCol, threshold, bloomFpp)
     val novel = batch.join(

@@ -237,25 +237,7 @@ object Ann {
   def writeIvfIndex(corpus: DataFrame, cId: String, cVec: String,
       path: String, nlist: Int = 16, seed: Long = 42L,
       quantize: Boolean = false): Unit = {
-    // a REBUILD dying between the table writes must not leave the
-    // previous build's manifest certifying half-written tables (e.g.
-    // old nlist over new cell dirs) — retract the certificate first,
-    // re-issue only after both tables land (same contract as
-    // Dedup.writeNearDupIndex)
-    val mf0 = manifestFile(path)
-    val fs0 = mf0.getFileSystem(
-      corpus.sparkSession.sparkContext.hadoopConfiguration)
-    fs0.delete(mf0, false)
-    // a REBUILD re-trains the geometry, so any streamed epoch
-    // partitions (appendIvfIndexStream) encoded under the OLD
-    // centroids/grid must not survive to be unioned into probes of
-    // the new index — silently mixing two geometries is exactly what
-    // the manifest discipline exists to prevent
-    fs0.delete(new org.apache.hadoop.fs.Path(s"$path/stream"), true)
-    // stale tombstones go with it: a rebuild's corpus is the caller's
-    // authority on membership — an old takedown list suppressing a
-    // deliberately re-added id would be a silent wrong answer
-    fs0.delete(new org.apache.hadoop.fs.Path(s"$path/deletes"), true)
+    ivf(corpus.sparkSession, path).rebuild()
     // deterministic quantized-integer k-means (Cluster.fitCentroids's
     // engine-portable contract) — the cell layout is replayable from
     // (data, nlist, seed) alone, so the index build itself sits under
@@ -321,20 +303,10 @@ object Ann {
         })
       .toDF("__cell", "__centroid", "__qcentroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    // build manifest, written LAST so its presence certifies a COMPLETE
-    // build: a crash between the two table writes (or an out-of-band
-    // rebuild caught mid-write) leaves no manifest / a manifest that
-    // disagrees with the centroid table, and the probe fails loudly
-    // instead of silently scoring against torn cells. rows was observed
-    // on the write job itself.
-    val spark = corpus.sparkSession
-    val rows = observedRows(obs, corpus.sparkSession, s"$path/assigned")
-    // a fresh geometry identity per (re)build (nanoTime: two rebuilds
-    // in one millisecond must still differ) — stream writers compare
-    // it per batch to catch an out-of-band retrain; stream marks reset
-    // with the stream/ table the build just cleared
-    writeManifest(spark, path, nlist, rows, quant = if (quantize) 1 else 0,
-      geomId = System.nanoTime())
+    // the certificate, written LAST (rows observed on the write job)
+    ivf(corpus.sparkSession, path).write(buildCert(
+      observedRows(obs, corpus.sparkSession, s"$path/assigned"), nlist,
+      quant = if (quantize) 1 else 0))
     } finally { base.unpersist(false); () }
   }
 
@@ -356,34 +328,46 @@ object Ann {
     }
   }
 
-  /** Manifest location + read/write. One tiny JSON line; parsed with a
-    * regex rather than a JSON library to keep the index format free of
-    * any dependency (the fields are flat integers). `quant` encodes the
-    * LAYOUT: 0 float cells, 1 int8 scalar grids (SQ8), 2 product-
-    * quantized codes (PQ, with `pq_m`/`pq_ksub` recording the code
-    * geometry a probe must reuse verbatim). */
-  private def manifestFile(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.json")
+  /** The IVF index as a lifecycle artifact ([[graft.engine.LayoutFs]]):
+    * `assigned/` partitioned by `__cell`, keyed on `neighbor_id`,
+    * streamed epochs under `stream/`. */
+  private[graft] def ivf(spark: org.apache.spark.sql.SparkSession,
+      path: String) =
+    new graft.engine.LayoutFs.Artifact(spark, path, "IVF index",
+      "writeIvfIndex / the ann_index sink", "neighbor_id", Seq("assigned"),
+      Seq("stream"))
 
-  private[graft] case class IvfManifest(nlist: Int, rows: Long,
-      builtMs: Long, quant: Int, pqM: Int, pqKsub: Int,
-      version: Long, pqRes: Int = 0,
-      // geometry identity: stamped at BUILD time, PRESERVED by
-      // append/compaction — the streaming writer's per-batch tripwire
-      // against an out-of-band rebuild (version/built_ms change on
-      // every legitimate compaction too, so they can't distinguish
-      // "recompacted" from "retrained")
-      geomId: Long = 0L,
-      // compaction watermarks per stream incarnation (__stream tag →
-      // highest epoch folded into assigned/): a replayed epoch at or
-      // below its tag's mark is ALREADY in the main table and the
-      // sink must skip it, not re-create it in stream/
-      streamMarks: Map[String, Long] = Map.empty,
-      // dead-file grace (r15): a purge's replaced assigned/ files
-      // (`__cell=N/name` relatives), retained on disk one maintenance
-      // cycle for readers whose listing predates the purge; openers
-      // exclude them, the next maintenance entry collects them
-      deadFiles: Seq[String] = Nil) {
+  /** A build's certificate. `quant` encodes the LAYOUT: 0 float cells,
+    * 1 int8 scalar grids (SQ8), 2 product-quantized codes (PQ, with
+    * `pq_m`/`pq_ksub`/`pq_res` recording the code geometry a probe must
+    * reuse verbatim). `geom_id` is a fresh geometry identity per
+    * (re)build (nanoTime: two rebuilds in one millisecond still
+    * differ), PRESERVED by append and compaction — the streaming
+    * writer's per-batch tripwire against an out-of-band retrain
+    * (version/built_ms change on every compaction too). */
+  private def buildCert(rows: Long, nlist: Int, quant: Int, pqM: Int = 0,
+      pqKsub: Int = 0, pqRes: Int = 0) =
+    graft.engine.LayoutFs.Manifest(rows, geometry = Seq(
+      "nlist" -> nlist.toLong, "quant" -> quant.toLong,
+      "pq_m" -> pqM.toLong, "pq_ksub" -> pqKsub.toLong,
+      "pq_res" -> pqRes.toLong, "geom_id" -> System.nanoTime()))
+
+  /** The typed view of an IVF certificate. Pre-quantization
+    * certificates (no `quant`) read as the float layout, pre-PQ ones
+    * (no `pq_*`) with no code geometry. */
+  private[graft] case class IvfManifest(cert: graft.engine.LayoutFs.Manifest) {
+    private def g(k: String): Long = cert.geom(k).getOrElse(0L)
+    def nlist: Int = g("nlist").toInt
+    def rows: Long = cert.rows
+    def version: Long = cert.version
+    def quant: Int = g("quant").toInt
+    def pqM: Int = g("pq_m").toInt
+    def pqKsub: Int = g("pq_ksub").toInt
+    def pqRes: Int = g("pq_res").toInt
+    def geomId: Long = g("geom_id")
+    def streamMarks: Map[String, Long] = cert.streamMarks
+    /** A purge's replaced `__cell=N/name` files, in dead-file grace. */
+    def deadFiles: Seq[String] = cert.deadFiles.getOrElse("assigned", Nil)
     def layoutName: String = quant match {
       case 0 => "FLOAT"; case 1 => "int8-QUANTIZED (SQ8)"
       case _ => "PRODUCT-QUANTIZED (PQ)"
@@ -394,70 +378,12 @@ object Ann {
     }
   }
 
-  private def writeManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, nlist: Int, rows: Long, quant: Int,
-      pqM: Int = 0, pqKsub: Int = 0, version: Long = 0,
-      pqRes: Int = 0, geomId: Long = 0L,
-      streamMarks: Map[String, Long] = Map.empty,
-      deadFiles: Seq[String] = Nil): Unit = {
-    val p = manifestFile(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    // stream tags are md5-hex prefixes (sanitized below just in case)
-    val marks = streamMarks.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        s""""${k.replaceAll("[^0-9a-zA-Z]", "")}": $v""" }
-      .mkString("{", ", ", "}")
-    val dead = graft.engine.LayoutFs.deadFilesJson(
-      if (deadFiles.isEmpty) Map.empty
-      else Map("assigned" -> deadFiles))
-    try out.write(
-      (s"""{"nlist": $nlist, "rows": $rows, """ +
-        s""""quant": $quant, "pq_m": $pqM, "pq_ksub": $pqKsub, """ +
-        s""""pq_res": $pqRes, "version": $version, """ +
-        s""""geom_id": $geomId, "stream_marks": $marks, """ +
-        s""""dead_files": $dead, """ +
-        s""""built_ms": ${System.currentTimeMillis()}}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Read an index dir's build manifest. None when absent — an
-    * incomplete or pre-manifest build; a pre-quantization manifest (no
-    * `quant` field) reads as a float layout, a pre-PQ one (no `pq_m`)
-    * as its recorded quant with no code geometry. */
+  /** An index dir's certificate; None when absent or not an IVF one. */
   private[graft] def readManifest(
       spark: org.apache.spark.sql.SparkSession, path: String)
-      : Option[IvfManifest] = {
-    val p = manifestFile(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      def field(k: String): Option[Long] =
-        (s""""$k":\\s*(\\d+)""".r).findFirstMatchIn(txt).map(_.group(1).toLong)
-      val marks = """"stream_marks":\s*\{([^}]*)\}""".r
-        .findFirstMatchIn(txt).map(_.group(1)) match {
-          case None => Map.empty[String, Long]
-          case Some(body) =>
-            """"(\w+)":\s*(\d+)""".r.findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2).toLong).toMap
-        }
-      for (n <- field("nlist"); r <- field("rows"); b <- field("built_ms"))
-        yield IvfManifest(n.toInt, r, b,
-          field("quant").getOrElse(0L).toInt,
-          field("pq_m").getOrElse(0L).toInt,
-          field("pq_ksub").getOrElse(0L).toInt,
-          field("version").getOrElse(0L),
-          field("pq_res").getOrElse(0L).toInt,
-          field("geom_id").getOrElse(0L),
-          marks,
-          graft.engine.LayoutFs.parseDeadFiles(txt)
-            .getOrElse("assigned", Nil))
-    }
-  }
+      : Option[IvfManifest] =
+    ivf(spark, path).manifest().filter(_.geom("nlist").isDefined)
+      .map(IvfManifest(_))
 
   /** Query a persisted IVF index: pick each query's nprobe nearest
     * centroids (tiny broadcast), then join the probes against the
@@ -474,37 +400,19 @@ object Ann {
   private def openIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, probe: String, wantQuant: Int)
       : (DataFrame, DataFrame, IvfManifest) = {
+    val art = ivf(spark, path)
     // name a wrong path / not-an-index directory instead of surfacing a
     // bare parquet PATH_NOT_FOUND from one of the two sub-reads
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("assigned", "centroids").foreach { t =>
-      require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t")),
+    def requireTable(t: String): Unit =
+      require(art.fs.exists(art.at(t)),
         s"$probe: '$path' is not a complete IVF index (missing $t/ — " +
           "build one with writeIvfIndex or the ann_index sink)")
-    }
+    Seq("assigned", "centroids").foreach(requireTable)
     // a long-lived JVM (the API server) must never silently probe a
-    // dir someone rebuilt under it — both torn states fail loudly.
-    // The whole open — manifest, centroid check, assigned listing,
-    // epoch listing, tombstone snapshot — runs VERSION-STABLE
-    // (consistentSnapshot, r15): every maintenance re-issue bumps the
-    // manifest version, so a stable version across the listings
-    // proves no swap interleaved them (a fold renaming staged cell
-    // files in mid-listing would otherwise hand this probe old AND
-    // new copies of the same rows). Patient reads inside ride out
-    // the narrow retraction windows as before.
-    graft.engine.LayoutFs.consistentSnapshot(
-        s"$probe at '$path'",
-        // snapshot key mixes built_ms in: a REBUILD resets the version
-        // counter, so version alone could alias across one (ABA); the
-        // build stamp breaks the tie
-        readManifest(spark, path)
-          .map(m => m.version * 0x9E3779B97F4A7CL + m.builtMs)) {
-    val mf = readManifestPatient(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"$probe: '$path' has no build manifest — the index build " +
-          "did not complete (or is being rebuilt right now); rerun " +
-          "writeIvfIndex / the ann_index sink"))
+    // dir someone rebuilt under it — both torn states fail loudly, and
+    // the whole open runs in the version-stable bracket
+    art.open(probe) { cert =>
+    val mf = IvfManifest(cert)
     // the three layouts are distinct index FORMATS — scoring float
     // cosine against grids, grids against floats, or ADC against
     // either would be silently wrong, so each probe entry point names
@@ -514,16 +422,10 @@ object Ann {
         s"${mf.probeName} (ranking one layout's cells under another " +
         "layout's metric would be silently wrong)")
     // quantized layouts have a third table — checked AFTER the layout
-    // test (a float dir should say FLOAT, not "missing params/") so a
-    // torn quantized build names the contract instead of surfacing a
-    // bare parquet PATH_NOT_FOUND on the sub-read
-    val extra = wantQuant match {
-      case 1 => Some("params"); case 2 => Some("pq"); case _ => None
-    }
-    extra.foreach { t =>
-      require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t")),
-        s"$probe: '$path' is not a complete IVF index (missing $t/ — " +
-          "build one with writeIvfIndex or the ann_index sink)")
+    // test (a float dir should say FLOAT, not "missing params/")
+    wantQuant match {
+      case 1 => requireTable("params"); case 2 => requireTable("pq")
+      case _ =>
     }
     val centDfRaw = spark.read.parquet(s"$path/centroids")
     val nCent = centDfRaw.count()
@@ -531,82 +433,13 @@ object Ann {
       s"$probe: '$path' is torn — manifest says nlist=${mf.nlist} but " +
         s"centroids/ has $nCent rows (index rebuilt out-of-band " +
         "mid-probe?); rebuild with writeIvfIndex")
-    // STREAMED epoch partitions (appendIvfIndexStream) probe alongside
-    // the built table: a two-table union per probe, each side pruned
-    // on __cell independently (the filter pushes through the union),
-    // until compactIvfIndex folds them in. The stream table carries
-    // the layout's own payload column, so every probe flavor reads it
-    // unchanged; (__stream, __epoch) are the idempotency keys, not
-    // data. hasParquetFile (not bare exists): a file-less stream/
-    // remnant must not turn the whole index unprobable with a
-    // schema-inference error (r13 review).
-    // a purge's replaced cell files ride the manifest's dead-file
-    // grace list (r15): excluded here by relative name, still on
-    // disk for probes whose listing predates the purge (their
-    // tombstone snapshot keeps them exact), physically collected one
-    // maintenance cycle later. The exclusion listing preserves
-    // partition pruning — each explicit path still carries its
-    // __cell= directory, and basePath derives the partition column.
-    val assigned =
-      if (mf.deadFiles.isEmpty) spark.read.parquet(s"$path/assigned")
-      else {
-        val deadSet = mf.deadFiles.toSet
-        val livePaths = fs.listStatus(
-            new org.apache.hadoop.fs.Path(s"$path/assigned")).toSeq
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("__cell="))
-          .flatMap { cd =>
-            fs.listStatus(cd.getPath).toSeq
-              .filter(st => st.isFile &&
-                st.getPath.getName.endsWith(".parquet"))
-              .map(st => (s"${cd.getPath.getName}/${st.getPath.getName}",
-                st.getPath.toString))
-          }
-          .collect { case (rel, p) if !deadSet(rel) => p }
-        if (livePaths.isEmpty)
-          spark.read.parquet(s"$path/assigned").limit(0)
-        else spark.read.option("basePath", s"$path/assigned")
-          .parquet(livePaths: _*)
-      }
-    // LIVE epochs only — marks-filtered like the band opener (r15):
-    // a folded epoch's dir is RETAINED one fold cycle as probe grace
-    // (compactIvfIndex), and its rows are already in assigned/, so
-    // unioning it back would double-count every row it holds. This
-    // also closes the transient double-count on a replay-resurrected
-    // dir the sink's re-verify had not yet taken back.
-    val liveEpochs = listStreamEpochs(fs, path)
-      .filter(e => hasParquetFile(fs, e._3))
-      .filterNot { case (tag, ep, _) =>
-        mf.streamMarks.get(tag).exists(ep <= _) }
-    val withStream =
-      if (liveEpochs.isEmpty) assigned
-      else assigned.unionByName(
-        spark.read.option("basePath", s"$path/stream")
-          .parquet(liveEpochs.map(_._3.toString): _*)
-          .drop("__epoch", "__stream"))
-    // TOMBSTONES (deleteFromIvfIndex): suppressed here, AFTER the
-    // stream union, so the takedown covers built and still-streaming
-    // rows alike across all three layouts. EAGER snapshot inside the
-    // version bracket (r15): the ids collect to the driver (the
-    // deletes table is declared-small — the same contract as the
-    // broadcast it feeds), so a purge consuming the tombstone files
-    // mid-probe cannot fail the probe's lazy read, and a pre-purge
-    // listing can never pair with a post-purge empty tombstone set.
-    val withDeletes = {
-      val delP = new org.apache.hadoop.fs.Path(s"$path/deletes")
-      if (!hasParquetFile(fs, delP)) withStream
-      else {
-        val delDf = spark.read.parquet(delP.toString)
-          .select(col("neighbor_id").as("__del_id")).distinct()
-        val ids = delDf.collect().toIndexedSeq
-        if (ids.isEmpty) withStream
-        else withStream.join(
-          broadcast(spark.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(ids).asJava,
-            delDf.schema)),
-          col("neighbor_id") === col("__del_id"), "left_anti")
-      }
-    }
+    // STREAMED epochs (appendIvfIndexStream) probe alongside the built
+    // table — a two-table union, each side pruned on __cell
+    // independently — until compactIvfIndex folds them in; then the
+    // tombstones are suppressed AFTER the union, so the takedown
+    // covers built and still-streaming rows alike across all three
+    // layouts.
+    //
     // NOT rebalanced (r16, A/B'd and rejected): wrapping the assigned
     // frame in Ops.rebalance kept DPP alive (PartitionFilters still
     // carried the dynamicpruning subquery) but regressed every probe
@@ -615,7 +448,11 @@ object Ann {
     // stage is dominated by the pruned cells' parquet DECODE, which an
     // exchange after the scan cannot parallelize (the q01/q128 lesson);
     // at corpus scale the cells split into many tasks by themselves.
-    (centDfRaw, withDeletes, mf)
+    val live = art.suppress(
+      art.withLiveEpochs(art.liveTable("assigned", cert), "stream",
+        cert.streamMarks),
+      art.tombstoneSnapshot())
+    (centDfRaw, live, mf)
     }
   }
 
@@ -1348,15 +1185,7 @@ object Ann {
   def writeIvfIndexPq(corpus: DataFrame, cId: String, cVec: String,
       path: String, nlist: Int = 16, seed: Long = 42L,
       m: Int = 8, ksub: Int = 256, residual: Boolean = false): Unit = {
-    val mf0 = manifestFile(path)
-    val fs0 = mf0.getFileSystem(
-      corpus.sparkSession.sparkContext.hadoopConfiguration)
-    fs0.delete(mf0, false)
-    // stale streamed epochs from a pre-rebuild stream would mix the
-    // OLD geometry into probes of the new index, and stale tombstones
-    // would overrule the new corpus's membership (see writeIvfIndex)
-    fs0.delete(new org.apache.hadoop.fs.Path(s"$path/stream"), true)
-    fs0.delete(new org.apache.hadoop.fs.Path(s"$path/deletes"), true)
+    ivf(corpus.sparkSession, path).rebuild()
     val scale = 10000
     // ONE decode of the corpus for the whole build (r16, the
     // writeIvfIndex note, and much bigger here): the coarse fit's
@@ -1437,12 +1266,10 @@ object Ann {
         })
       .toDF("__cell", "__centroid", "__qcentroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val spark = corpus.sparkSession
     // observed on the coded write (the writeIvfIndex Observation note)
-    val rows = observedRows(obsPq, spark, s"$path/assigned")
-    writeManifest(spark, path, nlist, rows, quant = 2,
-      pqM = m, pqKsub = ksub, pqRes = if (residual) 1 else 0,
-      geomId = System.nanoTime())
+    ivf(corpus.sparkSession, path).write(buildCert(
+      observedRows(obsPq, corpus.sparkSession, s"$path/assigned"), nlist,
+      quant = 2, pqM = m, pqKsub = ksub, pqRes = if (residual) 1 else 0))
     } finally { base.unpersist(false); () }
   }
 
@@ -1478,10 +1305,7 @@ object Ann {
   private[graft] def loadIndexGeometry(
       spark: org.apache.spark.sql.SparkSession, path: String,
       caller: String): (IvfManifest, DataFrame) = {
-    val m = readManifest(spark, path).getOrElse(sys.error(
-      s"$caller: no build manifest at '$path' — an append can " +
-        "only extend a COMPLETE index (build with writeIvfIndex / the " +
-        "ann_index sink first)"))
+    val m = IvfManifest(ivf(spark, path).certified(caller))
     val c = spark.read.parquet(s"$path/centroids")
     require(c.count() == m.nlist,
       s"$caller: '$path' is torn — manifest says nlist=${m.nlist} " +
@@ -1560,180 +1384,47 @@ object Ann {
   }
 
   /** Append a batch to a persisted IVF index under its EXISTING
-    * geometry ([[encodeUnderStoredGeometry]]), appended to the cell
-    * partitions, the manifest re-issued with the new row count and a
-    * bumped `version` (geometry identity and stream marks carried
-    * unchanged — an append extends, never retrains). Torn-append
-    * discipline, STAGED (r14 advice): the batch encodes and writes to
-    * a side dir first — the long, O(batch) part, certificate intact
-    * so concurrent probes never block on it — then the manifest is
-    * retracted only for the fast per-cell file moves and re-issued
-    * after (the fold's stage-before-retract shape). A crash mid-move
-    * leaves no certificate and every probe fails loudly instead of
-    * reading half a batch.
-    * Duplicate ids are the CALLER's contract (append kept rows — run
-    * the incremental dedup gate first, the q107 discipline); an
-    * append never dedups.
-    *
-    * Single-maintenance-writer contract: an append lands files in the
-    * same cell directories a concurrent [[compactIvfIndex]] deletes at
-    * swap time — interleaved, the appended rows silently vanish. Both
-    * sides enforce it: this method refuses while the fold's
-    * `_COMPACTING` marker exists and holds `_APPENDING` for its run,
-    * which the fold refuses on. A marker left by a CRASHED run blocks
-    * the other side until deleted by hand — the refusal names it (the
-    * torn-manifest loud-refusal style: never silently lose rows). */
+    * geometry ([[encodeUnderStoredGeometry]]): staged per cell, swapped
+    * into the cell partitions, the certificate re-issued with the new
+    * row count (geometry identity and stream marks carried unchanged —
+    * an append extends, never retrains). Row accounting is
+    * incremental: the encode is row-preserving (NULL/ragged vectors
+    * keep a NULL cell, they are written, never dropped), so the new
+    * total is certified + batch — an O(batch) count instead of
+    * re-listing every footer of a 100-TB table per append. Duplicate
+    * ids are the CALLER's contract (append kept rows — run the
+    * incremental dedup gate first, the q107 discipline); an append
+    * never dedups. */
   def appendIvfIndex(batch: DataFrame, cId: String, cVec: String,
       path: String): Unit = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val compactingP = new org.apache.hadoop.fs.Path(s"$path/_COMPACTING")
-    val appendingP = new org.apache.hadoop.fs.Path(s"$path/_APPENDING")
-    graft.engine.LayoutFs.acquireMarker(fs, appendingP, compactingP,
-      refuseOpposite =
-        s"appendIvfIndex: a compaction is rewriting cell partitions at " +
-          s"'$path' (${compactingP.getName} exists) — rows appended now " +
-          "would be deleted by its swap (single-maintenance-writer " +
-          "contract); wait for the fold to finish, or delete the marker " +
-          "if it crashed mid-run",
-      refuseOwn =
-        s"appendIvfIndex: another append is already running at '$path' " +
-          s"(${appendingP.getName} exists) — wait for it to finish, or " +
-          "delete the marker if it crashed mid-run")
-    try {
+    val art = ivf(batch.sparkSession, path)
+    art.writer("appendIvfIndex", compacting = false) {
       val (rows, mf) =
         encodeUnderStoredGeometry(batch, cId, cVec, path, "appendIvfIndex")
-      // STAGE the encoded batch first (the long part, certificate
-      // intact); the retraction window below covers only fast file
-      // moves, which readManifestPatient rides out
-      val stagedP = new org.apache.hadoop.fs.Path(s"$path/assigned_append")
-      fs.delete(stagedP, true) // a crashed previous append's leftover
+      val stagedP = art.stage("assigned", "append")
       rows.repartition(col("__cell"))
         .write.mode("overwrite").partitionBy("__cell")
         .parquet(stagedP.toString)
-      // incremental row accounting (the compactIvfIndex discipline,
-      // r14): the encode is row-preserving (NULL/ragged vectors keep a
-      // NULL cell, they are written, never dropped), so the new total
-      // is certified + batch — an O(batch) count instead of re-listing
-      // every footer of a 100-TB table per append
-      val total = mf.rows + batch.select(col(cId)).count()
-      val mfp = manifestFile(path)
-      mfp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(mfp, false)
-      fs.listStatus(stagedP).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("__cell="))
-        .foreach { cd =>
-          val target = new org.apache.hadoop.fs.Path(
-            s"$path/assigned/${cd.getPath.getName}")
-          if (!fs.exists(target)) fs.mkdirs(target)
-          fs.listStatus(cd.getPath).toSeq
-            .filter(st => st.isFile &&
-              st.getPath.getName.endsWith(".parquet"))
-            .foreach { st =>
-              fs.rename(st.getPath,
-                new org.apache.hadoop.fs.Path(
-                  s"$target/${st.getPath.getName}"))
-            }
-        }
-      fs.delete(stagedP, true)
-      writeManifest(spark, path, mf.nlist, total, mf.quant,
-        mf.pqM, mf.pqKsub, version = mf.version + 1, pqRes = mf.pqRes,
-        geomId = mf.geomId, streamMarks = mf.streamMarks,
-        // carried, not collected: grace collection is the compact
-        // entry's job; an append mid-grace keeps excluding the
-        // purge's replaced files
-        deadFiles = mf.deadFiles)
-    } finally { fs.delete(appendingP, false); () }
+      art.swap(Seq("assigned" -> stagedP),
+        mf.cert.next(rows = mf.rows + batch.select(col(cId)).count()))
+    }
   }
 
-  /** DELETE — the index lifecycle's takedown verb (r13 verdict #2): a
-    * 100-TB training-data pipeline must honor removals WITHOUT a
-    * rebuild. Tombstone semantics, LSM-style: the ids append to a
-    * tiny `deletes/` table (declared-small — takedowns are bounded by
+  /** DELETE — the index lifecycle's takedown verb: a 100-TB
+    * training-data pipeline must honor removals WITHOUT a rebuild.
+    * Tombstone semantics, LSM-style: the ids append to a tiny
+    * `deletes/` table (declared-small — takedowns are bounded by
     * legal/ops reality, not corpus scale), every probe anti-joins it
     * BROADCAST (openIvfIndex — one shared filter across all three
     * layouts, covering built AND still-streaming rows), and the next
-    * [[compactIvfIndex]] purges the tombstoned rows physically and
-    * consumes the tombstone files. Until that purge the bytes remain
-    * on disk — callers with hard-erasure deadlines run the fold as
-    * part of the takedown.
-    *
-    * Ids are cast to the index's own id type (footer read, no data
-    * scan) so mixed-type callers cannot write an anti-join that never
-    * matches. Ids absent from the index are legal (idempotent — a
-    * takedown list replayed twice is routine); a delete never touches
-    * assigned/ or the manifest, so it is safe beside probes, appends,
-    * the streaming sink, and a running fold (a fold already past its
-    * tombstone snapshot leaves these ids for the next one). */
+    * [[compactIvfIndex]] purges the tombstoned rows physically. Until
+    * that purge the bytes remain on disk — callers with hard-erasure
+    * deadlines run the fold as part of the takedown. Ids absent from
+    * the index are legal (a takedown list replayed twice is
+    * routine). */
   def deleteFromIvfIndex(ids: DataFrame, idCol: String,
-      path: String): Unit = {
-    val spark = ids.sparkSession
-    readManifestPatient(spark, path).getOrElse(sys.error(
-      s"deleteFromIvfIndex: no build manifest at '$path' — deletes " +
-        "tombstone rows of a COMPLETE index (build with writeIvfIndex " +
-        "/ the ann_index sink first)"))
-    val idType = spark.read.parquet(s"$path/assigned")
-      .schema("neighbor_id").dataType
-    ids.select(col(idCol).cast(idType).as("neighbor_id"))
-      .filter(col("neighbor_id").isNotNull).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path/deletes")
-  }
-
-  /** Does any parquet data file exist under `p`? Guards the probe
-    * union and the compaction read against a `stream/` tree holding
-    * only `_SUCCESS` markers / empty epoch dirs (a crash remnant —
-    * the sink skips empty batches, but a die-mid-write can leave
-    * one), where a bare parquet read would throw "unable to infer
-    * schema" and turn a working index unprobable (r13 review). */
-  private def hasParquetFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean =
-    // hidden-name-aware (r13 review #2): counting a parquet file
-    // inside .spark-staging-* (a kill-mid-write remnant) would send
-    // the caller into a union read that then sees zero data files and
-    // crashes on schema inference — the shared helper implements
-    // Spark's own discovery rule
-    graft.engine.LayoutFs.hasVisibleParquetFile(fs, p)
-
-  /** Read the manifest with a SHORT bounded retry on absence: a
-    * compaction retracts the certificate for its (narrow) swap window,
-    * and a live probe or sink batch landing inside it must not die on
-    * a transient state — while a crashed build's PERMANENT absence
-    * still fails after the ~1 s budget (the loud-refusal contract,
-    * delayed one second). */
-  private[graft] def readManifestPatient(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : Option[IvfManifest] =
-    graft.engine.LayoutFs.patiently(readManifest(spark, path))
-
-  /** The streamed-epoch partition dirs currently under `path/stream`:
-    * (streamTag, epoch, dir) triples — the SNAPSHOT unit compaction
-    * folds and deletes. A legacy single-level layout (bare __epoch=*
-    * dirs from before the checkpoint-tag partitioning) refuses loudly:
-    * silently ignoring it would make compaction a forever-no-op while
-    * a resumed stream writes the two-level layout beside it and every
-    * probe dies on conflicting partition structures. */
-  private def listStreamEpochs(fs: org.apache.hadoop.fs.FileSystem,
-      path: String)
-      : Seq[(String, Long, org.apache.hadoop.fs.Path)] = {
-    val streamP = new org.apache.hadoop.fs.Path(s"$path/stream")
-    if (!fs.exists(streamP)) return Nil
-    val top = fs.listStatus(streamP).toSeq
-    require(!top.exists(s => s.isDirectory &&
-        s.getPath.getName.startsWith("__epoch=")),
-      s"the stream/ table at '$path' uses the legacy un-tagged epoch " +
-        "layout — rebuild the index (writeIvfIndex clears stream/) " +
-        "before streaming into it again")
-    for {
-      sd <- top
-      if sd.isDirectory && sd.getPath.getName.startsWith("__stream=")
-      ed <- fs.listStatus(sd.getPath).toSeq
-      if ed.isDirectory && ed.getPath.getName.startsWith("__epoch=")
-    } yield (sd.getPath.getName.stripPrefix("__stream="),
-      ed.getPath.getName.stripPrefix("__epoch=").toLong, ed.getPath)
-  }
+      path: String): Unit =
+    ivf(ids.sparkSession, path).deleteIds(ids, idCol, "deleteFromIvfIndex")
 
   /** Fold the streamed epoch partitions (`path/stream`, written by
     * [[graft.streaming.EventStream.appendIvfIndexStream]]) into the
@@ -1742,56 +1433,27 @@ object Ann {
     * LSM-style compaction that keeps the steady-state probe a
     * two-table union at worst and a single table after.
     *
-    * TWO SHAPES (r15, driven by the live-race soak). Without
-    * tombstones — the continuous-operation case — the fold is
-    * APPEND-ONLY: streamed rows stage per cell and rename IN as new
-    * cell files, no existing file is ever read or deleted, and the
-    * folded epoch dirs are RETAINED under the freshly-written
-    * watermark ("grace") until the NEXT fold's resurrected-epoch
-    * sweep collects them — so a probe that listed them pre-fold
-    * finishes against intact files while post-mark probes skip them
+    * TWO SHAPES. Without tombstones — the continuous-operation case —
+    * the fold is APPEND-ONLY: streamed rows stage per cell and swap IN
+    * as new cell files, no existing file is ever read or deleted, and
+    * the folded epoch dirs are RETAINED under the freshly-written
+    * watermark (grace) until the NEXT fold's resurrected-epoch sweep
+    * collects them — so a probe that listed them pre-fold finishes
+    * against intact files while post-mark probes skip them
     * (RaceSoakSpec holds 20 folds under a probing thread with zero
-    * errors). Cost is O(streamed rows), the band-index fold's shape.
-    * WITH tombstones the fold is CELL-SCOPED (r14): it rewrites only
-    * the cell partitions the snapshot touches or a tombstoned row
-    * lives in — never the whole table (untouched cells keep their
-    * exact files, spec-pinned). The purge path deletes replaced
-    * files, so it IS a maintenance window for probes in flight across
-    * its swap (a landing probe waits on the patient manifest read; an
-    * already-executing one can fail a read and must retry) — the
-    * price of physical erasure without a table format's snapshots.
-    * Finding the tombstoned cells costs one column-pruned scan of the
-    * id column (footer-narrow, no payload bytes) — only when
-    * tombstones exist.
+    * errors). Cost is O(streamed rows). WITH tombstones the fold is
+    * CELL-SCOPED: it rewrites only the cell partitions the snapshot
+    * touches or a tombstoned row lives in (untouched cells keep their
+    * exact files, spec-pinned); the replaced cell files enter the
+    * dead-file grace list. Finding the tombstoned cells costs one
+    * column-pruned scan of the id column — only when tombstones exist.
     *
-    * Safe beside a LIVE stream (r13 review): the fold operates on a
-    * SNAPSHOT — the epoch dirs listed at entry are read explicitly,
-    * folded, and exactly those dirs deleted, so an epoch landing
-    * mid-compaction survives in stream/ (still probed via the union)
-    * instead of being deleted unmerged. And a later REPLAY of a
-    * folded epoch must not resurrect it in stream/: each folded
-    * stream incarnation's highest epoch is recorded in the manifest
-    * (`stream_marks`), and the sink skips any (tag, epoch) at or
-    * below its mark — those rows are already in assigned/. Tombstone
-    * FILES are snapshotted the same way: the purge consumes exactly
-    * the delete files present at entry, so a takedown landing
-    * mid-compaction keeps suppressing its rows (probe-side anti-join)
-    * until the next fold purges it.
-    *
-    * NOT safe beside a concurrent BATCH append (single-maintenance-
-    * writer contract): an append lands files directly in the cell
-    * dirs this fold deletes at swap time, so its rows could vanish.
-    * Both sides enforce it — this method refuses while the append's
-    * `_APPENDING` marker exists and holds `_COMPACTING` for its run,
-    * which [[appendIvfIndex]] refuses on. The STREAMING sink is
-    * exempt: it writes only epoch dirs under stream/, which the
-    * snapshot discipline already covers.
-    *
-    * The manifest is retracted during the swap (the torn-build
-    * discipline: a crash mid-compaction leaves no certificate, and
-    * the streamed rows are only deleted AFTER the merged cells
-    * landed). No-op when no streamed rows and no tombstones exist;
-    * file-less crash remnants are swept without a fold.
+    * Safe beside a LIVE stream: the fold operates on the epoch dirs
+    * listed at entry, and a later REPLAY of a folded epoch is skipped
+    * by the sink against the watermark. Epochs at/below their tag's
+    * watermark found at entry — the previous fold's graced dirs, or a
+    * replay that raced a compaction — are deleted WITHOUT folding
+    * (folding again would make the duplication permanent).
     *
     * Returns the count of tombstone-matched rows physically purged —
     * 0 for a fold-only run — so compliance receipts (the YAML
@@ -1800,267 +1462,124 @@ object Ann {
     * touched cells, run only when tombstones exist. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val streamP = new org.apache.hadoop.fs.Path(s"$path/stream")
-    val delDir = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    // tombstone snapshot: purge + clear exactly these files — a delete
-    // landing mid-compaction survives to the next fold, still
-    // suppressed probe-side meanwhile
-    val delFiles: Seq[org.apache.hadoop.fs.Path] =
-      if (!fs.exists(delDir)) Nil
-      else fs.listStatus(delDir).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
-    if (!fs.exists(streamP) && delFiles.isEmpty) {
-      // nothing to fold or purge — still a maintenance ENTRY, so a
-      // previous purge's dead-file grace list is collected here too
-      // (marker-guarded; silently deferred if a writer holds the
-      // index)
-      collectIvfDeadStandalone(spark, fs, path)
-      return 0L
+    val art = ivf(spark, path)
+    val verb = "compactIvfIndex"
+    // tombstone snapshot: purge + clear exactly these files
+    val delFiles = art.tombstoneFiles()
+    if (!art.fs.exists(art.at("stream")) && delFiles.isEmpty) {
+      // nothing to fold or purge — still a maintenance ENTRY
+      art.collectDeadStandalone()
+      0L
+    } else {
+      art.certified(verb)
+      art.writer(verb, compacting = true)(foldAndPurge(art, delFiles))
     }
-    val mf = readManifest(spark, path).getOrElse(sys.error(
-      s"compactIvfIndex: no build manifest at '$path' — nothing " +
-        "certified to compact; rebuild with writeIvfIndex"))
-    val appendingP = new org.apache.hadoop.fs.Path(s"$path/_APPENDING")
-    val compactingP = new org.apache.hadoop.fs.Path(s"$path/_COMPACTING")
-    graft.engine.LayoutFs.acquireMarker(fs, compactingP, appendingP,
-      refuseOpposite =
-        s"compactIvfIndex: a batch append is running at '$path' " +
-          s"(${appendingP.getName} exists) — its freshly appended cell " +
-          "files would be deleted by this fold's swap (single-" +
-          "maintenance-writer contract); wait for the append to finish, " +
-          "or delete the marker if it crashed mid-run",
-      refuseOwn =
-        s"compactIvfIndex: another compaction is already running at " +
-          s"'$path' (${compactingP.getName} exists) — wait for it to " +
-          "finish, or delete the marker if it crashed mid-run")
-    try {
-    // fresh manifest under the marker (the pre-acquire read could
-    // predate an append that finished since), then DEAD-FILE GRACE
-    // COLLECTION (r15): a previous purge's replaced cell files were
-    // kept on disk for readers whose listing predated it — one
-    // maintenance cycle later, here, they are physically collected.
-    val mfF = readManifest(spark, path).getOrElse(mf)
-    mfF.deadFiles.foreach { rel =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/assigned/$rel"),
-        false)
-    }
-    // the stream snapshot: fold + delete exactly these dirs, nothing
-    // newer. Three bins: file-less crash husks (swept), RESURRECTED
-    // epochs — at/below their tag's existing watermark, i.e. a replay
-    // that raced a previous compaction and re-created a dir whose rows
-    // the main table already holds (r13 review #3) — deleted WITHOUT
-    // folding (folding again would make the duplication permanent),
-    // and genuinely new epochs (folded). The resurrected bin doubles
-    // as the folded-epoch grace collection: the previous fold
-    // RETAINED its banked dirs under the watermark for in-flight
-    // probes, and this entry removes them.
-    val epochs = listStreamEpochs(fs, path)
-    val (files, husks) = epochs.partition(e => hasParquetFile(fs, e._3))
-    husks.foreach(e => fs.delete(e._3, true))
+  }
+
+  /** [[compactIvfIndex]]'s body, under the `compacting` marker. */
+  private def foldAndPurge(art: graft.engine.LayoutFs.Artifact,
+      delFiles: Seq[org.apache.hadoop.fs.Path]): Long = {
+    val spark = art.spark
+    val path = art.path
+    val fs = art.fs
+    val mf = art.collectDead(art.certified("compactIvfIndex"))
+    // the stream snapshot, three bins: file-less crash husks (swept),
+    // epochs at/below their tag's watermark (deleted without folding)
+    // and genuinely new epochs (folded)
+    val (files, husks) = art.streamEpochs("stream")
+      .partition(e => graft.engine.LayoutFs.hasVisibleParquetFile(fs, e._3))
     val (resurrected, live) = files.partition { case (tag, ep, _) =>
-      mfF.streamMarks.get(tag).exists(ep <= _) }
-    resurrected.foreach(e => fs.delete(e._3, true))
-    val dels: Option[DataFrame] =
-      if (delFiles.isEmpty) None
-      else Some(spark.read.parquet(delFiles.map(_.toString): _*)
-        .select(col("neighbor_id").as("__del_id")).distinct())
-    def sweepEmpties(): Unit = {
-      if (fs.exists(streamP) && !hasParquetFile(fs, streamP))
-        fs.delete(streamP, true)
-      if (fs.exists(delDir) && !hasParquetFile(fs, delDir)) {
-        fs.delete(delDir, true); ()
+      mf.streamMarks.get(tag).exists(ep <= _) }
+    (husks ++ resurrected).foreach(e => fs.delete(e._3, true))
+    def sweepEmpties(): Unit = { art.sweepStreamHusks(); art.sweepDeletes() }
+    val marks = mf.streamMarks ++
+      live.groupBy(_._1).view.mapValues(_.map(_._2).max).map {
+        case (tag, mx) => tag -> math.max(mx, mf.streamMarks.getOrElse(tag, -1L))
       }
-    }
-    if (live.isEmpty && dels.isEmpty) { sweepEmpties(); return 0L }
-    if (dels.isEmpty) {
-      // APPEND-ONLY FOLD (r15, driven by the live-race soak): with no
-      // tombstones to purge, the fold never needs to touch an existing
-      // file — the streamed rows stage per cell (the long part,
-      // certificate intact), the staged files rename IN as new cell
-      // files, and the folded epoch dirs are RETAINED under the
-      // watermark just written ("grace"): a probe that listed them
-      // pre-fold finishes its read against intact files, a probe
-      // landing after the marks skips them, and the NEXT fold's
-      // resurrected-epoch sweep (entry, above) collects them. The old
-      // shape — merge touched cells, delete their old files, delete
-      // the epoch dirs — killed every probe in flight across the swap
-      // (FAILED_READ_FILE, RaceSoakSpec red before this change) and
-      // paid an O(touched-cell) rewrite the append needs not pay:
-      // this path is O(streamed rows), the band-index fold's shape.
-      val stagedP = new org.apache.hadoop.fs.Path(s"$path/assigned_fold")
-      fs.delete(stagedP, true) // a crashed previous fold's leftover
-      spark.read.option("basePath", s"$path/stream")
-        .parquet(live.map(_._3.toString): _*)
-        .drop("__epoch", "__stream")
-        .repartition(col("__cell"))
+    def streamed = art.readEpochs("stream", live).drop("__epoch", "__stream")
+    if (live.isEmpty && delFiles.isEmpty) { sweepEmpties(); return 0L }
+    if (delFiles.isEmpty) {
+      // APPEND-ONLY FOLD: stage the streamed rows per cell (the long
+      // part, certificate intact) and swap them in as new cell files
+      val stagedP = art.stage("assigned", "fold")
+      streamed.repartition(col("__cell"))
         .write.mode("overwrite").partitionBy("__cell")
         .parquet(stagedP.toString)
       val folded =
-        if (hasParquetFile(fs, stagedP))
+        if (graft.engine.LayoutFs.hasVisibleParquetFile(fs, stagedP))
           spark.read.parquet(stagedP.toString).count()
         else 0L
-      val mfp = manifestFile(path)
-      mfp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(mfp, false)
-      fs.listStatus(stagedP).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("__cell="))
-        .foreach { cd =>
-          val target = new org.apache.hadoop.fs.Path(
-            s"$path/assigned/${cd.getPath.getName}")
-          if (!fs.exists(target)) fs.mkdirs(target)
-          fs.listStatus(cd.getPath).toSeq
-            .filter(st => st.isFile &&
-              st.getPath.getName.endsWith(".parquet"))
-            .foreach { st =>
-              fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-                s"$target/${st.getPath.getName}"))
-            }
-        }
-      fs.delete(stagedP, true)
-      val folded2 = live.groupBy(_._1).view.mapValues(_.map(_._2).max)
-      val marks2 = mfF.streamMarks ++ folded2.map { case (tag, mx) =>
-        tag -> math.max(mx, mfF.streamMarks.getOrElse(tag, -1L))
-      }
-      writeManifest(spark, path, mfF.nlist, mfF.rows + folded, mfF.quant,
-        mfF.pqM, mfF.pqKsub, version = mfF.version + 1, pqRes = mfF.pqRes,
-        geomId = mfF.geomId, streamMarks = marks2)
+      art.swap(Seq("assigned" -> stagedP),
+        mf.next(rows = mf.rows + folded, streamMarks = marks))
       sweepEmpties()
       return 0L
     }
+    val dels = art.tombstoneIds(delFiles)
     // the touched partition set: cells streamed rows land in (from the
     // directory names — no data read), plus cells holding a tombstoned
-    // row (one id-column-only scan, and only when tombstones exist)
+    // row (one id-column-only scan)
     val streamCells: Set[String] = live.flatMap { case (_, _, p) =>
       fs.listStatus(p).toSeq.filter(_.isDirectory)
         .map(_.getPath.getName).filter(_.startsWith("__cell="))
     }.toSet
-    val delCells: Set[String] = dels match {
-      case None => Set.empty
-      case Some(d) =>
-        spark.read.parquet(s"$path/assigned")
-          .join(broadcast(d), col("neighbor_id") === col("__del_id"),
-            "left_semi")
-          .select("__cell").distinct().collect()
-          .map(r => "__cell=" + (if (r.isNullAt(0)) NullPartitionName
-            else r.get(0).toString)).toSet
-    }
+    val delCells: Set[String] = spark.read.parquet(s"$path/assigned")
+      .join(broadcast(dels), col("neighbor_id") === col("__del_id"),
+        "left_semi")
+      .select("__cell").distinct().collect()
+      .map(r => "__cell=" + (if (r.isNullAt(0)) NullPartitionName
+        else r.get(0).toString)).toSet
     val touched = streamCells ++ delCells
     if (touched.isEmpty) {
-      // tombstones matching nothing in assigned/ and no streamed rows:
-      // consume the snapshot files (the ids are gone or never existed)
-      // — except ids still living in a stream epoch that landed after
-      // this fold's snapshot, whose tombstones are retained (r14
-      // advice, the compactNearDupIndex rule: consuming them would let
-      // the id resurface once a later fold banks that epoch)
-      dels.foreach(d => retainStreamTombstones(spark, fs, path, d))
-      delFiles.foreach(f => fs.delete(f, false))
-      sweepEmpties(); return 0L
+      // tombstones matching nothing in assigned/ and no streamed rows
+      art.consumeTombstones(delFiles, dels)
+      sweepEmpties()
+      return 0L
     }
     val touchedVals = touched.map(_.stripPrefix("__cell="))
-    val hasNullCell = touchedVals.contains(NullPartitionName)
     val intCells = touchedVals.filter(_ != NullPartitionName).map(_.toInt).toSeq
     val inTouched: Column = {
       val in = if (intCells.nonEmpty) col("__cell").isin(intCells: _*)
         else lit(false)
-      if (hasNullCell) in || col("__cell").isNull else in
+      if (touchedVals.contains(NullPartitionName)) in || col("__cell").isNull
+      else in
     }
-    // stage the merged TOUCHED cells first (the long part), so the
-    // certificate-retraction window below covers only the per-cell
-    // swap + stream/tombstone deletes: a live probe or sink batch
-    // rides out that narrow window on the bounded manifest retry
-    // (readManifestPatient; r13 review #1), while a crash mid-swap
-    // still leaves no certificate and fails loudly, never a silent
-    // double-count. The main-table read is partition-pruned to the
-    // touched cells — untouched directories are never opened.
+    // stage the merged TOUCHED cells first (the long part); the
+    // main-table read is partition-pruned to the touched cells
     val mainTouched = spark.read.parquet(s"$path/assigned")
       .filter(inTouched)
-    val merged0 = (if (live.isEmpty) mainTouched
-      else mainTouched.unionByName(
-        spark.read.option("basePath", s"$path/stream")
-          .parquet(live.map(_._3.toString): _*)
-          .drop("__epoch", "__stream")))
-    val merged = dels.fold(merged0)(d => merged0.join(broadcast(d),
-      col("neighbor_id") === col("__del_id"), "left_anti"))
+    val merged0 =
+      if (live.isEmpty) mainTouched else mainTouched.unionByName(streamed)
     // the purge receipt count: tombstone-matched rows about to be
-    // dropped from the touched cells ∪ folded epochs (one extra
-    // partition-pruned job, only when tombstones exist)
-    val purged = dels.fold(0L)(d => merged0.join(broadcast(d),
-      col("neighbor_id") === col("__del_id"), "left_semi").count())
-    val stagedP = new org.apache.hadoop.fs.Path(s"$path/assigned_compact")
-    fs.delete(stagedP, true) // a crashed previous fold's leftover
-    merged.repartition(col("__cell"))
+    // dropped from the touched cells ∪ folded epochs
+    val purged = merged0.join(broadcast(dels),
+      col("neighbor_id") === col("__del_id"), "left_semi").count()
+    val stagedP = art.stage("assigned", "compact")
+    merged0.join(broadcast(dels), col("neighbor_id") === col("__del_id"),
+        "left_anti")
+      .repartition(col("__cell"))
       .write.mode("overwrite").partitionBy("__cell")
       .parquet(stagedP.toString)
     // incremental row accounting — O(touched), never a full-table
-    // count: new total = certified total − touched cells' old rows +
-    // touched cells' staged rows (both sides partition-pruned /
-    // staged-only footer counts)
+    // count: certified − touched cells' old rows + staged rows
     val mainTouchedCount = mainTouched.count()
     val stagedCount =
-      if (hasParquetFile(fs, stagedP))
+      if (graft.engine.LayoutFs.hasVisibleParquetFile(fs, stagedP))
         spark.read.parquet(stagedP.toString).count()
       else 0L // every touched row tombstoned — nothing staged
-    // record the touched cells' PRE-SWAP files: they become the
-    // manifest's dead-file grace list (r15, the purge-soak finding) —
-    // never deleted here, so a probe whose listing predates this
-    // purge finishes against intact files (its eager tombstone
-    // snapshot keeps it exact); every later probe excludes them by
-    // relative name, and the NEXT maintenance entry collects them.
+    // the touched cells' PRE-SWAP files become the dead-file grace list
     val deadNow: Seq[String] = touched.toSeq.flatMap { cellDir =>
-      val cd = new org.apache.hadoop.fs.Path(s"$path/assigned/$cellDir")
+      val cd = art.at(s"assigned/$cellDir")
       if (!fs.exists(cd)) Nil
       else fs.listStatus(cd).toSeq
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .map(st => s"$cellDir/${st.getPath.getName}")
     }
-    val mfp = manifestFile(path)
-    mfp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(mfp, false)
-    touched.foreach { cellDir =>
-      val src =
-        new org.apache.hadoop.fs.Path(s"$path/assigned_compact/$cellDir")
-      if (fs.exists(src)) {
-        val target =
-          new org.apache.hadoop.fs.Path(s"$path/assigned/$cellDir")
-        if (!fs.exists(target)) fs.mkdirs(target)
-        fs.listStatus(src).toSeq
-          .filter(st => st.isFile &&
-            st.getPath.getName.endsWith(".parquet"))
-          .foreach { st =>
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-              s"$target/${st.getPath.getName}"))
-          }
-      }
-    }
-    fs.delete(stagedP, true)
-    // the folded epoch dirs are RETAINED under the watermark written
-    // below (probe grace, the fold path's rule) — the next entry's
-    // resurrected sweep collects them
-    val folded = live.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
-    val marks = mfF.streamMarks ++ folded.map { case (tag, mx) =>
-      tag -> math.max(mx, mfF.streamMarks.getOrElse(tag, -1L))
-    }
-    // re-issue the certificate FIRST (the retraction window stays
-    // file-moves-only), then retain-and-consume the tombstone
-    // snapshot: an id still living in an epoch that landed after this
-    // fold's snapshot keeps a tombstone — consuming it would let the
-    // id resurface once a later fold banks that epoch (r14 advice). A
-    // crash between the re-issue and the consumption below leaves the
-    // tombstones standing: still suppressed probe-side, re-purged
-    // idempotently by the next fold.
-    writeManifest(spark, path, mfF.nlist,
-      mfF.rows - mainTouchedCount + stagedCount, mfF.quant,
-      mfF.pqM, mfF.pqKsub, version = mfF.version + 1, pqRes = mfF.pqRes,
-      geomId = mfF.geomId, streamMarks = marks, deadFiles = deadNow)
-    dels.foreach(d => retainStreamTombstones(spark, fs, path, d))
-    delFiles.foreach(f => fs.delete(f, false))
+    art.swap(Seq("assigned" -> stagedP), mf.next(
+      rows = mf.rows - mainTouchedCount + stagedCount, streamMarks = marks,
+      deadFiles = if (deadNow.isEmpty) Map.empty else Map("assigned" -> deadNow)))
+    art.consumeTombstones(delFiles, dels)
     sweepEmpties()
     purged
-    } finally { fs.delete(compactingP, false); () }
   }
 
   /** RAW membership view of a persisted index — assigned/ minus the
@@ -2073,104 +1592,11 @@ object Ann {
   private[graft] def openAssignedRaw(
       spark: org.apache.spark.sql.SparkSession, path: String)
       : DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.engine.LayoutFs.consistentSnapshot(
-        s"openAssignedRaw at '$path'",
-        // snapshot key mixes built_ms in: a REBUILD resets the version
-        // counter, so version alone could alias across one (ABA); the
-        // build stamp breaks the tie
-        readManifest(spark, path)
-          .map(m => m.version * 0x9E3779B97F4A7CL + m.builtMs)) {
-      val mf = readManifestPatient(spark, path).getOrElse(sys.error(
-        s"openAssignedRaw: no build manifest at '$path'"))
-      val deadSet = mf.deadFiles.toSet
-      val assigned =
-        if (deadSet.isEmpty) spark.read.parquet(s"$path/assigned")
-        else {
-          val livePaths = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$path/assigned")).toSeq
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("__cell="))
-            .flatMap { cd =>
-              fs.listStatus(cd.getPath).toSeq
-                .filter(st => st.isFile &&
-                  st.getPath.getName.endsWith(".parquet"))
-                .map(st =>
-                  (s"${cd.getPath.getName}/${st.getPath.getName}",
-                    st.getPath.toString))
-            }
-            .collect { case (rel, p) if !deadSet(rel) => p }
-          if (livePaths.isEmpty)
-            spark.read.parquet(s"$path/assigned").limit(0)
-          else spark.read.option("basePath", s"$path/assigned")
-            .parquet(livePaths: _*)
-        }
-      val liveEpochs = listStreamEpochs(fs, path)
-        .filter(e => hasParquetFile(fs, e._3))
-        .filterNot { case (tag, ep, _) =>
-          mf.streamMarks.get(tag).exists(ep <= _) }
-      if (liveEpochs.isEmpty) assigned
-      else assigned.unionByName(
-        spark.read.option("basePath", s"$path/stream")
-          .parquet(liveEpochs.map(_._3.toString): _*)
-          .drop("__epoch", "__stream"))
+    val art = ivf(spark, path)
+    art.open("openAssignedRaw") { m =>
+      art.withLiveEpochs(art.liveTable("assigned", m), "stream",
+        m.streamMarks)
     }
-  }
-
-  /** Dead-file grace collection for a maintenance entry with no other
-    * work ([[compactIvfIndex]]'s early return): acquires the
-    * `_COMPACTING` marker just for the collection (a concurrent
-    * writer defers it — opportunistic hygiene, never worth failing a
-    * no-op compact over), deletes the manifest's dead cell files, and
-    * re-issues the certificate with the list cleared. */
-  private def collectIvfDeadStandalone(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val mf0 = readManifest(spark, path).getOrElse(return)
-    if (mf0.deadFiles.isEmpty) return
-    val appendingP = new org.apache.hadoop.fs.Path(s"$path/_APPENDING")
-    val compactingP = new org.apache.hadoop.fs.Path(s"$path/_COMPACTING")
-    try graft.engine.LayoutFs.acquireMarker(fs, compactingP, appendingP,
-      refuseOpposite = "busy", refuseOwn = "busy")
-    catch { case _: IllegalArgumentException => return }
-    try {
-      val mf = readManifest(spark, path).getOrElse(return)
-      mf.deadFiles.foreach { rel =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/assigned/$rel"),
-          false)
-      }
-      val mfp = manifestFile(path)
-      fs.delete(mfp, false)
-      writeManifest(spark, path, mf.nlist, mf.rows, mf.quant,
-        mf.pqM, mf.pqKsub, version = mf.version + 1, pqRes = mf.pqRes,
-        geomId = mf.geomId, streamMarks = mf.streamMarks)
-    } finally { fs.delete(compactingP, false); () }
-  }
-
-  /** Re-write (as a fresh tombstone file, BEFORE the snapshot files
-    * are consumed — no window of absence) the tombstoned ids still
-    * matching a row in a REMAINING `stream/` epoch dir — one that
-    * landed after the calling fold's snapshot. Consuming their
-    * tombstones would silently break the takedown for those ids once
-    * a later fold banks the epoch (r14 advice, closed on both
-    * artifacts). Column-pruned (neighbor_id only) over the stream
-    * backlog; zero cost when no epochs remain (one listing). */
-  private[graft] def retainStreamTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      dels: DataFrame): Unit = {
-    val remaining = listStreamEpochs(fs, path)
-      .filter(e => hasParquetFile(fs, e._3))
-    if (remaining.isEmpty) return
-    val still = spark.read.option("basePath", s"$path/stream")
-      .parquet(remaining.map(_._3.toString): _*)
-      .select(col("neighbor_id"))
-    val retained = dels.join(still,
-      col("__del_id") === col("neighbor_id"), "left_semi")
-    if (!retained.isEmpty)
-      retained.select(col("__del_id").as("neighbor_id")).distinct()
-        .coalesce(1).write.mode("append").parquet(s"$path/deletes")
   }
 
   /** Hive's directory name for a NULL partition value — the quarantine
@@ -2178,76 +1604,31 @@ object Ann {
     * contract). */
   private val NullPartitionName = "__HIVE_DEFAULT_PARTITION__"
 
-  /** Auto-compaction policy (r13 verdict #5): fold when the stream/
-    * backlog crosses a declared threshold — `afterEpochs` (unfolded
-    * epoch count ≥ N) or `afterRowsPct` (streamed rows ≥ X% of the
-    * certified main-table rows). Checked at append / stream-batch
+  /** Auto-compaction policy: fold when the stream/ backlog crosses a
+    * declared threshold — `afterEpochs` (unfolded epoch count ≥ N) or
+    * `afterRowsPct` (streamed rows ≥ X% of the certified main-table
+    * rows) — or when the tombstone backlog reaches `afterDeletesPct`
+    * of the certified total. Checked at append / stream-batch / delete
     * boundaries by the YAML `ann_index` sink (`compact_after_epochs` /
-    * `compact_after_rows_pct` options) and the streaming sink.
+    * `compact_after_rows_pct` / `purge_after_deletes_pct`) and the
+    * streaming sink ([[graft.engine.LayoutFs.Artifact.autoCompact]]).
     *
     * Cost model: the epoch check is pure directory listing (no data
     * read, no Spark job) — safe every batch. The rows_pct check adds
     * a footer-only count of the live epoch dirs (O(stream files),
-    * bounded by the backlog the policy exists to cap — by the time
-    * the listing is expensive, the fold it triggers removes it). A
-    * triggered fold costs O(streamed + touched cells)
-    * ([[compactIvfIndex]] is cell-scoped), so the policy's amortized
+    * bounded by the backlog the policy exists to cap). A triggered
+    * fold costs O(streamed + touched cells), so the policy's amortized
     * cost per streamed row is a constant factor, while its absence
-    * lets probe-side union reads degrade without bound.
-    * `afterDeletesPct` (YAML `purge_after_deletes_pct`, checked at the
-    * delete boundary) trips the same fold on the TOMBSTONE backlog —
-    * tombstone rows ≥ X% of the certified total — so probe-side
-    * anti-join cost and not-yet-erased bytes stay bounded without a
-    * manual fold. Returns true when a fold ran. */
+    * lets probe-side union reads degrade without bound. Returns true
+    * when a fold ran. */
   def maybeCompactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, afterEpochs: Option[Int] = None,
       afterRowsPct: Option[Double] = None,
-      afterDeletesPct: Option[Double] = None): Boolean = {
-    if (afterEpochs.isEmpty && afterRowsPct.isEmpty &&
-      afterDeletesPct.isEmpty) return false
-    afterEpochs.foreach(n => require(n >= 1,
-      s"compact_after_epochs must be >= 1, got $n"))
-    afterRowsPct.foreach(p => require(p > 0,
-      s"compact_after_rows_pct must be > 0, got $p"))
-    afterDeletesPct.foreach(p => require(p > 0,
-      s"purge_after_deletes_pct must be > 0, got $p"))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // DEFER under a live maintenance writer (r14 advice, the
-    // maybeCompactNearDupIndex rule): this check rides stream
-    // micro-batches and YAML boundaries — throwing the single-writer
-    // refusal there would kill a streaming query over a fold that can
-    // simply run next batch
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_APPENDING")) ||
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/_COMPACTING")))
-      return false
-    val mf = readManifestPatient(spark, path).getOrElse(return false)
-    val live = listStreamEpochs(fs, path)
-      .filter(e => hasParquetFile(fs, e._3))
-      .filterNot { case (tag, ep, _) =>
-        mf.streamMarks.get(tag).exists(ep <= _) }
-    val streamTrip = live.nonEmpty && (afterEpochs.exists(live.size >= _) ||
-      afterRowsPct.exists { pct =>
-        val streamed = spark.read.option("basePath", s"$path/stream")
-          .parquet(live.map(_._3.toString): _*).count()
-        mf.rows > 0 && streamed * 100.0 / mf.rows >= pct
-      })
-    // the takedown-backlog trigger (checked at the YAML delete
-    // boundary): tombstones ≥ X% of the certified total — an
-    // O(tombstones) count against the free manifest count, and the
-    // fold it trips purges them physically (a compaction with no live
-    // epochs is still a purge)
-    val delTrip = !streamTrip && afterDeletesPct.exists { pct =>
-      val delP = new org.apache.hadoop.fs.Path(s"$path/deletes")
-      hasParquetFile(fs, delP) && {
-        val nDel = spark.read.parquet(delP.toString).count()
-        nDel > 0 && mf.rows > 0 && nDel * 100.0 >= pct * mf.rows
-      }
+      afterDeletesPct: Option[Double] = None): Boolean =
+    ivf(spark, path).autoCompact(afterEpochs = afterEpochs,
+      afterRowsPct = afterRowsPct, afterDeletesPct = afterDeletesPct) {
+      compactIvfIndex(spark, path); ()
     }
-    val trip = streamTrip || delTrip
-    if (trip) compactIvfIndex(spark, path)
-    trip
-  }
 
   /** Probe a persisted IVF-PQ index: cells rank by float centroid
     * distance (the shared probeCells), each query builds its ADC grid
@@ -2322,11 +1703,7 @@ object Ann {
   def ivfIndexTopKAuto(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, qId: String, qVec: String,
       k: Int, nprobe: Int = 4, excludeSelf: Boolean = true): DataFrame = {
-    val mf = readManifestPatient(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"ivfIndexTopKAuto: '$path' has no build manifest — the index " +
-          "build did not complete (or is being rebuilt right now); " +
-          "rerun writeIvfIndex / the ann_index sink"))
+    val mf = IvfManifest(ivf(spark, path).certified("ivfIndexTopKAuto"))
     mf.quant match {
       case 1 => ivfIndexTopKQuantized(spark, path, queries, qId, qVec,
         k, nprobe, excludeSelf)

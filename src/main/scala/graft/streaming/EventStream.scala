@@ -283,9 +283,7 @@ object EventStream {
     import graft.dedup.Dedup
     val spark = stream.sparkSession
     val (shingleSize, numHashes, bands, _) =
-      Dedup.readNearDupManifest(spark, indexPath).getOrElse(sys.error(
-        s"no near-dup index manifest at $indexPath (incomplete build? " +
-          "rebuild with writeNearDupIndex)"))
+      Dedup.nearDupSignature(spark, indexPath, "nearDupFlagsStream")
     // tombstoned corpus docs (Dedup.deleteFromNearDupIndex) lose their
     // buckets here too: this gate DROPS flagged rows at ingest
     // (nearDupFilterStream), so a stale taken-down doc would silently
@@ -435,9 +433,7 @@ object EventStream {
       checkpoint: String, excludeSelf: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.sim.Ann
-    Ann.readManifest(stream.sparkSession, indexPath).getOrElse(sys.error(
-      s"annProbeStream: no IVF index manifest at $indexPath (incomplete " +
-        "build? rebuild with writeIvfIndex / the ann_index sink)"))
+    Ann.ivf(stream.sparkSession, indexPath).certified("annProbeStream")
     val hconf = stream.sparkSession.sparkContext.hadoopConfiguration
     // "fresh" = no committed offsets yet — an existing-but-EMPTY
     // checkpoint dir (mkdir'd by a temp-dir helper, or rm -rf'd of its
@@ -627,12 +623,10 @@ object EventStream {
         "(manifest mark keys are)")
     // patient read: a concurrent compaction retracts the certificate
     // for its narrow swap window — ride it out; a PERMANENT absence
-    // (rebuild/crash) still fails after the budget
-    val mf = Ann.readManifestPatient(batch.sparkSession, indexPath)
-      .getOrElse(sys.error(
-        s"appendIvfIndexStream: the manifest at $indexPath vanished " +
-          "mid-stream — index being rebuilt? stop the stream during " +
-          "rebuilds (single-writer contract)"))
+    // (rebuild/crash) still fails after the budget. Stop the stream
+    // during rebuilds (single-writer contract).
+    val art = Ann.ivf(batch.sparkSession, indexPath)
+    val mf = Ann.IvfManifest(art.certified("appendIvfIndexStream"))
     require(mf.geomId == pre._1.geomId,
       s"appendIvfIndexStream: the index at $indexPath was RETRAINED " +
         s"mid-stream (geometry id ${mf.geomId} != stream-start " +
@@ -662,13 +656,8 @@ object EventStream {
     // exists transiently; compaction itself also skips-and-sweeps
     // resurrected epochs (≤ mark), so the state can never become
     // permanent whichever side wins the race.
-    val mfAfter = Ann.readManifestPatient(batch.sparkSession, indexPath)
-    if (mfAfter.exists(_.streamMarks.get(tag).exists(epoch <= _))) {
-      val d = new org.apache.hadoop.fs.Path(
-        s"$indexPath/stream/__stream=$tag/__epoch=$epoch")
-      d.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-        .delete(d, true)
-    }
+    if (art.manifestPatient().exists(_.streamMarks.get(tag).exists(epoch <= _)))
+      art.fs.delete(art.at(s"stream/__stream=$tag/__epoch=$epoch"), true)
   }
 
   /** Stream arriving documents INTO the persisted near-dup band index
@@ -705,11 +694,9 @@ object EventStream {
     import graft.dedup.Dedup
     val spark = stream.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
-    val pre = Dedup.readNearDupManifest(spark, indexPath)
-      .map(m => (m._1, m._2, m._3)).getOrElse(sys.error(
-        s"appendNearDupIndexStream: no near-dup index manifest at " +
-          s"$indexPath — streams extend a COMPLETE index (build with " +
-          "writeNearDupIndex first)"))
+    val (ss, nh, nb, _) =
+      Dedup.nearDupSignature(spark, indexPath, "appendNearDupIndexStream")
+    val pre = (ss, nh, nb)
     val tag = streamTag(checkpoint, hconf)
     nearDupStreamRefusal(spark, indexPath, checkpoint, tag)
     stream.writeStream
@@ -752,13 +739,11 @@ object EventStream {
     import graft.sources.Sinks
     val spark = stream.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
-    Sinks.readIndexedManifestPatient(spark, path).getOrElse(sys.error(
-      s"indexedStream: no store manifest at '$path' — streams extend " +
-        "a COMPLETE document store (build with the index sink first)"))
+    val m = Sinks.store(spark, path).certified("indexedStream")
     val tag = streamTag(checkpoint, hconf)
     val offsP = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
     if (!offsP.getFileSystem(hconf).exists(offsP) &&
-        Sinks.readIndexedMarks(spark, path).contains(tag))
+        m.streamMarks.contains(tag))
       sys.error(s"indexedStream: checkpoint '$checkpoint' is fresh " +
         s"(no committed offsets) but the store at $path already has a " +
         s"watermark for its tag '$tag' — a restarted epoch numbering " +
@@ -804,11 +789,9 @@ object EventStream {
     import graft.dedup.Dedup
     val spark = stream.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
-    val pre = Dedup.readNearDupManifest(spark, indexPath)
-      .map(m => (m._1, m._2, m._3)).getOrElse(sys.error(
-        s"nearDupAdmitStream: no near-dup index manifest at " +
-          s"$indexPath — the gate grows a COMPLETE index (build with " +
-          "writeNearDupIndex first)"))
+    val (ss, nh, nb, _) =
+      Dedup.nearDupSignature(spark, indexPath, "nearDupAdmitStream")
+    val pre = (ss, nh, nb)
     val tag = streamTag(checkpoint, hconf)
     nearDupStreamRefusal(spark, indexPath, checkpoint, tag)
     stream.writeStream
@@ -820,8 +803,8 @@ object EventStream {
         // the write anyway) — PATIENT, riding out a concurrent fold's
         // retraction window
         if (!batch.isEmpty &&
-            !Dedup.readNearDupMarksPatient(spark, indexPath).get(tag)
-              .exists(epoch <= _)) {
+            !Dedup.bandIndex(spark, indexPath).manifestPatient()
+              .exists(_.streamMarks.get(tag).exists(epoch <= _))) {
           val verdicts = Dedup.incrementalNearDupsIndexedImpl(
             batch, indexPath, idCol, textCol, threshold,
             bloomFpp = None, excludeEpoch = Some((tag, epoch)))
@@ -857,8 +840,8 @@ object EventStream {
     }
     if (!offsP.getFileSystem(hconf).exists(offsP) &&
         (leftover ||
-          graft.dedup.Dedup.readNearDupMarks(spark, indexPath)
-            .contains(tag)))
+          graft.dedup.Dedup.bandIndex(spark, indexPath).manifestPatient()
+            .exists(_.streamMarks.contains(tag))))
       sys.error(s"band-index stream sink: checkpoint '$checkpoint' " +
         s"is fresh (no committed offsets) but the index at $indexPath " +
         s"already has epochs or a compaction mark for its tag '$tag' " +

@@ -531,13 +531,12 @@ class ApiServerSpec extends SparkSpec {
       // window rides it out on the patient manifest read — the
       // reader-atomicity claim, exercised over real HTTP (r14 verdict
       // #1's done-criterion at the API surface)
-      val mfp = Sinks.indexedManifestFile(idxDir)
-      val fsA = mfp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val saved = Sinks.readIndexedManifest(spark, idxDir).get
-      fsA.delete(mfp, false)
+      val store = Sinks.store(spark, idxDir)
+      val saved = store.manifest().get
+      store.retract()
       val reissue = new Thread(() => {
         Thread.sleep(400)
-        Sinks.writeIndexedManifest(spark, idxDir, saved._1, saved._2)
+        store.write(saved)
       })
       reissue.start()
       val during = send("POST",
@@ -598,7 +597,7 @@ class ApiServerSpec extends SparkSpec {
       val pre = ids(send("POST",
         s"$base/datasets/corpus/_search?q=base&size=20").body())
       Sinks.compactIndexed(spark, idxDir)
-      assert(Sinks.readIndexedDead(spark, idxDir).values.flatten.isEmpty)
+      assert(Sinks.store(spark, idxDir).manifest().get.deadFiles.values.flatten.isEmpty)
       val post = ids(send("POST",
         s"$base/datasets/corpus/_search?q=base&size=20").body())
       assert(post == pre, s"grace collection changed _search: $post != $pre")

@@ -2273,7 +2273,7 @@ class GraphDedupSpec extends SparkSpec {
     // maintenance entry collects them physically
     assert(doomedF.forall(f => after.contains(f)),
       "a doomed file was deleted in-place instead of riding the grace")
-    assert(Dedup.readNearDupDead(spark, apx)
+    assert(Dedup.bandIndex(spark, apx).manifest().get.deadFiles
         .getOrElse("shingles", Nil).toSet == doomedF,
       "the manifest's dead list must name exactly the replaced files")
     // tombstones consumed, accounting decremented, probe ≡ a rebuild
@@ -2291,7 +2291,7 @@ class GraphDedupSpec extends SparkSpec {
     Dedup.compactNearDupIndex(spark, apx)
     assert(doomedF.forall(f => !files("shingles").contains(f)),
       "the next entry must collect the dead files physically")
-    assert(Dedup.readNearDupDead(spark, apx).values.flatten.isEmpty,
+    assert(Dedup.bandIndex(spark, apx).manifest().get.deadFiles.values.flatten.isEmpty,
       "the next entry must clear the dead list")
     assert(verdicts(apx) == verdicts(reb2),
       "dead-file collection changed the probe's answer")
@@ -2361,7 +2361,7 @@ class GraphDedupSpec extends SparkSpec {
     Seq("stream_shingles", "stream_bands").foreach(t =>
       assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/$t")),
         s"grace: $t should linger under the watermark"))
-    assert(Dedup.readNearDupMarks(spark, idx) == Map("tagA" -> 1L))
+    assert(Dedup.bandIndex(spark, idx).manifest().get.streamMarks == Map("tagA" -> 1L))
     assert(Dedup.readNearDupManifest(spark, idx).get._4 == rowsBefore + 3)
     assert(verdict() == ((2L, false)), "the fold changed the verdicts")
     Dedup.compactNearDupIndex(spark, idx)
@@ -2440,7 +2440,7 @@ class GraphDedupSpec extends SparkSpec {
     // epoch 0 folded + marked; the torn epoch survives UNTOUCHED and
     // UNMARKED (deleting it could race a live batch mid-write; marking
     // it would permanently block the healing replay)
-    assert(Dedup.readNearDupMarks(spark, idx) == Map("tagC" -> 0L))
+    assert(Dedup.bandIndex(spark, idx).manifest().get.streamMarks == Map("tagC" -> 0L))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
         s"$idx/stream_shingles/__stream=tagC/__epoch=1")),
       "the fold consumed a torn epoch")
@@ -2451,7 +2451,7 @@ class GraphDedupSpec extends SparkSpec {
       idx, "doc_id", "text", "tagC", 1L, pre)
     assert(verdict() == ((2L, false)), "healed epoch invisible")
     Dedup.compactNearDupIndex(spark, idx)
-    assert(Dedup.readNearDupMarks(spark, idx) == Map("tagC" -> 1L))
+    assert(Dedup.bandIndex(spark, idx).manifest().get.streamMarks == Map("tagC" -> 1L))
     Dedup.compactNearDupIndex(spark, idx) // collect the graced dirs
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/stream_shingles")))
     assert(verdict() == ((2L, false)))
@@ -2546,7 +2546,7 @@ class GraphDedupSpec extends SparkSpec {
       .map(_.getPath)
     val dels = spark.read.parquet(snapshot.map(_.toString): _*)
       .select(col("neighbor_id").as("__del_id")).distinct()
-    Ann.retainStreamTombstones(spark, fs, idx, dels)
+    Ann.ivf(spark, idx).retainStreamTombstones(dels)
     snapshot.foreach(f => fs.delete(f, false))
     val left = spark.read.parquet(delDir.toString)
       .collect().map(_.getLong(0)).toSet

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import graft.engine.LayoutFs
+import scala.jdk.CollectionConverters._
 
 /** The single-maintenance-writer marker primitive (r14 verdict #1):
   * the old check-then-create shape let two writers launched in the
@@ -165,5 +166,28 @@ class LayoutFsSpec extends SparkSpec {
       LayoutFs.deadFilesJson(Map("docs" -> Seq("""evil", "smuggled""")))
     }
     assert(e.getMessage.contains("refusing"), e.getMessage)
+  }
+
+  // ---- single owner: the lifecycle protocol lives in one module
+
+  test("the lifecycle literals occur in src/main only in " +
+      "engine/LayoutFs.scala") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val owner = root.resolve("graft/engine/LayoutFs.scala")
+    val literals = Seq("_MANIFEST.json", "_APPENDING", "_COMPACTING",
+      "\"stream_marks\"", "\"dead_files\"")
+    val walk = java.nio.file.Files.walk(root)
+    val offenders =
+      try walk.iterator().asScala.toSeq
+        .filter(p => p.toString.endsWith(".scala") && p != owner)
+        .flatMap { p =>
+          val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          literals.filter(txt.contains).map(l => s"$p: $l")
+        }
+      finally walk.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val own = new String(java.nio.file.Files.readAllBytes(owner), "UTF-8")
+    literals.foreach(l => assert(own.contains(l), l))
   }
 }

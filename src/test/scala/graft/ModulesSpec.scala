@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.{Sinks, Sources}
+import graft.engine.LayoutFs
 import graft.conf.RecipeConf
 import graft.ml.Scoring
 import graft.streaming.EventStream
@@ -280,7 +281,7 @@ class ModulesSpec extends SparkSpec {
     assert(Sources.indexedTable(spark, dir, "docs",
         suppressDeletes = false)
       .filter($"_id" === 1L).count() == 0, "purge left the doc visible")
-    assert(Sinks.readIndexedDead(spark, dir).values.flatten.nonEmpty,
+    assert(Sinks.store(spark, dir).manifest().get.deadFiles.values.flatten.nonEmpty,
       "the purge left no dead-file grace list")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -319,16 +320,16 @@ class ModulesSpec extends SparkSpec {
     // would otherwise wipe a live dead list
     Sinks.compactIndexed(spark, dir)
     assert(Sinks.readIndexedManifest(spark, dir) == Some((1L, 5L)))
-    assert(Sinks.readIndexedDead(spark, dir).values.flatten.isEmpty,
+    assert(Sinks.store(spark, dir).manifest().get.deadFiles.values.flatten.isEmpty,
       "the next entry must clear the dead-file list")
     // RETRACTION WINDOW: a read landing mid-swap rides it out on the
     // patient manifest read (this reader serves the live _search
     // route); a PERMANENT absence still refuses loudly
-    val mfp = Sinks.indexedManifestFile(dir)
+    val mfp = Sinks.store(spark, dir).manifestPath
     fs.delete(mfp, false)
     val reissue = new Thread(() => {
       Thread.sleep(400)
-      Sinks.writeIndexedManifest(spark, dir, 1L, 5L)
+      Sinks.store(spark, dir).write(LayoutFs.Manifest(1L, 5L))
     })
     reissue.start()
     assert(Sources.indexedTable(spark, dir, "docs").count() == 1,
@@ -338,7 +339,7 @@ class ModulesSpec extends SparkSpec {
     val eGone = intercept[RuntimeException](
       Sources.indexedTable(spark, dir, "docs"))
     assert(eGone.getMessage.contains("manifest"), eGone.getMessage)
-    Sinks.writeIndexedManifest(spark, dir, 1L, 5L)
+    Sinks.store(spark, dir).write(LayoutFs.Manifest(1L, 5L))
   }
 
   test("document-store streaming append: batch ≡ stream, replay skipped " +
@@ -369,7 +370,7 @@ class ModulesSpec extends SparkSpec {
       "streamed docs diverge from the batch append")
     assert(tbl(str, "postings").count() == tbl(ref, "postings").count())
     assert(Sinks.readIndexedManifest(spark, str).map(_._1) == Some(4L))
-    val marks = Sinks.readIndexedMarks(spark, str)
+    val marks = Sinks.store(spark, str).manifest().get.streamMarks
     assert(marks.size == 1 && marks.values.head == 0L,
       s"watermark not recorded: $marks")
     // an at-least-once REPLAY of the landed epoch is SKIPPED — the

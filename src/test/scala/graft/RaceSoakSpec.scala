@@ -292,7 +292,7 @@ class RaceSoakSpec extends SparkSpec {
     // dead, collected (with the list cleared) by the next entry
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dead = Sinks.readIndexedDead(spark, dir)
+    val dead = Sinks.store(spark, dir).manifest().get.deadFiles
     assert(dead.values.flatten.nonEmpty,
       "the final purge should have left a dead-file grace list")
     dead.foreach { case (table, names) =>
@@ -303,7 +303,7 @@ class RaceSoakSpec extends SparkSpec {
     }
     val preAnswer = probe()
     Sinks.compactIndexed(spark, dir)
-    assert(Sinks.readIndexedDead(spark, dir).values.flatten.isEmpty,
+    assert(Sinks.store(spark, dir).manifest().get.deadFiles.values.flatten.isEmpty,
       "the next maintenance entry must clear the dead-file list")
     dead.foreach { case (table, names) =>
       names.foreach { n =>
@@ -350,7 +350,7 @@ class RaceSoakSpec extends SparkSpec {
     // no-op compact — physically collects them and clears the list
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dead = Dedup.readNearDupDead(spark, idx)
+    val dead = Dedup.bandIndex(spark, idx).manifest().get.deadFiles
     assert(dead.values.flatten.nonEmpty,
       "the final purge should have left a dead-file grace list")
     dead.foreach { case (table, names) =>
@@ -361,7 +361,7 @@ class RaceSoakSpec extends SparkSpec {
     }
     val preCounts = probe()
     Dedup.compactNearDupIndex(spark, idx)
-    assert(Dedup.readNearDupDead(spark, idx).values.flatten.isEmpty,
+    assert(Dedup.bandIndex(spark, idx).manifest().get.deadFiles.values.flatten.isEmpty,
       "the next maintenance entry must clear the dead-file list")
     dead.foreach { case (table, names) =>
       names.foreach { n =>
