@@ -2177,15 +2177,14 @@ object SparkEntry {
           lit(".0."), (id % 250).cast("string"))).otherwise(lit("")),
         when(id % 5 === 0, concat(lit(" call +1"),
           lpad((id % 10000000).cast("string"), 9, "0"))).otherwise(lit("")))
-      // AutoUnpersist-scoped materialization (r15): the quality gate's
-      // conjunction inlines its input expression into every metric
-      // reference (~15 occurrences — the gopherKeep scaladoc's known
-      // cost), and with clean_text = a 3-pass regex scrub over a
-      // concat tower that re-ran the scrub ~45× per row; the
-      // contamination join then consumes the chain twice more (train
-      // feeds both the gram side and the verdict join-back). Caching
-      // the scrubbed frame runs the scrub ONCE and every downstream
-      // consumer reads the plain column (sf0.1 A/B: q96 5.9 → 3.3 s).
+      // AutoUnpersist-scoped materialization: the contamination join
+      // consumes the gated frame twice (its gram side and its verdict
+      // join-back), and without the cache each consumer re-runs the
+      // dedup survivors' PII injection, the 3-regex scrub and the
+      // Gopher kernel. Re-checked after the one-pass kernel removed the
+      // ~45 scrub copies per row this cache was first added for (sf0.1,
+      // 5 alternating runs per side: median 2.34 s with it, 3.34 s
+      // without it, every pair won by the cache).
       val scrubbed = graft.engine.AutoUnpersist.cache(deduped
         .select(id, col("lang"), Curation.scrubPii(aug).as("clean_text")))
       // the stop-hit rule needs a stopword list matched to the corpus

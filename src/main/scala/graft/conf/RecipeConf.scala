@@ -1274,18 +1274,21 @@ object RecipeConf {
       case "chunk" => df => graft.text.Curation.chunk(df, req("id"), req("text"),
         size = knobInt("size", 64),
         stride = knobInt("stride", 32))
-      // Gopher-style quality rules; mode filter (default) keeps only the
-      // rows passing every rule, mode metrics returns the metric table:
+      // Gopher-style quality rules; mode filter (default) keeps exactly
+      // the rows passing every rule — row-local, one kernel call per
+      // row, input columns and order untouched, no join — and mode
+      // metrics returns the metric table keyed on `id` (required in
+      // both modes):
       //   quality: {id: col, text: col, min_words: 50, mode: filter}
       case "quality" => df => {
-        val id = req("id")
-        val metrics = graft.text.Curation.gopherQuality(df, id, req("text"),
-          minWords = knobInt("min_words", 50),
-          maxWords = knobInt("max_words", 100000))
+        val (id, text) = (req("id"), req("text"))
+        val (minWords, maxWords) =
+          (knobInt("min_words", 50), knobInt("max_words", 100000))
         knob("mode", "filter") match {
-          case "filter" => df.join(
-            metrics.filter(col("keep")).select(id), Seq(id), "left_semi")
-          case "metrics" => metrics
+          case "filter" =>
+            graft.text.Curation.gopherFilter(df, text, minWords, maxWords)
+          case "metrics" =>
+            graft.text.Curation.gopherQuality(df, id, text, minWords, maxWords)
           case other => sys.error(s"quality: unknown mode '$other' (filter | metrics)")
         }
       }

@@ -95,6 +95,35 @@ object Tools {
       .otherwise(split(stripped, "\\s+"))
   }
 
+  /** Java regex `\s`: the characters [[tokenize]] splits on. */
+  def isRegexSpace(ch: Char): Boolean = ch == ' ' || ch == '\t' ||
+    ch == '\n' || ch == '\u000B' || ch == '\f' || ch == '\r'
+
+  /** Scalar twin of [[tokenize]] in one pass, without regexes: the
+    * maximal runs of non-`\s` chars. It keeps one quirk of the regex
+    * strip: Java's `$` also matches before a final line terminator, so
+    * the whitespace ahead of a trailing U+0085/U+2028/U+2029 (line
+    * terminators that are not `\s`) is stripped and that char joins the
+    * last token. NULL -> null. PropertiesSpec pins the parity. */
+  def tokenizeStr(s: String): Array[String] = {
+    if (s == null) return null
+    val n = s.length
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = 0
+    while (i < n) {
+      while (i < n && isRegexSpace(s.charAt(i))) i += 1
+      val from = i
+      while (i < n && !isRegexSpace(s.charAt(i))) i += 1
+      if (i > from) out += s.substring(from, i)
+    }
+    if (out.length >= 2 && isRegexSpace(s.charAt(n - 2)) &&
+        "\u0085\u2028\u2029".indexOf(s.charAt(n - 1)) >= 0) {
+      val last = out.remove(out.length - 1)
+      out(out.length - 1) += last
+    }
+    out.toArray
+  }
+
   /** Character n-grams of one string (tools.py:109-113): substrings of
     * length n; strings shorter than n yield an empty array. */
   /** Scalar n-gram kernel — the one definition behind the Column UDF and

@@ -1,7 +1,10 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.CollationSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Tools
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
@@ -11,10 +14,13 @@ import graft.functions.Tools
   *
   * Everything is per-row Column arithmetic (whole-stage codegen'd, scan
   * speed at any scale) except [[vocabTopK]] (one map-side-combined
-  * aggregate) and the chunk kernel (a row-local UDF for the same
-  * measured reason as the winnow/gram kernels in [[TextAnalysis]]:
-  * higher-order-function spellings run interpreted and CollapseProject
-  * re-splits the text once per window). All regex patterns are
+  * aggregate) and two row-local kernels, for the same measured reason
+  * as the winnow/gram kernels in [[TextAnalysis]]: the chunk kernel
+  * (higher-order-function spellings run interpreted and CollapseProject
+  * re-splits the text once per window) and the Gopher kernel (a Column
+  * spelling names the text ~15 times, and each name becomes a copy of
+  * the whole upstream expression once a filter is pushed through a
+  * projection). All regex patterns are
   * RE2-compatible (no lookarounds) so the identical pattern runs in an
   * external SQL oracle.
   */
@@ -104,92 +110,132 @@ object Curation {
   val gopherStopwords: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
-  /** Gopher-style quality filter rules (Rae et al. 2021 appendix A1.1),
-    * each as its own metric so a pipeline can tune thresholds; `keep` is
-    * the conjunction at the published defaults (adapted to word counts):
-    * 50 <= words <= 100k, mean word length in [3,10], symbol-to-word
-    * ratio <= 0.1 (# and ellipsis), <= 90% bullet lines, <= 30% ellipsis
-    * lines, >= 80% alphabetic words, >= 2 distinct stopwords. Pure
-    * codegen'd Column arithmetic — scan speed at 100 TB. */
+  /** One document's Gopher metrics and verdict. The field names are
+    * [[gopherQuality]]'s output columns. */
+  final case class Gopher(n_words: Int, mean_word_len: Double,
+      symbol_ratio: Double, bullet_frac: Double, ellipsis_frac: Double,
+      alpha_frac: Double, stop_hits: Int, keep: Boolean)
+
+  /** Gopher-style quality rules (Rae et al. 2021 appendix A1.1) for ONE
+    * document, in one pass over its text: one tokenization, one line
+    * split. The only definition behind [[gopherQuality]] and
+    * [[gopherKeep]], so the two cannot drift. The metrics:
+    * - `n_words`: [[Tools.tokenize]]'s token count;
+    * - `mean_word_len`: non-`\s` code points per word;
+    * - `symbol_ratio`: ('#'s + non-overlapping "..."s) per word;
+    * - `bullet_frac`: lines ("\n"-split, trailing empties kept) whose
+    *   first non-space char is '-', '*' or '•';
+    * - `ellipsis_frac`: lines ending in "..." before trailing spaces, or
+    *   before one final line terminator (Java regex `$`);
+    * - `alpha_frac`: words holding an ASCII letter;
+    * - `stop_hits`: distinct stopwords among the words under Spark's
+    *   `lower` (`icuLower`: its ICU case mapping, as the session has).
+    * The ratios are 0 without words and round HALF_UP to 4 places the
+    * way Spark's `round` does. `keep` is the conjunction of the rules
+    * on the rounded values, at the published defaults (adapted to word
+    * counts): minWords <= words <= maxWords, mean word length in [3,10],
+    * symbol ratio <= 0.1, <= 90% bullet lines, <= 30% ellipsis lines,
+    * >= 80% alphabetic words, >= 2 distinct stopwords. NULL text ->
+    * null. PropertiesSpec pins bit-equality with the Column spelling the
+    * SQL oracle mirrors. */
+  def gopherStr(s: String, minWords: Int, maxWords: Int,
+      stopwords: Set[String], icuLower: Boolean): Gopher = {
+    if (s == null) return null
+    val words = Tools.tokenizeStr(s)
+    val nWords = words.length
+    var alphaWords = 0
+    val hits = scala.collection.mutable.HashSet.empty[String]
+    words.foreach { w =>
+      if (w.exists(ch => (ch >= 'a' && ch <= 'z') || (ch >= 'A' && ch <= 'Z')))
+        alphaWords += 1
+      if (stopwords.nonEmpty) {
+        val u = UTF8String.fromString(w)
+        val lw = (if (icuLower) CollationSupport.Lower.execBinaryICU(u)
+          else CollationSupport.Lower.execBinary(u)).toString
+        if (stopwords.contains(lw)) hits += lw
+      }
+    }
+    var spaces, hashes, ellipses = 0
+    var i = 0
+    while (i < s.length) {
+      val ch = s.charAt(i)
+      if (Tools.isRegexSpace(ch)) spaces += 1
+      else if (ch == '#') hashes += 1
+      else if (s.startsWith("...", i)) { ellipses += 1; i += 2 }
+      i += 1
+    }
+    val lines = s.split("\n", -1)
+    var bullets, ellipsisLines = 0
+    lines.foreach { l =>
+      var from = 0
+      while (from < l.length && l.charAt(from) == ' ') from += 1
+      if (from < l.length && "-*•".indexOf(l.charAt(from)) >= 0) bullets += 1
+      var end = l.length
+      while (end > 0 && l.charAt(end - 1) == ' ') end -= 1
+      if (l.startsWith("...", end - 3) || (end >= 4 &&
+          "\r\u0085\u2028\u2029".indexOf(l.charAt(end - 1)) >= 0 &&
+          l.startsWith("...", end - 4))) ellipsisLines += 1
+    }
+    def perWord(x: Double) = if (nWords == 0) 0.0 else x / nWords
+    def round4(x: Double) = java.math.BigDecimal.valueOf(x)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+    val meanLen = round4(perWord(s.codePointCount(0, s.length) - spaces))
+    val symbolRatio = round4(perWord(hashes + ellipses))
+    val bulletFrac = round4(bullets.toDouble / lines.length)
+    val ellipsisFrac = round4(ellipsisLines.toDouble / lines.length)
+    val alphaFrac = round4(perWord(alphaWords))
+    Gopher(nWords, meanLen, symbolRatio, bulletFrac, ellipsisFrac, alphaFrac,
+      hits.size,
+      keep = nWords >= minWords && nWords <= maxWords &&
+        meanLen >= 3.0 && meanLen <= 10.0 && symbolRatio <= 0.1 &&
+        bulletFrac <= 0.9 && ellipsisFrac <= 0.3 && alphaFrac >= 0.8 &&
+        hits.size >= 2)
+  }
+
+  /** [[gopherStr]] at fixed rules, with the session's case mapping. */
+  private def gopherAt(minWords: Int, maxWords: Int,
+      stopwords: Seq[String]): String => Gopher = {
+    val sw = stopwords.toSet
+    val icu = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+    s => gopherStr(s, minWords, maxWords, sw, icu)
+  }
+
+  /** The Gopher metrics and `keep` verdict ([[gopherStr]]) per row:
+    * (id, n_words, mean_word_len, symbol_ratio, bullet_frac,
+    * ellipsis_frac, alpha_frac, stop_hits, keep). One kernel call per
+    * row, projected once; NULL text -> NULL metrics and a NULL keep. */
   def gopherQuality(df: DataFrame, idCol: String, textCol: String,
       minWords: Int = 50, maxWords: Int = 100000,
       stopwords: Seq[String] = gopherStopwords): DataFrame = {
-    val m = gopherMetricCols(col(textCol), stopwords)
-    val out = df.select(col(idCol) +: m.map { case (n, c0) => c0.as(n) }: _*)
-    out.withColumn("keep", gopherKeepFromMetrics(
-      n => col(n), minWords, maxWords))
+    val g = udf(gopherAt(minWords, maxWords, stopwords)).withName("gopher")
+    df.select(col(idCol), g(col(textCol)).as("__g"))
+      .select(col(idCol), col("__g.*"))
   }
 
-  /** The same Gopher gate as [[gopherQuality]]'s `keep`, as ONE boolean
-    * Column over the text — for pipelines that only FILTER on quality
-    * (q96's e2e curation chain): `df.filter(gopherKeep(col(textCol)))`
-    * stays a row-local scan predicate, where materializing the metric
-    * frame and joining it back would buy the same rows for an extra
-    * exchange. NULL text yields a NULL verdict, which `filter` drops —
-    * identical to filtering [[gopherQuality]] on `keep`. Shares the
-    * metric arithmetic with gopherQuality (one builder), so the two
-    * spellings cannot drift.
-    *
-    * Known cost, accepted deliberately: the conjunction inlines each
-    * metric's full expression, so a PASSING row re-evaluates the
-    * tokenizer regex ~4× (filter codegen does not CSE across
-    * conjuncts, and projecting metrics first doesn't help — Catalyst's
-    * PushPredicateThroughProject inlines the aliases right back). The
-    * conjuncts short-circuit cheapest-first, so REJECTED rows — the
-    * majority in a quality gate — stop early; a few extra regex passes
-    * on survivors is still row-local scan work, strictly cheaper than
-    * the join-back alternative's exchange at any scale. */
+  /** [[gopherQuality]]'s `keep` alone, as ONE boolean Column over the
+    * text: one kernel call per row, no metric frame. NULL text yields a
+    * NULL verdict, which `filter` drops. For the streaming gate and
+    * predicates over a plain column; to filter a frame whose text is
+    * computed upstream, use [[gopherFilter]]. */
   def gopherKeep(c: Column, minWords: Int = 50, maxWords: Int = 100000,
       stopwords: Seq[String] = gopherStopwords): Column = {
-    val m = gopherMetricCols(c, stopwords).toMap
-    gopherKeepFromMetrics(m(_), minWords, maxWords)
+    val g = gopherAt(minWords, maxWords, stopwords)
+    udf((s: String) => Option(g(s)).map(_.keep)).withName("gopher_keep")(c)
   }
 
-  private def gopherKeepFromMetrics(m: String => Column,
-      minWords: Int, maxWords: Int): Column =
-    m("n_words").between(minWords, maxWords) &&
-      m("mean_word_len").between(3.0, 10.0) &&
-      m("symbol_ratio") <= 0.1 &&
-      m("bullet_frac") <= 0.9 &&
-      m("ellipsis_frac") <= 0.3 &&
-      m("alpha_frac") >= 0.8 &&
-      m("stop_hits") >= 2
-
-  /** The seven Gopher metrics (rounded exactly as published in the
-    * oracle mirror) in output order. */
-  private def gopherMetricCols(c: Column,
-      stopwords: Seq[String]): Seq[(String, Column)] = {
-    val toks = Tools.tokenize(c)
-    // NULL text -> NULL metrics and a NULL keep (size(null) would be -1)
-    val nWords = when(c.isNull, lit(null).cast("int")).otherwise(size(toks))
-    val meanLen = when(nWords === 0, lit(0.0)).otherwise(
-      length(regexp_replace(c, "\\s", "")).cast("double") / nWords.cast("double"))
-    val hashes = length(c) - length(regexp_replace(c, "#", ""))
-    val ellipses = (length(c) - length(regexp_replace(c, "\\.\\.\\.", ""))) / lit(3)
-    val symbolRatio = when(nWords === 0, lit(0.0)).otherwise(
-      (hashes + ellipses).cast("double") / nWords.cast("double"))
-    val lines = split(c, "\n")
-    val nLines = size(lines)
-    val bulletFrac = when(nLines === 0, lit(0.0)).otherwise(
-      size(filter(lines, l => ltrim(l).rlike("^[-*•]"))).cast("double") /
-        nLines.cast("double"))
-    val ellipsisFrac = when(nLines === 0, lit(0.0)).otherwise(
-      size(filter(lines, l => rtrim(l).rlike("\\.\\.\\.$"))).cast("double") /
-        nLines.cast("double"))
-    val alphaFrac = when(nWords === 0, lit(0.0)).otherwise(
-      size(filter(toks, t => t.rlike("[A-Za-z]"))).cast("double") /
-        nWords.cast("double"))
-    val stopHits = when(c.isNull, lit(null).cast("int")).otherwise(
-      size(array_intersect(
-        array_distinct(Tools.tokenize(lower(c))), array(stopwords.map(lit): _*))))
-    Seq(
-      "n_words" -> nWords,
-      "mean_word_len" -> round(meanLen, 4),
-      "symbol_ratio" -> round(symbolRatio, 4),
-      "bullet_frac" -> round(bulletFrac, 4),
-      "ellipsis_frac" -> round(ellipsisFrac, 4),
-      "alpha_frac" -> round(alphaFrac, 4),
-      "stop_hits" -> stopHits)
+  /** The rows of `df` whose text passes every Gopher rule
+    * ([[gopherKeep]]), columns and their order untouched. The verdict is
+    * projected behind [[Tools.opaqueBool]] and filtered above it: a
+    * plain `df.filter(gopherKeep(...))` is pushed below the projection
+    * that computes the text, inlining that expression (a PII scrub, an
+    * HTML extraction) into the predicate, so it runs twice per row. */
+  def gopherFilter(df: DataFrame, textCol: String, minWords: Int = 50,
+      maxWords: Int = 100000,
+      stopwords: Seq[String] = gopherStopwords): DataFrame = {
+    val keep = "__gopher_keep"
+    df.withColumn(keep, Tools.opaqueBool(
+        gopherKeep(col(textCol), minWords, maxWords, stopwords)))
+      .filter(col(keep)).drop(keep)
   }
 
   // -------------------------------------------------------- PII scrubbing

@@ -429,8 +429,8 @@ class PlanQualitySpec extends SparkSpec {
     // six stages, but the exchanges stay exactly the stages' own:
     // __dedup_key (fingerprint keep-min), __gram_h (decontamination
     // gram meeting), doc_id (flag re-attach), lang (pack window). The
-    // quality gate must contribute NOTHING — gopherKeep is a scan
-    // predicate, not a metric-frame self-join (the reason it exists);
+    // quality gate must contribute NOTHING — gopherKeep is a row-local
+    // predicate, not a metric-frame self-join;
     // a new family here means a stage stopped fusing.
     val p = plan("q96_curation_e2e")
     val fams = "Exchange hashpartitioning\\(([^)]*)\\)".r
@@ -443,6 +443,31 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("Exchange SinglePartition"),
       s"global exchange crept into the e2e chain:\n$p")
     assert(!p.contains("SortMergeJoin"), s"a join stopped hashing:\n$p")
+  }
+
+  test("YAML scrub -> quality: the scrub runs once per scan, the gate adds no join or exchange") {
+    val in = scratch("plan-quality") + "/docs"
+    Seq((1L, "mail bob@x.org " + ("the data " * 30)), (2L, "too short"))
+      .toDF("doc_id", "text").write.parquet(in)
+    val conf = graft.conf.RecipeConf.load(
+      s"""datasets:
+         |  docs: {path: $in, format: parquet}
+         |recipes:
+         |  q:
+         |    input: docs
+         |    steps:
+         |      - scrub: {select: [text]}
+         |      - quality: {id: doc_id, text: text, min_words: 30}
+         |""".stripMargin)
+    val p = graft.conf.RecipeConf.run(spark, conf, "q")
+      .queryExecution.executedPlan.toString
+    val scans = "FileScan".r.findAllMatchIn(p).size
+    val scrubs = java.util.regex.Pattern.quote(graft.text.Curation.emailPattern)
+      .r.findAllMatchIn(p).size
+    assert(scans == 1, s"the corpus must be scanned once:\n$p")
+    assert(scrubs == scans, s"the scrub's email regex appears $scrubs times:\n$p")
+    assert(!p.contains("Join") && !p.contains("Exchange"),
+      s"the quality gate must stay a row-local filter:\n$p")
   }
 
   test("fuzzy match join expands over the vocabulary, not the postings") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import graft.functions.{Similarity, Tools}
@@ -272,6 +273,113 @@ class PropertiesSpec extends SparkSpec {
         assert(v >= 0.0 && v <= 1.0, s"fraction out of range: $v")
       }
     }
+  }
+
+  /** The Column spelling of the Gopher rules, metric for metric the one
+    * the SQL oracle mirrors: the parity reference for
+    * Curation.gopherStr. */
+  private def gopherColumns(c: Column, minWords: Int, maxWords: Int,
+      stopwords: Seq[String]): Seq[Column] = {
+    val toks = Tools.tokenize(c)
+    val nWords = when(c.isNull, lit(null).cast("int")).otherwise(size(toks))
+    val meanLen = when(nWords === 0, lit(0.0)).otherwise(
+      length(regexp_replace(c, "\\s", "")).cast("double") / nWords.cast("double"))
+    val hashes = length(c) - length(regexp_replace(c, "#", ""))
+    val ellipses = (length(c) - length(regexp_replace(c, "\\.\\.\\.", ""))) / lit(3)
+    val symbolRatio = when(nWords === 0, lit(0.0)).otherwise(
+      (hashes + ellipses).cast("double") / nWords.cast("double"))
+    val lines = split(c, "\n")
+    val nLines = size(lines)
+    val bulletFrac = when(nLines === 0, lit(0.0)).otherwise(
+      size(filter(lines, l => ltrim(l).rlike("^[-*•]"))).cast("double") /
+        nLines.cast("double"))
+    val ellipsisFrac = when(nLines === 0, lit(0.0)).otherwise(
+      size(filter(lines, l => rtrim(l).rlike("\\.\\.\\.$"))).cast("double") /
+        nLines.cast("double"))
+    val alphaFrac = when(nWords === 0, lit(0.0)).otherwise(
+      size(filter(toks, t => t.rlike("[A-Za-z]"))).cast("double") /
+        nWords.cast("double"))
+    val stopHits = when(c.isNull, lit(null).cast("int")).otherwise(
+      size(array_intersect(
+        array_distinct(Tools.tokenize(lower(c))), array(stopwords.map(lit): _*))))
+    val m = Seq(
+      "n_words" -> nWords,
+      "mean_word_len" -> round(meanLen, 4),
+      "symbol_ratio" -> round(symbolRatio, 4),
+      "bullet_frac" -> round(bulletFrac, 4),
+      "ellipsis_frac" -> round(ellipsisFrac, 4),
+      "alpha_frac" -> round(alphaFrac, 4),
+      "stop_hits" -> stopHits)
+    val v = m.toMap
+    val keep = v("n_words").between(minWords, maxWords) &&
+      v("mean_word_len").between(3.0, 10.0) &&
+      v("symbol_ratio") <= 0.1 &&
+      v("bullet_frac") <= 0.9 &&
+      v("ellipsis_frac") <= 0.3 &&
+      v("alpha_frac") >= 0.8 &&
+      v("stop_hits") >= 2
+    m.map { case (n, e) => e.as(n) } :+ keep.as("keep")
+  }
+
+  test("Gopher kernel is bit-equal to the Column spelling, metrics and keep (batched)") {
+    import graft.text.Curation
+    val adversarial = Seq(null, "", " ", "\t\n \r\n", "\u000B\f", "\u00A0",
+      "a \u2028", "a b \u0085", "the a\t\u2029", "  \u2028", "a\u2028", "x \r\n",
+      "one\r\ntwo...\r\nthree... \r\n", "end... ", "end...\r", "end...\u2028 ",
+      "end... \u2029", "....\n......\n.....", "# ## ### a#b",
+      "  • x\n\t- y\n   * z\n-\n•", "\t• tabbed\n \t* mixed",
+      "😀 emoji 𝔘𝔫𝔦 the a 😀😀", "İstanbul İ i\u0307 the A",
+      "ẞ STRAẞE ß the THE a", "ΟΔΟΣ ΣΟΦΟΣ the a", "\uA7C0 \u2C2F the",
+      "\n\n\n", "the\nthe\na\n", "a\u00A0b the\u00A0a",
+      "the data of " * 20, "the a word word word")
+    val piece = Gen.oneOf(Seq("the", "The", "THE", "a", "A", "of", "be", "İ", "ẞ",
+      "ß", "ΣΟΦΟΣ", "word", "x1", "42", "#", "...", "....", "......", "-", "*",
+      "•", "😀", "𝔘", " ", "  ", "\t", "\n", "\r\n", "\u000B", "\f", "\u00A0",
+      "\u0085", "\u2028", "\u2029", "... ", "end..."))
+    val random = (1 to 300).map { i =>
+      val seed = org.scalacheck.rng.Seed(i.toLong)
+      Gen.listOf(piece).map(_.mkString(if (i % 2 == 0) " " else ""))
+        .pureApply(Gen.Parameters.default, seed)
+    }
+    val docs = (adversarial ++ random).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    def bits(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }
+    val rules = Seq((50, 100000, Curation.gopherStopwords),
+      // U+A7C0/U+2C2F lowercase only under ICU's newer Unicode tables
+      (3, 12, Seq("the", "a", "ß", "i\u0307", "i", "σοφος", "σοφοσ", "ΟΔΟΣ",
+        "\uA7C1", "\u2C5F")))
+    val icuKey = "spark.sql.icu.caseMappings.enabled"
+    val icu0 = spark.conf.getOption(icuKey)
+    try for (icu <- Seq("true", "false"); (lo, hi, sw) <- rules) {
+      spark.conf.set(icuKey, icu)
+      val ref = docs.select(col("id") +: gopherColumns(col("text"), lo, hi, sw): _*)
+        .collect().map(r => r.getLong(0) -> bits(r)).toMap
+      val got = Curation.gopherQuality(docs, "id", "text", lo, hi, sw)
+        .collect().map(r => r.getLong(0) -> bits(r)).toMap
+      val keeps = docs.select(col("id"),
+          Curation.gopherKeep(col("text"), lo, hi, sw).as("keep"))
+        .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+      val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got.keySet == ref.keySet)
+      ref.foreach { case (id, want) =>
+        assert(got(id) == want,
+          s"icu=$icu rules=($lo,$hi): metrics drift on ${texts(id)}")
+        assert(keeps(id) == want.last,
+          s"icu=$icu rules=($lo,$hi): keep drift on ${texts(id)}")
+      }
+      assert(ref.values.exists(_.last == true) && ref.values.exists(_.last == false),
+        s"rules ($lo,$hi) must land docs on both sides of keep")
+    } finally icu0.fold(spark.conf.unset(icuKey))(spark.conf.set(icuKey, _))
+    // the tokenizer twin on its own
+    docs.select(col("text"), Tools.tokenize(col("text")).as("t")).collect()
+      .foreach { r =>
+        val want = Option(r.getSeq[String](1)).map(_.toSeq)
+        assert(Option(Tools.tokenizeStr(r.getString(0))).map(_.toSeq) == want,
+          s"tokenize drift on ${r.getString(0)}")
+      }
   }
 
   test("URL canonicalization is idempotent and domain-stable over generated URLs") {

@@ -1954,6 +1954,25 @@ class RecipeConfSpec extends SparkSpec {
     assert(be.filter("n_subwords < n_chars_sym").count() > 0)
   }
 
+  test("quality filter judges each row by its own text: shared and NULL ids") {
+    import spark.implicits._
+    val good = ("the data " * 30).trim + " of it"
+    // rows 1a/1b share an id, only 1a passes; the NULL-id row passes
+    Seq((Some(1L), "1a " + good), (Some(1L), "1b too short"),
+        (None, "nul " + good), (Some(2L), "2 short"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/qid_in")
+    val conf = RecipeConf.load(
+      s"""datasets:
+         |  qd: {path: $dir/qid_in, format: parquet}
+         |recipes:
+         |  q: {input: qd, steps: [{quality: {id: doc_id, text: text, min_words: 30}}]}
+         |""".stripMargin)
+    val kept = RecipeConf.run(spark, conf, "q").select("text").as[String]
+      .collect().map(_.split(" ")(0)).sorted.toSeq
+    assert(kept == Seq("1a", "nul"), s"got $kept")
+  }
+
   test("a full curation pipeline composes from one YAML recipe") {
     import spark.implicits._
     val good = ("the data " * 40).trim + " of it all"
