@@ -9,7 +9,6 @@ import graft.graph.ConnectedComponents
 import graft.dedup.Dedup
 import graft.sim.Ann
 import graft.text.TextAnalysis
-import graft.engine.Recipe
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -26,126 +25,93 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.t(s, dir, name)
 
-  /** q60's persisted-index dir: ONE path per (JVM, sf dir), overwritten
-    * in place across repeated invocations (Bench times the lambdas
-    * several times; a fresh temp dir per call would leak an embeddings
-    * copy each time). The pid suffix keeps concurrent processes (a
-    * Bench beside a Verify) from clobbering each other's index
+  /** The queries' persisted-index scratch dirs, query tag → dir name,
+    * each resolved through [[scratchDir]]: ONE path per (JVM, sf dir),
+    * overwritten in place across repeated invocations (Bench times the
+    * lambdas several times; a fresh temp dir per call would leak a
+    * corpus copy each time). The pid suffix keeps concurrent processes
+    * (a Bench beside a Verify) from clobbering each other's index
     * mid-read; the sf tag keeps the warmup SF's index from being
-    * probed at the target SF. Each JVM leaks at most one dir per SF. */
-  private def ivfIdxDir(dir: String): String =
-    scratchDir("graft-ivf-q60", tag = dir)
+    * probed at the target SF. Each JVM leaks at most one dir per entry
+    * per SF. No two queries share a dir: the build history (layout,
+    * verb sequence) is what each query gates. */
+  private val idxDirNames: Map[String, String] = Map(
+    // float IVF index (q60_build writes it, q60 probes it)
+    "q60" -> "graft-ivf-q60",
+    // int8-quantized IVF: its own layout (grids + codebook)
+    "q116" -> "graft-ivfq-q116",
+    // product-quantized IVF: m-byte codes + per-subspace codebooks
+    "q122" -> "graft-ivfpq-q122",
+    // RESIDUAL IVF-PQ: q122's layout class, incomparable code geometry
+    "q125" -> "graft-ivfpqr-q125",
+    // float index built on half the corpus, extended by appendIvfIndex
+    // (q60's layout, a different build history is the point)
+    "q126" -> "graft-ivfapp-q126",
+    // SQ8 append: the batch must encode under the STORED half-corpus
+    // grid, exactly where geometry drift would corrupt results
+    "q129" -> "graft-ivfappq-q129",
+    // built on half, the other half STREAMED into the epoch-partitioned
+    // stream/ table (appendIvfIndexStream)
+    "q131" -> "graft-ivfstr-q131",
+    // q131's history, then the YAML compact step: the post-fold layout
+    // (single main table, no stream/ reads) is the state under test
+    "q132" -> "graft-ivfcmp-q132",
+    // PQ append: encodes under the STORED per-subspace codebooks
+    // (encodeUnderStoredGeometry's pq branch)
+    "q133" -> "graft-ivfapppq-q133",
+    // RESIDUAL-PQ append: assigns under the STORED coarse centroids AND
+    // encodes residuals under the STORED residual codebooks
+    "q134" -> "graft-ivfapppqr-q134",
+    // SQ8 stream append: streamed rows land on the stored int8 grid
+    "q135" -> "graft-ivfstrq-q135",
+    // PQ stream append: the pq branch through the epoch sink
+    "q142" -> "graft-ivfstrpq-q142",
+    // RESIDUAL-PQ stream append: the pqRes branch through the epoch sink
+    "q143" -> "graft-ivfstrpqr-q143",
+    // build + append, then a YAML takedown: probes must suppress the
+    // tombstoned ids while they physically remain (pre-compaction)
+    "q136" -> "graft-ivfdel-q136",
+    // band index built WITHOUT the template holders under a non-default
+    // signature (num_hashes=60, bands=10), the holders added by the YAML
+    // neardup_index APPEND: every probe hit crosses the build/append
+    // boundary, so an append that no-ops or signs under defaults
+    // zeroes every verdict
+    "q137" -> "graft-neardupapp-q137",
+    // the takedown cascade's band index (full fixture corpus) ...
+    "q138" -> "graft-neardupdel-q138",
+    // ... and its document index (even ids built, odd ids appended):
+    // one cascading YAML takedown run, then both compacted
+    "q139" -> "graft-docidx-q139",
+    // q137's split, the holders arriving through a REAL file-source
+    // stream (appendNearDupIndexStream); probes read main ∪ epochs
+    "q140" -> "graft-neardupstr-q140",
+    // SELF-GROWING index: nearDupAdmitStream drops near-dups, dedups
+    // within the batch and appends the admitted docs per micro-batch
+    "q141" -> "graft-neardupadm-q141",
+    // the q107/q108 band index over the fixture corpus
+    "q107" -> "graft-neardup-q107")
 
-  /** q116's int8-quantized IVF index dir — its own layout (grids +
-    * codebook), so it never shares q60's float dir. */
-  private def ivfqIdxDir(dir: String): String =
-    scratchDir("graft-ivfq-q116", tag = dir)
+  private def idxDir(query: String, dir: String): String =
+    scratchDir(idxDirNames(query), tag = dir)
 
-  /** q122's product-quantized IVF index dir — a third layout (m-byte
-    * codes + per-subspace codebooks), never shared with q60/q116. */
-  private def ivfpqIdxDir(dir: String): String =
-    scratchDir("graft-ivfpq-q122", tag = dir)
 
-  /** q125's RESIDUAL IVF-PQ index dir — same layout class as q122 but
-    * an incomparable code geometry (residual space), own dir. */
-  private def ivfpqrIdxDir(dir: String): String =
-    scratchDir("graft-ivfpqr-q125", tag = dir)
 
-  /** q126's incremental index dir: built on half the corpus, extended
-    * by appendIvfIndex — never shared with q60's full-corpus build
-    * (same layout, different build history is the point). */
-  private def ivfApndIdxDir(dir: String): String =
-    scratchDir("graft-ivfapp-q126", tag = dir)
 
-  /** q129's incremental QUANTIZED index dir: the SQ8 sibling of q126's
-    * float append — the appended batch must encode under the STORED
-    * half-corpus grid, which is exactly where geometry drift would
-    * corrupt results (r12 verdict #2: the quantized append paths had
-    * specs but no driver gate). */
-  private def ivfApndSqIdxDir(dir: String): String =
-    scratchDir("graft-ivfappq-q129", tag = dir)
 
-  /** q131's STREAM-appended index dir: built on half the corpus, the
-    * other half arriving as a stream into the index's epoch-partitioned
-    * stream/ table (appendIvfIndexStream) — never shared with the
-    * batch-append dirs (different accumulation history is the point). */
-  private def ivfStrIdxDir(dir: String): String =
-    scratchDir("graft-ivfstr-q131", tag = dir)
 
-  /** q132's COMPACTED index dir: q131's accumulation history (build on
-    * half, stream the rest into the epoch-partitioned stream/ table)
-    * followed by the YAML compact maintenance step — own dir because
-    * the post-compaction layout (single main table, no stream/ reads)
-    * is the state under test, not shared with q131's still-streaming
-    * union. */
-  private def ivfCmpIdxDir(dir: String): String =
-    scratchDir("graft-ivfcmp-q132", tag = dir)
 
-  /** q133's incremental PQ index dir: the product-quantized sibling of
-    * q126/q129's appends — the appended batch must encode under the
-    * STORED per-subspace codebooks (encodeUnderStoredGeometry's pq
-    * branch, which q126/q129 never reach). */
-  private def ivfApndPqIdxDir(dir: String): String =
-    scratchDir("graft-ivfapppq-q133", tag = dir)
 
-  /** q134's incremental RESIDUAL-PQ index dir: the deepest append path
-    * — the batch assigns under the STORED coarse centroids AND encodes
-    * its residuals under the STORED residual codebooks. */
-  private def ivfApndPqrIdxDir(dir: String): String =
-    scratchDir("graft-ivfapppqr-q134", tag = dir)
 
-  /** q135's SQ8 STREAM-appended index dir: q131's accumulation history
-    * on the quantized layout — streamed rows must land on the stored
-    * int8 grid (the matrix's last driver-ungated stream cell). */
-  private def ivfStrSqIdxDir(dir: String): String =
-    scratchDir("graft-ivfstrq-q135", tag = dir)
 
-  /** q142's PQ STREAM-appended index dir: the last cheap stream cell
-    * of the build/append/stream matrix (r14 verdict #3) — streamed
-    * micro-batches must encode under the STORED per-subspace
-    * codebooks (encodeUnderStoredGeometry's pq branch through the
-    * epoch sink, which q135's SQ8 path never reaches). */
-  private def ivfStrPqIdxDir(dir: String): String =
-    scratchDir("graft-ivfstrpq-q142", tag = dir)
 
-  /** q143's RESIDUAL-PQ STREAM-appended index dir: the deepest stream
-    * cell — every micro-batch assigns under the STORED coarse
-    * centroids AND encodes its residuals under the STORED residual
-    * codebooks (encodeUnderStoredGeometry's pqRes branch through the
-    * epoch sink). Completes the lifecycle matrix: every (layout,
-    * verb) cell is now driver-gated. */
-  private def ivfStrPqrIdxDir(dir: String): String =
-    scratchDir("graft-ivfstrpqr-q143", tag = dir)
 
-  /** q136's DELETE-gated index dir: build + append history, then a
-    * YAML takedown tombstones planted ids — probes must suppress them
-    * while they physically remain (the pre-compaction state). */
-  private def ivfDelIdxDir(dir: String): String =
-    scratchDir("graft-ivfdel-q136", tag = dir)
 
-  /** q137's APPENDED band index dir: built on the corpus MINUS its
-    * template holders under a NON-default signature (num_hashes=60,
-    * bands=10 — six-row band slices that cannot accidentally align
-    * with a 64/16-signed batch), then the template holders arrive via
-    * the YAML neardup_index APPEND mode. Every probe hit therefore
-    * crosses the build/append boundary: an append that silently
-    * no-ops, or signs under defaults instead of the STORED manifest
-    * parameters, zeroes every verdict. */
-  private def nearApndIdxDir(dir: String): String =
-    scratchDir("graft-neardupapp-q137", tag = dir)
 
-  /** q138/q139's takedown-cascade artifacts: the band index (full
-    * fixture corpus) and the document index (docs + postings; built
-    * on the even ids, YAML-appended the odd ids), tombstoned by ONE
-    * cascading YAML takedown run and then both physically purged by
-    * their YAML compact modes. */
-  private def nearDelIdxDir(dir: String): String =
-    scratchDir("graft-neardupdel-q138", tag = dir)
-  private def docIdxDir(dir: String): String =
-    scratchDir("graft-docidx-q139", tag = dir)
+
+
 
   /** Build q138/q139's shared artifact pair on this JVM's first touch
-    * (the ivfBuilt guard contract) and return (bandIdx, docIdx). The
+    * (the idxBuilt guard contract) and return (bandIdx, docIdx). The
     * history each probe must answer through: build → append → ONE
     * cascading takedown (both artifacts, one id frame, one YAML run)
     * → compact each. The compact runs REQUIRE the tombstone tables
@@ -153,9 +119,9 @@ object SparkEntry {
     * hide behind the readers' anti-join. */
   private def ensureTakedownArtifacts(s: SparkSession, dir: String)
       : (String, String) = {
-    val bandIdx = nearDelIdxDir(dir)
-    val docIdx = docIdxDir(dir)
-    if (!ivfBuilt.contains(bandIdx)) {
+    val bandIdx = idxDir("q138", dir)
+    val docIdx = idxDir("q139", dir)
+    if (!idxBuilt.contains(bandIdx)) {
       val d = t(s, dir, "documents")
       val (_, corpus) = nearDupFixture(s, dir)
       Dedup.writeNearDupIndex(corpus, "doc_id", "text", bandIdx)
@@ -197,7 +163,7 @@ object SparkEntry {
       graft.conf.RecipeConf.run(s, conf, "takedown", mode = "delete")
       graft.conf.RecipeConf.run(s, conf, "fold_band", mode = "compact")
       graft.conf.RecipeConf.run(s, conf, "fold_doc", mode = "compact")
-      ivfBuilt.add(bandIdx)
+      idxBuilt.add(bandIdx)
     }
     (bandIdx, docIdx)
   }
@@ -214,23 +180,7 @@ object SparkEntry {
         "not consume the tombstones")
   }
 
-  /** q140's STREAM-appended band index dir: built on the corpus MINUS
-    * its template holders (q137's split) under the same non-default
-    * signature, then the holders arrive through a REAL file-source
-    * streaming query (appendNearDupIndexStream) — every probe hit
-    * crosses the build/stream boundary AND the probe reads main ∪
-    * streamed-epoch tables (no fold runs), so a stream that no-ops,
-    * re-signs under defaults, or whose epochs the union reader
-    * misses, zeroes every verdict. */
-  private def nearStrIdxDir(dir: String): String =
-    scratchDir("graft-neardupstr-q140", tag = dir)
 
-  /** q141's SELF-GROWING index dir: the admit gate streams the BATCH
-    * side through nearDupAdmitStream — near-dups of the index drop,
-    * survivors near-dedup within the batch, and the admitted docs
-    * join the index in the same micro-batch. */
-  private def nearAdmitIdxDir(dir: String): String =
-    scratchDir("graft-neardupadm-q141", tag = dir)
 
   /** Shared append-gate scaffold (q126/q129/q133/q134): stage the ODD
     * half of `embeddings` as a scratch parquet (the YAML dataset needs
@@ -319,13 +269,14 @@ object SparkEntry {
     counts.join(norms, Seq("__cell")).orderBy("__cell")
   }
 
-  /** Index dirs THIS JVM has built (q60's skip-rebuild guard). In-memory
-    * on purpose: a filesystem existence check would trust whatever a
+  /** Index dirs THIS JVM has built: the one build-once guard for every
+    * [[idxDirNames]] entry (their paths never collide). In-memory on
+    * purpose: a filesystem existence check would trust whatever a
     * previous process left at the pid-recycled path — a stale index over
     * regenerated data, or a build that died mid-write — while a fresh
-    * JVM re-running writeIvfIndex (mode overwrite) costs one build and
-    * can never probe stale state. */
-  private val ivfBuilt =
+    * JVM re-running the build (mode overwrite) costs one build and can
+    * never probe stale state. */
+  private val idxBuilt =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** q130's batch-trained router weights, once per (SESSION, sfdir) —
@@ -336,18 +287,11 @@ object SparkEntry {
     * hide the chain's steady-state number. Deterministic fixture +
     * seeded training → the cached weights are the re-derived weights.
     * The cached DataFrame's plan is bound to the session that built
-    * it (unlike ivfBuilt, which caches only PATHS), so the entry
+    * it (unlike idxBuilt, which caches only PATHS), so the entry
     * carries its session and a different/stopped session re-derives
     * instead of collecting against a dead plan. */
   private val routerWeightsCache = new java.util.concurrent
     .ConcurrentHashMap[String, (SparkSession, DataFrame)]()
-
-  /** q107's near-dup band index dir + build guard — the same contract
-    * as ivfIdxDir/ivfBuilt, for writeNearDupIndex. */
-  private def nearIdxDir(dir: String): String =
-    scratchDir("graft-neardup-q107", tag = dir)
-  private val nearIdxBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** The ONE near-dup template, interpolated into every Scala fixture
     * AND both oracle spellings (r13 review: the literal existed in 5
@@ -442,14 +386,14 @@ object SparkEntry {
   }
 
   /** Build the shared q107/q108 band index over the fixture corpus on
-    * this JVM's first touch (the ivfBuilt guard contract) and return
+    * this JVM's first touch (the idxBuilt guard contract) and return
     * its path. */
   private[graft] def ensureNearIdx(s: SparkSession, dir: String): String = {
-    val idx = nearIdxDir(dir)
-    if (!nearIdxBuilt.contains(idx)) {
+    val idx = idxDir("q107", dir)
+    if (!idxBuilt.contains(idx)) {
       graft.dedup.Dedup.writeNearDupIndex(
         nearDupFixture(s, dir)._2, "doc_id", "text", idx)
-      nearIdxBuilt.add(idx)
+      idxBuilt.add(idx)
     }
     idx
   }
@@ -796,39 +740,39 @@ object SparkEntry {
     // red row); the full per-coordinate centroid table is q74's job.
     "q60_ann_ivf_build" -> ((s, dir) => {
       Ann.writeIvfIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
-        ivfIdxDir(dir), nlist = 16)
-      ivfBuilt.add(ivfIdxDir(dir))
-      ivfCellSummary(s, ivfIdxDir(dir))
+        idxDir("q60", dir), nlist = 16)
+      idxBuilt.add(idxDir("q60", dir))
+      ivfCellSummary(s, idxDir("q60", dir))
     }),
 
     // the three persisted quantized builds as their own gate + bench
     // lines (round-12 verdict #2: r11 mixed these one-time builds into
     // the probe sample streams). Each rebuilds its layout
     // unconditionally — Bench times the build here, and marking
-    // ivfBuilt makes every later probe sample pure probe. The returned
+    // idxBuilt makes every later probe sample pure probe. The returned
     // summary is the cell LAYOUT (per-cell row counts + integer
     // centroid norms): the coarse geometry is the quantized-integer
     // k-means shared across all three layouts, so the oracle is
     // q60_ann_ivf_build's replay at the matching nlist.
     "q116_ann_ivf_quantized_build" -> ((s, dir) => {
       Ann.writeIvfIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
-        ivfqIdxDir(dir), nlist = 16, quantize = true)
-      ivfBuilt.add(ivfqIdxDir(dir))
-      ivfCellSummary(s, ivfqIdxDir(dir))
+        idxDir("q116", dir), nlist = 16, quantize = true)
+      idxBuilt.add(idxDir("q116", dir))
+      ivfCellSummary(s, idxDir("q116", dir))
     }),
 
     "q122_ann_ivf_pq_build" -> ((s, dir) => {
       Ann.writeIvfIndexPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-        ivfpqIdxDir(dir), nlist = 16, m = 4, ksub = 8)
-      ivfBuilt.add(ivfpqIdxDir(dir))
-      ivfCellSummary(s, ivfpqIdxDir(dir))
+        idxDir("q122", dir), nlist = 16, m = 4, ksub = 8)
+      idxBuilt.add(idxDir("q122", dir))
+      ivfCellSummary(s, idxDir("q122", dir))
     }),
 
     "q125_ann_ivf_pqr_build" -> ((s, dir) => {
       Ann.writeIvfIndexPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-        ivfpqrIdxDir(dir), nlist = 8, m = 4, ksub = 8, residual = true)
-      ivfBuilt.add(ivfpqrIdxDir(dir))
-      ivfCellSummary(s, ivfpqrIdxDir(dir))
+        idxDir("q125", dir), nlist = 8, m = 4, ksub = 8, residual = true)
+      idxBuilt.add(idxDir("q125", dir))
+      ivfCellSummary(s, idxDir("q125", dir))
     }),
 
     // IVF ANN over a PERSISTED index (Ann.writeIvfIndex + ivfIndexTopK)
@@ -841,17 +785,17 @@ object SparkEntry {
     // Bench sequences first, so EVERY probe run here times the probe
     // alone (the steady-state number).
     "q60_ann_ivf" -> ((s, dir) => {
-      val idx = ivfIdxDir(dir)
+      val idx = idxDir("q60", dir)
       val e = t(s, dir, "embeddings")
-      // skip the rebuild only when THIS JVM built the index (ivfBuilt
+      // skip the rebuild only when THIS JVM built the index (idxBuilt
       // scaladoc: trusting a leftover on-disk dir would probe stale or
       // half-written state after a pid recycle or a crashed build).
       // Mark built only AFTER the write returns — add-before-build would
       // let a thrown build poison the guard and make every later probe
       // read the missing index (the hazard the guard exists to prevent).
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 16)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 16)
@@ -866,12 +810,12 @@ object SparkEntry {
     // discipline on the quantized pair, under q113's oracle verbatim.
     // Build-once guard per JVM (the q60 contract).
     "q116_ann_ivf_quantized" -> ((s, dir) => {
-      val idx = ivfqIdxDir(dir)
+      val idx = idxDir("q116", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 16,
           quantize = true)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopKQuantized(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 16)
@@ -900,12 +844,12 @@ object SparkEntry {
     // VERBATIM (the q25 ≡ q60 / q113 ≡ q116 discipline). Build-once
     // guard per JVM (the q60 contract).
     "q122_ann_ivf_pq" -> ((s, dir) => {
-      val idx = ivfpqIdxDir(dir)
+      val idx = idxDir("q122", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndexPq(e, "vec_id", "embedding", idx, nlist = 16,
           m = 4, ksub = 8)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopKPq(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 16)
@@ -920,12 +864,12 @@ object SparkEntry {
     // per-subspace residual towers → codes → per-(query, cell) ADC
     // grids, every step exact long arithmetic. Build-once per JVM.
     "q125_ann_ivf_pqr" -> ((s, dir) => {
-      val idx = ivfpqrIdxDir(dir)
+      val idx = idxDir("q125", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndexPq(e, "vec_id", "embedding", idx, nlist = 8,
           m = 4, ksub = 8, residual = true)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopKPq(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 8)
@@ -945,11 +889,11 @@ object SparkEntry {
     // go with it so the read-back never mixes two invocations.
     "q127_stream_ann_probe" -> ((s, dir) => {
       import graft.streaming.EventStream
-      val idx = ivfIdxDir(dir)
+      val idx = idxDir("q60", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 16)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       val out = scratchDir("graft-annstream-out", tag = dir)
       val ckpt = scratchDir("graft-annstream-ckpt", tag = dir)
@@ -983,14 +927,14 @@ object SparkEntry {
     // JVM (the q60 contract); the append batch stages through a
     // pid-scoped scratch parquet (the YAML dataset needs a path).
     "q126_ann_ivf_append" -> ((s, dir) => {
-      val idx = ivfApndIdxDir(dir)
+      val idx = idxDir("q126", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", idx, nlist = 16)
         yamlAppendOddHalf(s, e, idx, "graft-ivfapp-batch", dir,
           """id: vec_id, vec: embedding, nlist: "16", quantize: "false"""")
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 16)
@@ -1011,14 +955,14 @@ object SparkEntry {
     // the original geometry, FAISS's add-to-trained-index semantics,
     // and the oracle pins exactly that).
     "q129_ann_ivf_append_sq8" -> ((s, dir) => {
-      val idx = ivfApndSqIdxDir(dir)
+      val idx = idxDir("q129", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", idx, nlist = 16, quantize = true)
         yamlAppendOddHalf(s, e, idx, "graft-ivfappq-batch", dir,
           """id: vec_id, vec: embedding, nlist: "16", quantize: "sq8"""")
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopKQuantized(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 16)
@@ -1037,10 +981,10 @@ object SparkEntry {
     // construction. Dir + checkpoint wiped before the build (a
     // pid-recycled leftover stream/ table would double rows).
     "q131_ann_ivf_stream_append" -> ((s, dir) => {
-      val idx = ivfStrIdxDir(dir)
-      if (!ivfBuilt.contains(idx)) {
+      val idx = idxDir("q131", dir)
+      if (!idxBuilt.contains(idx)) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfstr-ckpt")
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopK(s, idx,
         t(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
@@ -1062,9 +1006,9 @@ object SparkEntry {
     // compacted index IS q60's single-table probe (SCALE.md records
     // the ~3% union overhead this step removes).
     "q132_ann_ivf_compact" -> ((s, dir) => {
-      val idx = ivfCmpIdxDir(dir)
+      val idx = idxDir("q132", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfcmp-ckpt")
         val conf = graft.conf.RecipeConf.load(
           s"""datasets:
@@ -1085,7 +1029,7 @@ object SparkEntry {
           .exists(sp),
           s"q132: compaction left the stream/ table behind at $sp — " +
             "the grace collection silently no-opped")
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 16)
@@ -1101,15 +1045,15 @@ object SparkEntry {
     // restricting exactly the training CTEs (plain-PQ cells only
     // partition, so the coarse layout needs no oracle model).
     "q133_ann_ivf_append_pq" -> ((s, dir) => {
-      val idx = ivfApndPqIdxDir(dir)
+      val idx = idxDir("q133", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndexPq(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", idx, nlist = 16, m = 4, ksub = 8)
         yamlAppendOddHalf(s, e, idx, "graft-ivfapppq-batch", dir,
           """id: vec_id, vec: embedding, nlist: "16",
             |      quantize: "pq", pq_m: "4", pq_ksub: "8"""".stripMargin)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopKPq(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 16)
@@ -1124,16 +1068,16 @@ object SparkEntry {
     // subspace tower trained on even ids alone, while the final
     // assignment, residuals, codes and ADC ranking cover the union.
     "q134_ann_ivf_append_pqr" -> ((s, dir) => {
-      val idx = ivfApndPqrIdxDir(dir)
+      val idx = idxDir("q134", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndexPq(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", idx, nlist = 8, m = 4, ksub = 8,
           residual = true)
         yamlAppendOddHalf(s, e, idx, "graft-ivfapppqr-batch", dir,
           """id: vec_id, vec: embedding, nlist: "8",
             |      quantize: "pqr", pq_m: "4", pq_ksub: "8"""".stripMargin)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopKPq(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 8)
@@ -1149,11 +1093,11 @@ object SparkEntry {
     // ≡ batch append on the quantized layout, by shared-core
     // construction, now pinned at the driver gate.
     "q135_ann_ivf_stream_sq8" -> ((s, dir) => {
-      val idx = ivfStrSqIdxDir(dir)
-      if (!ivfBuilt.contains(idx)) {
+      val idx = idxDir("q135", dir)
+      if (!idxBuilt.contains(idx)) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfstrq-ckpt",
           quantize = true)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopKQuantized(s, idx,
         t(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
@@ -1171,9 +1115,9 @@ object SparkEntry {
     // Queries keep the FULL %100 set: a takedown removes index rows,
     // never the caller's queries.
     "q136_ann_ivf_delete" -> ((s, dir) => {
-      val idx = ivfDelIdxDir(dir)
+      val idx = idxDir("q136", dir)
       val e = t(s, dir, "embeddings")
-      if (!ivfBuilt.contains(idx)) {
+      if (!idxBuilt.contains(idx)) {
         Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", idx, nlist = 16)
         yamlAppendOddHalf(s, e, idx, "graft-ivfdel-batch", dir,
@@ -1195,7 +1139,7 @@ object SparkEntry {
              |  del: {input: ids, steps: [], output: idxw}
              |""".stripMargin)
         graft.conf.RecipeConf.run(s, conf, "del", mode = "delete")
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 10, nprobe = 16)
@@ -1211,8 +1155,8 @@ object SparkEntry {
     // vs four-row band slices — zero bucket alignment), zeroes every
     // verdict and fails the hash.
     "q137_neardup_index_append" -> ((s, dir) => {
-      val idx = nearApndIdxDir(dir)
-      if (!ivfBuilt.contains(idx)) {
+      val idx = idxDir("q137", dir)
+      if (!idxBuilt.contains(idx)) {
         val (_, corpus) = nearDupFixture(s, dir)
         Dedup.writeNearDupIndex(
           corpus.filter(col("doc_id") % 10 =!= 2), "doc_id", "text",
@@ -1233,7 +1177,7 @@ object SparkEntry {
              |  app: {input: batch, steps: [], output: idxw}
              |""".stripMargin)
         graft.conf.RecipeConf.run(s, conf, "app", mode = "append")
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       val (batch, _) = nearDupFixture(s, dir)
       Dedup.incrementalNearDupsIndexed(batch, idx, "doc_id", "text",
@@ -1283,8 +1227,8 @@ object SparkEntry {
     // oracle VERBATIM: a stream that no-ops, signs under defaults, or
     // whose epochs the union misses zeroes every verdict.
     "q140_neardup_stream_append" -> ((s, dir) => {
-      val idx = nearStrIdxDir(dir)
-      if (!ivfBuilt.contains(idx)) {
+      val idx = idxDir("q140", dir)
+      if (!idxBuilt.contains(idx)) {
         val ckpt = scratchDir("graft-neardupstr-ckpt", tag = dir)
         Seq(idx, ckpt).foreach { p =>
           val hp = new org.apache.hadoop.fs.Path(p)
@@ -1304,7 +1248,7 @@ object SparkEntry {
         val q = graft.streaming.EventStream.appendNearDupIndexStream(
           holders, idx, "doc_id", "text", checkpoint = ckpt)
         q.processAllAvailable(); q.stop()
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       val (batch, _) = nearDupFixture(s, dir)
       Dedup.incrementalNearDupsIndexed(batch, idx, "doc_id", "text",
@@ -1323,8 +1267,8 @@ object SparkEntry {
     // admit gate that admits a second template holder, forgets the
     // one it admitted, or drops a survivor fails the hash.
     "q141_neardup_admit_stream" -> ((s, dir) => {
-      val idx = nearAdmitIdxDir(dir)
-      if (!ivfBuilt.contains(idx)) {
+      val idx = idxDir("q141", dir)
+      if (!idxBuilt.contains(idx)) {
         val ckpt = scratchDir("graft-neardupadm-ckpt", tag = dir)
         Seq(idx, ckpt).foreach { p =>
           val hp = new org.apache.hadoop.fs.Path(p)
@@ -1341,7 +1285,7 @@ object SparkEntry {
         val q = graft.streaming.EventStream.nearDupAdmitStream(
           arriving, idx, "doc_id", "text", checkpoint = ckpt)
         q.processAllAvailable(); q.stop()
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       val (batch, _) = nearDupFixture(s, dir)
       Dedup.incrementalNearDupsIndexed(batch, idx, "doc_id", "text",
@@ -1360,11 +1304,11 @@ object SparkEntry {
     // driver gate. (PQR stream stays spec-declared: identical sink
     // path, and its oracle tower is the gate sweep's most expensive.)
     "q142_ann_ivf_stream_pq" -> ((s, dir) => {
-      val idx = ivfStrPqIdxDir(dir)
-      if (!ivfBuilt.contains(idx)) {
+      val idx = idxDir("q142", dir)
+      if (!idxBuilt.contains(idx)) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfstrpq-ckpt",
           pq = true)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopKPq(s, idx,
         t(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
@@ -1379,11 +1323,11 @@ object SparkEntry {
     // codebooks. Exhaustive probe ≡ q134's oracle VERBATIM (the full
     // residual replay with both towers trained on even ids).
     "q143_ann_ivf_stream_pqr" -> ((s, dir) => {
-      val idx = ivfStrPqrIdxDir(dir)
-      if (!ivfBuilt.contains(idx)) {
+      val idx = idxDir("q143", dir)
+      if (!idxBuilt.contains(idx)) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfstrpqr-ckpt",
           pqr = true)
-        ivfBuilt.add(idx)
+        idxBuilt.add(idx)
       }
       Ann.ivfIndexTopKPq(s, idx,
         t(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
@@ -1440,10 +1384,10 @@ object SparkEntry {
           col("hit_rank"), col("matchid_hit_matches_unfiltered"), col("hit_max_score"))
     }),
 
-    // raw SQL over registered views (Recipe.sql — the `sql` op)
+    // raw SQL over registered views (the recipe `sql` op)
     "q30_sql" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      Recipe.sql(s,
+      s.sql(
         """SELECT o_orderkey, o_orderdate,
           |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
           |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
@@ -2933,7 +2877,7 @@ object SparkEntry {
     // per-JVM index q60_ann_ivf then probes without rebuilding.
     "q60_ann_ivf_build", "q60_ann_ivf",
     // the streaming probe (round 12): the same q60 index (built two
-    // lines up — the ivfBuilt guard makes every sample probe-only)
+    // lines up — the idxBuilt guard makes every sample probe-only)
     // driven through a real file-source streaming query + the
     // per-epoch sink; the number is the batch probe + the
     // micro-batch/sink overhead, the ingest router's embedding cost
@@ -2987,7 +2931,7 @@ object SparkEntry {
     "q125_ann_ivf_pqr_build", "q125_ann_ivf_pqr",
     // round-13: the SQ8 append (build-on-half + YAML-append + probe —
     // first touch pays build+append, later samples are pure probe via
-    // the ivfBuilt guard), the ingest-router CHAIN (near-dup gate →
+    // the idxBuilt guard), the ingest-router CHAIN (near-dup gate →
     // decontaminate → classify → quality+PII as ONE streaming query —
     // the composed per-ingest cost; the band index builds on the first
     // q107 touch earlier in this list, so samples are chain-only), and
@@ -2997,7 +2941,7 @@ object SparkEntry {
     "q129_ann_ivf_append_sq8", "q130_stream_router",
     "q131_ann_ivf_stream_append",
     // round-14: the SQ8 stream-append probe (quantized union read —
-    // first touch pays build+stream via the ivfBuilt guard, later
+    // first touch pays build+stream via the idxBuilt guard, later
     // samples are pure probe) and the tombstoned-index probe (the
     // steady-state cost of the takedown anti-join every probe now
     // carries when deletes/ exists — q126's probe plus one broadcast
@@ -3006,15 +2950,15 @@ object SparkEntry {
     // the band-index union probe (main ∪ streamed epochs, no fold) —
     // the steady-state cost of near-dup-probing a dedup corpus that is
     // still ingesting, q131's rationale on the flat layout. First
-    // touch pays build+stream via the ivfBuilt guard. q141 (the admit
+    // touch pays build+stream via the idxBuilt guard. q141 (the admit
     // gate) deliberately adds NO line: its steady state is this same
     // union probe, and its per-batch ingest cost decomposes into
     // shapes already tracked (the q107 probe + q26-style in-batch
     // dedup + the epoch write).
     "q140_neardup_stream_append")
 
-  /** benchQueries whose body holds a BUILD-ONCE guard (ivfBuilt /
-    * nearIdxBuilt / routerWeightsCache): in a fresh JVM their FIRST
+  /** benchQueries whose body holds a BUILD-ONCE guard (idxBuilt /
+    * routerWeightsCache): in a fresh JVM their FIRST
     * sample pays a one-time build/train that every later sample skips,
     * so single-sample comparisons — bench previews, cross-round diffs
     * over short sample streams — read the build as a phantom 1.3–1.7×

@@ -61,41 +61,6 @@ object RecipeConf {
         sys.error(s"config interpolation: environment variable " +
           s"'${m.group(1)}' is not set (referenced as $${${m.group(1)}})"))))
 
-  /** Recursive config merge — the reference's `deepupdate`
-    * (tools.py:31-42, config.py:94-104): the update side wins on scalar
-    * conflicts, sub-mappings merge recursively instead of being
-    * overwritten, and keys present only in the original are carried
-    * into the result. The reference layers every project YAML over the
-    * global one with it (config.py:165, api.py:696,724). */
-  def deepupdate(original: Any, update: Any): Any = (original, update) match {
-    case (o: java.util.Map[_, _], u: java.util.Map[_, _]) =>
-      val merged = new java.util.LinkedHashMap[String, Any]()
-      u.asScala.foreach { case (k, v) => merged.put(k.toString, v) }
-      o.asScala.foreach { case (k0, v) =>
-        val k = k0.toString
-        if (!merged.containsKey(k)) merged.put(k, v)
-        else merged.put(k, deepupdate(v, merged.get(k)))
-      }
-      merged
-    case _ => update
-  }
-
-  /** Layered load: `overrideYaml` deep-merged onto `baseYaml` (shared
-    * datasets/recipes merge key-by-key) before compiling — the
-    * reference's multi-file conf-directory behavior. */
-  def loadMerged(baseYaml: String, overrideYaml: String,
-      env: Map[String, String] = sys.env): ProjectConf = {
-    val y = new Yaml()
-    // an empty/comment-only document parses to null — a blank override
-    // file is the normal conf-directory case and must be a no-op merge,
-    // not an NPE that silently drops the base config
-    def doc(s: String): java.util.Map[String, Any] =
-      Option(y.load[java.util.Map[String, Any]](interp(s, env)))
-        .getOrElse(new java.util.LinkedHashMap[String, Any]())
-    build(orderedMap(
-      deepupdate(doc(baseYaml), doc(overrideYaml)).asInstanceOf[java.util.Map[_, _]]))
-  }
-
   def load(yaml: String, env: Map[String, String] = sys.env): ProjectConf =
     build(orderedMap(
       Option(new Yaml().load[java.util.Map[String, Any]](interp(yaml, env)))

@@ -116,10 +116,6 @@ object Dedup {
     md5(array_join(sort_array(array_distinct(Tools.tokenize(Tools.normalize(c)))), " ")
       .cast("binary"))
 
-  def fingerprintGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(fingerprint(col(textCol)).as("fp"))
-      .agg(min(col(idCol)).as("keep_id"), count("*").as("dup_count"))
-
   /** Drop fingerprint duplicates keeping the min id per key — the same
     * NULL-text contract as [[exactDedup]] (null docs are each kept). */
   def fingerprintDedup(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -238,11 +234,12 @@ object Dedup {
   }
 
   /** Sorted distinct hashed word-k-shingles of a token array in ONE pass.
-    * A Column-side composition (transform over wordShingles over split)
+    * A Column-side composition (transform over sliced token windows)
     * inlines the tokenization into the lambda and re-runs it per shingle
     * index — O(tokens²) regex work per row; this UDF is the single-pass
-    * replacement. Fewer-than-k tokens hash the whole token string
-    * (wordShingles' contract). */
+    * replacement. Fewer-than-k tokens hash the whole token string; an
+    * empty token array yields no shingles, so empty docs never share a
+    * phantom "" shingle. */
   private val shingleHashUdf = udf { (toks: Seq[String], k: Int) =>
     if (toks == null) null
     else if (toks.isEmpty) Seq.empty[Long]

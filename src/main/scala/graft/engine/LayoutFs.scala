@@ -150,8 +150,10 @@ object LayoutFs {
   /** Did a file vanish under `t`'s computation? Spark wraps the
     * executor-side `FileNotFoundException` in SparkException
     * (FAILED_READ_FILE) and a vanished directory surfaces as an
-    * AnalysisException (PATH_NOT_FOUND), so the snapshot bracket's
-    * retry predicate walks the cause chain and the message. */
+    * AnalysisException (PATH_NOT_FOUND); a directory a fold emptied
+    * between the opener's file check and its read fails schema
+    * inference (UNABLE_TO_INFER_SCHEMA). The snapshot bracket's retry
+    * predicate walks the cause chain and the message. */
   private def fileVanished(t: Throwable): Boolean = {
     var c: Throwable = t
     var depth = 0
@@ -159,6 +161,7 @@ object LayoutFs {
       if (c.isInstanceOf[java.io.FileNotFoundException]) return true
       val m = Option(c.getMessage).getOrElse("")
       if (m.contains("FAILED_READ_FILE") || m.contains("PATH_NOT_FOUND") ||
+          m.contains("UNABLE_TO_INFER_SCHEMA") ||
           m.contains("FileNotFoundException")) return true
       c = c.getCause
       depth += 1

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Recipe engine — the reference's YAML recipe/steps pipeline
   * (/root/reference/code/recipes.py:976-1139, 1270-1307) re-expressed as
@@ -11,31 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and optimizes across step boundaries (column pruning through a 30-step
   * pipeline reaches the scan) — the chunk loop, writer queue, and
   * supervisor processes of the reference (recipes.py:1371-1594) all
-  * disappear into Spark's scheduler.
+  * disappear into Spark's scheduler. [[graft.conf.RecipeConf]] compiles
+  * the YAML steps and owns the before/after orchestration.
   */
 object Recipe {
   type Step = DataFrame => DataFrame
-
-  /** Compose steps into one transform (recipes nest freely — a Recipe is
-    * itself a Step, mirroring steps-recursion, recipes.py:1129-1139). */
-  def apply(steps: Step*): Step = df => steps.foldLeft(df)((d, s) => s(d))
-
-  /** Test mode: run the pipeline on one bounded chunk and collect —
-    * `PUT /recipes/<name>/test` (code/api.py:975-999; default chunk 30,
-    * conf/conf.yml:23). */
-  def test(input: DataFrame, steps: Seq[Step], chunkSize: Int = 30): Array[org.apache.spark.sql.Row] =
-    steps.foldLeft(input.limit(chunkSize))((d, s) => s(d)).collect()
-
-  /** Run with before/after dependency recipes (code/recipes.py:1309-1350):
-    * plain sequential orchestration — each dep is a thunk (typically a
-    * write action). */
-  def run(before: Seq[() => Unit], pipeline: () => Unit, after: Seq[() => Unit]): Unit = {
-    before.foreach(_())
-    pipeline()
-    after.foreach(_())
-  }
-
-  /** The `sql` operator: execute raw SQL against registered views
-    * (code/recipes.py:2064-2070). */
-  def sql(spark: SparkSession, statement: String): DataFrame = spark.sql(statement)
 }

@@ -158,25 +158,10 @@ object Similarity {
   def jwMax(as_ : Column, bs: Column): Column = jwMaxUdf(as_, bs)
 
   // ----------------------------------------------------- vector similarity
-  /** Dot product of two double arrays — sequential fold, deterministic
-    * order (same order the DuckDB oracle computes), pure codegen. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity of two numeric arrays. Backed by the fused
     * native expression (NativeExpressions.CosineSimExpr, r16): one
     * unboxed pass instead of five interpreted higher-order traversals
     * per pair — bit-identical values and NULL contract (the expression's
     * scaladoc carries the equivalence argument). */
   def cosine(a: Column, b: Column): Column = NativeExpressions.cosineSim(a, b)
-
-  /** Jaccard similarity of two arrays treated as sets. Single intersect
-    * pass: |A∪B| = |A| + |B| − |A∩B| (inputs must already be distinct —
-    * all call sites build them with array_distinct). */
-  def jaccardSet(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    inter / (size(a) + size(b) - inter)
-  }
 }

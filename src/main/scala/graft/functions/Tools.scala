@@ -11,13 +11,12 @@ import org.apache.spark.sql.functions._
   *
   * Null/empty discipline: the reference treats the empty string as
   * "missing" (SURVEY.md §1.2); helpers here preserve that — see
-  * `emptyToNull` / `nullToEmpty`.
+  * `emptyToNull`.
   */
 object Tools {
 
   // ---------------------------------------------------------------- nulls
   def emptyToNull(c: Column): Column = when(c === lit(""), lit(null)).otherwise(c)
-  def nullToEmpty(c: Column): Column = coalesce(c, lit(""))
 
   // ------------------------------------------------------------- barriers
   /** Identity barrier for a BOOLEAN verdict column (r15 optimization):
@@ -140,29 +139,6 @@ object Tools {
   def charNgramsMulti(c: Column, ns: Seq[Int]): Column =
     flatten(array(ns.map(n => charNgrams(c, n)): _*))
 
-  /** Word shingles of size k from a token array (for MinHash dedup).
-    * EMPTY input → empty output: the short-doc fallback (one shingle of
-    * the whole text) must not turn every empty doc into the same [""]
-    * phantom shingle — that would make all empty docs MinHash-identical.
-    * Same contract as Dedup.shingleHashUdf, the single-pass twin. */
-  def wordShingles(tokens: Column, k: Int): Column =
-    when(size(tokens) === 0, array().cast("array<string>"))
-      .when(size(tokens) < k, array(concat_ws(" ", tokens)))
-      .otherwise(
-        transform(sequence(lit(0), size(tokens) - k),
-          i => concat_ws(" ", slice(tokens, i + 1, lit(k)))))
-
-  /** Literal full-value substitution — tools.replace_dict (tools.py:90-98):
-    * a cell is replaced only when it EQUALS a dict key (dict lookup in the
-    * reference, so exact match, not substring); first matching key wins,
-    * anything else passes through unchanged. Deep list/dict recursion is
-    * handled by `transform` at the call site. Pure when-chain — codegen'd,
-    * and no regex machinery so replacement values containing `$`/`\` are
-    * inert. */
-  def replaceDict(c: Column, dict: Seq[(String, String)]): Column =
-    dict.foldRight(c) { case ((from, to), acc) =>
-      when(c === lit(from), lit(to)).otherwise(acc) }
-
   // ------------------------------------------------------------- hashing
   def sha1Hex(c: Column): Column = sha1(c.cast("binary"))
   def sha256Hex(c: Column): Column = sha2(c.cast("binary"), 256)
@@ -170,7 +146,6 @@ object Tools {
     * to be stable within a run, so a 64-bit xxhash is the scale-friendly
     * choice (8 bytes vs 32, codegen'd). */
   def rowHash(cs: Column*): Column = xxhash64(cs: _*)
-  def md5Hex(c: Column): Column = md5(c.cast("binary"))
 
   // ---------------------------------------------------------------- geo
   /** Parse WKT "POINT(lon lat)" → struct(lat, lon) (tools.py:65-69).

@@ -26,9 +26,8 @@ import org.apache.spark.storage.StorageLevel
   * row, not a second join. Labels settle within diameter-many rounds
   * (one more confirms the fixpoint), and entity-resolution "clique"
   * graphs are shallow — near-dup clusters have tiny diameter, so 3-6
-  * rounds in practice. For adversarial high-diameter graphs use
-  * [[runStarContraction]] (Kiveris et al., "Connected Components in
-  * MapReduce and Beyond"), O(log n) rounds.
+  * rounds in practice. A graph deeper than `maxIter` rounds fails
+  * loudly rather than returning split components.
   */
 object ConnectedComponents {
 
@@ -74,10 +73,10 @@ object ConnectedComponents {
     sym.unpersist()
     // fail LOUD on non-convergence: partial labels would silently split
     // one component into several (min-label moves one hop per round, so
-    // diameter >= maxIter graphs need runStarContraction instead)
+    // diameter >= maxIter graphs need a larger maxIter)
     require(converged,
       s"connected components did not converge in $maxIter rounds — " +
-        "graph diameter exceeds maxIter; raise it or use runStarContraction")
+        "graph diameter exceeds maxIter; pass a larger maxIter")
     labels.select("node", "comp")
   }
 
@@ -90,77 +89,6 @@ object ConnectedComponents {
       .queryExecution.toRdd
       .mapPartitions(rows => Iterator.single(rows.hasNext))
       .collect().contains(true)
-
-  /** Alternating large-star/small-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond") — O(log n) rounds
-    * regardless of graph diameter, vs O(diameter) for min-label
-    * propagation. Use for deep graphs (long chains); `run` stays the
-    * default for the shallow clusters entity resolution produces.
-    *
-    *  - large-star: every node links its strictly-larger neighbors to
-    *    its minimum neighborhood member;
-    *  - small-star: every node links its smaller-or-equal neighbors to
-    *    that minimum.
-    * At fixpoint each component is a star around its minimum id.
-    */
-  def runStarContraction(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    val Array(srcC, dstC) = edges.columns.take(2)
-    // the contraction only needs a TOTAL ORDER on ids, so string ids work
-    // as-is (min/least compare lexicographically, same tie semantics as
-    // run()). Numeric ids unify to long so mixed int/long src/dst still
-    // union; casting STRINGS to long — the old behavior — dies under
-    // ANSI or silently nulls every id without it.
-    val (srcT, dstT) = (edges.schema(srcC).dataType, edges.schema(dstC).dataType)
-    val idCast: org.apache.spark.sql.Column => org.apache.spark.sql.Column = (srcT, dstT) match {
-      case (_: org.apache.spark.sql.types.NumericType,
-            _: org.apache.spark.sql.types.NumericType) => _.cast("long")
-      case (a, b) if a == b => identity
-      case _ => _.cast("string")
-    }
-    var e = edges.select(idCast(col(srcC)).as("u"), idCast(col(dstC)).as("v"))
-      .union(edges.select(idCast(col(dstC)).as("u"), idCast(col(srcC)).as("v")))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    def minNbr(df: DataFrame): DataFrame =
-      df.groupBy("u").agg(least(min(col("v")), first(col("u"))).as("m"))
-
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // large-star: (v, m(u)) for v in N(u), v > u
-      val mu = minNbr(e)
-      val large = e.join(mu, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-      // small-star on the large-star output
-      val sym1 = large.union(large.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-      val mu2 = minNbr(sym1)
-      // small-star links the smaller-or-equal neighbors AND u itself to
-      // the minimum (dropping the self link loses 2-node components)
-      val small = sym1.join(mu2, "u")
-        .filter(col("v") <= col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mu2.select(col("u"), col("m").as("v")))
-      val next = small.union(small.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(eager = true)
-      val changed = next.except(e).limit(1).count() + e.except(next).limit(1).count()
-      e.unpersist()
-      e = next
-      converged = changed == 0
-      iter += 1
-    }
-    // stars: every node's label = min(neighbors ∪ self); isolated nodes
-    // of the ORIGINAL edge set keep themselves (same id typing as above)
-    val nodes = edges.select(idCast(col(srcC)).as("node"))
-      .union(edges.select(idCast(col(dstC)).as("node"))).distinct()
-    val labels = minNbr(e).select(col("u").as("node"), col("m").as("comp"))
-    nodes.join(labels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("comp"), col("node")).as("comp"))
-  }
 
   /** The `clique` operator contract: label each edge row with
     * graph_clique_id (component id) and graph_clique_size

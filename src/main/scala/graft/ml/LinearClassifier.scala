@@ -12,9 +12,8 @@ import org.apache.spark.sql.functions._
   * right operating point at corpus scale).
   *
   * The trainer is a BATCH perceptron run entirely in 64-bit integer
-  * arithmetic: features are token COUNTS (or quantized vector
-  * components), weights are integer sums of per-epoch update batches,
-  * and the update rule per epoch is
+  * arithmetic: features are token COUNTS, weights are integer sums of
+  * per-epoch update batches, and the update rule per epoch is
   *
   *   margin_i = Σ_f w_f · x_{i,f}          (exact long arithmetic)
   *   mis      = { i : y_i · margin_i ≤ 0 }  (classic perceptron rule —
@@ -93,32 +92,9 @@ object LinearClassifier {
       lit(biasFeat).as("feat"), lit(1L).as("x")))
   }
 
-  /** Quantized dense-vector triples (id, feat, x): feature ids are the
-    * vector positions, values `floor(v·scale)` longs (the q70 distance
-    * quantization — integer-exact on both engines); plus the bias
-    * triple. NULL vectors / NULL ids are excluded; NULL ELEMENTS sit
-    * out (their dimension contributes nothing for that row), mirroring
-    * clusterAssign's zip_with padding semantics. */
-  def vectorFeatures(df: DataFrame, idCol: String, vecCol: String,
-      scale: Int = 10000): DataFrame = {
-    require(scale >= 1, s"vectorFeatures: scale must be >= 1, got $scale")
-    val base = df
-      .filter(col(vecCol).isNotNull && col(idCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol),
-          x => floor(x.cast("double") * scale).cast("long")).as("__qv"))
-    val dims = base
-      .select(col("id"), posexplode(col("__qv")).as(Seq("__pos", "__q")))
-      .filter(col("__q").isNotNull)
-      .select(col("id"), col("__pos").cast("long").as("feat"),
-        col("__q").as("x"))
-    dims.unionByName(base.select(col("id"),
-      lit(biasFeat).as("feat"), lit(1L).as("x")))
-  }
-
   // ----------------------------------------------------------------- fit
   /** Batch-perceptron fit over prepared triples. `feats` carries
-    * (id, feat, x) — [[textFeatures]] / [[vectorFeatures]] output or any
+    * (id, feat, x) — [[textFeatures]] output or any
     * custom integer featurization; `docs` carries (id, y) with y
     * EXACTLY ±1 (anything else fails loudly — a 0/1 label silently
     * breaks the sign arithmetic) and UNIQUE non-NULL ids (a duplicated
@@ -448,23 +424,4 @@ object LinearClassifier {
     df.join(best, df(idCol).cast("long") === best("id"), "left")
       .drop(best("id"))
   }
-
-  /** Train on dense vectors (e.g. the embeddings table): quantized
-    * components as features. `labelCol` must hold exactly ±1. */
-  def trainVectorClassifier(df: DataFrame, idCol: String, vecCol: String,
-      labelCol: String, scale: Int = 10000, epochs: Int = 3,
-      localThreshold: Long = 1L << 20): DataFrame =
-    fitPerceptron(
-      vectorFeatures(df, idCol, vecCol, scale),
-      df.filter(col(vecCol).isNotNull)
-        .select(col(idCol).as("id"), col(labelCol).as("y")),
-      epochs, localThreshold)
-
-  /** Score dense vectors under a [[trainVectorClassifier]] weight table
-    * (same `scale` as training — the quantization is part of the
-    * model). */
-  def scoreVectorClassifier(df: DataFrame, idCol: String, vecCol: String,
-      weights: DataFrame, scale: Int = 10000): DataFrame =
-    scorePerceptron(df, idCol, vectorFeatures(df, idCol, vecCol, scale),
-      weights)
 }

@@ -56,32 +56,6 @@ object FuzzyMatch {
     }
   }
 
-  /** Jaro-Winkler best-match — the reference's `fuzzy_method: jellyfish`
-    * alternative (best similarity ≥ minSim wins,
-    * /root/reference/code/tools.py:264-277). No deletion trick exists
-    * for JW, so candidates come from length-band blocking (|len(q) −
-    * len(w)| ≤ band — JW similarity decays fast with length mismatch)
-    * against the broadcast vocab, then argmax (similarity desc, word
-    * asc). */
-  def bestMatchJw(
-      queries: DataFrame,
-      vocab: DataFrame,
-      minSim: Double = 0.95,
-      lengthBand: Int = 3): DataFrame = {
-    import graft.functions.Similarity
-    val q = queries.select(col("__q"), length(col("__q")).as("__ql"))
-    val w = broadcast(vocab.select(col("__w"), length(col("__w")).as("__wl")))
-    q.join(w, abs(col("__ql") - col("__wl")) <= lengthBand)
-      .withColumn("__sim", Similarity.jw(col("__q"), col("__w")))
-      .filter(col("__sim") >= minSim)
-      // argmax via min(struct(-sim, word)): highest similarity first,
-      // lexicographic tie-break — one aggregation pass
-      .groupBy(col("__q"))
-      .agg(min(struct((-col("__sim")).as("__negsim"), col("__w"))).as("__best"))
-      .select(col("__q"), col("__best.__w").as("__match"),
-        (-col("__best.__negsim")).as("__sim"))
-  }
-
   /** The fuzzy expansion over the term dictionary: every (query token,
     * vocabulary token) pair within edit distance `maxDist`, found by ONE
     * delete-variant meet over the two token sets (steps 1-3 above).

@@ -236,33 +236,4 @@ object MatchJoin {
       if (keepUnmatched) "left" else "inner")
     joined.drop("__lid", "__rid")
   }
-
-  /** Bucketed variant — the reference's pre-`unfold` shape: ONE row per
-    * left row with a `hits` array of (rank-ordered) hit structs plus
-    * `matchid_hit_matches_unfiltered` / `hit_max_score`
-    * (code/recipes.py:2322-2336; `unfold: false` leaves buckets intact,
-    * docs/recipes.md:198-204). Compose with Ops.unfold + Ops.unnest to
-    * reach the flat hit_* shape. */
-  def topKBucketed(
-      left: DataFrame, right: DataFrame,
-      leftTokens: String, rightTokens: String,
-      leftId: String, rightId: String,
-      k: Int = 10,
-      keepUnmatched: Boolean = true,
-      fuzzy: Boolean = false,
-      maxDocFreq: Long = 0L,
-      scoring: String = "idf",
-      k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-
-    val flat = topK(left.select(col(leftId), col(leftTokens)), right,
-      leftTokens, rightTokens, leftId, rightId, k, keepUnmatched = false,
-      fuzzy, maxDocFreq, scoring, k1, b)
-    val hitStructCols = right.columns.map(c => col(s"hit_$c"))
-    val buckets = flat
-      .groupBy(col(leftId), col("matchid_hit_matches_unfiltered"), col("hit_max_score"))
-      .agg(sort_array(collect_list(struct(col("hit_rank") +: hitStructCols.toSeq :+
-        col("hit_score").as("hit_score"): _*))).as("hits"))
-    left.join(buckets, Seq(leftId), if (keepUnmatched) "left" else "inner")
-  }
 }

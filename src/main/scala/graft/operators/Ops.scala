@@ -40,11 +40,6 @@ object Ops {
     }
 
   // ------------------------------------------------------------ map/rename
-  /** `map`: new column := copy of an existing column
-    * (code/recipes.py:1702-1715). */
-  def mapCopy(df: DataFrame, mapping: Map[String, String]): DataFrame =
-    mapping.foldLeft(df) { case (d, (dst, src)) => d.withColumn(dst, col(src)) }
-
   /** `map` with an array of source columns → array column. */
   def mapArray(df: DataFrame, dst: String, srcs: Seq[String]): DataFrame =
     df.withColumn(dst, array(srcs.map(col): _*))
@@ -167,24 +162,6 @@ object Ops {
     expanded.drop("__unnest", column)
   }
 
-  /** `unnest` for MAP-typed columns (ES documents with per-row key
-    * sets, recipes.py:2352-2364): one output column per requested key.
-    * Keys are plan-time knowledge; `mapKeys` discovers them from data
-    * when the conf doesn't pin them. */
-  def unnestMap(df: DataFrame, column: String, keys: Seq[String],
-      prefix: String = ""): DataFrame = {
-    val expanded = keys.foldLeft(df) { (d, k) =>
-      d.withColumn(prefix + k, col(column).getItem(k))
-    }
-    expanded.drop(column)
-  }
-
-  /** Distinct keys present in a map column (driver-side, for
-    * interactive/schema-discovery use only). */
-  def mapKeys(df: DataFrame, column: String): Seq[String] =
-    df.select(explode(map_keys(col(column))).as("k")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-
   /** Infer the JSON schema of a column from data (test/interactive
     * convenience — prefer the explicit-schema overload in pipelines). */
   def inferJsonSchema(df: DataFrame, column: String): StructType = {
@@ -257,13 +234,6 @@ object Ops {
         .withColumnRenamed(s"__perm_$c", c).drop("__rn")
     }.drop("__b", "__id")
   }
-
-  // ---------------------------------------------------------------- pause
-  /** `pause`: truncate the pipeline here (debug), optional head limit
-    * (code/recipes.py:2485-2486). With steps as Seq[DataFrame=>DataFrame]
-    * this is build-time truncation; the head limit maps to `.limit`. */
-  def pause(df: DataFrame, head: Option[Int] = None): DataFrame =
-    head.map(df.limit).getOrElse(df)
 
   // ----------------------------------------------------------- hash split
   /** Deterministic train/val/test assignment — the training-data

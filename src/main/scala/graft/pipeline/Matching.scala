@@ -37,8 +37,7 @@ object Matching {
   /** Dataprep: source columns → matchid_* convention. Numeric ids unify
     * to long; string/uuid ids pass through unchanged — an unconditional
     * long cast would null (or, under ANSI, crash on) every non-numeric
-    * id and silently corrupt all downstream matching (the same defect
-    * class ConnectedComponents.runStarContraction documents). */
+    * id and silently corrupt all downstream matching. */
   def dataprep(df: DataFrame, idCol: String, firstCol: String,
       lastCol: String, dateStrCol: String, cityCol: String): DataFrame = {
     val idTyped = df.schema(idCol).dataType match {

@@ -92,11 +92,6 @@ object Ann {
     }
   }
 
-  /** `dim` is accepted for API stability but no longer bounds anything —
-    * the UDF loops over the actual vector length. */
-  def hyperplaneSig(vec: org.apache.spark.sql.Column, dim: Int, bits: Int): org.apache.spark.sql.Column =
-    hyperplaneSigUdf(vec, lit(bits))
-
   /** LSH-bucketed ANN: candidates must share a signature bucket in at
     * least one of `tables` independent hash tables, then exact cosine
     * ranks them. Never a cross product — per table the corpus is hashed
@@ -154,65 +149,6 @@ object Ann {
       .dropDuplicates("query_id", "neighbor_id")
       .join(qVecs, Seq("query_id"))
     scoreAndRank(cand, k, excludeSelf)
-  }
-
-  /** IVF (inverted-file) ANN: a k-means coarse quantizer partitions the
-    * corpus into `nlist` cells; each query probes its `nprobe` nearest
-    * centroids and exact cosine re-ranks only those cells' vectors —
-    * the classic recall/cost dial (FAISS-style, public technique).
-    *
-    * Scale: corpus vectors shuffle ONCE on cell id; per-query work is
-    * nprobe/nlist of the corpus. The centroid set (nlist × dim doubles)
-    * broadcasts. Deterministic for a fixed seed.
-    */
-  def ivfTopK(
-      queries: DataFrame, corpus: DataFrame,
-      qId: String, qVec: String, cId: String, cVec: String,
-      k: Int, nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
-      excludeSelf: Boolean = true): DataFrame = {
-    require(k >= 1 && nlist >= 1 && nprobe >= 1,
-      s"k/nlist/nprobe must be >= 1, got k=$k nlist=$nlist nprobe=$nprobe")
-
-    // same deterministic quantized-integer fit + integer-space cell
-    // assignment as writeIvfIndex — the in-memory and persisted paths
-    // MUST share one layout so their results are identical for a fixed
-    // (data, nlist, seed)
-    val scale = 10000
-    val qcents = graft.sim.Cluster.fitCentroidsQ(
-      corpus, cId, cVec, nlist, seed, iters = 4, scale = scale)
-    val centsQDf = corpus.sparkSession
-      .createDataFrame(qcents).toDF("cid", "qcv")
-    val corpusQ = corpus.select(col(cId).as("neighbor_id"),
-        col(cVec).as("__cv"))
-      .withColumn("__qv", transform(col("__cv"),
-        x => floor(x.cast("double") * scale).cast("long")))
-    val assigned = graft.sim.Cluster
-      .clusterAssign(corpusQ, "neighbor_id", "__qv", centsQDf, "cid", "qcv")
-      .select(col("neighbor_id"), col("__cv"),
-        col("cluster_id").cast("int").as("__cell"))
-
-    // centroid table (tiny) — broadcast both into query-side probe
-    // selection and the candidate join
-    val centDf = broadcast(corpus.sparkSession.createDataFrame(
-        qcents.map { case (c, qv) => (c.toInt, qv.map(_.toDouble / scale)) })
-      .toDF("__cell", "__centroid"))
-
-    // each query × centroid → keep the nprobe nearest cells (euclidean,
-    // matching the k-means objective)
-    val q = queryProjection(queries, qId, qVec)
-    val qd = q.withColumn("__qvd", transform(col("__qv"), x => x.cast("double")))
-    // fused native Σ(a−b)² (r16): the aggregate(zip_with) spelling ran
-    // interpreted per element — bit-identical, see L2Dist2Expr
-    val dist2 = graft.functions.NativeExpressions.l2Dist2(
-      col("__qvd"), col("__centroid"))
-    val probeW = Window.partitionBy(col("query_id")).orderBy(col("__d2"), col("__cell"))
-    val probes = qd.crossJoin(centDf)
-      .withColumn("__d2", dist2)
-      .withColumn("__pr", row_number().over(probeW))
-      .filter(col("__pr") <= nprobe)
-      .select("query_id", "__qv", "__cell")
-
-    scoreAndRank(probes.join(assigned, Seq("__cell")), k, excludeSelf)
   }
 
   /** Persist an IVF index for reuse across query batches — the
@@ -385,11 +321,6 @@ object Ann {
     ivf(spark, path).manifest().filter(_.geom("nlist").isDefined)
       .map(IvfManifest(_))
 
-  /** Query a persisted IVF index: pick each query's nprobe nearest
-    * centroids (tiny broadcast), then join the probes against the
-    * partitioned corpus — the `__cell` keys drive partition pruning so
-    * only probed cell directories are read. Same scoring contract as
-    * ivfTopK. */
   /** Shared probe-side index opener: existence, torn-build / staleness
     * guards (manifest written LAST; centroid table must agree with its
     * nlist), and the float-vs-quantized LAYOUT check — scoring float
@@ -476,6 +407,11 @@ object Ann {
       .select("query_id", "__qv", "__cell")
   }
 
+  /** Query a persisted IVF index: pick each query's nprobe nearest
+    * centroids (tiny broadcast), then join the probes against the
+    * partitioned corpus — the `__cell` keys drive partition pruning so
+    * only probed cell directories are read. Exact cosine re-ranks the
+    * probed cells' vectors (the [[bruteForceTopK]] scoring contract). */
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, qId: String, qVec: String,
       k: Int, nprobe: Int = 4, excludeSelf: Boolean = true): DataFrame = {
@@ -681,16 +617,6 @@ object Ann {
         coalesce(col("max_cos_q") >= threshold, lit(false)))
       .drop("__tests")
   }
-
-  /** Drop-mode counterpart of [[semanticContaminationFlags]]: corpus
-    * minus the flagged rows, original columns only. */
-  def semanticDecontaminate(corpus: DataFrame, idCol: String,
-      vecCol: String, testSet: DataFrame, testVecCol: String,
-      threshold: Double): DataFrame =
-    semanticContaminationFlags(corpus, idCol, vecCol, testSet, testVecCol,
-        threshold)
-      .filter(!col("contaminated"))
-      .drop("max_cos_q", "contaminated")
 
   // ------------------------------------------------- int8 quantization
   /** Per-dimension [min, max] of a vector column — the scalar-

@@ -132,7 +132,7 @@ object Cluster {
     // ranking would happily SEAT one as a centroid — and a null-seat
     // centroid never attracts members, so its boxed-null coordinates
     // survive every update and NPE in fitCentroids' unquantize (and in
-    // writeIvfIndex/ivfTopK, which consume the same codebook). One
+    // writeIvfIndex, which consumes the same codebook). One
     // filter here keeps both regimes consistent with the scaladoc's
     // "NULL elements sit out" promise; the DuckDB oracle CTE carries
     // the same list_filter predicate.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Physical-layout maintenance for parquet tables — the two operations
   * a 100-TB table needs between queries:
   *
-  *   - [[zorderValue]] / [[writeZOrdered]]: multi-column clustering.
+  *   - [[zorderValue]]: the multi-column clustering key.
   *     Partitioning prunes on ONE key; a second predicate column scans
   *     everything. Interleaving the bits of several quantized keys into
   *     one sort key (Morton / Z-order) makes each output FILE narrow in
@@ -70,7 +70,7 @@ object Layout {
     * (a single-row min/max aggregate, collected — a declared-small
     * driver artifact like a codebook), then the pure-Column quantize +
     * interleave. Exposed so the driver gate can hash-check the exact
-    * arithmetic against an oracle; [[writeZOrdered]] uses it as the
+    * arithmetic against an oracle; a z-ordered write uses it as the
     * range-partition + sort key. */
   def zorderValue(df: DataFrame, cols: Seq[String], bits: Int = 16): DataFrame = {
     val aggs = cols.flatMap(c => Seq(
@@ -87,21 +87,6 @@ object Layout {
     }
     df.withColumn("__zval", interleave(qs, bits))
   }
-
-  /** Write `df` parquet, clustered by the z-order of `cols`:
-    * range-partition on the z-value (contiguous z-ranges per output
-    * file → narrow per-file min/max in every interleaved dimension),
-    * sort within partitions, drop the key, write. `numFiles` sizes the
-    * output (pick total/targetMb at the call site); the z-value never
-    * reaches disk — the LAYOUT is the artifact, queries stay unchanged
-    * and prune via ordinary parquet stats. */
-  def writeZOrdered(df: DataFrame, path: String, cols: Seq[String],
-      numFiles: Int, bits: Int = 16): Unit =
-    zorderValue(df, cols, bits)
-      .repartitionByRange(numFiles, col("__zval"))
-      .sortWithinPartitions("__zval")
-      .drop("__zval")
-      .write.mode(SaveMode.Overwrite).parquet(path)
 
   /** Rewrite a parquet directory into ~`targetMb`-sized files: write a
     * sibling temp dir, then swap via two renames with a restore path

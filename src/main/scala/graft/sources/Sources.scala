@@ -444,7 +444,7 @@ object Sinks {
   def indexed(df: DataFrame, path: String, idCol: Option[String],
       analyzedCol: String, mode: String = "overwrite"): Unit = {
     if (mode == "append") {
-      appendIndexedBatch(df, path, idCol, analyzedCol, markUpdate = None)
+      appendIndexedBatch(df, path, idCol, analyzedCol)
       return
     }
     val spark = df.sparkSession
@@ -458,31 +458,17 @@ object Sinks {
     art.write(graft.engine.LayoutFs.Manifest(written.count(), version = 1L))
   }
 
-  /** The staged doc-store append core, shared by the batch sink
-    * (mode=append) and the streaming sink
-    * ([[graft.streaming.EventStream.indexedStream]]). `markUpdate` =
-    * the stream's (checkpoint-tag, epoch) watermark: replay
-    * idempotency gates the APPEND itself — an epoch at or below its
-    * tag's mark is skipped (its rows already landed), the mark
-    * advances with the re-issue, and an empty batch writes nothing.
-    * A crash inside the swap's move window leaves a loudly-unreadable
-    * store — for the STREAM case the one state a replay cannot heal
-    * (half the files moved into a flat table), the price of the flat
-    * layout. Row accounting is incremental: certified + batch. */
+  /** The staged doc-store append core behind the batch sink's
+    * mode=append. A crash inside the swap's move window leaves a
+    * loudly-unreadable store (half the files moved into a flat table),
+    * the price of the flat layout. Row accounting is incremental:
+    * certified + batch. */
   private[graft] def appendIndexedBatch(df: DataFrame, path: String,
-      idCol: Option[String], analyzedCol: String,
-      markUpdate: Option[(String, Long)]): Unit = {
+      idCol: Option[String], analyzedCol: String): Unit = {
     val spark = df.sparkSession
     val art = store(spark, path)
     val verb = "index sink (append)"
-    markUpdate.foreach { case (tag, ep) =>
-      require(tag.matches("[0-9a-zA-Z]+"),
-        s"appendIndexedBatch: stream tag '$tag' must be alphanumeric " +
-          "(manifest mark keys are)")
-      if (art.manifestPatient().exists(_.streamMarks.get(tag).exists(ep <= _)))
-        return
-    }
-    // empty batches write nothing in EITHER mode: the staged-docs
+    // an empty batch writes nothing: the staged-docs
     // re-read below would die on schema inference over a data-less
     // staging dir, and a no-op append should not churn the version
     if (df.isEmpty) return
@@ -499,7 +485,7 @@ object Sinks {
       val n = stagedDf.count() // footer count of the staged batch
       val m = art.certified(verb)
       art.swap(Seq("docs" -> stagedDocs, "postings" -> stagedPost),
-        m.next(rows = m.rows + n, streamMarks = m.streamMarks ++ markUpdate))
+        m.next(rows = m.rows + n))
     }
   }
 

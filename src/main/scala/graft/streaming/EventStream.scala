@@ -48,11 +48,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
 
-  /** A recipe (DataFrame => DataFrame) applied to a stream via the same
-    * declarative plan — demonstrates batch/stream unification. */
-  def throughRecipe(stream: DataFrame, recipe: DataFrame => DataFrame): DataFrame =
-    recipe(stream)
-
   // ------------------------------------------------------- sessionization
   case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
@@ -166,21 +161,6 @@ object EventStream {
     out.toDF()
   }
 
-  /** Streaming exact dedup with watermark-bounded state: the streaming
-    * analogue of `Dedup.exactDedup` for continuous ingestion (a
-    * training-data pipeline dedups at ingest, then again in batch).
-    * `dropDuplicatesWithinWatermark` keeps per-key state only for the
-    * watermark horizon, so state size is bounded by arrival rate ×
-    * allowed lateness — it never grows with total stream length. */
-  def dedupWithinWatermark(events: DataFrame, keys: Seq[String],
-      tsCol: String = "ts", watermark: String = "2 hours"): DataFrame = {
-    // name the misconfiguration instead of failing with "head of empty
-    // list" (an empty key set would otherwise read as an engine bug)
-    require(keys.nonEmpty, "dedupWithinWatermark needs at least one key column")
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-  }
-
   /** Streaming ingest-time decontamination: flag stream rows sharing a
     * word n-gram with a STATIC benchmark set, as a PURE MAP over the
     * stream — the test set's gram hashes broadcast once at plan build
@@ -202,8 +182,8 @@ object EventStream {
     * (measured: an FP among 51 probes of a 1 384-gram filter built at
     * 1e-9 — the q71 sf0.001 off-by-one, round 9). Exact accounting for
     * the approximate variant belongs to the batch pass
-    * (`TextAnalysis.contaminationFlags`), the same ingest-then-batch
-    * double-pass discipline as [[dedupWithinWatermark]]. */
+    * (`TextAnalysis.contaminationFlags`): flag at ingest, settle in
+    * batch. */
   def contaminationFlagsStream(stream: DataFrame, test: DataFrame,
       textCol: String, n: Int = 13, testTextCol: Option[String] = None,
       fpp: Option[Double] = None): DataFrame = {
@@ -261,7 +241,7 @@ object EventStream {
     * corpus index. This is the batch operator's CANDIDATE test as a
     * pure broadcast-membership map — no state, no join, no shuffle —
     * under the ingest-then-batch double-pass discipline
-    * ([[dedupWithinWatermark]], [[contaminationFlagsStream]]): exact
+    * ([[contaminationFlagsStream]]): exact
     * Jaccard accounting belongs to the batch verify; this gate only
     * bounds what ingest admits. Flags are CONSERVATIVE by construction:
     * a bucket collision without true similarity adds a false flag the
@@ -405,8 +385,8 @@ object EventStream {
     * the batch probe's own (nprobe/nlist of the index bytes). The
     * caller's contract: unique query ids per stream (the
     * [[classifyStream]] duplicate-id caveat — an id arriving in TWO
-    * micro-batches probes twice and emits both results; dedup at
-    * ingest with [[dedupWithinWatermark]] first). A missing/torn index
+    * micro-batches probes twice and emits both results; dedup the
+    * ids at ingest first). A missing/torn index
     * refuses at STREAM START, not first batch (the openIvfIndex loud
     * contract).
     *
@@ -712,56 +692,6 @@ object EventStream {
       .start()
   }
 
-  /** Stream arriving documents INTO the persisted document store
-    * ([[graft.sources.Sinks.indexed]]'s docs + postings layout) — the
-    * last cell of the 3×5 artifact/verb matrix (r14 verdict #8):
-    * each micro-batch rides the store's staged batch-append core
-    * ([[graft.sources.Sinks.appendIndexedBatch]]) with the
-    * (checkpoint-tag, epoch) watermark recorded in the manifest, so
-    * an at-least-once replay of a landed epoch is SKIPPED (the flat
-    * layout cannot overwrite "its own epoch" the way the
-    * epoch-partitioned indexes do — idempotency gates the append
-    * itself). Appended docs serve immediately through every reader
-    * (`_search`, the recipe `index` dataset, the match right side).
-    * Torn window: a crash inside the append's rename window (fast
-    * file moves only — staging is done certificate-intact) leaves a
-    * loudly-unreadable store a replay cannot heal; rebuild with the
-    * index sink. Stop the stream before a REBUILD (the sink refuses
-    * a FRESH checkpoint over a tag the manifest already has a mark
-    * for — restarted epoch numbering would be skipped against that
-    * history). `purgeAfterDeletes` runs the auto-purge policy after
-    * each batch lands, inside foreachBatch — it defers under the
-    * sink's own marker discipline. Returns the started query. */
-  def indexedStream(stream: DataFrame, path: String,
-      idCol: Option[String], analyzedCol: String, checkpoint: String,
-      purgeAfterDeletes: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.sources.Sinks
-    val spark = stream.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val m = Sinks.store(spark, path).certified("indexedStream")
-    val tag = streamTag(checkpoint, hconf)
-    val offsP = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
-    if (!offsP.getFileSystem(hconf).exists(offsP) &&
-        m.streamMarks.contains(tag))
-      sys.error(s"indexedStream: checkpoint '$checkpoint' is fresh " +
-        s"(no committed offsets) but the store at $path already has a " +
-        s"watermark for its tag '$tag' — a restarted epoch numbering " +
-        "would be skipped against that history; use a NEW checkpoint " +
-        "path, or keep the old checkpoint to resume")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        Sinks.appendIndexedBatch(batch, path, idCol, analyzedCol,
-          markUpdate = Some((tag, epoch)))
-        Sinks.maybeCompactIndexed(spark, path,
-          afterDeletes = purgeAfterDeletes)
-        ()
-      }
-      .start()
-  }
-
   /** The SELF-GROWING ingest dedup gate — admit AND remember: each
     * micro-batch (1) probes the persisted band index for near-dups
     * (main tables ∪ all previously streamed epochs, so a doc admitted
@@ -849,20 +779,6 @@ object EventStream {
         "skipped against) that history; use a NEW checkpoint path, " +
         "or keep the old checkpoint to resume")
   }
-
-  /** Stream → keyed-upsert parquet sink via foreachBatch: each
-    * micro-batch merges into the target by key (last write wins), the
-    * streaming face of the ES-style `update` output mode
-    * (Sinks.upsert). Returns the started query; caller awaits/stops. */
-  def streamToUpsert(stream: DataFrame, path: String, idCol: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Sinks.upsert(batch, path, idCol)
-      }
-      .start()
 
   /** Run a streaming plan over a bounded parquet dir and collect the
     * result synchronously via the memory sink (local smoke-test path).

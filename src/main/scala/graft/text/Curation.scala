@@ -938,30 +938,6 @@ object Curation {
           .otherwise(lit(bpeSep)),
         x)))
 
-  /** Segment text with a trained merge list (the inference side of
-    * [[bpeTrain]]): normalize → per-word symbol string → apply every
-    * merge in training order → count subword symbols. Row-local scan
-    * work; the merge list is a plan-compile-time constant. */
-  def bpeTokenCount(c: Column, merges: Seq[(String, String)]): Column =
-    aggregate(
-      transform(Tools.tokenize(Tools.normalize(c)), w =>
-        size(split(merges.foldLeft(
-          rtrim(regexp_replace(w, "(.)", "$1" + bpeSep), bpeSep)) {
-          case (acc, (a, b)) => bpeMergeApply(acc, a, b)
-        }, bpeSep))),
-      lit(0), (s0, n) => s0 + n)
-
-  /** Per-word segmentations of normalized text under a trained merge
-    * list: array of [[bpeSep]]-joined subword strings, one per word.
-    * The per-word work runs in [[graft.functions.BpeCodec]] — a native
-    * codegen'd expression applying the merges strictly sequentially
-    * (bit-identical to the [[bpeMergeApply]] fold; the fold itself is
-    * kept for ≲ tens of merges, but a real 32k-merge list as 32k nested
-    * Column expressions would not even compile). NULL text → NULL. */
-  def bpeSegment(text: Column, merges: Seq[(String, String)]): Column =
-    transform(Tools.tokenize(Tools.normalize(text)), w =>
-      graft.functions.NativeExpressions.bpeSegmentWord(w, merges, bpeSep))
-
   /** `a div b` in LONG arithmetic (Catalyst IntegralDivide) — `/` on
     * Columns is DOUBLE division, inexact past 2^53. */
   private def ldiv(a: Column, b: Column): Column =
@@ -974,7 +950,9 @@ object Curation {
     * side that completes train ([[bpeTrain]]) → artifact ([[bpeVocab]])
     * → ENCODE. Trains `merges` rounds (collecting the declared-small
     * merge table exactly like [[bpeVocab]] does), then segments every
-    * document row-locally via [[bpeSegment]]. Output per input row:
+    * document row-locally through [[graft.functions.BpeCodec]] (the
+    * merges applied strictly in order, bit-identical to the
+    * [[bpeMergeApply]] fold). Output per input row:
     *   - `n_words`    — normalized word count (INT);
     *   - `n_chars_sym`— pre-merge symbol count = summed word lengths;
     *   - `n_subwords` — post-merge token count (what a trainer bills);

@@ -118,16 +118,6 @@ object UrlTools {
       .otherwise(h)
   }
 
-  /** Canonical-URL exact dedup groups: one row per canonical URL with
-    * the minimum id as keeper and the copy count — URL-level dedup
-    * before any content processing. One groupBy on the canonical
-    * string; NULL canonicals (non-URLs) group together under NULL so
-    * nothing is silently dropped. */
-  def urlDedupGroups(df: DataFrame, idCol: String, urlCol: String): DataFrame =
-    df.select(col(idCol), normalizeUrl(col(urlCol)).as("url_norm"))
-      .groupBy("url_norm")
-      .agg(min(idCol).as("keeper_id"), count(lit(1)).as("n_copies"))
-
   /** Drop rows whose canonical URL repeats, keeping the minimum id per
     * canonical form (deterministic). Rows whose URL does not normalize
     * (NULL canonical) are ALL kept — a malformed URL is not a duplicate

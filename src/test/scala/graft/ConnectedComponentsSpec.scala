@@ -112,7 +112,7 @@ class ConnectedComponentsSpec extends SparkSpec {
       val edges = (1 to nodes).map(_ =>
         (rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong)).toDF("src", "dst")
       val a = labels(ConnectedComponents.run(edges, maxIter = 200))
-      val b = labels(ConnectedComponents.runStarContraction(edges))
+      val b = labels(Reference.starContraction(edges))
       assert(a == b, s"trial $trial: ${a.toSet.diff(b.toSet).take(5)} vs " +
         s"${b.toSet.diff(a.toSet).take(5)}")
     }

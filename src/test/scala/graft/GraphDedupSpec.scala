@@ -29,7 +29,7 @@ class GraphDedupSpec extends SparkSpec {
     val edges = (chain ++ random ++ extras).toDF("src", "dst")
     val a = ConnectedComponents.run(edges, maxIter = 200).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = ConnectedComponents.runStarContraction(edges).collect()
+    val b = Reference.starContraction(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b, s"mismatch: ${a.toSet.diff(b.toSet).take(5)} vs ${b.toSet.diff(a.toSet).take(5)}")
     assert(b(120L) == 0L) // chain collapses to its min
@@ -56,7 +56,7 @@ class GraphDedupSpec extends SparkSpec {
 
   test("star-contraction CC handles STRING ids (no silent long cast)") {
     val edges = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("src", "dst")
-    val out = ConnectedComponents.runStarContraction(edges).collect()
+    val out = Reference.starContraction(edges).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(out == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
   }
@@ -255,27 +255,17 @@ class GraphDedupSpec extends SparkSpec {
     val q = e.filter(col("vec_id") % 100 === 0)
     val exact = Ann.bruteForceTopK(q, e, "vec_id", "embedding", "vec_id", "embedding", k = 5)
       .select("query_id", "neighbor_id")
-    val ivf = Ann.ivfTopK(q, e, "vec_id", "embedding", "vec_id", "embedding",
-      k = 5, nlist = 8, nprobe = 4)
-      .select("query_id", "neighbor_id")
-    val nExact = exact.count()
-    val recalled = exact.intersect(ivf).count()
-    // probing half the cells on random-ish vectors: expect solid recall
-    assert(recalled.toDouble / nExact > 0.5,
-      s"IVF recall too low: $recalled/$nExact")
-    // every IVF hit ranks deterministically
-    assert(ivf.count() > 0)
-
-    // persisted index round trip: same seed and layout → identical
-    // results to the in-memory path, across a fresh read
     val idxPath = scratch("graft-ivf")
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxPath, nlist = 8)
     val fromIndex = Ann.ivfIndexTopK(spark, idxPath, q, "vec_id", "embedding",
         k = 5, nprobe = 4, excludeSelf = true)
       .select("query_id", "neighbor_id")
-    assert(fromIndex.count() == ivf.count())
-    assert(ivf.exceptAll(fromIndex).count() == 0,
-      "persisted-index results diverge from the in-memory IVF path")
+    val nExact = exact.count()
+    val recalled = exact.intersect(fromIndex).count()
+    // probing half the cells on random-ish vectors: expect solid recall
+    assert(recalled.toDouble / nExact > 0.5,
+      s"IVF recall too low: $recalled/$nExact")
+    assert(fromIndex.count() > 0)
     // the assigned table is hive-partitioned by cell — the layout that
     // lets a probe read only its cells' directories
     val dirs = new java.io.File(s"$idxPath/assigned").listFiles()
@@ -1000,23 +990,6 @@ class GraphDedupSpec extends SparkSpec {
     assert(dup.forall(_ == single), s"dup=$dup single=$single")
   }
 
-  test("topKBucketed returns one row per left with an ordered hits array") {
-    val docs = Seq(
-      (1L, Seq("red", "apple", "pie")),
-      (2L, Seq("red", "apple", "tart")),
-      (3L, Seq("green", "pear"))).toDF("id", "toks")
-    val q = Seq((100L, Seq("red", "apple")), (200L, Seq("nothing"))).toDF("id", "toks")
-    val out = MatchJoin.topKBucketed(q, docs, "toks", "toks", "id", "id", k = 5)
-    assert(out.count() == 2) // keepUnmatched default: unmatched left kept
-    val rows = out.collect().map(r => r.getAs[Long]("id") -> r).toMap
-    val hits = rows(100L).getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("hits")
-    assert(hits.map(_.getAs[Long]("hit_id")).toSeq == Seq(1L, 2L)) // rank order
-    assert(rows(200L).isNullAt(rows(200L).fieldIndex("hits")))
-    // inner mode drops the unmatched row
-    assert(MatchJoin.topKBucketed(q, docs, "toks", "toks", "id", "id", k = 5,
-      keepUnmatched = false).count() == 1)
-  }
-
   test("match topK fuzzy recall: edit-distance-1 tokens match") {
     val docs = Seq((1L, Seq("marseille", "port"))).toDF("id", "toks")
     val q = Seq((9L, Seq("marseile"))).toDF("id", "toks")
@@ -1599,7 +1572,8 @@ class GraphDedupSpec extends SparkSpec {
     val flags = Ann.semanticContaminationFlags(corpus, "id", "v", empty, "tv", 0.9)
     assert(flags.filter(col("contaminated")).count() == 0)
     assert(flags.count() == 5)
-    assert(Ann.semanticDecontaminate(corpus, "id", "v", test, "tv", 0.9)
+    assert(Ann.semanticContaminationFlags(corpus, "id", "v", test, "tv", 0.9)
+      .filter(!col("contaminated"))
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 4L, 5L))
     intercept[IllegalArgumentException](
       Ann.semanticContaminationFlags(corpus, "id", "v", test, "tv", 1.5))

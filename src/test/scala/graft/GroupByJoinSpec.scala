@@ -32,28 +32,6 @@ class GroupByJoinSpec extends SparkSpec {
     assert(col1[Int](out.orderBy(col("v").desc), "v_rank") == Seq(1, 1, 2))
   }
 
-  test("salted aggregation equals plain aggregation") {
-    import graft.operators.Skew
-    val df = (1 to 1000).map(i => (if (i % 10 == 0) "hot" else s"k$i", i.toLong))
-      .toDF("k", "v")
-    val salted = Skew.saltedAgg(df, "k", "v", "sum", salts = 8)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val plain = df.groupBy("k").agg(sum("v")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
-  test("salted join equals plain join for hot and cold keys") {
-    import graft.operators.Skew
-    val probe = (1 to 300).map(i => (if (i % 3 == 0) "hot" else s"k${i % 7}", i))
-      .toDF("k", "x")
-    val build = Seq(("hot", "H"), ("k1", "A"), ("k2", "B")).toDF("k", "label")
-    val salted = Skew.saltedJoin(probe, build, "k", hotKeys = Seq("hot"), salts = 4)
-    val plain = probe.join(build, Seq("k"))
-    assert(salted.count() == plain.count())
-    assert(salted.select("k", "x", "label").except(plain.select("k", "x", "label")).count() == 0)
-  }
-
   test("strict join enriches with renamed right columns, drops right keys") {
     val left = Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "x")
     val ref = Seq((1, "one"), (2, "two")).toDF("k", "label")
@@ -154,13 +132,6 @@ class GroupByJoinSpec extends SparkSpec {
     val out = Joins.asofJoin(left, right, "k", "t", Seq("v"))
     // the NULL-ts row would otherwise sort first and be carried over "ok"
     assert(out.head().getAs[String]("asof_v") == "ok")
-  }
-
-  test("saltedJoin rejects join flavors the replication trick corrupts") {
-    val p = Seq((1L, "a")).toDF("k", "v")
-    val e = intercept[IllegalArgumentException](
-      graft.operators.Skew.saltedJoin(p, p, "k", hotKeys = Seq(1L), how = "right"))
-    assert(e.getMessage.contains("replication"))
   }
 
   test("pointInIntervalJoin matches each point-in-range pair exactly once") {

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-import graft.sources.Layout
-
 /** Measures what z-ordering is FOR: the rows a 2-predicate box query
   * actually reads from parquet, under the three layouts a table can
   * have. Wall time on local[32] over page-cached files understates the
@@ -24,7 +22,7 @@ import graft.sources.Layout
   *   raw      — as generated (64 files, no useful clustering)
   *   x-sorted — range-partitioned + sorted by x alone (the best a
   *              single-key layout can do: prunes x, blind to y)
-  *   z-order  — Layout.writeZOrdered on (x, y), bits=10
+  *   z-order  — Reference.writeZOrdered on (x, y), bits=10
   *
   * Expected: raw reads ~N, x-sorted ~N/8, z-order ~N/64 (+ boundary
   * slack) — the same pruning a partition-by-x table gets on x, but on
@@ -74,7 +72,7 @@ object LayoutBench {
     df.repartitionByRange(files, col("x")).sortWithinPartitions("x")
       .write.parquet(s"$base/xsorted")
     val t0 = System.nanoTime()
-    Layout.writeZOrdered(df, s"$base/zorder", Seq("x", "y"),
+    Reference.writeZOrdered(df, s"$base/zorder", Seq("x", "y"),
       numFiles = files, bits = 10)
     val zWriteSecs = (System.nanoTime() - t0) / 1e9
 

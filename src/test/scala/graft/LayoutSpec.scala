@@ -58,7 +58,7 @@ class LayoutSpec extends SparkSpec {
       }
     }
     val zdir = java.nio.file.Files.createTempDirectory("graft-z").toString + "/t"
-    Layout.writeZOrdered(df, zdir, Seq("x", "y"), numFiles = 16, bits = 6)
+    Reference.writeZOrdered(df, zdir, Seq("x", "y"), numFiles = 16, bits = 6)
     val zr = fileRanges(zdir)
     assert(zr.size > 8, s"expected ~16 files, got ${zr.size}")
     // rows survive the layout change

@@ -61,18 +61,6 @@ class LinearClassifierSpec extends SparkSpec {
     assert(nullRow.isNullAt(0) && nullRow.isNullAt(1))
   }
 
-  test("vector classifier separates axis-aligned classes") {
-    val rows = (0 until 40).map { i =>
-      if (i % 2 == 0) (i.toLong, Seq(1.0f, 0.0f), 1L)
-      else (i.toLong, Seq(0.0f, 1.0f), -1L)
-    }
-    val df = rows.toDF("vec_id", "embedding", "y")
-    val w = LinearClassifier.trainVectorClassifier(df, "vec_id", "embedding", "y",
-      epochs = 3)
-    val scored = LinearClassifier.scoreVectorClassifier(df, "vec_id", "embedding", w)
-    assert(scored.filter(col("pred") =!= col("y").cast("int")).count() === 0)
-  }
-
   test("binary features: repeated tokens count once; counts mode keeps multiplicity") {
     val df = Seq((1L, "spark spark spark")).toDF("id", "text")
     val bin = LinearClassifier.textFeatures(df, "id", "text", buckets = 16,

@@ -192,15 +192,6 @@ class ModulesSpec extends SparkSpec {
     assert(weird.getString(2) == "my file+v2.csv", weird.toString)
   }
 
-  test("recipe before/after orchestration runs dependencies in order") {
-    val order = scala.collection.mutable.ArrayBuffer.empty[String]
-    graft.engine.Recipe.run(
-      before = Seq(() => order += "dep1", () => order += "dep2"),
-      pipeline = () => order += "main",
-      after = Seq(() => order += "post"))
-    assert(order.toSeq == Seq("dep1", "dep2", "main", "post"))
-  }
-
   test("jsonl source keeps primitives as strings") {
     val dir = s"$tmpDir/jsonl"
     Files.write(java.nio.file.Paths.get(dir),
@@ -342,53 +333,6 @@ class ModulesSpec extends SparkSpec {
     Sinks.store(spark, dir).write(LayoutFs.Manifest(1L, 5L))
   }
 
-  test("document-store streaming append: batch ≡ stream, replay skipped " +
-      "via the manifest watermark, fresh-checkpoint refusal") {
-    val part1 = Seq((1L, Seq("red", "apple")), (2L, Seq("red", "pear")))
-      .toDF("id", "toks")
-    val part2 = Seq((3L, Seq("plum")), (4L, Seq("fig", "plum")))
-      .toDF("id", "toks")
-    // reference store: build + BATCH append
-    val ref = s"$tmpDir/idxstr-ref"
-    Sinks.indexed(part1, ref, Some("id"), "toks")
-    Sinks.indexed(part2, ref, Some("id"), "toks", mode = "append")
-    // streamed store: build, then part2 arrives as a stream
-    val str = s"$tmpDir/idxstr"
-    Sinks.indexed(part1, str, Some("id"), "toks")
-    val inDir = scratch("idxstr-in")
-    val ckpt = scratch("idxstr-ck")
-    part2.coalesce(1).write.mode("append").parquet(inDir)
-    val st = spark.readStream
-      .schema(spark.read.parquet(inDir).schema).parquet(inDir)
-    val q = graft.streaming.EventStream.indexedStream(
-      st, str, Some("id"), "toks", ckpt)
-    try q.processAllAvailable() finally q.stop()
-    def tbl(p: String, t: String) =
-      Sources.indexedTable(spark, p, t).orderBy("_id")
-    assert(rows(tbl(str, "docs").select("_id", "toks")) ==
-      rows(tbl(ref, "docs").select("_id", "toks")),
-      "streamed docs diverge from the batch append")
-    assert(tbl(str, "postings").count() == tbl(ref, "postings").count())
-    assert(Sinks.readIndexedManifest(spark, str).map(_._1) == Some(4L))
-    val marks = Sinks.store(spark, str).manifest().get.streamMarks
-    assert(marks.size == 1 && marks.values.head == 0L,
-      s"watermark not recorded: $marks")
-    // an at-least-once REPLAY of the landed epoch is SKIPPED — the
-    // flat layout's idempotency gates the append itself
-    graft.sources.Sinks.appendIndexedBatch(part2, str, Some("id"),
-      "toks", markUpdate = Some((marks.keys.head, 0L)))
-    assert(Sinks.readIndexedManifest(spark, str).map(_._1) == Some(4L),
-      "a replayed epoch appended twice")
-    // a FRESH checkpoint over the same tag's history refuses at start
-    val fs = new org.apache.hadoop.fs.Path(ckpt)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val eFresh = intercept[RuntimeException](
-      graft.streaming.EventStream.indexedStream(
-        st, str, Some("id"), "toks", ckpt))
-    assert(eFresh.getMessage.contains("fresh"), eFresh.getMessage)
-  }
-
   test("readers hand s3a:// URIs to Hadoop unmodified (no engine-side path parsing)") {
     // the sandbox carries no hadoop-aws jar and no network, so the only
     // acceptable failure is Hadoop's own unknown-filesystem error — it
@@ -426,10 +370,6 @@ class ModulesSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] {
       Scoring.buildModel(df, Seq("x"), Nil, "label", testSize = 1.5)
-    }
-    intercept[IllegalArgumentException] {
-      graft.streaming.EventStream.dedupWithinWatermark(
-        spark.emptyDataFrame, keys = Nil)
     }
   }
 
@@ -852,40 +792,6 @@ class ModulesSpec extends SparkSpec {
     assert(result.columns.contains("event_type"))
   }
 
-  test("streaming dedup drops duplicate keys with watermark-bounded state") {
-    val dir = s"$tmpDir/sdedup"
-    val ts = (min: Long) => new java.sql.Timestamp(min * 60000L)
-    Seq((1L, ts(0), 1L, "click", 1.0), (1L, ts(1), 1L, "click", 1.0),
-        (2L, ts(2), 2L, "view", 2.0), (1L, ts(3), 1L, "click", 1.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .write.parquet(dir)
-    val out = EventStream.runOnce(spark, dir,
-      df => EventStream.dedupWithinWatermark(df, Seq("event_id"), watermark = "10 minutes"),
-      "sdedup_test")
-    assert(col1[Long](out.orderBy("event_id"), "event_id") == Seq(1L, 2L))
-  }
-
-  test("streaming upsert sink merges each micro-batch by key (last write wins)") {
-    val dir = s"$tmpDir/supsert"
-    new java.io.File(s"$dir/in").mkdirs()
-    val ts = (min: Long) => new java.sql.Timestamp(min * 60000L)
-    Seq((1L, ts(0), 1L, "click", 1.0), (2L, ts(1), 2L, "view", 2.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .write.parquet(s"$dir/in/b1")
-    val stream = spark.readStream.schema(EventStream.eventSchema)
-      .option("pathGlobFilter", "*.parquet").parquet(s"$dir/in/*")
-    val q = EventStream.streamToUpsert(stream, s"$dir/out", "event_id", s"$dir/ckpt")
-    q.processAllAvailable()
-    Seq((2L, ts(5), 2L, "view", 9.0), (3L, ts(6), 3L, "click", 3.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .write.parquet(s"$dir/in/b2")
-    q.processAllAvailable()
-    q.stop()
-    val back = spark.read.parquet(s"$dir/out").orderBy("event_id").collect()
-    assert(back.map(_.getAs[Long]("event_id")).toSeq == Seq(1L, 2L, 3L))
-    assert(back(1).getAs[Double]("value") == 9.0) // batch 2 overwrote key 2
-  }
-
   test("watermark finalizes windows in append mode as event time advances") {
     import org.apache.spark.sql.streaming.Trigger
     val dir = s"$tmpDir/wm"
@@ -921,16 +827,6 @@ class ModulesSpec extends SparkSpec {
     assert(clickWin.get.getAs[Double]("sum_value") == 3.0)
     // the minute-180 window is NOT final yet → absent in append mode
     assert(!finalized.exists(_.getAs[String]("event_type") == "view"))
-  }
-
-  test("jaro-winkler best-match fuzzy method (jellyfish alternative)") {
-    import graft.operators.FuzzyMatch
-    val q = Seq("marthaa", "zzz").toDF("__q")
-    val v = Seq("martha", "marhta", "paris").toDF("__w")
-    val out = FuzzyMatch.bestMatchJw(q, v, minSim = 0.9)
-    val m = out.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(m("marthaa") == "martha")
-    assert(!m.contains("zzz"))
   }
 
   test("multimodal: synthesize → extract → resize → frame-sample plumbing") {
@@ -1244,16 +1140,6 @@ class ModulesSpec extends SparkSpec {
       Seq((1, 2)).toDF("x", "y").selectExpr("damerau_levenshtein(x, y)").collect()
     }
     assert(chain(e3).toLowerCase.contains("string"), chain(e3))
-  }
-
-  test("wordShingles: empty token array yields NO shingles (not a phantom [\"\"])") {
-    val df = Seq(Seq.empty[String], Seq("a"), Seq("a", "b", "c"))
-      .toDF("toks")
-    val out = df.select(graft.functions.Tools.wordShingles(col("toks"), 2).as("s"))
-      .as[Seq[String]].collect()
-    assert(out(0) == Seq.empty[String])
-    assert(out(1) == Seq("a"))       // short doc: one whole-text shingle
-    assert(out(2) == Seq("a b", "b c"))
   }
 
   test("profile: per-column nulls/distincts/ranges in one pass; approx mode tracks exact") {

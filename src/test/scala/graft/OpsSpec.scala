@@ -30,8 +30,12 @@ class OpsSpec extends SparkSpec {
 
   test("map copy and array-of-columns (test_recipes.py:71-77)") {
     val df = Seq((1, "a")).toDF("A", "B")
-    val out = Ops.mapArray(Ops.mapCopy(df, Map("C" -> "A")), "D", Seq("A", "A"))
-    assert(rows(out) == Seq(Seq(1, "a", 1, Seq(1, 1))))
+    // the YAML `map` step: a column name copies, a list builds an array
+    val args = new org.yaml.snakeyaml.Yaml()
+      .load[java.util.Map[String, Any]]("{C: A, D: [A, A]}")
+    val map = graft.conf.RecipeConf.compileStep(spark,
+      graft.conf.RecipeConf.ProjectConf(Map.empty, Map.empty), "map", args)
+    assert(rows(map(df)) == Seq(Seq(1, "a", 1, Seq(1, 1))))
   }
 
   test("to_integer: empty → null, invalid → null, valid parses (test_recipes.py:97-151)") {
@@ -65,16 +69,6 @@ class OpsSpec extends SparkSpec {
     assert(col1[String](out, "A") == Seq("abcDNUM"))
   }
 
-  test("replaceDict replaces exact full-value matches only (tools.py:90-98)") {
-    // reference: dict LOOKUP of the whole cell — "a.b c.d" is not a key,
-    // so it passes through even though it CONTAINS keys; "$2\x" shows
-    // replacement values with regex metacharacters are inert
-    val df = Seq("a.b", "a.b c.d", "axb").toDF("A")
-    val out = df.select(graft.functions.Tools.replaceDict(col("A"),
-      Seq("a.b" -> "$2\\x", "axb" -> "Y")).as("A"))
-    assert(col1[String](out, "A") == Seq("$2\\x", "a.b c.d", "Y"))
-  }
-
   test("replace maps over array columns") {
     val df = Seq(Seq("a1", "b2")).toDF("A")
     val out = Ops.replace(df, Seq("A"), Seq("[0-9]" -> ""))
@@ -89,33 +83,6 @@ class OpsSpec extends SparkSpec {
     val back = Ops.unnest(nested, "n", schema, prefix = "p_")
     assert(rows(back) == Seq(Seq(1, "x")))
     assert(back.columns.toSeq == Seq("p_A", "p_B"))
-  }
-
-  test("unnestMap expands map columns per discovered key") {
-    val df = Seq(
-      (1, Map("a" -> "x", "b" -> "y")),
-      (2, Map("a" -> "z"))).toDF("id", "m")
-    val keys = Ops.mapKeys(df, "m")
-    assert(keys == Seq("a", "b"))
-    val out = Ops.unnestMap(df, "m", keys, prefix = "m_")
-    assert(out.columns.toSeq == Seq("id", "m_a", "m_b"))
-    assert(rows(out.orderBy("id")) == Seq(Seq(1, "x", "y"), Seq(2, "z", null)))
-  }
-
-  test("observe metrics report rows and per-column null counts with no extra job") {
-    import graft.engine.Metrics
-    Metrics.install(spark)
-    Metrics.clear()
-    val df = Seq("1", "x", "", "3").toDF("v")
-    val out = Metrics.observed(Ops.toInteger(df, Seq("v")), "cast_run", Seq("v"))
-    out.collect() // one action drives both the work and the metrics
-    // listener delivery is asynchronous — wait briefly
-    val deadline = System.currentTimeMillis() + 10000
-    while (Metrics.get("cast_run").isEmpty && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    val m = Metrics.get("cast_run").get
-    assert(m("rows") == 4L)
-    assert(m("v_nulls") == 2L) // "x" and "" coerce to null
   }
 
   test("unfold explodes arrays, keeps empty lists with fill (test_recipes.py:339-380)") {
@@ -163,11 +130,6 @@ class OpsSpec extends SparkSpec {
     val out = Ops.shuffleCols(df, Seq("A", "B"))
     assert(col1[Int](out, "A").sorted == (1 to 20))
     assert(col1[String](out, "B").sorted == col1[String](df, "B").sorted)
-  }
-
-  test("pause truncates with head") {
-    val df = (1 to 10).toDF("A")
-    assert(Ops.pause(df, Some(3)).count() == 3)
   }
 
   test("hashSplit assigns deterministic, salt-sensitive, well-proportioned splits") {

@@ -235,7 +235,7 @@ class RaceSoakSpec extends SparkSpec {
         lock.unlock() // the reader races THE APPEND
         try Sinks.appendIndexedBatch(
           Seq((100L + i, Seq("base", s"tok$i"))).toDF("id", "toks"),
-          dir, Some("id"), "toks", markUpdate = None)
+          dir, Some("id"), "toks")
         finally lock.lock()
         val after = probe()
         assert(after == post, s"iteration $i: append landed $after, " +

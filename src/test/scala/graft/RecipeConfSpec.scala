@@ -2345,52 +2345,6 @@ class RecipeConfSpec extends SparkSpec {
     assert(e2.getMessage.contains("cap: 'id' required"), e2.getMessage)
   }
 
-  test("deepupdate merges sub-mappings recursively, update side wins on scalars") {
-    val y = new org.yaml.snakeyaml.Yaml()
-    def m(s: String) = y.load[java.util.Map[String, Any]](s)
-    // reference semantics (tools.py:31-42): subdicts are updated, not
-    // overwritten; original-only keys survive; update wins on conflict
-    val merged = RecipeConf.deepupdate(
-      m("a: 1\nsub: {x: 1, y: 1}\nonly_base: keep"),
-      m("a: 2\nsub: {y: 2, z: 2}\nonly_over: add"))
-      .asInstanceOf[java.util.Map[String, Any]]
-    assert(merged.get("a") == 2)
-    assert(merged.get("only_base") == "keep")
-    assert(merged.get("only_over") == "add")
-    val sub = merged.get("sub").asInstanceOf[java.util.Map[String, Any]]
-    assert(sub.get("x") == 1 && sub.get("y") == 2 && sub.get("z") == 2)
-  }
-
-  test("loadMerged layers an override YAML over a base project") {
-    Files.writeString(java.nio.file.Paths.get(s"$dir/merge_in.csv"), "a;b\n1;2\n")
-    val base =
-      s"""datasets:
-         |  d: {path: $dir/merge_in.csv, format: csv}
-         |  out: {path: $dir/merge_base_out, format: parquet}
-         |recipes:
-         |  r:
-         |    input: d
-         |    steps:
-         |      - to_integer: [a, b]
-         |""".stripMargin
-    // override re-points ONE dataset and adds a recipe; base recipe `r`
-    // and dataset `d` must survive the merge untouched
-    val over =
-      s"""datasets:
-         |  out: {path: $dir/merge_over_out, format: parquet}
-         |recipes:
-         |  r2:
-         |    input: d
-         |    steps:
-         |      - keep: {select: [a]}
-         |""".stripMargin
-    val conf = RecipeConf.loadMerged(base, over)
-    assert(conf.datasets("out").path == s"$dir/merge_over_out")
-    assert(conf.datasets("d").format == "csv")
-    assert(RecipeConf.run(spark, conf, "r").columns.toSeq == Seq("a", "b"))
-    assert(RecipeConf.run(spark, conf, "r2").columns.toSeq == Seq("a"))
-  }
-
   test("env interpolation and exec rejection") {
     val conf = RecipeConf.load(
       "datasets:\n  d: {path: ${GRAFT_TEST_PATH}/x, format: parquet}\nrecipes: {}",

@@ -60,11 +60,6 @@ class SimilaritySpec extends SparkSpec {
     assert(out == Seq(1.0, 0.0))
   }
 
-  test("jaccardSet on arrays") {
-    val df = Seq((Seq("a", "b", "c"), Seq("b", "c", "d"))).toDF("a", "b")
-    assert(col1[Double](df.select(Similarity.jaccardSet(col("a"), col("b")).as("j")), "j").head == 0.5)
-  }
-
   test("geopoint parses WKT and haversine is sane (Paris→Lyon ≈ 392 km)") {
     val df = Seq("POINT(4.8357 45.7640)").toDF("wkt")
     val out = df.select(Tools.geopoint(col("wkt")).as("p"))
