@@ -217,15 +217,6 @@ object Dedup {
         xxhash64(concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand)), lit(b))
           .as("bucket"))): _*)
 
-  /** MinHash-LSH candidate pairs verified with true Jaccard.
-    *
-    * Pipeline: shingle → signature (row-local) → explode bands → self-join
-    * on (band, bucket) → distinct pairs → verify true n-gram Jaccard ≥
-    * threshold. At scale the band join is the only shuffle and buckets are
-    * naturally balanced by the hash; AQE splits skewed buckets.
-    *
-    * @return (id_a, id_b, jaccard) with id_a < id_b
-    */
   private def fnv64(s: String): Long = {
     var h = 0xcbf29ce484222325L
     var i = 0
@@ -259,6 +250,15 @@ object Dedup {
     }
   }
 
+  /** MinHash-LSH candidate pairs verified with true Jaccard.
+    *
+    * Pipeline: shingle → signature (row-local) → explode bands → self-join
+    * on (band, bucket) → distinct pairs → verify true n-gram Jaccard ≥
+    * threshold. At scale the band join is the only shuffle and buckets are
+    * naturally balanced by the hash; AQE splits skewed buckets.
+    *
+    * @return (id_a, id_b, jaccard) with id_a < id_b
+    */
   def minhashNearDups(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -276,9 +276,7 @@ object Dedup {
     // component iterations read ConnectedComponents' own persisted edge
     // set, not this frame, so early release costs them nothing).
     val base = graft.engine.AutoUnpersist.cache(df.select(
-      col(idCol).as("id"),
-      shingleHashUdf(Tools.tokenize(Tools.normalize(col(textCol))), lit(shingleSize))
-        .as("shingles"))
+      col(idCol).as("id"), shingleHash(col(textCol), shingleSize).as("shingles"))
       .filter(size(col("shingles")) > 0))
     // band join carries ONLY (band, bucket, id): the wide shingle arrays
     // never enter the shuffle; candidates dedup on the narrow pair
@@ -293,20 +291,14 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
     // verify: re-attach the shingle sets for the surviving few pairs
-    val out = pairs
-      .join(base.select(col("id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-      // shingle arrays are SORTED (the kernel builds a SortedSet) — the
-      // native unboxed merge scan replaces a per-pair boxed hash set
-      // (same expression the jaccard-pairs path uses)
-      .withColumn("__inter",
-        graft.functions.NativeExpressions.sortedIntersectCount(
-          col("sh_a"), col("sh_b")).cast("double"))
-      .withColumn("jaccard", round(
-        col("__inter") / (size(col("sh_a")) + size(col("sh_b")) - col("__inter")), 4))
+    // (shingle arrays are SORTED — the kernel builds a SortedSet — so
+    // withJaccard's native merge scan applies)
+    withJaccard(pairs
+        .join(base.select(col("id").as("id_a"), col("shingles").as("sh_a")), "id_a")
+        .join(base.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b"),
+        "sh_a", "sh_b")
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    out
   }
 
   /** Full near-dup dedup: LSH pairs → connected components → keep min id
@@ -326,6 +318,58 @@ object Dedup {
       case None => keepMinPerCluster(df, idCol, pairs)
       case Some(s) => keepBestPerCluster(df, idCol, pairs, s)
     }
+  }
+
+  /** Shingle frame shared by the incremental near-dup family: one row
+    * per input row, (out, sh) with sh the sorted hashed shingle set. */
+  private def shingleFrame(df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int, out: String): DataFrame =
+    df.select(col(idCol).as(out), shingleHash(col(textCol), shingleSize).as("sh"))
+
+  /** The sorted hashed word-k-shingle set of a raw text Column — the
+    * row-local kernel behind the whole minhash family, exposed for the
+    * streaming ingest gate (EventStream.nearDupFlagsStream), which must
+    * sign rows with EXACTLY the batch family's arithmetic or its flags
+    * would silently diverge from the index. */
+  private[graft] def shingleHash(text: Column, shingleSize: Int): Column =
+    shingleHashUdf(Tools.tokenize(Tools.normalize(text)), lit(shingleSize))
+
+  /** Band rows of a shingle frame: (id[, sh], band, bucket) — one row
+    * per (doc, band). keepSh trades exchange width for a single scan
+    * (the bloom path); the narrow variant is the candidate-join side. */
+  private def bandFrame(base: DataFrame, id: String, numHashes: Int,
+      bands: Int, keepSh: Boolean): DataFrame = {
+    val rowsPerBand = numHashes / bands
+    val sig = base.withColumn("sig", minhashSignature(col("sh"), numHashes))
+    val cols = (if (keepSh) Seq(col(id), col("sh")) else Seq(col(id))) :+
+      explode(lshBands(col("sig"), bands, rowsPerBand)).as("b")
+    sig.select(cols: _*)
+      .select((if (keepSh) Seq(col(id), col("sh")) else Seq(col(id))) ++
+        Seq(col("b.band"), col("b.bucket")): _*)
+  }
+
+  /** Verdict assembly shared by the direct and indexed incremental
+    * near-dup paths: collapse multi-band candidate rows to pairs,
+    * re-attach the batch shingles, exact-verify Jaccard, roll up per
+    * batch doc, and left-join back onto EVERY batch id (shingle-less
+    * rows kept with zero dups and NULL score). `cand` carries
+    * (__bid, __cid, sh) with sh the CORPUS side's shingles. */
+  private def nearDupVerdicts(batch: DataFrame, bBase: DataFrame,
+      cand: DataFrame, idCol: String, threshold: Double): DataFrame = {
+    val verified = withJaccard(cand
+        .groupBy(col("__bid"), col("__cid"))
+        .agg(first(col("sh")).as("sh_c"))
+        .join(bBase.select(col("__bid"), col("sh").as("sh_b")), "__bid"),
+        "sh_b", "sh_c")
+      .filter(col("jaccard") >= threshold)
+    val hits = verified.groupBy(col("__bid"))
+      .agg(count(lit(1)).as("n_corpus_dups"), max(col("jaccard")).as("max_jaccard"))
+    batch.select(col(idCol)).distinct()
+      .join(hits, col(idCol) === col("__bid"), "left")
+      .select(col(idCol),
+        coalesce(col("n_corpus_dups"), lit(0L)).as("n_corpus_dups"),
+        col("max_jaccard"))
+      .withColumn("kept", col("n_corpus_dups") === 0)
   }
 
   /** Incremental NEAR-dup verdicts — [[incrementalDedup]]'s sibling for
@@ -361,64 +405,6 @@ object Dedup {
     * Appending `kept` rows (after a within-batch [[minhashDedup]])
     * preserves the corpus's near-dup invariant at LSH recall, so each
     * increment costs only the increment — never a corpus re-pairing. */
-  /** Shingle frame shared by the incremental near-dup family: one row
-    * per input row, (out, sh) with sh the sorted hashed shingle set. */
-  private def shingleFrame(df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, out: String): DataFrame = df.select(
-    col(idCol).as(out),
-    shingleHashUdf(Tools.tokenize(Tools.normalize(col(textCol))),
-      lit(shingleSize)).as("sh"))
-
-  /** The sorted hashed word-k-shingle set of a raw text Column — the
-    * row-local kernel behind the whole minhash family, exposed for the
-    * streaming ingest gate (EventStream.nearDupFlagsStream), which must
-    * sign rows with EXACTLY the batch family's arithmetic or its flags
-    * would silently diverge from the index. */
-  private[graft] def shingleHash(text: Column, shingleSize: Int): Column =
-    shingleHashUdf(Tools.tokenize(Tools.normalize(text)), lit(shingleSize))
-
-  /** Band rows of a shingle frame: (id[, sh], band, bucket) — one row
-    * per (doc, band). keepSh trades exchange width for a single scan
-    * (the bloom path); the narrow variant is the candidate-join side. */
-  private def bandFrame(base: DataFrame, id: String, numHashes: Int,
-      bands: Int, keepSh: Boolean): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val sig = base.withColumn("sig", minhashSignature(col("sh"), numHashes))
-    val cols = (if (keepSh) Seq(col(id), col("sh")) else Seq(col(id))) :+
-      explode(lshBands(col("sig"), bands, rowsPerBand)).as("b")
-    sig.select(cols: _*)
-      .select((if (keepSh) Seq(col(id), col("sh")) else Seq(col(id))) ++
-        Seq(col("b.band"), col("b.bucket")): _*)
-  }
-
-  /** Verdict assembly shared by the direct and indexed incremental
-    * near-dup paths: collapse multi-band candidate rows to pairs,
-    * re-attach the batch shingles, exact-verify Jaccard, roll up per
-    * batch doc, and left-join back onto EVERY batch id (shingle-less
-    * rows kept with zero dups and NULL score). `cand` carries
-    * (__bid, __cid, sh) with sh the CORPUS side's shingles. */
-  private def nearDupVerdicts(batch: DataFrame, bBase: DataFrame,
-      cand: DataFrame, idCol: String, threshold: Double): DataFrame = {
-    val verified = cand
-      .groupBy(col("__bid"), col("__cid"))
-      .agg(first(col("sh")).as("sh_c"))
-      .join(bBase.select(col("__bid"), col("sh").as("sh_b")), "__bid")
-      .withColumn("__inter",
-        graft.functions.NativeExpressions.sortedIntersectCount(
-          col("sh_b"), col("sh_c")).cast("double"))
-      .withColumn("jaccard", round(
-        col("__inter") / (size(col("sh_b")) + size(col("sh_c")) - col("__inter")), 4))
-      .filter(col("jaccard") >= threshold)
-    val hits = verified.groupBy(col("__bid"))
-      .agg(count(lit(1)).as("n_corpus_dups"), max(col("jaccard")).as("max_jaccard"))
-    batch.select(col(idCol)).distinct()
-      .join(hits, col(idCol) === col("__bid"), "left")
-      .select(col(idCol),
-        coalesce(col("n_corpus_dups"), lit(0L)).as("n_corpus_dups"),
-        col("max_jaccard"))
-      .withColumn("kept", col("n_corpus_dups") === 0)
-  }
-
   def incrementalNearDups(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, shingleSize: Int = 3,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.6,
@@ -1034,31 +1020,16 @@ object Dedup {
     require(bands >= 1 && numHashes % bands == 0,
       s"bands must divide numHashes (got bands=$bands, numHashes=$numHashes)")
     val rowsPerBand = numHashes / bands
-    val raw = df.select(
+    val base = graft.engine.AutoUnpersist.cache(collapseBySource(df.select(
         col(idCol).as("id"), col(sourceCol).as("src"),
-        shingleHashUdf(Tools.tokenize(Tools.normalize(col(textCol))),
-          lit(shingleSize)).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-    // the exact-collapse: one rep per (source, shingle set), keyed by a
-    // deterministic 128-bit hash of the group (md5 over the struct's
-    // JSON — r11 ADVICE: a 64-bit key has a non-negligible birthday
-    // collision probability at billions of groups, and a collision
-    // here silently MERGES two distinct groups, corrupting doc counts
-    // with no error; 128 bits puts the bound past 2⁶⁰ groups). The key
-    // rides as 16-byte BINARY (unhex of the md5 hex — the 32-char
-    // string costs a measured ~25% extra band shuffle at 1M docs), so
-    // the band exchange never carries the shingle arrays. cnt = how
-    // many distinct docs the rep speaks for.
-    val base = graft.engine.AutoUnpersist.cache(raw
-      .groupBy(col("src"), col("shingles"))
-      .agg(countDistinct(col("id")).as("cnt"))
-      .withColumn("rep",
-        unhex(md5(to_json(struct(col("src"), col("shingles")))))))
+        shingleHash(col(textCol), shingleSize).as("grams"))
+      .filter(size(col("grams")) > 0)))
+    // the band exchange carries the 16-byte rep key, never the shingles
     val banded = base
-      .withColumn("sig", minhashSignature(col("shingles"), numHashes))
-      .select(col("rep"), col("src"),
+      .withColumn("sig", minhashSignature(col("grams"), numHashes))
+      .select(col("id"), col("src"),
         explode(lshBands(col("sig"), bands, rowsPerBand)).as("b"))
-      .select(col("rep"), col("src"), col("b.band"), col("b.bucket"))
+      .select(col("id"), col("src"), col("b.band"), col("b.bucket"))
     val a = banded.alias("a"); val b = banded.alias("b")
     // rep < rep dedups the unordered candidate; the DIRECTIONS are
     // re-expanded after the verify (one verified pair feeds both
@@ -1071,32 +1042,50 @@ object Dedup {
     // (PlanQualitySpec pins the shuffle join).
     val pairs = a.join(b.hint("shuffle_hash"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.rep") < col("b.rep") && !(col("a.src") <=> col("b.src")))
-      .select(col("a.rep").as("rep_a"), col("a.src").as("src_a"),
-        col("b.rep").as("rep_b"), col("b.src").as("src_b"))
+          col("a.id") < col("b.id") && !(col("a.src") <=> col("b.src")))
+      .select(col("a.id").as("id_a"), col("a.src").as("src_a"),
+        col("b.id").as("id_b"), col("b.src").as("src_b"))
       .distinct()
-    val verified = pairs
-      .join(base.select(col("rep").as("rep_a"), col("shingles").as("sh_a"),
-        col("cnt").as("cnt_a")).hint("shuffle_hash"), "rep_a")
-      .join(base.select(col("rep").as("rep_b"), col("shingles").as("sh_b"),
-        col("cnt").as("cnt_b")).hint("shuffle_hash"), "rep_b")
-      .withColumn("__inter",
-        graft.functions.NativeExpressions.sortedIntersectCount(
-          col("sh_a"), col("sh_b")).cast("double"))
-      .withColumn("jaccard", round(
-        col("__inter") / (size(col("sh_a")) + size(col("sh_b")) - col("__inter")), 4))
+    def attach(s: String) = base.select(col("id").as(s"id_$s"),
+      col("grams").as(s"grams_$s"), col("cnt").as(s"cnt_$s")).hint("shuffle_hash")
+    val verified = withJaccard(
+        pairs.join(attach("a"), "id_a").join(attach("b"), "id_b"),
+        "grams_a", "grams_b")
       .filter(col("jaccard") >= threshold)
-      .select("rep_a", "src_a", "cnt_a", "rep_b", "src_b", "cnt_b")
+    sourceShares(verified, base)
+  }
+
+  /** The exact-copy collapse of the cross-source audits: one
+    * representative row per (source, gram set), (src, grams, cnt, id)
+    * with cnt the distinct docs it speaks for. `id` is a deterministic
+    * 128-bit key of the group — md5 over the struct's JSON (r11 ADVICE:
+    * a 64-bit key has a non-negligible birthday collision probability at
+    * billions of groups, and a collision here silently MERGES two
+    * distinct groups, corrupting doc counts with no error; 128 bits puts
+    * the bound past 2⁶⁰ groups). The key rides as 16-byte BINARY (unhex
+    * of the md5 hex — the 32-char string costs a measured ~25% extra
+    * band shuffle at 1M docs). `raw` carries (id, src, grams). */
+  private def collapseBySource(raw: DataFrame): DataFrame = raw
+    .groupBy(col("src"), col("grams"))
+    .agg(countDistinct(col("id")).as("cnt"))
+    .withColumn("id", unhex(md5(to_json(struct(col("src"), col("grams"))))))
+
+  /** The share matrix of the cross-source audits from verified rep pairs
+    * (id_a, src_a, cnt_a, id_b, src_b, cnt_b): every pair counts in both
+    * directions, `reps` ([[collapseBySource]] rows) gives each source's
+    * comparable universe n_a, and share_bp = n_docs_a_in_b·10⁴ div n_a.
+    * The totals ride one small broadcast. */
+  private def sourceShares(verified: DataFrame, reps: DataFrame): DataFrame = {
     val dirs = verified
       .select(col("src_a").as("source_a"), col("src_b").as("source_b"),
-        col("rep_a").as("__rep"), col("cnt_a").as("__cnt"))
+        col("id_a").as("__rep"), col("cnt_a").as("__cnt"))
       .unionByName(verified
         .select(col("src_b").as("source_a"), col("src_a").as("source_b"),
-          col("rep_b").as("__rep"), col("cnt_b").as("__cnt")))
+          col("id_b").as("__rep"), col("cnt_b").as("__cnt")))
       // a rep matched by SEVERAL partner reps still speaks for its cnt
       // docs once per direction — dedup before the sum
       .distinct()
-    val totals = broadcast(base.groupBy(col("src").as("__sa"))
+    val totals = broadcast(reps.groupBy(col("src").as("__sa"))
       .agg(sum(col("cnt")).as("n_a")))
     dirs.groupBy(col("source_a"), col("source_b"))
       .agg(sum(col("__cnt")).as("n_docs_a_in_b"))
@@ -1123,8 +1112,9 @@ object Dedup {
     * directions (each reporting its own side's doc share); pairs
     * sharing nothing are absent; a NULL source is its own group.
     *
-    * Scale shape — containmentPairs' pigeonhole machinery under
-    * crossSourceNearDupOverlap's exact-copy collapse:
+    * Scale shape — [[setSimJoin]]'s containment measure (the one
+    * containmentPairs runs) under the [[collapseBySource]] exact-copy
+    * collapse:
     *   - exact copies collapse per (source, shingle set) BEFORE
     *     anything runs (one 128-bit rep carrying its distinct-doc
     *     count — the q123 mega-group bound: a page replicated millions
@@ -1150,93 +1140,13 @@ object Dedup {
       textCol: String, sourceCol: String, n: Int = 3,
       thresholdBp: Long = 9000L, maxDocFreq: Option[Int] = None)
       : DataFrame = {
-    require(thresholdBp >= 1 && thresholdBp <= 10000,
-      s"crossSourceContainmentOverlap: thresholdBp must be in " +
-        s"[1, 10000], got $thresholdBp")
-    maxDocFreq.foreach(cap => require(cap >= 1,
-      s"crossSourceContainmentOverlap: maxDocFreq must be >= 1, got $cap"))
-    val raw = df.select(
-        col(idCol).as("id"), col(sourceCol).as("src"),
-        shingleHash(col(textCol), n).as("grams"))
-      .filter(size(col("grams")) > 0)
-    // the q123 collapse with its 128-bit rep key (md5 over the group
-    // struct, carried as 16-byte binary — a 64-bit key's birthday
-    // collision would silently merge two groups at
-    // billions-of-groups scale)
-    val base0 = raw
-      .groupBy(col("src"), col("grams"))
-      .agg(countDistinct(col("id")).as("cnt"))
-      .withColumn("rep",
-        unhex(md5(to_json(struct(col("src"), col("grams"))))))
-    val base = graft.engine.AutoUnpersist.cache(maxDocFreq match {
-      case None => base0
-      case Some(cap) =>
-        // rebuild the gram sets WITHOUT the hot grams so the whole
-        // plan sees one consistent filtered universe (containmentPairs'
-        // exactness argument); rep/cnt are preserved per group — two
-        // groups collapsing to the same filtered set stay separate
-        // reps, which only means both match the same partners
-        val ex = base0.select(col("rep"), col("src"), col("cnt"),
-          explode(col("grams")).as("pg"))
-        val hot = ex.groupBy("pg")
-          .agg(count(lit(1)).as("__df")).filter(col("__df") > cap)
-          .select("pg")
-        ex.join(hot, Seq("pg"), "left_anti")
-          .groupBy("rep", "src", "cnt")
-          .agg(sort_array(collect_list(col("pg"))).as("grams"))
-          .filter(size(col("grams")) > 0)
-    })
-    // prefix length over longs: |S| − ceil(t·|S|) + 1 with
-    // ceil(a·b/10⁴) = (a·b + 9999) div 10⁴ (the containmentPairs
-    // integer-exact quota)
-    val pref = base.select(col("rep"), col("src"),
-      explode(slice(col("grams"), lit(1),
-        expr(s"cast(size(grams) - (cast(size(grams) as bigint) * " +
-          s"$thresholdBp + 9999) div 10000 + 1 as int)"))).as("pg"))
-    val post = base.select(col("rep"), col("src"),
-      explode(col("grams")).as("pg"))
-    val pa = pref.alias("pa")
-    // shuffle_hash pinned: both sides are corpus-sized and UDF-derived
-    // — the static planner's size estimate is fiction and a broadcast
-    // here is the fatal-at-scale shape (the q112/q123 discipline)
-    val pb = post.hint("shuffle_hash").alias("pb")
-    val cand = pa.join(pb,
-        col("pa.pg") === col("pb.pg") &&
-          col("pa.rep") =!= col("pb.rep") &&
-          !(col("pa.src") <=> col("pb.src")))
-      .select(least(col("pa.rep"), col("pb.rep")).as("rep_a"),
-        greatest(col("pa.rep"), col("pb.rep")).as("rep_b"))
-      .distinct()
-    val verified = cand
-      .join(base.select(col("rep").as("rep_a"), col("src").as("src_a"),
-        col("grams").as("sh_a"), col("cnt").as("cnt_a"))
-        .hint("shuffle_hash"), "rep_a")
-      .join(base.select(col("rep").as("rep_b"), col("src").as("src_b"),
-        col("grams").as("sh_b"), col("cnt").as("cnt_b"))
-        .hint("shuffle_hash"), "rep_b")
-      .withColumn("__inter",
-        graft.functions.NativeExpressions.sortedIntersectCount(
-          col("sh_a"), col("sh_b")).cast("long"))
-      .withColumn("containment_bp", expr("__inter * 10000 div " +
-        "least(cast(size(sh_a) as bigint), cast(size(sh_b) as bigint))"))
-      .filter(col("containment_bp") >= thresholdBp)
-      .select("rep_a", "src_a", "cnt_a", "rep_b", "src_b", "cnt_b")
-    val dirs = verified
-      .select(col("src_a").as("source_a"), col("src_b").as("source_b"),
-        col("rep_a").as("__rep"), col("cnt_a").as("__cnt"))
-      .unionByName(verified
-        .select(col("src_b").as("source_a"), col("src_a").as("source_b"),
-          col("rep_b").as("__rep"), col("cnt_b").as("__cnt")))
-      // a rep matched by SEVERAL partner reps still speaks for its cnt
-      // docs once per direction — dedup before the sum
-      .distinct()
-    val totals = broadcast(base.groupBy(col("src").as("__sa"))
-      .agg(sum(col("cnt")).as("n_a")))
-    dirs.groupBy(col("source_a"), col("source_b"))
-      .agg(sum(col("__cnt")).as("n_docs_a_in_b"))
-      .join(totals, col("source_a") <=> col("__sa"), "left")
-      .select(col("source_a"), col("source_b"), col("n_docs_a_in_b"),
-        col("n_a"), expr("(n_docs_a_in_b * 10000L) div n_a").as("share_bp"))
+    requireContainment("crossSourceContainmentOverlap", thresholdBp, maxDocFreq)
+    val (verified, reps) = setSimJoin(collapseBySource(df.select(
+          col(idCol).as("id"), col(sourceCol).as("src"),
+          shingleHash(col(textCol), n).as("grams"))
+        .filter(size(col("grams")) > 0)),
+      Containment(thresholdBp), maxDocFreq, apart = Some("src"))
+    sourceShares(verified, reps)
   }
 
   /** [[incrementalNearDedup]] against a persisted index — drop verdicted
@@ -1410,160 +1320,17 @@ object Dedup {
   }
 
   // ------------------------------------------------- n-gram Jaccard pairs
-  /** Exhaustive n-gram Jaccard within a blocking key (e.g. source, length
-    * band): cheap exact near-dup scoring when blocks are small. */
-  // intersection of sorted long arrays: native codegen'd expression
-  // (NativeExpressions.sortedIntersectCount) — unboxed merge scan
-
-  /** Document frequencies of a gram frame's universe as a count-gated
-    * driver map — the rarest-first prefix order's input (r15
-    * optimization, shared by the whole prefix-filter family). ONE
-    * bounded action: limit(cap+1) caps what the driver ever holds; a
-    * result under the cap is necessarily the COMPLETE df table, over it
-    * returns None and callers keep the sorted-hash prefix order (both
-    * orders are exact — the verify join decides every pair; the order
-    * is purely a candidate-volume dial). `g` must expose an array
-    * column named `grams`. */
-  private def gramDfMap(g: DataFrame): Option[Map[Long, Long]] = {
-    val dfCap = 1 << 22
-    val rows = g.select(explode(col("grams")).as("__g"))
-      .groupBy("__g").agg(count(lit(1)).as("__df"))
-      .limit(dfCap + 1).collect()
-    if (rows.length <= dfCap)
-      Some(rows.map(r => (r.getLong(0), r.getLong(1))).toMap)
-    else None
-  }
-
-  /** The first `prefLenOf(|grams|)` grams in ascending (document
-    * frequency, gram) order — Bayardo's canonical prefix order: the
-    * prefix then holds each doc's RAREST grams, so the candidate join
-    * meets only through rare grams instead of fanning out on
-    * boilerplate (the sorted-hash order is a RANDOM order; at sf0.1
-    * the q24 candidate set measured 622k pairs from 5k docs under it).
-    * The pigeonhole is order-independent: under any one global total
-    * order, if no common gram sat in both prefixes, all |A∩B| common
-    * grams would fit in one suffix of size ceil(t·|X|)−1 < |A∩B|. */
-  private def rarestPrefixUdf(spark: org.apache.spark.sql.SparkSession,
-      m: Map[Long, Long], prefLenOf: Int => Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val bc = spark.sparkContext.broadcast(m)
-    udf { grams: Seq[Long] =>
-      if (grams == null) Seq.empty[Long]
-      else {
-        val k = prefLenOf(grams.length)
-        if (k <= 0) Seq.empty[Long]
-        else {
-          val dfm = bc.value
-          grams.sortBy(gr => (dfm.getOrElse(gr, 0L), gr)).take(k)
-        }
-      }
-    }
-  }
-
+  /** Near-dup pairs within a blocking key (e.g. source, length band) by
+    * character n-gram Jaccard: (id_a, id_b, jaccard) with id_a < id_b,
+    * where jaccard = |A∩B| / |A∪B| over the sorted distinct hashed
+    * n-grams of the normalized texts (64-bit collisions are negligible),
+    * rounded to 4 decimals and kept when ≥ `threshold`. Candidates come
+    * from [[setSimJoin]]'s prefix filter, so cost tracks similarity, not
+    * block size; the exact intersect decides every pair. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      blockCol: String, n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    // gram sets as SORTED long hashes: set cardinalities are unchanged
-    // (64-bit collisions are negligible), intersection becomes a
-    // primitive merge scan instead of a string hash set per pair.
-    // AutoUnpersist-scoped cache: the frame feeds the prefix index AND
-    // two verify-side joins — without it each branch re-runs the gram
-    // kernel; released after the caller's action completes.
-    def gramFrame = df.select(col(idCol).as("id"), col(blockCol).as("block"),
-      sort_array(array_distinct(transform(
-        Tools.charNgrams(Tools.normalize(col(textCol)), n), s => xxhash64(s))))
-        .as("grams"))
-    // persist FIRST, register with AutoUnpersist LAST (below, after the
-    // df-table action): the df-table collect then both BUILDS the cache
-    // and reads it without counting as the scope's first action — the
-    // kernel runs once for the df table, the prefix index, and both
-    // verify joins together.
-    val g = gramFrame.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // PREFIX FILTERING (Bayardo et al., "Scaling Up All Pairs Similarity
-    // Search", WWW'07): J(A,B) >= t implies |A∩B| >= ceil(t·|A|), and by
-    // pigeonhole any B meeting that overlap must share at least one of
-    // A's first |A| - ceil(t·|A|) + 1 grams IN SORTED ORDER. So instead
-    // of enumerating every same-block pair (O(block²), the former plan),
-    // candidates meet through ONE equi-join on (block, prefix gram) —
-    // candidate volume tracks actual similarity, not block size. The
-    // sorted-hash order doubles as the canonical prefix order.
-    // EFFECTIVE threshold for every candidate-stage bound (r16, the r15
-    // advice): the verify admits pairs whose ROUNDED 4-decimal jaccard
-    // clears `threshold`, i.e. true J down to threshold − 5e-5 — the
-    // pigeonhole arithmetic must prune against THAT bound or a
-    // borderline pair in the rounding band could lose its only meeting
-    // row. teff only ever lengthens prefixes / lowers `required` (a
-    // candidate superset), so pruning stays one-sided.
-    val teff = threshold - 5e-5
-    val prefLen = (size(col("grams")) - ceil(lit(teff) * size(col("grams"))) + 1)
-      .cast("int")
-    // PREFIX ORDER (r15 optimization): rarest-first prefixes via the
-    // shared [[gramDfMap]]/[[rarestPrefixUdf]] machinery (see their
-    // scaladoc for the order-independence argument and the count-gated
-    // fallback). prefLenOf spells the SAME double-ceil arithmetic as
-    // the `prefLen` Column above so the two prefix modes can never
-    // disagree on a boundary.
-    val rarestPrefix: Option[Column] = gramDfMap(g).map { m =>
-      rarestPrefixUdf(df.sparkSession, m,
-        len => (len - math.ceil(teff * len) + 1).toInt)(col("grams"))
-    }
-    graft.engine.AutoUnpersist.cache(g, drainFirst = true)
-    val pref = g.select(col("id"), col("block"), size(col("grams")).as("sz"),
-      posexplode(rarestPrefix.getOrElse(
-        slice(col("grams"), lit(1), prefLen))).as(Seq("pos", "pg")))
-    val pa = pref.alias("pa")
-    val pb = pref.hint("shuffle_hash").alias("pb")
-    // POSITIONAL + SIZE FILTERS inside the candidate join (PPJoin, Xiao
-    // et al. WWW'08 — exact, they prune meeting ROWS before the
-    // distinct exchange, never pairs the verify would keep):
-    // - size ratio: J ≤ min/max sizes, spelled EXACTLY like the verify
-    //   filter so the two can never disagree on a boundary double;
-    // - position: a qualifying pair's FIRST common gram (global order)
-    //   sits in both prefixes (else all common grams fit in one
-    //   suffix of size ceil(t·|X|)−1 < |A∩B|), and every common gram
-    //   ranks after it on BOTH sides, so |A∩B| ≤ 1 + min(|A|−1−posA,
-    //   |B|−1−posB) at that meeting — rows whose bound can't reach the
-    //   equivalent-overlap requirement ceil(t(|A|+|B|)/(1+t)) drop
-    //   here (the 1e-9 relaxation keeps the double ceil from ever
-    //   exceeding the exact requirement, and t is the EFFECTIVE
-    //   verify threshold teff — see above — so pruning stays
-    //   one-sided for every pair the rounded verify admits).
-    //   Later meetings of a true pair may fail the bound — irrelevant,
-    //   its first meeting's row survives and distinct keeps the pair.
-    val required = ceil(lit(teff / (1.0 + teff)) *
-      (col("pa.sz") + col("pb.sz")) - 1e-9)
-    val ubound = lit(1) + least(col("pa.sz") - 1 - col("pa.pos"),
-      col("pb.sz") - 1 - col("pb.pos"))
-    val cand = pa.join(pb,
-        col("pa.block") === col("pb.block") && col("pa.pg") === col("pb.pg") &&
-          col("pa.id") < col("pb.id") &&
-          least(col("pa.sz"), col("pb.sz")).cast("double") /
-            greatest(col("pa.sz"), col("pb.sz")) >= threshold &&
-          ubound >= required)
-      .select(col("pa.id").as("id_a"), col("pb.id").as("id_b"))
-      .distinct()
-    // verify: re-attach the gram sets for the surviving candidates only;
-    // the length-ratio bound (J ≤ min/max sizes) skips impossible pairs
-    // before the merge intersect. shuffle_hash pinned: the gram corpus
-    // is corpus-sized and UDF-derived (the static planner under-
-    // estimates it and would happily broadcast the whole thing — the
-    // PlanQualitySpec guard exists precisely for that)
-    val out = cand
-      .join(g.select(col("id").as("id_a"), col("grams").as("ga"))
-        .hint("shuffle_hash"), "id_a")
-      .join(g.select(col("id").as("id_b"), col("grams").as("gb"))
-        .hint("shuffle_hash"), "id_b")
-      .filter(least(size(col("ga")), size(col("gb"))).cast("double") /
-        greatest(size(col("ga")), size(col("gb"))) >= threshold)
-      .withColumn("inter",
-        graft.functions.NativeExpressions.sortedIntersectCount(
-          col("ga"), col("gb")).cast("double"))
-      .withColumn("jaccard", round(
-        col("inter") / (size(col("ga")) + size(col("gb")) - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-    out
-  }
+      blockCol: String, n: Int = 3, threshold: Double = 0.5): DataFrame =
+    setSimJoin(df.select(col(idCol).as("id"), col(blockCol).as("block"),
+      charGramHash(col(textCol), n).as("grams")), Jaccard(threshold))._1
 
   // ------------------------------------------------ duplication weights
   /** SOFT dedup: instead of dropping duplicates, stamp every row with
@@ -1617,30 +1384,18 @@ object Dedup {
     * shard, quoted boilerplate) has containment 1.0 but Jaccard only
     * |A|/|B| — far below any near-dup threshold once sizes diverge.
     *
-    * Candidates: for C(A,B) ≥ t the SMALLER set must share at least
-    * ceil(t·|S_min|) grams, so by pigeonhole it shares one of its first
-    * |S| − ceil(t·|S|) + 1 sorted grams — each doc's own-size prefix
-    * (valid precisely when that doc IS the min side) joins against the
-    * FULL gram postings of its block, both directions at once (the
-    * id ≠ id join sees (small, big) from the small side's prefix).
-    * Unlike the Jaccard prefix join this meets prefix × postings, not
-    * prefix × prefix — containment constrains only the smaller side,
-    * so the big side must be fully indexed. `maxDocFreq` REMOVES grams
-    * whose block-level document frequency exceeds the cap from the
-    * gram universe itself before anything else runs (boilerplate-blind
+    * Candidates come from [[setSimJoin]]'s min-side prefix × full
+    * postings join (exact pigeonhole recall). `maxDocFreq` REMOVES grams
+    * whose block-level document frequency exceeds the cap from the gram
+    * universe itself before anything else runs (boilerplate-blind
     * containment — the C4 line-dedup spirit applied to the similarity
-    * space): boilerplate grams shared by half the block would
-    * otherwise fan the candidate join toward all-pairs, and merely
-    * dropping them from the postings side would silently lose pairs
-    * whose short prefix IS a hot gram (a high threshold makes the
-    * prefix a single gram — the spec's exact-dup-plus-boilerplate case
-    * caught exactly that). Removing them from the universe keeps the
-    * plan EXACT with respect to the filtered metric: same candidates,
-    * same intersects, same denominators. Docs left gramless by the
-    * filter sit out, and the cap costs one extra (block, gram)
-    * docfreq exchange — capped mode only. Verification is exact either
-    * way: surviving candidates re-attach both gram sets and the
-    * merge-scan intersect decides.
+    * space): boilerplate grams shared by half the block would otherwise
+    * fan the candidate join toward all-pairs, and merely dropping them
+    * from the postings side would silently lose pairs whose short
+    * prefix IS a hot gram (a high threshold makes the prefix a single
+    * gram — the spec's exact-dup-plus-boilerplate case caught exactly
+    * that). The result is exact with respect to the filtered metric;
+    * docs left gramless by the filter sit out.
     *
     * `unit` picks the gram universe, and at scale the choice IS the
     * plan: `"word"` (n-word shingles, the minhash unit — DEFAULT for
@@ -1664,76 +1419,261 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       blockCol: String, n: Int = 3, thresholdBp: Long = 9000L,
       maxDocFreq: Option[Int] = None, unit: String = "word"): DataFrame = {
-    require(thresholdBp >= 1 && thresholdBp <= 10000,
-      s"containmentPairs: thresholdBp must be in [1, 10000], got $thresholdBp")
-    maxDocFreq.foreach(cap => require(cap >= 1,
-      s"containmentPairs: maxDocFreq must be >= 1, got $cap"))
+    requireContainment("containmentPairs", thresholdBp, maxDocFreq)
     val gramSet = unit match {
       // shingleHash already returns the sorted distinct hash set
       case "word" => shingleHash(col(textCol), n)
-      case "char" => sort_array(array_distinct(transform(
-        Tools.charNgrams(Tools.normalize(col(textCol)), n), s => xxhash64(s))))
+      case "char" => charGramHash(col(textCol), n)
       case other => sys.error(
         s"containmentPairs: unit must be word or char, got $other")
     }
-    // the cached gram frame feeds prefix, postings AND two verify-side
-    // re-attach joins (the ngramJaccardPairs cache rationale)
-    val g0 = graft.engine.AutoUnpersist.cache(
-      df.select(col(idCol).as("id"), col(blockCol).as("block"),
-        gramSet.as("grams"))
-        .filter(size(col("grams")) > 0))
-    // the capped mode rebuilds the gram sets WITHOUT the hot grams so
-    // prefix, postings, intersects and denominators all see one
-    // consistent filtered universe (see the scaladoc)
-    val g = maxDocFreq match {
+    setSimJoin(df.select(col(idCol).as("id"), col(blockCol).as("block"),
+        gramSet.as("grams")).filter(size(col("grams")) > 0),
+      Containment(thresholdBp), maxDocFreq)._1
+  }
+
+  private def requireContainment(op: String, thresholdBp: Long,
+      maxDocFreq: Option[Int]): Unit = {
+    require(thresholdBp >= 1 && thresholdBp <= 10000,
+      s"$op: thresholdBp must be in [1, 10000], got $thresholdBp")
+    maxDocFreq.foreach(cap => require(cap >= 1,
+      s"$op: maxDocFreq must be >= 1, got $cap"))
+  }
+
+  // ------------------------------------ exact set-similarity join kernel
+  /** What [[setSimJoin]] verifies. The calling operator fixes it; no user
+    * knob picks it. */
+  private sealed trait Measure
+  /** 4-decimal rounded Jaccard ≥ t: prefix × prefix, rarest-first prefix
+    * order, PPJoin size and position filters. */
+  private final case class Jaccard(t: Double) extends Measure {
+    /** the threshold every candidate-stage bound prunes against (see
+      * [[setSimJoin]]): the verify keeps ROUNDED scores ≥ t */
+    val teff: Double = t - 5e-5
+  }
+  /** Min-side containment |A∩B|·10⁴ div min(|A|,|B|) ≥ bp: own-size
+    * prefix × full postings, sorted-hash prefix order, no PPJoin filter. */
+  private final case class Containment(bp: Long) extends Measure
+
+  /** Sorted distinct xxhash64 character n-grams of the normalized text:
+    * the char gram universe (q24, containment's `unit = "char"`). */
+  private def charGramHash(text: Column, n: Int): Column =
+    sort_array(array_distinct(transform(
+      Tools.charNgrams(Tools.normalize(text), n), s => xxhash64(s))))
+
+  /** |A∩B| / |A∪B| rounded to 4 decimals from the intersect size: the
+    * Jaccard every verify in this file emits. */
+  private def roundedJaccard(inter: Column, a: Column, b: Column): Column =
+    round(inter / (size(a) + size(b) - inter), 4)
+
+  /** Adds the exact intersect size of two sorted gram-set columns
+    * (`__inter`, the native merge scan) and [[roundedJaccard]] over it
+    * (`jaccard`). Two projections on purpose: one Column would spell the
+    * intersect twice. */
+  private def withJaccard(df: DataFrame, a: String, b: String): DataFrame =
+    df.withColumn("__inter", graft.functions.NativeExpressions
+        .sortedIntersectCount(col(a), col(b)).cast("double"))
+      .withColumn("jaccard", roundedJaccard(col("__inter"), col(a), col(b)))
+
+  /** min/max of two set sizes: Jaccard's upper bound, spelled once so the
+    * candidate filter and the verify filter agree on every boundary. */
+  private def sizeRatio(a: Column, b: Column): Column =
+    least(a, b).cast("double") / greatest(a, b)
+
+  /** Document frequencies of a gram frame's universe as a count-gated
+    * driver map — the rarest-first prefix order's input (r15
+    * optimization). ONE bounded action: limit(cap+1) caps what the
+    * driver ever holds; a result under the cap is necessarily the
+    * COMPLETE df table, over it returns None and the caller keeps the
+    * sorted-hash prefix order (both orders are exact — the verify join
+    * decides every pair; the order is purely a candidate-volume dial).
+    * `g` must expose an array column named `grams`. */
+  private def gramDfMap(g: DataFrame): Option[Map[Long, Long]] = {
+    val dfCap = 1 << 22
+    val rows = g.select(explode(col("grams")).as("__g"))
+      .groupBy("__g").agg(count(lit(1)).as("__df"))
+      .limit(dfCap + 1).collect()
+    if (rows.length <= dfCap)
+      Some(rows.map(r => (r.getLong(0), r.getLong(1))).toMap)
+    else None
+  }
+
+  /** The first `prefLenOf(|grams|)` grams in ascending (document
+    * frequency, gram) order — Bayardo's canonical prefix order: the
+    * prefix then holds each doc's RAREST grams, so the candidate join
+    * meets only through rare grams instead of fanning out on
+    * boilerplate (the sorted-hash order is a RANDOM order; at sf0.1
+    * the q24 candidate set measured 622k pairs from 5k docs under it).
+    * The pigeonhole is order-independent: under any one global total
+    * order, if no common gram sat in both prefixes, all |A∩B| common
+    * grams would fit in one suffix of size ceil(t·|X|)−1 < |A∩B|. */
+  private def rarestPrefixUdf(spark: org.apache.spark.sql.SparkSession,
+      m: Map[Long, Long], prefLenOf: Int => Int)
+      : org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val bc = spark.sparkContext.broadcast(m)
+    udf { grams: Seq[Long] =>
+      if (grams == null) Seq.empty[Long]
+      else {
+        val k = prefLenOf(grams.length)
+        if (k <= 0) Seq.empty[Long]
+        else {
+          val dfm = bc.value
+          grams.sortBy(gr => (dfm.getOrElse(gr, 0L), gr)).take(k)
+        }
+      }
+    }
+  }
+
+  /** The one exact prefix-filtered set-similarity join (Bayardo et al.,
+    * "Scaling Up All Pairs Similarity Search", WWW'07; one kernel for
+    * several measures as in Vernica, Carey and Li, SIGMOD'10) behind
+    * [[ngramJaccardPairs]], [[containmentPairs]] and
+    * [[crossSourceContainmentOverlap]].
+    *
+    * `g0` holds one row per set: `id`, `grams` (sorted distinct longs),
+    * an optional `block` equality key, and payload columns re-attached to
+    * both sides of every verified pair. `apart` names a payload column
+    * whose values must differ, NULL-safely, across a pair (q128's
+    * cross-source rule). Returns the verified pairs — (id_a, id_b, each
+    * payload column suffixed _a then _b, score) with the score
+    * `jaccard` or `containment_bp` — and the cached set frame the pairs
+    * were drawn from (after the `maxDocFreq` filter).
+    *
+    *  1. `maxDocFreq` removes grams held by more than `cap` sets of a
+    *     block (of the whole frame without one) from the universe
+    *     itself, so prefixes, postings, intersects and denominators all
+    *     see one consistent filtered universe; sets left gramless sit
+    *     out. Payload is kept per set: two sets that collapse to the same
+    *     filtered grams stay separate rows.
+    *  2. One cache point: the set frame feeds the prefix index, the
+    *     postings and both re-attach joins, so each reads it once.
+    *  3. Prefixes (pigeonhole): a pair clearing the threshold shares at
+    *     least one gram of a prefix under one global gram order.
+    *     Jaccard: J(A,B) ≥ t implies |A∩B| ≥ ceil(t·|A|), so every
+    *     qualifying B shares one of A's first |A| − ceil(t·|A|) + 1
+    *     grams; both sides are prefixes, met in rarest-first order
+    *     ([[rarestPrefixUdf]]) with the sorted-hash order as fallback.
+    *     Containment: only the SMALLER set is constrained, so each set's
+    *     own-size prefix (valid when it IS the min side) meets the FULL
+    *     postings of the partner, both directions at once. Its quota is
+    *     integer-exact — ceil(a·b/10⁴) = (a·b + 9999) div 10⁴. The
+    *     rarest-first order and the positional filter were A/B'd for
+    *     containment and REVERTED (r15): its prefix is already short
+    *     (len/10 at 9000 bp), candidates are verify-bounded, and the
+    *     extra per-meeting-row work measured q112 1.55 → 2.0–2.9 s.
+    *  4. One candidate equi-join on (block, gram), `shuffle_hash`
+    *     pinned: the prefix and posting frames are corpus-sized and
+    *     UDF-derived, so the static planner under-estimates them and
+    *     would broadcast — a plan AQE cannot reverse, and the
+    *     fatal-at-scale shape the PlanQualitySpec guards catch. The
+    *     distinct pairs then re-attach the grams through two pinned
+    *     joins and one merge-scan intersect decides each pair exactly.
+    *
+    * Jaccard's candidate stage prunes against the EFFECTIVE threshold
+    * teff = t − 5e-5 (r16, the r15 advice): the verify admits pairs
+    * whose ROUNDED jaccard clears t, i.e. true J down to t − 5e-5, and a
+    * borderline pair pruned against t itself could lose its only
+    * meeting row. teff only lengthens prefixes and lowers `required`,
+    * so pruning stays one-sided. Inside the candidate join it runs the
+    * PPJoin filters (Xiao et al., WWW'08 — exact, they drop meeting
+    * ROWS before the distinct exchange, never a pair the verify keeps):
+    *  - size ratio: J ≤ min/max sizes ([[sizeRatio]], as in the verify);
+    *  - position: a qualifying pair's FIRST common gram sits in both
+    *    prefixes and every common gram ranks after it on BOTH sides, so
+    *    |A∩B| ≤ 1 + min(|A|−1−posA, |B|−1−posB) at that meeting. Rows
+    *    whose bound cannot reach the equivalent-overlap requirement
+    *    ceil(t(|A|+|B|)/(1+t)) drop (the 1e-9 relaxation keeps the
+    *    double ceil from ever exceeding the exact requirement). Later
+    *    meetings of a true pair may fail the bound: its first meeting's
+    *    row survives and distinct keeps the pair. */
+  private def setSimJoin(g0: DataFrame, m: Measure,
+      maxDocFreq: Option[Int] = None, apart: Option[String] = None)
+      : (DataFrame, DataFrame) = {
+    val block = Some("block").filter(g0.columns.contains)
+    val carried = "id" +: g0.columns.toSeq.filterNot(c => c == "id" || block.contains(c))
+    val payload = carried.filterNot(Set("id", "grams"))
+    val gf = maxDocFreq match {
       case None => g0
       case Some(cap) =>
-        val ex = g0.select(col("id"), col("block"),
-          explode(col("grams")).as("pg"))
-        val hot = ex.groupBy("block", "pg")
+        val keys = g0.columns.toSeq.filterNot(_ == "grams").map(col)
+        val ex = g0.select(keys :+ explode(col("grams")).as("pg"): _*)
+        val dfKey = block.toSeq :+ "pg"
+        val hot = ex.groupBy(dfKey.map(col): _*)
           .agg(count(lit(1)).as("__df")).filter(col("__df") > cap)
-          .select("block", "pg")
-        graft.engine.AutoUnpersist.cache(
-          ex.join(hot, Seq("block", "pg"), "left_anti")
-            .groupBy("id", "block")
-            .agg(sort_array(collect_list(col("pg"))).as("grams"))
-            .filter(size(col("grams")) > 0))
+          .select(dfKey.map(col): _*)
+        ex.join(hot, dfKey, "left_anti")
+          .groupBy(keys: _*)
+          .agg(sort_array(collect_list(col("pg"))).as("grams"))
+          .filter(size(col("grams")) > 0)
     }
-    // prefix length over longs: |S| − ceil(t·|S|) + 1 with
-    // ceil(a·b/10⁴) = (a·b + 9999) div 10⁴ — exact integer, no float
-    // boundary (the selectTopFraction quota discipline). NOTE (r15):
-    // both the rarest-first prefix order and the PPJoin positional
-    // filter that pay off for the Jaccard prefix × prefix join were
-    // A/B'd here and REVERTED — the containment prefix is already
-    // short (len/10 at 9000 bp), candidates are verify-bounded, and
-    // the extra per-meeting-row work measured q112 1.55 → 2.0–2.9 s.
-    val pref = g.select(col("id"), col("block"),
-      explode(slice(col("grams"), lit(1),
-        expr(s"cast(size(grams) - (cast(size(grams) as bigint) * $thresholdBp" +
-          s" + 9999) div 10000 + 1 as int)"))).as("pg"))
-    val post = g.select(col("id"), col("block"), explode(col("grams")).as("pg"))
+    // Jaccard persists FIRST and registers with AutoUnpersist LAST (after
+    // its df-table action): that collect then both BUILDS the cache and
+    // reads it without counting as the scope's first action
+    val dfTable = m.isInstanceOf[Jaccard]
+    val g = if (dfTable) gf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else gf
+    val side = (col("id") +: block.toSeq.map(col)) ++ apart.map(col)
+    val (pref, partner) = m match {
+      case j: Jaccard =>
+        val teff = j.teff
+        // rarestPrefixUdf's length spells the SAME double-ceil arithmetic
+        // as this Column, so the two prefix orders never disagree on a
+        // boundary
+        val prefLen = (size(col("grams")) -
+          ceil(lit(teff) * size(col("grams"))) + 1).cast("int")
+        val prefix = gramDfMap(g).map(dfm => rarestPrefixUdf(g.sparkSession,
+            dfm, len => (len - math.ceil(teff * len) + 1).toInt)(col("grams")))
+          .getOrElse(slice(col("grams"), lit(1), prefLen))
+        val p = g.select(side ++ Seq(size(col("grams")).as("sz"),
+          posexplode(prefix).as(Seq("pos", "pg"))): _*)
+        (p, p)
+      case Containment(bp) =>
+        (g.select(side :+ explode(slice(col("grams"), lit(1),
+            expr(s"cast(size(grams) - (cast(size(grams) as bigint) * $bp" +
+              " + 9999) div 10000 + 1 as int)"))).as("pg"): _*),
+          g.select(side :+ explode(col("grams")).as("pg"): _*))
+    }
+    graft.engine.AutoUnpersist.cache(g, drainFirst = dfTable)
     val pa = pref.alias("pa")
-    // shuffle_hash pinned for the same reason as the Jaccard join: the
-    // posting index is corpus-sized and UDF-derived — the static
-    // planner's estimate is fiction
-    val pb = post.hint("shuffle_hash").alias("pb")
-    val cand = pa.join(pb,
-        col("pa.block") === col("pb.block") && col("pa.pg") === col("pb.pg") &&
-          col("pa.id") =!= col("pb.id"))
-      .select(least(col("pa.id"), col("pb.id")).as("id_a"),
-        greatest(col("pa.id"), col("pb.id")).as("id_b"))
+    val pb = partner.hint("shuffle_hash").alias("pb")
+    val (pairRule, lo, hi) = m match {
+      case j @ Jaccard(t) =>
+        val teff = j.teff
+        val required = ceil(lit(teff / (1.0 + teff)) *
+          (col("pa.sz") + col("pb.sz")) - 1e-9)
+        val ubound = lit(1) + least(col("pa.sz") - 1 - col("pa.pos"),
+          col("pb.sz") - 1 - col("pb.pos"))
+        (Seq(col("pa.id") < col("pb.id"),
+            sizeRatio(col("pa.sz"), col("pb.sz")) >= t, ubound >= required),
+          col("pa.id"), col("pb.id"))
+      case _: Containment =>
+        (Seq(col("pa.id") =!= col("pb.id")),
+          least(col("pa.id"), col("pb.id")), greatest(col("pa.id"), col("pb.id")))
+    }
+    val on = block.map(b => col(s"pa.$b") === col(s"pb.$b")).toSeq ++
+      Seq(col("pa.pg") === col("pb.pg")) ++ pairRule ++
+      apart.map(s => !(col(s"pa.$s") <=> col(s"pb.$s")))
+    val cand = pa.join(pb, on.reduce(_ && _))
+      .select(lo.as("id_a"), hi.as("id_b"))
       .distinct()
-    cand
-      .join(g.select(col("id").as("id_a"), col("grams").as("ga"))
-        .hint("shuffle_hash"), "id_a")
-      .join(g.select(col("id").as("id_b"), col("grams").as("gb"))
-        .hint("shuffle_hash"), "id_b")
-      .withColumn("inter",
-        graft.functions.NativeExpressions.sortedIntersectCount(
-          col("ga"), col("gb")).cast("long"))
-      .withColumn("containment_bp",
-        expr("inter * 10000 div least(cast(size(ga) as bigint), cast(size(gb) as bigint))"))
-      .filter(col("containment_bp") >= thresholdBp)
-      .select("id_a", "id_b", "containment_bp")
+    def attach(s: String) =
+      g.select(carried.map(c => col(c).as(s"${c}_$s")): _*).hint("shuffle_hash")
+    val (ga, gb) = (col("grams_a"), col("grams_b"))
+    val pairs = cand.join(attach("a"), "id_a").join(attach("b"), "id_b")
+    val (kept, interType, score, value, min) = m match {
+      case Jaccard(t) => (pairs.filter(sizeRatio(size(ga), size(gb)) >= t),
+        "double", "jaccard", roundedJaccard(col("__inter"), ga, gb), lit(t))
+      case Containment(bp) => (pairs, "long", "containment_bp",
+        expr("__inter * 10000 div " +
+          "least(cast(size(grams_a) as bigint), cast(size(grams_b) as bigint))"),
+        lit(bp))
+    }
+    val verified = kept
+      .withColumn("__inter", graft.functions.NativeExpressions
+        .sortedIntersectCount(ga, gb).cast(interType))
+      .withColumn(score, value)
+      .filter(col(score) >= min)
+    (verified.select((Seq("id_a", "id_b") ++ payload.map(_ + "_a") ++
+      payload.map(_ + "_b") :+ score).map(col): _*), g)
   }
 }

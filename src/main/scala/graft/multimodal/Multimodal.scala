@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * no codec for (MP4/AVI/MKV, MP3/OGG) need an external decoder
   * (JavaCV etc.) dropped in behind the same decode contract —
   * [[FakeCodec]] remains only as the generic opaque-bytes fixture for
-  * the plumbing tests and the resize stand-in.
+  * the plumbing tests.
   *
   * Scale notes: payloads stay in executors (never collected); decode runs
   * per-partition with one codec instance per partition (mapPartitions,
@@ -42,8 +42,8 @@ object Multimodal {
   /** Deterministic fake codec — no longer any modality's primary
     * decoder (images → [[ImageCodec]], audio → [[AudioCodec]], video →
     * [[VideoCodec]]); kept as the generic opaque-bytes fixture for the
-    * plumbing tests ([[synthesize]]/[[extractFeatures]]) and the
-    * resize stand-in: it "decodes" a payload into statistics derived
+    * plumbing tests ([[synthesize]]/[[extractFeatures]]): it "decodes"
+    * a payload into statistics derived
     * only from the bytes, with the shape and cost profile of a real
     * decoder. */
   object FakeCodec {
@@ -56,20 +56,6 @@ object Multimodal {
         val mean = sum.toDouble / n
         (n, mean, math.sqrt(sumSq.toDouble / n - mean * mean))
       }
-    }
-    /** Fake resize: re-hash payload to the target size (real impl:
-      * decode → scale → re-encode). Null/empty payloads pass through
-      * empty — same guard as decodeStats (payload is a nullable column
-      * and empty frames are expected inputs). */
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      if (payload == null || payload.isEmpty) return Array.empty[Byte]
-      val out = new Array[Byte](math.max(w * h / 64, 1))
-      var i = 0
-      while (i < out.length) {
-        out(i) = payload(((i.toLong * 2654435761L) % payload.length).toInt.abs)
-        i += 1
-      }
-      out
     }
   }
 
@@ -611,16 +597,6 @@ object Multimodal {
       .withColumn("mean_intensity", col("__stats._2"))
       .withColumn("stddev_intensity", col("__stats._3"))
       .drop("__stats")
-  }
-
-  /** Resize operator (images): payload → payload', metadata updated. */
-  def resize(df: DataFrame, w: Int, h: Int): DataFrame = {
-    val resizeUdf = udf { (p: Array[Byte]) => FakeCodec.resize(p, w, h) }
-    df.withColumn("payload", resizeUdf(col("payload")))
-      .withColumn("meta", struct(
-        col("meta.mime").as("mime"),
-        lit(w).as("width"), lit(h).as("height"),
-        col("meta.duration_ms").as("duration_ms")))
   }
 
   /** Content key for exact media dedup: md5 over the payload's hex

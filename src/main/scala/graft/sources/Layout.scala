@@ -1,10 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Physical-layout maintenance for parquet tables — the two operations
-  * a 100-TB table needs between queries:
+/** Physical layout for parquet tables:
   *
   *   - [[zorderValue]]: the multi-column clustering key.
   *     Partitioning prunes on ONE key; a second predicate column scans
@@ -18,12 +17,6 @@ import org.apache.spark.sql.functions._
   *     parquet. (The reference has no layout optimizer — its datasets
   *     are flat single files, `code/recipes.py` write paths — but at
   *     target scale the layout IS the index.)
-  *
-  *   - [[compact]]: small-file compaction. Incremental loads and
-  *     streaming sinks degrade a table into thousands of KB-sized
-  *     files whose open/footer cost dominates scans; compaction
-  *     rewrites a directory into ~`targetMb` files (optionally
-  *     re-sorted) and swaps it in atomically.
   */
 object Layout {
 
@@ -86,42 +79,5 @@ object Layout {
         lit(hi.asInstanceOf[Long]), bits)
     }
     df.withColumn("__zval", interleave(qs, bits))
-  }
-
-  /** Rewrite a parquet directory into ~`targetMb`-sized files: write a
-    * sibling temp dir, then swap via two renames with a restore path
-    * (a failed second rename puts the original back — the table is
-    * never lost). NOT reader-atomic: between the renames the path is
-    * briefly absent, so schedule compaction in the maintenance window
-    * like any table rewrite (table-format transaction logs are what
-    * close that window; out of scope here by design). `sortBy` re-sorts
-    * within output files so compaction can also restore clustering that
-    * incremental appends destroyed. File count comes from the CURRENT
-    * on-disk byte size — compression ratio carries over since the data
-    * is recompressed the same way. */
-  def compact(spark: SparkSession, path: String, targetMb: Int = 128,
-      sortBy: Seq[String] = Nil): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(hPath).getLength
-    val n = math.max(1, math.ceil(bytes / (targetMb * 1024.0 * 1024.0)).toInt)
-    val df0 = spark.read.parquet(path)
-    val df =
-      if (sortBy.nonEmpty)
-        df0.repartitionByRange(n, sortBy.map(col): _*)
-          .sortWithinPartitions(sortBy.map(col): _*)
-      else df0.repartition(n)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact-tmp")
-    fs.delete(tmp, true)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val bak = new org.apache.hadoop.fs.Path(path + ".compact-old")
-    fs.delete(bak, true)
-    if (!fs.rename(hPath, bak))
-      sys.error(s"compact: could not move $path aside")
-    if (!fs.rename(tmp, hPath)) {
-      fs.rename(bak, hPath) // restore — never leave the table missing
-      sys.error(s"compact: could not swap compacted files into $path")
-    }
-    fs.delete(bak, true)
   }
 }

@@ -823,7 +823,7 @@ object Curation {
     // (cnt desc, a, b) order; safe on the normalized ASCII alphabet
     val ord: Ordering[(Long, String, String)] =
       new Ordering[(Long, String, String)] {
-        def compare(x: (Long, String, String), y: (Long, String, String)): Int = {
+        override def compare(x: (Long, String, String), y: (Long, String, String)): Int = {
           val c = java.lang.Long.compare(x._1, y._1)
           if (c != 0) c
           else {

@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.sources.Layout
 
-/** Physical-layout maintenance: z-order clustering + small-file
-  * compaction (Layout). The z-value arithmetic is also under the driver
-  * gate (q89); here the SPATIAL claim is measured directly — a
-  * z-ordered write must make every file narrow in EVERY interleaved
-  * dimension, which single-column sorting cannot do. */
+/** Physical layout: z-order clustering (Layout). The z-value
+  * arithmetic is also under the q89 oracle; here the SPATIAL claim is
+  * measured directly — a z-ordered write must make every file narrow in
+  * EVERY interleaved dimension, which single-column sorting cannot do. */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -74,23 +73,5 @@ class LayoutSpec extends SparkSpec {
       .write.parquet(xdir)
     val yb = fileRanges(xdir).map(_._2).sum / 16
     assert(yb >= 48, s"baseline y-range $yb should be ~full-domain (63)")
-  }
-
-  test("compact rewrites many small files into few, swap leaves no residue, rows preserved") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-c").toString + "/t"
-    val df = spark.range(10000L).select(col("id"), (col("id") % 97).as("k"))
-    df.repartition(20).write.parquet(dir)
-    def parquetFiles() = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles() == 20)
-    Layout.compact(spark, dir, targetMb = 128, sortBy = Seq("id"))
-    assert(parquetFiles() == 1, "10k rows ≪ 128 MB → one file")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 10000L)
-    assert(back.agg(sum("id")).head.getLong(0) == 10000L * 9999 / 2)
-    // the swap leaves no tmp/backup residue next to the table
-    val parent = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
-    assert(!parent.exists(n => n.contains("compact-tmp") || n.contains("compact-old")),
-      parent.mkString(","))
   }
 }

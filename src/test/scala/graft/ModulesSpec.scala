@@ -829,7 +829,7 @@ class ModulesSpec extends SparkSpec {
     assert(!finalized.exists(_.getAs[String]("event_type") == "view"))
   }
 
-  test("multimodal: synthesize → extract → resize → frame-sample plumbing") {
+  test("multimodal: synthesize → extract → frame-sample plumbing") {
     val base = Seq(1L, 2L, 3L).toDF("k")
     val media = Multimodal.synthesize(base, "k", bytesPerRow = 512)
     assert(media.schema("payload").dataType.typeName == "binary")
@@ -841,8 +841,6 @@ class ModulesSpec extends SparkSpec {
     val again = Multimodal.extractFeatures(Multimodal.synthesize(base, "k", bytesPerRow = 512))
     assert(rows(feats.select("media_id", "mean_intensity").orderBy("media_id")) ==
       rows(again.select("media_id", "mean_intensity").orderBy("media_id")))
-    val resized = Multimodal.resize(media, 64, 64)
-    assert(resized.select("meta.width").head.getInt(0) == 64)
     val frames = Multimodal.sampleFrames(media.withColumn("meta",
       struct(lit("v").as("mime"), lit(1).as("width"), lit(1).as("height"),
         lit(100L).as("duration_ms"))), everyMs = 50L)

@@ -690,6 +690,94 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  test("n-gram Jaccard matches brute force on generated corpora, rounding band included") {
+    // docs are random edits of a few stems, so similarities spread over
+    // the whole [0, 1] range; two planted pairs sit at true J = 2/3
+    // (5 char 3-grams each, 4 shared), which rounds to 0.6667 and must
+    // be KEPT at threshold 0.6667 (pruning against t itself would lose
+    // them)
+    val rnd = new scala.util.Random(23)
+    val stems = Vector("kestrel harbor lantern", "violet quarry",
+      "amber tundra mosaic")
+    def edit(s: String): String = {
+      val cs = s.toCharArray
+      (0 until rnd.nextInt(4)).foreach(_ =>
+        cs(rnd.nextInt(cs.length)) = ('a' + rnd.nextInt(26)).toChar)
+      new String(cs)
+    }
+    val docs = (1L to 30L).map(i =>
+        (i, edit(stems(rnd.nextInt(stems.size))), s"b${i % 2}")) ++
+      Seq((31L, "abcdefg", "b1"), (32L, "abcdefx", "b1"),
+        (33L, "pqrstuv", "b0"), (34L, "pqrstuw", "b0"),
+        (35L, "ab", "b0"), (36L, "", "b1")) // no grams: sit out
+    def grams(t: String): Set[String] =
+      Tools.charNgramsStr(Tools.normalizeStr(t), 3).toSet
+    for (t <- Seq(0.5, 0.6667, 0.8)) {
+      val got = Dedup.ngramJaccardPairs(docs.toDF("id", "text", "blk"),
+          "id", "text", "blk", n = 3, threshold = t)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val want = (for {
+        a <- docs; b <- docs if a._1 < b._1 && a._3 == b._3
+        ga = grams(a._2); gb = grams(b._2) if ga.nonEmpty && gb.nonEmpty
+        i = ga.intersect(gb).size
+        j = BigDecimal(i.toDouble / (ga.size + gb.size - i))
+          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+        if j >= t
+      } yield (a._1, b._1) -> j).toMap
+      assert(got == want, s"threshold $t: extra=${got.toSet -- want.toSet} " +
+        s"missing=${want.toSet -- got.toSet}")
+      if (t == 0.6667)
+        assert(want.get((31L, 32L)).contains(0.6667) &&
+          want.get((33L, 34L)).contains(0.6667), want.toString)
+    }
+  }
+
+  test("cross-source containment matrix matches brute force, with and without maxDocFreq") {
+    val vocab = Vector("aa", "bb", "cc", "dd")
+    val srcs = Vector(Option("s1"), Option("s2"), Option("s3"), None)
+    val rnd = new scala.util.Random(5)
+    val docs = (1L to 40L).map { i =>
+      val len = 1 + rnd.nextInt(7)
+      (i, srcs(rnd.nextInt(srcs.size)),
+        Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }
+    def sh(t: String): Set[String] = {
+      val toks = t.split(" ").toSeq
+      if (toks.length < 3) Set(toks.mkString(" "))
+      else toks.sliding(3).map(_.mkString(" ")).toSet
+    }
+    // exact copies collapse per (source, set); cnt = docs per rep
+    val reps0 = docs.groupBy(d => (d._2, sh(d._3))).toSeq
+      .map { case ((s, g), ds) => (s, g, ds.size.toLong) }
+    for (cap <- Seq(None, Some(3))) {
+      val hot = cap.fold(Set.empty[String]) { c =>
+        reps0.flatMap(_._2).groupBy(identity)
+          .collect { case (g, occ) if occ.size > c => g }.toSet }
+      val reps = reps0.map { case (s, g, n) => (s, g -- hot, n) }
+        .filter(_._2.nonEmpty).zipWithIndex
+      def bp(a: Set[String], b: Set[String]) =
+        a.intersect(b).size.toLong * 10000L / math.min(a.size, b.size)
+      val matched = for {
+        ((sa, ga, na), ia) <- reps; ((sb, gb, _), ib) <- reps
+        if ia != ib && sa != sb && bp(ga, gb) >= 6000L
+      } yield (sa, sb, ia, na)
+      val nA = reps.groupBy(_._1._1).view.mapValues(_.map(_._1._3).sum).toMap
+      val want = matched.distinct.groupBy(m => (m._1, m._2)).map {
+        case ((sa, sb), ms) =>
+          val n = ms.map(_._4).sum
+          (sa, sb) -> (n, nA(sa), n * 10000L / nA(sa))
+      }
+      val got = Dedup.crossSourceContainmentOverlap(
+          docs.toDF("id", "src", "text"), "id", "text", "src",
+          thresholdBp = 6000L, maxDocFreq = cap)
+        .collect().map(r => (Option(r.getString(0)), Option(r.getString(1))) ->
+          (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+      assert(hot.nonEmpty || cap.isEmpty, "the cap must remove something")
+      assert(want.nonEmpty, s"cap $cap: no pair to compare")
+      assert(got == want, s"cap $cap: got $got, want $want")
+    }
+  }
+
   test("quantizeInt8 grid values stay in [0, 255] for any finite input; non-finite fails loudly, not silently") {
     import graft.sim.Ann
     val rnd = new scala.util.Random(9)

@@ -1816,9 +1816,9 @@ class RecipeConfSpec extends SparkSpec {
 
   test("dedup and near_dups recipe steps run the training-data operators from YAML") {
     import spark.implicits._
-    Seq((1L, "the quick brown fox"), (2L, "the quick brown fox"),
-        (3L, "a completely different text"))
-      .toDF("doc_id", "text")
+    Seq((1L, "the quick brown fox", "x"), (2L, "the quick brown fox", "x"),
+        (3L, "a completely different text", "x"))
+      .toDF("doc_id", "text", "blk")
       .write.mode("overwrite").parquet(s"$dir/dd_in")
     val conf = RecipeConf.load(
       s"""datasets:
@@ -1836,6 +1836,10 @@ class RecipeConfSpec extends SparkSpec {
          |    input: dd
          |    steps:
          |      - near_dups: {id: doc_id, text: text, method: winnow, threshold: 0.9}
+         |  ngram_pairs:
+         |    input: dd
+         |    steps:
+         |      - near_dups: {id: doc_id, text: text, method: ngram, block: blk, threshold: 0.9}
          |""".stripMargin)
     val kept = RecipeConf.run(spark, conf, "drop_exact")
       .select("doc_id").as[Long].collect().toSet
@@ -1849,6 +1853,10 @@ class RecipeConfSpec extends SparkSpec {
     assert(wp.length == 1)
     assert(wp.head.getAs[Long]("id_a") == 1L && wp.head.getAs[Long]("id_b") == 2L
       && wp.head.getAs[Double]("overlap") == 1.0)
+    // ngram: char-trigram Jaccard within the block, the same one pair
+    val ng = RecipeConf.run(spark, conf, "ngram_pairs").collect()
+    assert(ng.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+      r.getAs[Double]("jaccard"))).toSeq == Seq((1L, 2L, 1.0)))
   }
 
   test("diff and skew recipe steps run from YAML") {

@@ -2,13 +2,23 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf tables and compare (sorted rows, columns sorted by name)
 to the parquet Verify dumped. Usage: check.py <sfdir> <outdir>."""
-import sys, os, json, glob
+import sys, os, json, glob, atexit, shutil, tempfile
 import duckdb
 import pandas as pd
 import numpy as np
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
+# Resources only, never the comparison: the heaviest oracle (q125's IVF-PQ
+# re-rank) exhausts DuckDB's default memory limit. Rows are compared sorted,
+# so insertion order is free to go; a spill directory alone is not enough,
+# and q125 still runs out of memory at 3 threads (16 GB, 4-core host) but
+# not at 2.
+spill = tempfile.mkdtemp(prefix="check-duckdb-")
+atexit.register(shutil.rmtree, spill, True)
+con.execute("SET preserve_insertion_order = false")
+con.execute(f"SET temp_directory = '{spill}'")
+con.execute("SET threads = 2")
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
