@@ -2121,15 +2121,14 @@ object SparkEntry {
           lit(".0."), (id % 250).cast("string"))).otherwise(lit("")),
         when(id % 5 === 0, concat(lit(" call +1"),
           lpad((id % 10000000).cast("string"), 9, "0"))).otherwise(lit("")))
-      // AutoUnpersist-scoped materialization: the contamination join
-      // consumes the gated frame twice (its gram side and its verdict
-      // join-back), and without the cache each consumer re-runs the
-      // dedup survivors' PII injection, the 3-regex scrub and the
-      // Gopher kernel. Re-checked after the one-pass kernel removed the
-      // ~45 scrub copies per row this cache was first added for (sf0.1,
-      // 5 alternating runs per side: median 2.34 s with it, 3.34 s
-      // without it, every pair won by the cache).
-      val scrubbed = graft.engine.AutoUnpersist.cache(deduped
+      // cached: the contamination join consumes the gated frame twice
+      // (its gram side and its verdict join-back), and without the
+      // cache each consumer re-runs the dedup survivors' PII injection,
+      // the 3-regex scrub and the Gopher kernel. Re-checked after the
+      // one-pass kernel removed the ~45 scrub copies per row this cache
+      // was first added for (sf0.1, 5 alternating runs per side: median
+      // 2.34 s with it, 3.34 s without it, every pair won by the cache).
+      val scrubbed = graft.engine.CacheScope.cache(deduped
         .select(id, col("lang"), Curation.scrubPii(aug).as("clean_text")))
       // the stop-hit rule needs a stopword list matched to the corpus
       // domain (exactly how a real pipeline configures it): of the
@@ -2564,19 +2563,14 @@ object SparkEntry {
     // the scoring pass are scan-level row-local work)
     "q111_classifier_score" -> ((s, dir) => {
       // ONE evaluation of the rebalanced fixture for the fit's two
-      // internal actions AND the scoring pass (r16): persist FIRST so
-      // the fit's count/collect build and read the cache without
-      // counting as the scope's first action, register with
-      // AutoUnpersist LAST so the caller's scoring action releases it
-      // (the q68/q24 ordering). The score plan reads the fixture twice
-      // (featurize + the output join) — both hits.
-      val d = graft.operators.Ops.rebalance(
-        classifierFixture(t(s, dir, "documents")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // internal actions AND the scoring pass (r16). The score plan
+      // reads the fixture twice (featurize + the output join) — both
+      // hits.
+      val d = graft.engine.CacheScope.cache(graft.operators.Ops.rebalance(
+        classifierFixture(t(s, dir, "documents"))))
       val w = graft.ml.LinearClassifier.trainTextClassifier(d, "doc_id",
         "text", "y", buckets = 256, epochs = 3, binary = true)
-      graft.ml.LinearClassifier.scoreTextClassifier(
-        graft.engine.AutoUnpersist.cache(d, drainFirst = true),
+      graft.ml.LinearClassifier.scoreTextClassifier(d,
         "doc_id", "text", w,
         buckets = 256, binary = true).select("doc_id", "margin", "pred")
     }),

@@ -9,6 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 import graft.conf.RecipeConf
 import graft.conf.RecipeConf.ProjectConf
+import graft.engine.CacheScope
 
 /** REST layer mirroring the reference's API surface
   * (/root/reference/code/api.py) over the conf-driven engine:
@@ -119,14 +120,12 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
 
   def actualPort: Int = server.getAddress.getPort
 
+  /** Sets the reply; [[handle]] sends it once the request's cache scope
+    * has closed. */
   private def respond(ex: HttpExchange, code: Int, body: String,
-      ctype: String = "application/json"): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", ctype)
-    ex.sendResponseHeaders(code, bytes.length)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  }
+      ctype: String = "application/json"): Unit =
+    ex.setAttribute(Reply, (code, body, ctype))
+  private val Reply = "graft.reply"
 
   private def jsonRows(df: org.apache.spark.sql.DataFrame, limit: Int): String =
     "[" + df.limit(limit).toJSON.collect().mkString(",") + "]"
@@ -268,7 +267,23 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
     }
   }
 
-  private def handle(ex: HttpExchange): Unit = try {
+  /** One request in one [[CacheScope]]; the reply goes out after it
+    * closes, so a client holding the response finds the request's
+    * operator caches released. */
+  private def handle(ex: HttpExchange): Unit = {
+    CacheScope.run(route(ex))
+    ex.getAttribute(Reply) match {
+      case (code: Int, body: String, ctype: String) =>
+        val bytes = body.getBytes(StandardCharsets.UTF_8)
+        ex.getResponseHeaders.set("Content-Type", ctype)
+        ex.sendResponseHeaders(code, bytes.length)
+        ex.getResponseBody.write(bytes)
+        ex.close()
+      case _ => // the SSE tail wrote and closed its own stream
+    }
+  }
+
+  private def route(ex: HttpExchange): Unit = try {
     val path = ex.getRequestURI.getPath.stripSuffix("/")
     val method = ex.getRequestMethod
     // split the RAW query on &/= BEFORE decoding, then decode each part
@@ -561,7 +576,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
           // log BEFORE flipping status: readers treat not-running as
           // "the log is complete"
           try {
-            RecipeConf.run(spark, cfg, name)
+            CacheScope.run(RecipeConf.run(spark, cfg, name))
             logLine(name, f"job $id: done in ${(System.nanoTime() - t0) / 1e9}%.2f s")
             jobs(id) = "done"
           } catch {

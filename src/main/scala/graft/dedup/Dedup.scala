@@ -271,11 +271,8 @@ object Dedup {
     val rowsPerBand = numHashes / bands
     // shingle sets as sorted hashed longs: set semantics survive, every
     // downstream compare/intersect runs on primitives instead of strings.
-    // AutoUnpersist-scoped: the cache serves the band join and the verify
-    // join within the caller's action, then is released (minhashDedup's
-    // component iterations read ConnectedComponents' own persisted edge
-    // set, not this frame, so early release costs them nothing).
-    val base = graft.engine.AutoUnpersist.cache(df.select(
+    // Cached: the frame serves the band join and the verify join.
+    val base = graft.engine.CacheScope.cache(df.select(
       col(idCol).as("id"), shingleHash(col(textCol), shingleSize).as("shingles"))
       .filter(size(col("shingles")) > 0))
     // band join carries ONLY (band, bucket, id): the wide shingle arrays
@@ -417,19 +414,14 @@ object Dedup {
       bandFrame(base, id, numHashes, bands, keepSh)
     // batch is the small side by premise: cache it once — it feeds the
     // band explode, the (bloom path's) filter build, and the verify
-    // join. Registered with AutoUnpersist only at the END (the q68
-    // ordering generalized): the bloom branch's sizing count and filter
-    // build are actions whose plans expose this entry directly
-    // (bBuckets is an unpersisted projection over it), so an early
-    // registration would release the cache there and every later pass
-    // would re-shingle the batch from scratch.
+    // join.
     // rebalance the batch BEFORE the signing kernel (r16): the batch
     // usually arrives as one small file / micro-batch = one partition,
     // so the shingle + 64-hash minhash kernel (the q26 rebalance class)
     // runs on one core without it; no-op on already-parallel batches
-    val bBase = shingled(graft.operators.Ops.rebalance(batch), "__bid")
-      .filter(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bBase = graft.engine.CacheScope.cache(
+      shingled(graft.operators.Ops.rebalance(batch), "__bid")
+        .filter(size(col("sh")) > 0))
     val bBands = withBands(bBase, "__bid", keepSh = false)
     // candidate (batch, corpus, corpus-shingles) triples, one per
     // band-colliding pair — the physical strategy differs per path but
@@ -445,14 +437,11 @@ object Dedup {
         // semi when the hit set broadcasts)
         val cBands = withBands(shingled(corpusR, "__cid")
           .filter(size(col("sh")) > 0), "__cid", keepSh = false)
-        val hitP = cBands
+        val hitIds0 = graft.engine.CacheScope.cache(cBands
           .join(bBands.select("band", "bucket").distinct(),
             Seq("band", "bucket"), "left_semi")
-          .select("__cid").distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nHits = hitP.count()
-        val hitIds0 = graft.engine.AutoUnpersist.cache(hitP,
-          drainFirst = true)
+          .select("__cid").distinct())
+        val nHits = hitIds0.count()
         val hitIds = if (nHits <= 1000000L) broadcast(hitIds0) else hitIds0
         val cFetch = shingled(corpusR, "__cid")
           .join(hitIds, Seq("__cid"), "left_semi")
@@ -478,9 +467,7 @@ object Dedup {
           bBands.join(cHits, Seq("band", "bucket"))
         }
     }
-    nearDupVerdicts(batch,
-      graft.engine.AutoUnpersist.cache(bBase, drainFirst = true),
-      cand, idCol, threshold)
+    nearDupVerdicts(batch, bBase, cand, idCol, threshold)
   }
 
   /** Persisted near-dup BAND INDEX — the production regime for
@@ -841,14 +828,11 @@ object Dedup {
     val spark = batch.sparkSession
     val (shingleSize, numHashes, bands, _) =
       nearDupSignature(spark, indexPath, "incrementalNearDupsIndexed")
-    // registered with AutoUnpersist at the END, like the direct path:
-    // the bloom branch's count/build actions would release an
-    // already-registered entry (bBuckets is an unpersisted projection)
     // rebalance before the signing kernel, as in the direct path (r16)
-    val bBase = shingleFrame(graft.operators.Ops.rebalance(batch),
-        idCol, textCol, shingleSize, "__bid")
-      .filter(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bBase = graft.engine.CacheScope.cache(
+      shingleFrame(graft.operators.Ops.rebalance(batch),
+          idCol, textCol, shingleSize, "__bid")
+        .filter(size(col("sh")) > 0))
     val bBands = bandFrame(bBase, "__bid", numHashes, bands, keepSh = false)
     // each open is version-stable internally (openNearDupTable's
     // snapshot bracket); cross-table consistency needs no shared
@@ -876,29 +860,22 @@ object Dedup {
         }
     }
     // the pair set feeds BOTH the hit-id derivation and the candidate
-    // join — without a cache the corpus band scan + join runs twice.
-    // persist FIRST, count SECOND, register with AutoUnpersist LAST
-    // (the q68 ordering: the count is itself an action and would
-    // release an already-registered cache before the verdict join)
-    val pairsP = bBands.join(cBands, Seq("band", "bucket"))
-      .select(col("__bid"), col("__cid")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // join — without a cache the corpus band scan + join runs twice
+    val pairs = graft.engine.CacheScope.cache(
+      bBands.join(cBands, Seq("band", "bucket"))
+        .select(col("__bid"), col("__cid")).distinct())
     // colliding corpus docs' shingles fetch map-side when the hit set
     // broadcasts (the count-gated pattern — collisions are dup-volume-
     // sized by construction)
-    val hitP = pairsP.select("__cid").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nHits = hitP.count()
-    val pairs = graft.engine.AutoUnpersist.cache(pairsP, drainFirst = true)
-    val hitIds0 = graft.engine.AutoUnpersist.cache(hitP, drainFirst = true)
+    val hitIds0 = graft.engine.CacheScope.cache(
+      pairs.select("__cid").distinct())
+    val nHits = hitIds0.count()
     val hitIds = if (nHits <= 1000000L) broadcast(hitIds0) else hitIds0
     val cShingles = openNearDupTable(spark, indexPath, "shingles",
         excludeEpoch)
       .join(hitIds, Seq("__cid"), "left_semi")
     val cand = pairs.join(cShingles, "__cid")
-    nearDupVerdicts(batch,
-      graft.engine.AutoUnpersist.cache(bBase, drainFirst = true),
-      cand, idCol, threshold)
+    nearDupVerdicts(batch, bBase, cand, idCol, threshold)
   }
 
   /** Drop-variant of [[incrementalNearDups]]: the batch rows safe to
@@ -950,7 +927,7 @@ object Dedup {
       case other => sys.error(
         s"sourceOverlap: unknown method '$other' (exact | fingerprint)")
     }
-    val keys = graft.engine.AutoUnpersist.cache(
+    val keys = graft.engine.CacheScope.cache(
       df.select(col(sourceCol).as("source"), keyOf(col(textCol)).as("__k"))
         .filter(col("__k").isNotNull).distinct())
     val totals = broadcast(
@@ -1020,7 +997,7 @@ object Dedup {
     require(bands >= 1 && numHashes % bands == 0,
       s"bands must divide numHashes (got bands=$bands, numHashes=$numHashes)")
     val rowsPerBand = numHashes / bands
-    val base = graft.engine.AutoUnpersist.cache(collapseBySource(df.select(
+    val base = graft.engine.CacheScope.cache(collapseBySource(df.select(
         col(idCol).as("id"), col(sourceCol).as("src"),
         shingleHash(col(textCol), shingleSize).as("grams"))
       .filter(size(col("grams")) > 0)))
@@ -1606,12 +1583,7 @@ object Dedup {
           .agg(sort_array(collect_list(col("pg"))).as("grams"))
           .filter(size(col("grams")) > 0)
     }
-    // Jaccard persists FIRST and registers with AutoUnpersist LAST (after
-    // its df-table action): that collect then both BUILDS the cache and
-    // reads it without counting as the scope's first action
-    val dfTable = m.isInstanceOf[Jaccard]
-    val g = if (dfTable) gf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else gf
+    val g = graft.engine.CacheScope.cache(gf)
     val side = (col("id") +: block.toSeq.map(col)) ++ apart.map(col)
     val (pref, partner) = m match {
       case j: Jaccard =>
@@ -1633,7 +1605,6 @@ object Dedup {
               " + 9999) div 10000 + 1 as int)"))).as("pg"): _*),
           g.select(side :+ explode(col("grams")).as("pg"): _*))
     }
-    graft.engine.AutoUnpersist.cache(g, drainFirst = dfTable)
     val pa = pref.alias("pa")
     val pb = partner.hint("shuffle_hash").alias("pb")
     val (pairRule, lo, hi) = m match {

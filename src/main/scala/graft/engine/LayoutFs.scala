@@ -321,13 +321,19 @@ object LayoutFs {
           s"left it torn; rebuild with $buildVerb"))
 
     /** Write `m` stamped with the current time; returns what was
-      * written. */
+      * written. Every verb that changes the tables ends here, so this
+      * also refreshes any cached frame that reads them: a swap or a
+      * purge moves files by hand, which Spark's cache does not see, and
+      * a cache taken before it (in a scope that spans the verb, or by a
+      * caller outside any scope) would otherwise answer a later read of
+      * the same tables with the old rows. */
     def write(m: Manifest): Manifest = {
       val stamped = m.copy(builtMs = System.currentTimeMillis())
       val out = fs.create(manifestPath, true)
       try out.write(
         stamped.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
+      spark.catalog.refreshByPath(path)
       stamped
     }
 

@@ -128,9 +128,7 @@ object LinearClassifier {
     val dc0 = docs
       .select(col("id").cast("long").as("id"), col("y").cast("long").as("y"))
       .filter(col("id").isNotNull)
-    // explicit persist, NOT AutoUnpersist: the probe agg below is an
-    // action and would release an auto-scoped cache before the epoch
-    // loop reads it (the fitCentroids ordering lesson)
+    // cached for the fit: the probe agg below and every epoch read them
     val fc = fc0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dc = dc0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

@@ -208,9 +208,9 @@ object MatchJoin {
     // groupBy + join-back so WindowGroupLimit prunes harder — was
     // re-measured in r6 AND r16 and REJECTED both times: uncached, the
     // double reference executes the candidate pipeline twice (r16:
-    // q39 2.0 → 2.9 s; AQE stage reuse did not close it); with an
-    // AutoUnpersist cache of the pair table it trades the stats pass
-    // for an O(pairs) materialization — q39 2.0 → 1.5 s locally but
+    // q39 2.0 → 2.9 s; AQE stage reuse did not close it); with a
+    // cache of the pair table it trades the stats pass for an O(pairs)
+    // materialization — q39 2.0 → 1.5 s locally but
     // q29's hot-token pair volume paid 2.4 → 2.9 s, and caching the
     // biggest intermediate is the wrong 100-TB shape (guide §5).
     val w = Window.partitionBy(col("__lid"))

@@ -184,9 +184,8 @@ object Ann {
     // params aggregation are separate actions that each re-scanned and
     // re-decoded the source — 3-4 serial decodes of what is often one
     // file at gate SF, and 3-4 full corpus reads at any scale (the
-    // standard iterative-fit cache, MLlib k-means discipline). Explicit
-    // persist, not AutoUnpersist: the fit's own actions would release
-    // an auto-scoped entry before the later passes read it.
+    // standard iterative-fit cache, MLlib k-means discipline), released
+    // when the build returns.
     val base = corpus.select(col(cId), col(cVec))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -558,16 +557,13 @@ object Ann {
       corpus.select(col(idCol).as("__cid"), col(vecCol).as("__cv")), "__cv")
       .join(tests, Seq("__table", "__bucket"))
       .withColumn("__cos", round(Similarity.cosine(col("__cv"), col("__tv")), 4))
-    val hits = cand.filter(col("__cos") >= threshold)
-      .groupBy(col("__cid")).agg(max(col("__cos")).as("max_cos_q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val verdicts = graft.engine.CacheScope.cache(
+      cand.filter(col("__cos") >= threshold)
+        .groupBy(col("__cid")).agg(max(col("__cos")).as("max_cos_q")))
     // count-gated broadcast (the q68/contaminatedIds decision, same
     // rationale): the verdict set is data-dependent, so hint broadcast
     // only when it is provably executor-safe
-    val n = hits.count()
-    // persist → act → register: the count's own listener event must not
-    // release the entry (drainFirst, the contaminatedIds ordering)
-    val verdicts = graft.engine.AutoUnpersist.cache(hits, drainFirst = true)
+    val n = verdicts.count()
     val side = if (n <= 1000000L) broadcast(verdicts) else verdicts
     corpus.join(side, col(idCol) === col("__cid"), "left")
       .withColumn("contaminated", col("__cid").isNotNull)
@@ -1053,14 +1049,11 @@ object Ann {
     // ONE decode of the corpus (r16, the writeIvfIndexPq note): the
     // inline codebook fit runs a dims probe plus m agg+collect pairs,
     // each of which re-scanned the source; the caller's final action
-    // then reads the cache once more for the encode and releases it
-    // (persist FIRST / fit / register LAST — the q111 ordering).
-    val base = corpus.select(col(cId), col(cVec))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // then reads the cache once more for the encode.
+    val base = graft.engine.CacheScope.cache(corpus.select(col(cId), col(cVec)))
     val cb = pqCodebooks(base, cId, cVec, m, ksub, seed, iters)
     val coded = encodePq(
-      graft.engine.AutoUnpersist.cache(base, drainFirst = true)
-        .select(col(cId).as("__nid"), col(cVec).as("__cv")),
+      base.select(col(cId).as("__nid"), col(cVec).as("__cv")),
       "__cv", cb, "__pqcodes").drop("__cv")
     pqTopKEncoded(queries, coded, cb, qId, qVec, "__nid", "__pqcodes",
       k, excludeSelf)
@@ -1131,12 +1124,12 @@ object Ann {
         col(cVec).as("__cv"))
       .withColumn("__qv", transform(col("__cv"),
         x => floor(x.cast("double") * scale).cast("long")))
-    // the RESIDUAL path caches the assignment EXPLICITLY (not
-    // AutoUnpersist — fitPqQ's dims probe, its per-subspace
-    // agg+collect pairs, and the final encode are all separate ACTIONS
-    // over this frame, and each would otherwise recompute the full
-    // assignment subtree: the residual build spent a measured 10.4 s
-    // at sf0.1 mostly re-assigning the corpus 9×). The raw-space path
+    // the RESIDUAL path caches the assignment for the build: fitPqQ's
+    // dims probe, its per-subspace agg+collect pairs, and the final
+    // encode are all separate ACTIONS over this frame, and each would
+    // otherwise recompute the full assignment subtree (the residual
+    // build spent a measured 10.4 s at sf0.1 mostly re-assigning the
+    // corpus 9×). The raw-space path
     // fits its codebooks on `corpus` directly and runs exactly ONE
     // action over this frame (the coded write), so caching there would
     // be pure overhead — a corpus-sized materialization with zero

@@ -167,9 +167,7 @@ object Cluster {
         (r.getLong(0), r.getSeq[java.lang.Long](1).toIndexedSeq)), k, seed, iters)
     // the quantized frame feeds the init pass PLUS one assignment + one
     // moment aggregation per iteration — without a cache that is
-    // 1 + 2·iters re-reads and re-quantizations of the source. Explicit
-    // persist, NOT AutoUnpersist: the init collect below is itself an
-    // action and would release the cache before the iterations read it.
+    // 1 + 2·iters re-reads and re-quantizations of the source.
     val qdf = qdf0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

@@ -731,23 +731,26 @@ object EventStream {
         // a FOLDED epoch's replay skips the probe too (its verdicts
         // were already acted on; appendNearDupStreamBatch would skip
         // the write anyway) — PATIENT, riding out a concurrent fold's
-        // retraction window
-        if (!batch.isEmpty &&
-            !Dedup.bandIndex(spark, indexPath).manifestPatient()
-              .exists(_.streamMarks.get(tag).exists(epoch <= _))) {
-          val verdicts = Dedup.incrementalNearDupsIndexedImpl(
-            batch, indexPath, idCol, textCol, threshold,
-            bloomFpp = None, excludeEpoch = Some((tag, epoch)))
-          val survivors = batch.join(
-            verdicts.filter(!col("kept")).select(col(idCol)),
-            Seq(idCol), "left_anti")
-          val admitted = Dedup.minhashDedup(survivors, idCol, textCol,
-            threshold, shingleSize = pre._1, numHashes = pre._2,
-            bands = pre._3)
-          Dedup.appendNearDupStreamBatch(admitted, indexPath, idCol,
-            textCol, tag, epoch, pre)
-          Dedup.maybeCompactNearDupIndex(spark, indexPath,
-            afterEpochs = compactAfterEpochs)
+        // retraction window. The probe's caches live for this batch:
+        // they join the batch, so the fold's table reads cannot hit them
+        graft.engine.CacheScope.run {
+          if (!batch.isEmpty &&
+              !Dedup.bandIndex(spark, indexPath).manifestPatient()
+                .exists(_.streamMarks.get(tag).exists(epoch <= _))) {
+            val verdicts = Dedup.incrementalNearDupsIndexedImpl(
+              batch, indexPath, idCol, textCol, threshold,
+              bloomFpp = None, excludeEpoch = Some((tag, epoch)))
+            val survivors = batch.join(
+              verdicts.filter(!col("kept")).select(col(idCol)),
+              Seq(idCol), "left_anti")
+            val admitted = Dedup.minhashDedup(survivors, idCol, textCol,
+              threshold, shingleSize = pre._1, numHashes = pre._2,
+              bands = pre._3)
+            Dedup.appendNearDupStreamBatch(admitted, indexPath, idCol,
+              textCol, tag, epoch, pre)
+            Dedup.maybeCompactNearDupIndex(spark, indexPath,
+              afterEpochs = compactAfterEpochs)
+          }
         }
         ()
       }

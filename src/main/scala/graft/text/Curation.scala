@@ -362,10 +362,8 @@ object Curation {
     // the LM feeds two consumers (totals + the per-token table); cache
     // the VOCAB-SIZED aggregate so a derived LM pipeline (a full corpus
     // scan when built by unigramLm) doesn't execute twice — the same
-    // double-execution hazard the match join documents. AutoUnpersist
-    // releases the cache after the caller's first action (cached tables
-    // otherwise live until unpersist/session end, NOT LRU-evicted).
-    val lmP = graft.engine.AutoUnpersist.cache(lm)
+    // double-execution hazard the match join documents.
+    val lmP = graft.engine.CacheScope.cache(lm)
     // corpus totals ride the plan as a broadcast one-row aggregate (no
     // eager action at plan-build); an EMPTY reference LM would silently
     // null every score, so the totals row fails the job loudly instead.
@@ -491,8 +489,8 @@ object Curation {
       s"biLm needs (w_prev, w, cnt), got ${biLm.columns.mkString(", ")}")
     val lam = lit(lambdaBp / 10000.0)
     val mu = lit((10000 - lambdaBp) / 10000.0)
-    val uniP = graft.engine.AutoUnpersist.cache(uniLm)
-    val biP = graft.engine.AutoUnpersist.cache(biLm)
+    val uniP = graft.engine.CacheScope.cache(uniLm)
+    val biP = graft.engine.CacheScope.cache(biLm)
     val totals = broadcast(uniP.agg(
         sum(col("cnt")).as("__total"), count(lit(1)).as("__v"))
       .select(col("__total"), col("__v"),
@@ -574,8 +572,8 @@ object Curation {
       require(lm.columns.toSeq.contains("token") && lm.columns.toSeq.contains("cnt"),
         s"dsirWeights: $n LM needs (token, cnt) columns, got ${lm.columns.mkString(", ")}")
     }
-    val lmT = graft.engine.AutoUnpersist.cache(targetLm)
-    val lmR = graft.engine.AutoUnpersist.cache(referenceLm)
+    val lmT = graft.engine.CacheScope.cache(targetLm)
+    val lmR = graft.engine.CacheScope.cache(referenceLm)
     // per-LM totals as one-row broadcasts, with unigramLogProb's
     // empty-LM assert (and the same keep-the-assert-alive coalesce
     // plumbing — ColumnPruning drops unreferenced side effects)

@@ -315,7 +315,7 @@ object TextAnalysis {
       n: Int = 13): DataFrame = {
     val grams = wordNgrams(df, idCol, textCol, n)
       .select(col(idCol), xxhash64(col("gram")).as("__g"))
-    val gramsP = graft.engine.AutoUnpersist.cache(grams)
+    val gramsP = graft.engine.CacheScope.cache(grams)
     val shared = gramsP.groupBy("__g").agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= 2)
       .select(col("__g"), lit(true).as("__hot"))
@@ -448,18 +448,14 @@ object TextAnalysis {
           case Some(bf) =>
             val bcast = train.sparkSession.sparkContext.broadcast(bf)
             val might = udf { (h: Long) => bcast.value.mightContainLong(h) }
-            // persist FIRST, count SECOND, register with AutoUnpersist
-            // LAST: the count below is itself an action, and
-            // AutoUnpersist releases on the first action that touches
-            // the entry — registering before the count would unpersist
-            // immediately and the caller's verdict join would re-scan
-            // the whole corpus for the grams (a second 100-TB pass).
-            // This order materializes the id set once; the caller's
-            // action reads the cached rows and then releases them.
-            val idsP = trainGrams.filter(might(col("__gram_h")))
-              .join(testGrams, Seq("__gram_h"), "left_semi")
-              .select(idCol).distinct()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            // cached: the count below materializes the id set once and
+            // the caller's verdict join reads the cached rows instead of
+            // re-scanning the whole corpus for the grams (a second
+            // 100-TB pass)
+            val ids = graft.engine.CacheScope.cache(
+              trainGrams.filter(might(col("__gram_h")))
+                .join(testGrams, Seq("__gram_h"), "left_semi")
+                .select(idCol).distinct())
             // The id set is data-dependent, so it can't be broadcast
             // blindly — but the static planner's alternative is worse in
             // a way the 3-point DecontamBench sweep exposed: it plans
@@ -475,8 +471,7 @@ object TextAnalysis {
             // (≲ tens of MB hashed — executor-safe); a genuinely huge
             // verdict set (mostly-contaminated corpus) keeps the
             // shuffled join, which is then the right plan anyway.
-            val n_ = idsP.count()
-            val ids = graft.engine.AutoUnpersist.cache(idsP, drainFirst = true)
+            val n_ = ids.count()
             if (n_ <= 1000000L) broadcast(ids) else ids
         }
     }
@@ -622,7 +617,7 @@ object TextAnalysis {
     // cached narrow frame: tokens + per-position hashes feed FOUR plan
     // branches (count agg, dup semi-join, token explode, final ntok) —
     // without the cache each branch re-runs the md5 kernel corpus-wide
-    val toks = graft.engine.AutoUnpersist.cache(df
+    val toks = graft.engine.CacheScope.cache(df
       .select(col(idCol).as("id"),
         coalesce(Tools.tokenize(Tools.normalize(col(textCol))),
           array().cast("array<string>")).as("__toks"))
@@ -671,12 +666,10 @@ object TextAnalysis {
   def winnowNearDups(df: DataFrame, idCol: String, textCol: String,
       k: Int = 5, w: Int = 4, threshold: Double = 0.5,
       maxDocFreq: Long = 0L): DataFrame = {
-    // AutoUnpersist-scoped cache of the narrow (id, fp) frame: the plan
-    // fans out to the pair join's two sides, the per-doc counts, and
-    // (optionally) the hot-fp set — without it each branch re-runs the
-    // md5 kernel over the whole corpus; released after the caller's
-    // action (cached tables are NOT LRU-evicted on their own).
-    val fps = graft.engine.AutoUnpersist.cache(winnow(df, idCol, textCol, k, w))
+    // cached narrow (id, fp) frame: the plan fans out to the pair join's
+    // two sides, the per-doc counts, and (optionally) the hot-fp set —
+    // without it each branch re-runs the md5 kernel over the whole corpus
+    val fps = graft.engine.CacheScope.cache(winnow(df, idCol, textCol, k, w))
     val kept = if (maxDocFreq > 0) {
       val hot = fps.groupBy("fp").agg(count(lit(1)).as("__df"))
         .filter(col("__df") > maxDocFreq).select("fp")

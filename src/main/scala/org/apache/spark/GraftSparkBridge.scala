@@ -1,18 +1,16 @@
 package org.apache.spark
 
 /** Bridge into `private[spark]` SparkContext internals — the
-  * GraftBridge pattern one package up. Single use today: draining the
-  * async listener bus so AutoUnpersist's register-after-action ordering
-  * is race-free (QueryExecutionListener events are delivered on the
-  * shared async bus, so an event for an action that COMPLETED before a
-  * cache entry was registered can still arrive after registration and
-  * release the entry early — the q68 PlanQualitySpec flake). */
+  * GraftBridge pattern one package up. One use: draining the async
+  * listener bus before reading what a listener recorded — perfbench's
+  * `Tracer.drain` (job/task metrics and executed plans) and
+  * [[graft.Profile]]'s job list. Operator code never waits on the bus:
+  * caches are released by [[graft.engine.CacheScope]], synchronously. */
 object GraftSparkBridge {
 
   /** Block (bounded) until every queued listener event has been
     * delivered. Returns false instead of throwing on timeout or on a
-    * stopped context — callers treat an undrained bus as "proceed,
-    * accept the tiny race" rather than failing the operator. */
+    * stopped context — callers then read what has arrived so far. */
   def drainListenerBus(sc: SparkContext, timeoutMs: Long = 10000L): Boolean =
     try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch { case scala.util.control.NonFatal(_) => false }

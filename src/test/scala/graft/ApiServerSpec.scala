@@ -308,24 +308,28 @@ class ApiServerSpec extends SparkSpec {
          |      - near_dups: {id: doc_id, text: text, method: minhash}
          |    output: cout
          |""".stripMargin)
-    graft.engine.AutoUnpersist.releaseAll()
     spark.catalog.clearCache()
     val api = new ApiServer(spark, conf).start()
     val base = s"http://localhost:${api.actualPort}/api"
+    // the request or job owns its caches and releases them before it
+    // answers (or reports done), so no wait is needed
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
     try {
       (1 to 3).foreach { _ =>
         assert(send("PUT", s"$base/recipes/pairs/run").statusCode() == 202)
         api.awaitJobs()
+        assert(cacheManager.isEmpty, "cacheManager holds entries after an API recipe run")
       }
-      // the unpersist listener is async — poll briefly
-      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val deadline = System.currentTimeMillis + 30000
-      var ok = false
-      while (!ok && System.currentTimeMillis < deadline) {
-        ok = classic.sharedState.cacheManager.isEmpty
-        if (!ok) Thread.sleep(100)
-      }
-      assert(ok, "cacheManager still holds entries after 3 API recipe runs")
+      val tested = send("PUT", s"$base/recipes/pairs/test")
+      assert(tested.statusCode() == 200, tested.body())
+      assert(tested.body().contains("jaccard"), tested.body())
+      assert(cacheManager.isEmpty, "cacheManager holds entries after a /test request")
+      val applied = sendBody("PUT", s"$base/recipes/pairs/apply",
+        "doc_id;text\n1;alpha beta gamma delta\n2;alpha beta gamma delta\n")
+      assert(applied.statusCode() == 200, applied.body())
+      assert(applied.body().contains("jaccard"), applied.body())
+      assert(cacheManager.isEmpty, "cacheManager holds entries after an /apply request")
     } finally api.stop()
   }
 

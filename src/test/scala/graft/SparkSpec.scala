@@ -61,6 +61,12 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   import scala.jdk.CollectionConverters._
 
+  /** Each case owns the operator caches it builds, like an API request
+    * does: they are released when the case ends, so the shared session
+    * does not pile them up. */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    graft.engine.CacheScope.run(super.withFixture(test))
+
   /** Temp dir removed at JVM exit — use for any on-disk test artifact
     * (index trees, stream sinks, checkpoints). */
   def scratch(prefix: String): String = TestScratch.dir(prefix)

@@ -30,10 +30,6 @@ class UncalledDefSpec extends AnyFunSuite {
   private val allowed = Map(
     "ApiServer.awaitJobs" ->
       "test hook: ApiServerSpec waits for the async recipe jobs it starts",
-    "AutoUnpersist.pendingCount" ->
-      "test hook: AutoUnpersistSpec counts registered, unreleased frames",
-    "AutoUnpersist.releaseAll" ->
-      "test hook: specs release auto-scoped caches between cases",
     "PyExpr.parsePrint" ->
       "test hook: PyExprSpec's parse/re-print grammar property")
 
