@@ -120,12 +120,15 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
 
   def actualPort: Int = server.getAddress.getPort
 
-  /** Sets the reply; [[handle]] sends it once the request's cache scope
-    * has closed. */
-  private def respond(ex: HttpExchange, code: Int, body: String,
+  /** Sets the request's reply; [[handle]] sends it once the request's
+    * cache scope has closed. */
+  private def respond(code: Int, body: String,
       ctype: String = "application/json"): Unit =
-    ex.setAttribute(Reply, (code, body, ctype))
-  private val Reply = "graft.reply"
+    reply.set((code, body, ctype))
+  // the reply of the request on this handler thread. Not an exchange
+  // attribute: the JDK keeps those on the shared "/api" context, so
+  // overlapping requests would read each other's replies
+  private val reply = new ThreadLocal[(Int, String, String)]
 
   private def jsonRows(df: org.apache.spark.sql.DataFrame, limit: Int): String =
     "[" + df.limit(limit).toJSON.collect().mkString(",") + "]"
@@ -225,7 +228,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
       .exists(s => oauthStates.remove(s).exists { case (p, t) =>
         p == provider && System.currentTimeMillis() - t <= oauthStateTtlMs })
     if (params.get("code").isEmpty || !stateOk) {
-      respond(ex, 401, """{"error": "oauth: missing code or bad state"}""")
+      respond(401, """{"error": "oauth: missing code or bad state"}""")
       return
     }
     val http = HttpClient.newHttpClient()
@@ -240,7 +243,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
         .POST(HttpRequest.BodyPublishers.ofString(form)).build(),
       HttpResponse.BodyHandlers.ofString())
     jsonField(tok.body(), "access_token") match {
-      case None => respond(ex, 401, """{"error": "oauth: no access_token"}""")
+      case None => respond(401, """{"error": "oauth: no access_token"}""")
       case Some(at) =>
         val ui = http.send(HttpRequest.newBuilder(java.net.URI.create(pr.userinfoUrl))
             .header("Authorization", s"Bearer $at")
@@ -250,7 +253,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
           .orElse(jsonField(ui.body(), "email"))
           .orElse(jsonField(ui.body(), "id"))
         user match {
-          case None => respond(ex, 401, """{"error": "oauth: no user in userinfo"}""")
+          case None => respond(401, """{"error": "oauth: no user in userinfo"}""")
           case Some(u) =>
             val session = newToken()
             sessions.put(session, u)
@@ -259,9 +262,9 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
                 ex.getResponseHeaders.set("Location", f)
                 ex.getResponseHeaders.add("Set-Cookie",
                   s"graft_token=$session; Path=/; HttpOnly")
-                respond(ex, 302, s"""{"user": ${q(u)}, "token": ${q(session)}}""")
+                respond(302, s"""{"user": ${q(u)}, "token": ${q(session)}}""")
               case None =>
-                respond(ex, 200, s"""{"user": ${q(u)}, "token": ${q(session)}}""")
+                respond(200, s"""{"user": ${q(u)}, "token": ${q(session)}}""")
             }
         }
     }
@@ -270,18 +273,18 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
   /** One request in one [[CacheScope]]; the reply goes out after it
     * closes, so a client holding the response finds the request's
     * operator caches released. */
-  private def handle(ex: HttpExchange): Unit = {
+  private def handle(ex: HttpExchange): Unit = try {
     CacheScope.run(route(ex))
-    ex.getAttribute(Reply) match {
-      case (code: Int, body: String, ctype: String) =>
+    reply.get match {
+      case null => // the SSE tail wrote and closed its own stream
+      case (code, body, ctype) =>
         val bytes = body.getBytes(StandardCharsets.UTF_8)
         ex.getResponseHeaders.set("Content-Type", ctype)
         ex.sendResponseHeaders(code, bytes.length)
         ex.getResponseBody.write(bytes)
         ex.close()
-      case _ => // the SSE tail wrote and closed its own stream
     }
-  }
+  } finally reply.remove()
 
   private def route(ex: HttpExchange): Unit = try {
     val path = ex.getRequestURI.getPath.stripSuffix("/")
@@ -304,7 +307,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
     // round trip, current-user probe, logout
     (method, path.split("/").drop(2).toList) match {
       case ("GET", List("authorize")) =>
-        respond(ex, 200, s"""{"providers": ${
+        respond(200, s"""{"providers": ${
           oauth.keys.toSeq.sorted.map(q).mkString("[", ",", "]")}}""")
         return
       case ("GET", List("authorize", p)) if oauth.contains(p) =>
@@ -319,48 +322,48 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
           s"&redirect_uri=${enc(callbackUrl(ex, p))}" +
           s"&response_type=code&scope=${enc(pr.scope)}&state=$state"
         ex.getResponseHeaders.set("Location", loc)
-        respond(ex, 302, s"""{"redirect": ${q(loc)}}""")
+        respond(302, s"""{"redirect": ${q(loc)}}""")
         return
       case ("GET", List("callback", p)) if oauth.contains(p) =>
         handleOAuthCallback(ex, p, params)
         return
       case ("GET", List("login")) =>
         sessionUser(ex) match {
-          case Some(u) => respond(ex, 200, s"""{"user": ${q(u)}}""")
+          case Some(u) => respond(200, s"""{"user": ${q(u)}}""")
           case None if authorized(ex) => // static key, or open dev mode
-            respond(ex, 200, """{"user": "admin"}""")
-          case None => respond(ex, 401, """{"error": "unauthorized"}""")
+            respond(200, """{"user": "admin"}""")
+          case None => respond(401, """{"error": "unauthorized"}""")
         }
         return
       case (_, List("logout")) =>
         bearerOf(ex).foreach(sessions.remove)
-        respond(ex, 200, """{"logout": "ok"}""")
+        respond(200, """{"logout": "ok"}""")
         return
       case _ => ()
     }
 
     if (!authorized(ex)) {
-      respond(ex, 401, """{"error": "unauthorized"}""")
+      respond(401, """{"error": "unauthorized"}""")
       return
     }
 
     (method, path.split("/").drop(2).toList) match {
       case ("GET", List("datasets")) =>
-        respond(ex, 200, cfg.datasets.keys.toSeq.sorted
+        respond(200, cfg.datasets.keys.toSeq.sorted
           .map(q).mkString("[", ",", "]"))
 
       case ("GET", List("recipes")) =>
-        respond(ex, 200, cfg.recipes.keys.toSeq.sorted
+        respond(200, cfg.recipes.keys.toSeq.sorted
           .map(q).mkString("[", ",", "]"))
 
       case ("GET", List("conf")) =>
-        respond(ex, 200,
+        respond(200,
           s"""{"projects": ${projects.keys.toSeq.sorted.map(q).mkString("[", ",", "]")}, """ +
             s""""datasets": ${cfg.datasets.keys.toSeq.sorted.map(q).mkString("[", ",", "]")}, """ +
             s""""recipes": ${cfg.recipes.keys.toSeq.sorted.map(q).mkString("[", ",", "]")}}""")
 
       case ("GET", List("conf", project)) if projects.contains(project) =>
-        respond(ex, 200, projects(project)._2, ctype = "application/yaml")
+        respond(200, projects(project)._2, ctype = "application/yaml")
 
       case ("PUT" | "POST", List("conf", project)) =>
         val yaml = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -369,18 +372,18 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
         // re-declaring a runtime-deleted dataset revives it — a
         // tombstone records a delete, not a permanent ban
         parsed.datasets.keys.foreach(deletedDatasets.remove)
-        respond(ex, 200, s"""{"project": ${q(project)}, """ +
+        respond(200, s"""{"project": ${q(project)}, """ +
           s""""datasets": ${parsed.datasets.size}, "recipes": ${parsed.recipes.size}}""")
 
       case ("DELETE", List("conf", project)) if projects.contains(project) =>
         projects.remove(project)
-        respond(ex, 200, s"""{"deleted": ${q(project)}}""")
+        respond(200, s"""{"deleted": ${q(project)}}""")
 
       case ("POST", List("datasets", name)) if cfg.datasets.contains(name) =>
         val sizeOpt = intKnob(params, "size", 500) // connector.sample default
         val seedOpt = params.get("seed").fold(Option(42L))(_.toLongOption)
         if (sizeOpt.isEmpty || seedOpt.isEmpty)
-          respond(ex, 400,
+          respond(400,
             """{"error": "size must be a positive integer, seed an integer"}""")
         else {
           val df0 = RecipeConf.read(spark, cfg.datasets(name))
@@ -389,7 +392,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
           val df = if (params.get("random").contains("true"))
             df0.orderBy(org.apache.spark.sql.functions.rand(seedOpt.get))
           else df0
-          respond(ex, 200, jsonRows(df, sizeOpt.get))
+          respond(200, jsonRows(df, sizeOpt.get))
         }
 
       // per-column profile — the aggregate companion of the sample
@@ -410,7 +413,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
         val note =
           if (exact) "exact distincts plan an Expand (rows x columns replication); cost grows with column count - use the approx default on large datasets"
           else "n_distinct is approximate (HLL++, ~2% typical error); pass exact=true for exact distincts on small datasets"
-        respond(ex, 200, s"""{"mode":${q(if (exact) "exact" else "approx")},""" +
+        respond(200, s"""{"mode":${q(if (exact) "exact" else "approx")},""" +
           s""""note":${q(note)},"rows":${jsonRows(prof, 1000)}}""") // one row per input column
 
       // search proxy over a native index dataset (docs + postings,
@@ -426,8 +429,8 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
         val toks = params.getOrElse("q", "").replace('+', ' ')
           .split("\\s+").filter(_.nonEmpty).toSeq
         if (sizeOpt.isEmpty)
-          respond(ex, 400, """{"error": "size must be a positive integer"}""")
-        else if (toks.isEmpty) respond(ex, 400, """{"error": "q required"}""")
+          respond(400, """{"error": "size must be a positive integer"}""")
+        else if (toks.isEmpty) respond(400, """{"error": "q required"}""")
         else {
           // tombstone-aware reads (Sinks.deleteFromIndexed): a
           // taken-down doc neither scores nor surfaces. ONE version
@@ -451,7 +454,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
             .orderBy(col("_score").desc, col("_id"))
             .limit(sizeOpt.get)
             .join(docs, Seq("_id"))
-          respond(ex, 200, jsonRows(hits.orderBy(col("_score").desc, col("_id")), sizeOpt.get))
+          respond(200, jsonRows(hits.orderBy(col("_score").desc, col("_id")), sizeOpt.get))
         }
 
       // vector-search proxy — the ANN counterpart of _search for the
@@ -478,20 +481,20 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
           .split(",").map(_.trim).filter(_.nonEmpty).map(_.toFloat))
           .getOrElse(Array.empty[Float])
         if (vec.isEmpty)
-          respond(ex, 400,
+          respond(400,
             """{"error": "vector required (comma-separated floats)"}""")
         else if (kOpt.isEmpty || nprobeOpt.isEmpty)
-          respond(ex, 400,
+          respond(400,
             """{"error": "k and nprobe must be positive integers"}""")
         else if (!Seq("brute", "lsh").contains(
             params.getOrElse("method", "brute")))
           // same 400 treatment: a typo'd knob is a client fault
-          respond(ex, 400, """{"error": "unknown method (brute | lsh)"}""")
+          respond(400, """{"error": "unknown method (brute | lsh)"}""")
         else if (ds.format == "ann_index" && params.contains("method"))
           // an ann_index probe IS the IVF path — silently ignoring an
           // explicit method request would hand back results the client
           // did not ask for
-          respond(ex, 400,
+          respond(400,
             """{"error": "method applies to plain datasets; an """ +
               """ann_index dataset always probes its IVF index"}""")
         else {
@@ -531,9 +534,9 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
               val metric = h.columns
                 .find(c => c == "score" || c == "d2q" || c == "d2pq")
                 .getOrElse("score")
-              respond(ex, 200, jsonRows(
+              respond(200, jsonRows(
                 h.select("neighbor_id", metric, "rank").orderBy("rank"), k))
-            case None => respond(ex, 400,
+            case None => respond(400,
               """{"error": "id and vec column params required unless """ +
                 """the dataset is an ann_index"}""")
           }
@@ -541,11 +544,11 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
 
       case ("PUT", List("recipes", name, "test")) if cfg.recipes.contains(name) =>
         intKnob(params, "size", 30) match { // test_chunk_size default
-          case None => respond(ex, 400,
+          case None => respond(400,
             """{"error": "size must be a positive integer"}""")
           case Some(n) =>
             val df = RecipeConf.run(spark, cfg, name, testLimit = Some(n))
-            respond(ex, 200, jsonRows(df, n))
+            respond(200, jsonRows(df, n))
         }
 
       case ("PUT", List("recipes", name, "run")) if cfg.recipes.contains(name) =>
@@ -585,7 +588,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
               jobs(id) = s"failed: ${e.getMessage}"
           }
         }
-        respond(ex, 202, s"""{"job": $id, "recipe": ${q(name)}}""")
+        respond(202, s"""{"job": $id, "recipe": ${q(name)}}""")
 
       // ---- recipe introspection: yaml / status / log with SSE tail
       // (api.py:840-935)
@@ -596,8 +599,8 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
         projectsOrdered.reverse.collectFirst {
           case (_, yaml, p) if p.recipes.contains(name) => yaml
         } match {
-          case Some(y) => respond(ex, 200, y, ctype = "text/plain")
-          case None => respond(ex, 404, """{"error": "no stored yaml for recipe"}""")
+          case Some(y) => respond(200, y, ctype = "text/plain")
+          case None => respond(404, """{"error": "no stored yaml for recipe"}""")
         }
 
       case ("GET", List("recipes", name, "status")) if cfg.recipes.contains(name) =>
@@ -613,14 +616,14 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
             case None => "unknown"
           })
           .getOrElse("down")
-        respond(ex, 200, s"""{"recipe": ${q(name)}, "status": ${q(st)}}""")
+        respond(200, s"""{"recipe": ${q(name)}, "status": ${q(st)}}""")
 
       case ("GET", List("recipes", name, "log")) if cfg.recipes.contains(name) =>
         val running = jobRecipes.toSeq.filter(_._2 == name).map(_._1)
           .exists(id => jobs.get(id).contains("running"))
         val buf = logs.get(name)
         if (!running) // finished (or never ran): full log as plain text
-          respond(ex, 200, buf.map(b => b.synchronized(b.toString)).getOrElse(""),
+          respond(200, buf.map(b => b.synchronized(b.toString)).getOrElse(""),
             ctype = "text/plain")
         else {
           // SSE tail while the job is live: stream what's there, poll for
@@ -662,7 +665,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
         val d = cfg.datasets(name)
         val opts = if (d.options.isEmpty) ""
           else d.options.map { case (k, v) => s"      $k: $v" }.mkString("\n    options:\n", "\n", "")
-        respond(ex, 200,
+        respond(200,
           s"""datasets:
              |  $name:
              |    path: ${d.path}
@@ -671,10 +674,10 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
 
       case ("DELETE", List("datasets", name)) if cfg.datasets.contains(name) =>
         deletedDatasets(name) = ()
-        respond(ex, 200, s"""{"deleted": ${q(name)}}""")
+        respond(200, s"""{"deleted": ${q(name)}}""")
 
       case ("GET", List("jobs")) =>
-        respond(ex, 200, jobs.toSeq.sortBy(_._1)
+        respond(200, jobs.toSeq.sortBy(_._1)
           .map { case (id, st) => s"""{"job": $id, "status": ${q(st)}}""" }
           .mkString("[", ",", "]"))
 
@@ -682,19 +685,19 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
       case ("GET", List("upload")) =>
         val files = Option(uploads.toFile.listFiles()).getOrElse(Array.empty)
           .filter(_.isFile).map(_.getName).sorted.toSeq
-        respond(ex, 200, files.map(q).mkString("[", ",", "]"))
+        respond(200, files.map(q).mkString("[", ",", "]"))
 
       case ("POST" | "PUT", List("upload", file)) =>
         val name = safeName(file)
         java.nio.file.Files.write(uploads.resolve(name),
           ex.getRequestBody.readAllBytes())
-        respond(ex, 200, s"""{"upload_status": {${q(name)}: "ok"}}""")
+        respond(200, s"""{"upload_status": {${q(name)}: "ok"}}""")
 
       case ("DELETE", List("upload", file)) =>
         val p = uploads.resolve(safeName(file))
         if (java.nio.file.Files.deleteIfExists(p))
-          respond(ex, 200, s"""{"file": ${q(safeName(file))}, "status": "deleted"}""")
-        else respond(ex, 404, s"""{"file": ${q(safeName(file))}, "status": "not found"}""")
+          respond(200, s"""{"file": ${q(safeName(file))}, "status": "deleted"}""")
+        else respond(404, s"""{"file": ${q(safeName(file))}, "status": "not found"}""")
 
       // ---- live chunk: run the recipe on the POSTED csv instead of its
       // declared input — the tutorial's first interaction (api.py:940-963)
@@ -704,14 +707,14 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
         java.nio.file.Files.write(tmp, ex.getRequestBody.readAllBytes())
         try {
           intKnob(params, "size", 30) match { // test_chunk_size
-            case None => respond(ex, 400,
+            case None => respond(400,
               """{"error": "size must be a positive integer"}""")
             case Some(n) =>
               val input = graft.sources.Sources.csv(spark, tmp.toString,
                 sep = params.getOrElse("sep", ";"))
               val out = RecipeConf.compileRecipe(spark, cfg,
                 cfg.recipes(name))(input.limit(n))
-              respond(ex, 200, jsonRows(out, n))
+              respond(200, jsonRows(out, n))
           }
         } finally java.nio.file.Files.deleteIfExists(tmp)
 
@@ -721,7 +724,7 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
       case ("POST", List("datasets", name, "_update", id)) if cfg.datasets.contains(name) =>
         val ds = cfg.datasets(name)
         if (ds.format != "parquet")
-          respond(ex, 403, """{"error": "only parquet datasets support _update"}""")
+          respond(403, """{"error": "only parquet datasets support _update"}""")
         else {
           import org.apache.spark.sql.functions.lit
           val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -739,15 +742,15 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
           // lock (upsertPartial), so concurrent updates cannot capture a
           // file listing another update's commit is about to delete.
           graft.sources.Sinks.upsertPartial(typed, ds.path, idCol)
-          respond(ex, 200, s"""{"_id": ${q(id)}, "result": "updated"}""")
+          respond(200, s"""{"_id": ${q(id)}, "result": "updated"}""")
         }
 
       case _ =>
-        respond(ex, 404, s"""{"error": "not found", "path": ${q(path)}}""")
+        respond(404, s"""{"error": "not found", "path": ${q(path)}}""")
     }
   } catch {
     case e: Throwable =>
-      respond(ex, 500, s"""{"error": ${q(String.valueOf(e.getMessage))}}""")
+      respond(500, s"""{"error": ${q(String.valueOf(e.getMessage))}}""")
   }
 
   // handlers must NOT share the dispatcher thread: the SSE log tail

@@ -12,7 +12,9 @@ import org.apache.spark.storage.StorageLevel
   * table) marks it with [[cache]]; the code that runs the actions — an
   * API request, a recipe job, a micro-batch, one Verify query — wraps
   * them in `CacheScope.run { … }`, and every frame cached inside is
-  * unpersisted when the scope closes. Cached tables are not evicted at
+  * unpersisted when the scope closes, or, if scopes on other threads
+  * built an equal plan and so share its entry, when the last of them
+  * closes. Cached tables are not evicted at
   * action end on their own, so in a long-lived session (the API server,
   * repeated recipe runs) an unowned cache lives until session stop.
   *
@@ -23,16 +25,25 @@ import org.apache.spark.storage.StorageLevel
   * verbs: each one refreshes it ([[LayoutFs.Artifact.write]]). */
 object CacheScope {
 
-  // a plain ThreadLocal: an inheritable one would hand the scope's frames
-  // to the Spark pool threads started inside it
-  private val frames = new ThreadLocal[ArrayBuffer[DataFrame]]
+  /** A cache entry that open scopes own, and how many of them hold it. */
+  private final class Entry(val df: DataFrame) { var holders = 1 }
 
-  /** Run `body`, then unpersist every frame [[cache]]d inside it, also
-    * when it throws. A nested scope joins the outer one. */
+  // every entry an open scope holds, across threads. Spark keeps one
+  // entry per plan, so two requests that build an equal plan share it;
+  // it is released when the last scope holding it closes
+  private val held = ArrayBuffer.empty[Entry]
+
+  // a plain ThreadLocal: an inheritable one would hand the scope's
+  // entries to the Spark pool threads started inside it
+  private val frames = new ThreadLocal[ArrayBuffer[Entry]]
+
+  /** Run `body`, then release every entry [[cache]]d inside it that no
+    * other open scope holds, also when it throws. A nested scope joins
+    * the outer one. */
   def run[T](body: => T): T =
     if (frames.get != null) body
     else {
-      val own = ArrayBuffer.empty[DataFrame]
+      val own = ArrayBuffer.empty[Entry]
       frames.set(own)
       try body
       finally {
@@ -41,21 +52,33 @@ object CacheScope {
         // released before it, so no release re-plans a dependent entry.
         // A frame of an already stopped session has nothing left to
         // release, and must not mask the body's own exception
-        own.reverseIterator.foreach { df =>
-          try df.unpersist(blocking = false) catch { case NonFatal(_) => }
+        held.synchronized {
+          own.reverseIterator.foreach { e =>
+            e.holders -= 1
+            if (e.holders == 0) {
+              held -= e
+              try e.df.unpersist(blocking = false) catch { case NonFatal(_) => }
+            }
+          }
         }
       }
     }
 
   /** Persist `df` at MEMORY_AND_DISK and record it with the current
-    * scope. A frame some other owner already cached is returned as is:
-    * its owner releases it. */
-  def cache(df: DataFrame): DataFrame =
-    if (df.storageLevel != StorageLevel.NONE) df
-    else {
+    * scope. An equal plan that another open scope cached is joined; one
+    * that an owner outside any scope cached is returned as is: that
+    * owner releases it. */
+  def cache(df: DataFrame): DataFrame = held.synchronized {
+    val own = frames.get
+    if (df.storageLevel == StorageLevel.NONE) {
       val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-      val own = frames.get
-      if (own != null) own += cached
+      if (own != null) { val e = new Entry(cached); held += e; own += e }
       cached
+    } else {
+      if (own != null) held.find(_.df.sameSemantics(df))
+        .filterNot(own.contains)
+        .foreach { e => e.holders += 1; own += e }
+      df
     }
+  }
 }

@@ -333,6 +333,28 @@ class ApiServerSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("overlapping requests each get their own reply") {
+    val api = new ApiServer(spark,
+      RecipeConf.load("datasets: {}\nrecipes: {}")).start()
+    val base = s"http://localhost:${api.actualPort}/api"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      // every route runs on one server context; each 404 echoes its own
+      // path, so a reply that reached another request shows at once
+      val replies = (1 to 8).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(String, Int, String)]] {
+          def call() = (1 to 40).map { i =>
+            val r = get(s"$base/nowhere/$t-$i")
+            (s"$t-$i", r.statusCode(), r.body())
+          }
+        })
+      }.flatMap(_.get().toSeq)
+      val wrong = replies.filterNot { case (p, code, body) =>
+        code == 404 && body.contains(s"/nowhere/$p\"") }
+      assert(wrong.isEmpty, wrong.take(5).mkString("\n"))
+    } finally { pool.shutdownNow(); api.stop() }
+  }
+
   test("forwarded proto/host headers shape redirect_uri only with trustProxyHeaders") {
     def mk(trust: Boolean) = new ApiServer(spark,
       RecipeConf.load("datasets: {}\nrecipes: {}"),

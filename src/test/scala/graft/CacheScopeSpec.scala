@@ -80,6 +80,29 @@ class CacheScopeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(cacheManager.isEmpty)
   }
 
+  test("scopes on two threads share an equal plan's entry until the last one closes") {
+    spark.catalog.clearCache()
+    val joined = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val other = new java.util.concurrent.FutureTask[Long](() =>
+      CacheScope.run {
+        val mine = CacheScope.cache(docs)
+        joined.countDown()
+        release.await()
+        mine.count()
+      })
+    CacheScope.run {
+      assert(CacheScope.cache(docs).count() == 40)
+      new Thread(other).start()
+      joined.await()
+    }
+    assert(docs.storageLevel == StorageLevel.MEMORY_AND_DISK,
+      "the first scope to close released an entry another scope holds")
+    release.countDown()
+    assert(other.get() == 40)
+    assert(cacheManager.isEmpty, "the last scope to close left the entry behind")
+  }
+
   test("outside any scope an entry stays cached") {
     spark.catalog.clearCache()
     try {
