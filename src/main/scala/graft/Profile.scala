@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Job-count profiler for the optimization rounds: runs each named
@@ -15,17 +14,7 @@ object Profile {
     val sfDir = args(0)
     val names = args.drop(1).toIndexedSeq
     require(names.nonEmpty, "usage: Profile <sfDir> <query...>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Int, String)]()
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Int, String)]()

@@ -57,7 +57,7 @@ object SparkEntry {
     // (single main table, no stream/ reads) is the state under test
     "q132" -> "graft-ivfcmp-q132",
     // PQ append: encodes under the STORED per-subspace codebooks
-    // (encodeUnderStoredGeometry's pq branch)
+    // (the PQ layout's encode)
     "q133" -> "graft-ivfapppq-q133",
     // RESIDUAL-PQ append: assigns under the STORED coarse centroids AND
     // encodes residuals under the STORED residual codebooks
@@ -66,7 +66,7 @@ object SparkEntry {
     "q135" -> "graft-ivfstrq-q135",
     // PQ stream append: the pq branch through the epoch sink
     "q142" -> "graft-ivfstrpq-q142",
-    // RESIDUAL-PQ stream append: the pqRes branch through the epoch sink
+    // RESIDUAL-PQ stream append: the residual encode through the epoch sink
     "q143" -> "graft-ivfstrpqr-q143",
     // build + append, then a YAML takedown: probes must suppress the
     // tombstoned ids while they physically remain (pre-compaction)
@@ -121,7 +121,7 @@ object SparkEntry {
       : (String, String) = {
     val bandIdx = idxDir("q138", dir)
     val docIdx = idxDir("q139", dir)
-    if (!idxBuilt.contains(bandIdx)) {
+    buildOnce(bandIdx) {
       val d = t(s, dir, "documents")
       val (_, corpus) = nearDupFixture(s, dir)
       Dedup.writeNearDupIndex(corpus, "doc_id", "text", bandIdx)
@@ -163,7 +163,6 @@ object SparkEntry {
       graft.conf.RecipeConf.run(s, conf, "takedown", mode = "delete")
       graft.conf.RecipeConf.run(s, conf, "fold_band", mode = "compact")
       graft.conf.RecipeConf.run(s, conf, "fold_doc", mode = "compact")
-      idxBuilt.add(bandIdx)
     }
     (bandIdx, docIdx)
   }
@@ -210,29 +209,21 @@ object SparkEntry {
 
   /** Shared accumulation history for the stream-append gates (q131,
     * and q132's pre-fold state): wipe idx + checkpoint (a pid-recycled
-    * leftover stream/ table would double rows), build the float index
-    * on the EVEN half, then stream the ODD half into the index's
+    * leftover stream/ table would double rows), build the index in
+    * `layout` on the EVEN half, then stream the ODD half into the index's
     * epoch-partitioned stream/ table (appendIvfIndexStream — each
     * micro-batch encodes under the STORED geometry). */
   private def buildHalfStreamRest(s: SparkSession, dir: String,
-      idx: String, ckptTag: String, quantize: Boolean = false,
-      pq: Boolean = false, pqr: Boolean = false): Unit = {
+      idx: String, ckptTag: String,
+      layout: Ann.IvfLayout = Ann.IvfLayout.Float, nlist: Int = 16): Unit = {
     val e = t(s, dir, "embeddings")
     val ckpt = scratchDir(ckptTag, tag = dir)
     Seq(idx, ckpt).foreach { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
     }
-    if (pq)
-      Ann.writeIvfIndexPq(e.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nlist = 16, m = 4, ksub = 8)
-    else if (pqr)
-      Ann.writeIvfIndexPq(e.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nlist = 8, m = 4, ksub = 8,
-        residual = true)
-    else
-      Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nlist = 16, quantize = quantize)
+    Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
+      "vec_id", "embedding", idx, nlist = nlist, layout = layout)
     val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
@@ -240,6 +231,26 @@ object SparkEntry {
       stream.filter(col("vec_id") % 2 =!= 0).select("vec_id", "embedding"),
       idx, "vec_id", "embedding", checkpoint = ckpt)
     q.processAllAvailable(); q.stop()
+  }
+
+  /** The IVF lines' probe: every 100th embedding queries the index at
+    * `idx` for its top 10 over `nprobe` cells (nprobe = nlist is
+    * exhaustive, hence equal to the layout's brute-force oracle). */
+  private def probeIvf(s: SparkSession, idx: String, e: DataFrame,
+      nprobe: Int = 16): DataFrame =
+    Ann.ivfIndexTopKAuto(s, idx, e.filter(col("vec_id") % 100 === 0),
+      "vec_id", "embedding", k = 10, nprobe = nprobe)
+
+  /** A `_build` line: rebuild line `q`'s index unconditionally (Bench
+    * times the build here), mark it built so every later probe sample
+    * is pure probe, and return its cell layout summary. */
+  private def ivfBuildLine(s: SparkSession, dir: String, q: String,
+      nlist: Int, layout: Ann.IvfLayout): DataFrame = {
+    val idx = idxDir(q, dir)
+    Ann.writeIvfIndex(t(s, dir, "embeddings"), "vec_id", "embedding", idx,
+      nlist = nlist, layout = layout)
+    idxBuilt.add(idx)
+    ivfCellSummary(s, idx)
   }
 
   /** Shared pid-scoped scratch-dir contract (q60/q62/q64): bounded (one
@@ -278,6 +289,13 @@ object SparkEntry {
     * never probe stale state. */
   private val idxBuilt =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Run `build` unless THIS JVM already built `idx`, marking it built
+    * only AFTER the build returns: add-before-build would let a thrown
+    * build poison the guard and make every later probe read the
+    * missing index (the hazard the guard exists to prevent). */
+  private def buildOnce(idx: String)(build: => Unit): Unit =
+    if (!idxBuilt.contains(idx)) { build; idxBuilt.add(idx); () }
 
   /** q130's batch-trained router weights, once per (SESSION, sfdir) —
     * the q60/ensureNearIdx build-once discipline: production trains
@@ -390,10 +408,9 @@ object SparkEntry {
     * its path. */
   private[graft] def ensureNearIdx(s: SparkSession, dir: String): String = {
     val idx = idxDir("q107", dir)
-    if (!idxBuilt.contains(idx)) {
+    buildOnce(idx) {
       graft.dedup.Dedup.writeNearDupIndex(
         nearDupFixture(s, dir)._2, "doc_id", "text", idx)
-      idxBuilt.add(idx)
     }
     idx
   }
@@ -738,12 +755,8 @@ object SparkEntry {
     // columns only — the driver harness canonicalizes frames through
     // pandas sort_values, which cannot hash an array cell (r8's one
     // red row); the full per-coordinate centroid table is q74's job.
-    "q60_ann_ivf_build" -> ((s, dir) => {
-      Ann.writeIvfIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
-        idxDir("q60", dir), nlist = 16)
-      idxBuilt.add(idxDir("q60", dir))
-      ivfCellSummary(s, idxDir("q60", dir))
-    }),
+    "q60_ann_ivf_build" -> ((s, dir) =>
+      ivfBuildLine(s, dir, "q60", nlist = 16, Ann.IvfLayout.Float)),
 
     // the three persisted quantized builds as their own gate + bench
     // lines (round-12 verdict #2: r11 mixed these one-time builds into
@@ -754,28 +767,16 @@ object SparkEntry {
     // centroid norms): the coarse geometry is the quantized-integer
     // k-means shared across all three layouts, so the oracle is
     // q60_ann_ivf_build's replay at the matching nlist.
-    "q116_ann_ivf_quantized_build" -> ((s, dir) => {
-      Ann.writeIvfIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
-        idxDir("q116", dir), nlist = 16, quantize = true)
-      idxBuilt.add(idxDir("q116", dir))
-      ivfCellSummary(s, idxDir("q116", dir))
-    }),
+    "q116_ann_ivf_quantized_build" -> ((s, dir) =>
+      ivfBuildLine(s, dir, "q116", nlist = 16, Ann.IvfLayout.Sq8)),
 
-    "q122_ann_ivf_pq_build" -> ((s, dir) => {
-      Ann.writeIvfIndexPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-        idxDir("q122", dir), nlist = 16, m = 4, ksub = 8)
-      idxBuilt.add(idxDir("q122", dir))
-      ivfCellSummary(s, idxDir("q122", dir))
-    }),
+    "q122_ann_ivf_pq_build" -> ((s, dir) =>
+      ivfBuildLine(s, dir, "q122", nlist = 16, Ann.IvfLayout.Pq(4, 8))),
 
-    "q125_ann_ivf_pqr_build" -> ((s, dir) => {
-      Ann.writeIvfIndexPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-        idxDir("q125", dir), nlist = 8, m = 4, ksub = 8, residual = true)
-      idxBuilt.add(idxDir("q125", dir))
-      ivfCellSummary(s, idxDir("q125", dir))
-    }),
+    "q125_ann_ivf_pqr_build" -> ((s, dir) =>
+      ivfBuildLine(s, dir, "q125", nlist = 8, Ann.IvfLayout.PqResidual(4, 8))),
 
-    // IVF ANN over a PERSISTED index (Ann.writeIvfIndex + ivfIndexTopK)
+    // IVF ANN over a PERSISTED index (Ann.writeIvfIndex + ivfIndexTopKAuto)
     // — the 100-TB scale path: k-means cell layout, hive-partitioned
     // write, partition-pruned probe read. nprobe = nlist makes probing
     // exhaustive, hence EXACT: the result hash-matches the same oracle
@@ -789,16 +790,11 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
       // skip the rebuild only when THIS JVM built the index (idxBuilt
       // scaladoc: trusting a leftover on-disk dir would probe stale or
-      // half-written state after a pid recycle or a crashed build).
-      // Mark built only AFTER the write returns — add-before-build would
-      // let a thrown build poison the guard and make every later probe
-      // read the missing index (the hazard the guard exists to prevent).
-      if (!idxBuilt.contains(idx)) {
+      // half-written state after a pid recycle or a crashed build)
+      buildOnce(idx) {
         Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 16)
-        idxBuilt.add(idx)
       }
-      Ann.ivfIndexTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, e)
     }),
 
     // int8-quantized persisted IVF (the FAISS-IVF-SQ8 configuration):
@@ -812,13 +808,11 @@ object SparkEntry {
     "q116_ann_ivf_quantized" -> ((s, dir) => {
       val idx = idxDir("q116", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 16,
-          quantize = true)
-        idxBuilt.add(idx)
+          layout = Ann.IvfLayout.Sq8)
       }
-      Ann.ivfIndexTopKQuantized(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, e)
     }),
 
     // product-quantized ANN (Ann.pqTopK — the FAISS-PQ train/encode/ADC
@@ -846,13 +840,11 @@ object SparkEntry {
     "q122_ann_ivf_pq" -> ((s, dir) => {
       val idx = idxDir("q122", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
-        Ann.writeIvfIndexPq(e, "vec_id", "embedding", idx, nlist = 16,
-          m = 4, ksub = 8)
-        idxBuilt.add(idx)
+      buildOnce(idx) {
+        Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 16,
+          layout = Ann.IvfLayout.Pq(4, 8))
       }
-      Ann.ivfIndexTopKPq(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, e)
     }),
 
     // RESIDUAL IVF-PQ (the true FAISS-IVFPQ train step, Jégou et al.
@@ -866,13 +858,11 @@ object SparkEntry {
     "q125_ann_ivf_pqr" -> ((s, dir) => {
       val idx = idxDir("q125", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
-        Ann.writeIvfIndexPq(e, "vec_id", "embedding", idx, nlist = 8,
-          m = 4, ksub = 8, residual = true)
-        idxBuilt.add(idx)
+      buildOnce(idx) {
+        Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 8,
+          layout = Ann.IvfLayout.PqResidual(4, 8))
       }
-      Ann.ivfIndexTopKPq(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 8)
+      probeIvf(s, idx, e, nprobe = 8)
     }),
 
     // STREAMING ANN probe (EventStream.annProbeStream, round-12
@@ -891,9 +881,8 @@ object SparkEntry {
       import graft.streaming.EventStream
       val idx = idxDir("q60", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 16)
-        idxBuilt.add(idx)
       }
       val out = scratchDir("graft-annstream-out", tag = dir)
       val ckpt = scratchDir("graft-annstream-ckpt", tag = dir)
@@ -929,15 +918,13 @@ object SparkEntry {
     "q126_ann_ivf_append" -> ((s, dir) => {
       val idx = idxDir("q126", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", idx, nlist = 16)
         yamlAppendOddHalf(s, e, idx, "graft-ivfapp-batch", dir,
           """id: vec_id, vec: embedding, nlist: "16", quantize: "false"""")
-        idxBuilt.add(idx)
       }
-      Ann.ivfIndexTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, e)
     }),
 
     // INCREMENTAL QUANTIZED IVF (round-13 verdict #2 — q126 gated only
@@ -945,7 +932,7 @@ object SparkEntry {
     // where geometry drift would corrupt results): build the SQ8 index
     // on the EVEN half — so the int8 grid (params) is fit on the even
     // half ALONE — then YAML-append the odd half, which must encode
-    // under that STORED grid (Ann.appendIvfIndex quant=1; the drift
+    // under that STORED grid (Ann.appendIvfIndex on the SQ8 layout; the drift
     // cross-check sees quantize='sq8' match the manifest). The
     // exhaustive probe then equals brute-force integer-grid ranking
     // over the union WITH every vector quantized under the even-half
@@ -957,15 +944,13 @@ object SparkEntry {
     "q129_ann_ivf_append_sq8" -> ((s, dir) => {
       val idx = idxDir("q129", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
-          "vec_id", "embedding", idx, nlist = 16, quantize = true)
+          "vec_id", "embedding", idx, nlist = 16, layout = Ann.IvfLayout.Sq8)
         yamlAppendOddHalf(s, e, idx, "graft-ivfappq-batch", dir,
           """id: vec_id, vec: embedding, nlist: "16", quantize: "sq8"""")
-        idxBuilt.add(idx)
       }
-      Ann.ivfIndexTopKQuantized(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, e)
     }),
 
     // STREAMING IVF append (EventStream.appendIvfIndexStream — round
@@ -975,20 +960,17 @@ object SparkEntry {
     // so stream and batch append cannot drift) into the index's
     // epoch-partitioned stream/ table — replay-idempotent by dynamic
     // epoch-partition overwrite. The exhaustive probe reads built ∪
-    // streamed (openIvfIndex unions, both sides cell-pruned), and for
+    // streamed (the probe unions them, both sides cell-pruned), and for
     // the FLOAT layout cells only partition — so the answer is
     // q25/q60/q126's brute-force oracle over the union, by
     // construction. Dir + checkpoint wiped before the build (a
     // pid-recycled leftover stream/ table would double rows).
     "q131_ann_ivf_stream_append" -> ((s, dir) => {
       val idx = idxDir("q131", dir)
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfstr-ckpt")
-        idxBuilt.add(idx)
       }
-      Ann.ivfIndexTopK(s, idx,
-        t(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, t(s, dir, "embeddings"))
     }),
 
     // INDEX COMPACTION driver-gated (q131 gates the still-streaming
@@ -1008,7 +990,7 @@ object SparkEntry {
     "q132_ann_ivf_compact" -> ((s, dir) => {
       val idx = idxDir("q132", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfcmp-ckpt")
         val conf = graft.conf.RecipeConf.load(
           s"""datasets:
@@ -1029,14 +1011,12 @@ object SparkEntry {
           .exists(sp),
           s"q132: compaction left the stream/ table behind at $sp — " +
             "the grace collection silently no-opped")
-        idxBuilt.add(idx)
       }
-      Ann.ivfIndexTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, e)
     }),
 
     // INCREMENTAL PQ IVF (q126 gated the float append, q129 the SQ8
-    // grid — this gates encodeUnderStoredGeometry's PQ branch, which
+    // grid — this gates the PQ layout's append encode, which
     // neither reaches): the per-subspace codebooks fit on the EVEN
     // half ALONE, the YAML-appended odd half must encode under those
     // STORED codebooks (an append never refits). The exhaustive probe
@@ -1047,22 +1027,21 @@ object SparkEntry {
     "q133_ann_ivf_append_pq" -> ((s, dir) => {
       val idx = idxDir("q133", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
-        Ann.writeIvfIndexPq(e.filter(col("vec_id") % 2 === 0),
-          "vec_id", "embedding", idx, nlist = 16, m = 4, ksub = 8)
+      buildOnce(idx) {
+        Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
+          "vec_id", "embedding", idx, nlist = 16,
+          layout = Ann.IvfLayout.Pq(4, 8))
         yamlAppendOddHalf(s, e, idx, "graft-ivfapppq-batch", dir,
           """id: vec_id, vec: embedding, nlist: "16",
             |      quantize: "pq", pq_m: "4", pq_ksub: "8"""".stripMargin)
-        idxBuilt.add(idx)
       }
-      Ann.ivfIndexTopKPq(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, e)
     }),
 
     // INCREMENTAL RESIDUAL-PQ IVF — the deepest append path: the
     // appended batch assigns under the STORED coarse centroids AND
     // encodes its residuals (qv − qc[cell]) under the STORED residual
-    // codebooks (encodeUnderStoredGeometry's pqRes branch — the one
+    // codebooks (the residual layout's encode — the one
     // with TWO stored geometries to drift). Oracle = q125's full
     // residual replay with the coarse tower and every residual
     // subspace tower trained on even ids alone, while the final
@@ -1070,38 +1049,33 @@ object SparkEntry {
     "q134_ann_ivf_append_pqr" -> ((s, dir) => {
       val idx = idxDir("q134", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
-        Ann.writeIvfIndexPq(e.filter(col("vec_id") % 2 === 0),
-          "vec_id", "embedding", idx, nlist = 8, m = 4, ksub = 8,
-          residual = true)
+      buildOnce(idx) {
+        Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
+          "vec_id", "embedding", idx, nlist = 8,
+          layout = Ann.IvfLayout.PqResidual(4, 8))
         yamlAppendOddHalf(s, e, idx, "graft-ivfapppqr-batch", dir,
           """id: vec_id, vec: embedding, nlist: "8",
             |      quantize: "pqr", pq_m: "4", pq_ksub: "8"""".stripMargin)
-        idxBuilt.add(idx)
       }
-      Ann.ivfIndexTopKPq(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 8)
+      probeIvf(s, idx, e, nprobe = 8)
     }),
 
     // SQ8 STREAM append (round-14 verdict #4 — the (SQ8, stream) cell
     // was spec-only): the int8 grid fits on the EVEN half ALONE, the
     // odd half ARRIVES AS A STREAM and every micro-batch must
-    // quantize under that STORED grid (encodeUnderStoredGeometry's
-    // SQ8 branch through the epoch sink). The exhaustive probe equals
+    // quantize under that STORED grid (the SQ8 layout's encode
+    // through the epoch sink). The exhaustive probe equals
     // brute-force integer-grid ranking over the union with everything
     // on the even-half params — q129's oracle VERBATIM: stream append
     // ≡ batch append on the quantized layout, by shared-core
     // construction, now pinned at the driver gate.
     "q135_ann_ivf_stream_sq8" -> ((s, dir) => {
       val idx = idxDir("q135", dir)
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfstrq-ckpt",
-          quantize = true)
-        idxBuilt.add(idx)
+          layout = Ann.IvfLayout.Sq8)
       }
-      Ann.ivfIndexTopKQuantized(s, idx,
-        t(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, t(s, dir, "embeddings"))
     }),
 
     // DELETE — the takedown verb at the driver gate (round-14 verdict
@@ -1117,7 +1091,7 @@ object SparkEntry {
     "q136_ann_ivf_delete" -> ((s, dir) => {
       val idx = idxDir("q136", dir)
       val e = t(s, dir, "embeddings")
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         Ann.writeIvfIndex(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", idx, nlist = 16)
         yamlAppendOddHalf(s, e, idx, "graft-ivfdel-batch", dir,
@@ -1139,10 +1113,8 @@ object SparkEntry {
              |  del: {input: ids, steps: [], output: idxw}
              |""".stripMargin)
         graft.conf.RecipeConf.run(s, conf, "del", mode = "delete")
-        idxBuilt.add(idx)
       }
-      Ann.ivfIndexTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, e)
     }),
 
     // band-index APPEND (extend-don't-re-sign — appendToNearDupIndex):
@@ -1156,7 +1128,7 @@ object SparkEntry {
     // verdict and fails the hash.
     "q137_neardup_index_append" -> ((s, dir) => {
       val idx = idxDir("q137", dir)
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         val (_, corpus) = nearDupFixture(s, dir)
         Dedup.writeNearDupIndex(
           corpus.filter(col("doc_id") % 10 =!= 2), "doc_id", "text",
@@ -1177,7 +1149,6 @@ object SparkEntry {
              |  app: {input: batch, steps: [], output: idxw}
              |""".stripMargin)
         graft.conf.RecipeConf.run(s, conf, "app", mode = "append")
-        idxBuilt.add(idx)
       }
       val (batch, _) = nearDupFixture(s, dir)
       Dedup.incrementalNearDupsIndexed(batch, idx, "doc_id", "text",
@@ -1228,7 +1199,7 @@ object SparkEntry {
     // whose epochs the union misses zeroes every verdict.
     "q140_neardup_stream_append" -> ((s, dir) => {
       val idx = idxDir("q140", dir)
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         val ckpt = scratchDir("graft-neardupstr-ckpt", tag = dir)
         Seq(idx, ckpt).foreach { p =>
           val hp = new org.apache.hadoop.fs.Path(p)
@@ -1248,7 +1219,6 @@ object SparkEntry {
         val q = graft.streaming.EventStream.appendNearDupIndexStream(
           holders, idx, "doc_id", "text", checkpoint = ckpt)
         q.processAllAvailable(); q.stop()
-        idxBuilt.add(idx)
       }
       val (batch, _) = nearDupFixture(s, dir)
       Dedup.incrementalNearDupsIndexed(batch, idx, "doc_id", "text",
@@ -1268,7 +1238,7 @@ object SparkEntry {
     // one it admitted, or drops a survivor fails the hash.
     "q141_neardup_admit_stream" -> ((s, dir) => {
       val idx = idxDir("q141", dir)
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         val ckpt = scratchDir("graft-neardupadm-ckpt", tag = dir)
         Seq(idx, ckpt).foreach { p =>
           val hp = new org.apache.hadoop.fs.Path(p)
@@ -1285,7 +1255,6 @@ object SparkEntry {
         val q = graft.streaming.EventStream.nearDupAdmitStream(
           arriving, idx, "doc_id", "text", checkpoint = ckpt)
         q.processAllAvailable(); q.stop()
-        idxBuilt.add(idx)
       }
       val (batch, _) = nearDupFixture(s, dir)
       Dedup.incrementalNearDupsIndexed(batch, idx, "doc_id", "text",
@@ -1296,7 +1265,7 @@ object SparkEntry {
     // stream cell): the per-subspace codebooks fit on the EVEN half
     // ALONE, the odd half ARRIVES AS A STREAM and every micro-batch
     // must encode under those STORED codebooks (q135's scaffold with
-    // the PQ build — encodeUnderStoredGeometry's pq branch through
+    // the PQ build — the PQ layout's encode through
     // the epoch sink). The exhaustive probe equals brute-force ADC
     // ranking over the union with the towers trained on even ids
     // only — q133's oracle VERBATIM: stream append ≡ batch append on
@@ -1305,14 +1274,11 @@ object SparkEntry {
     // path, and its oracle tower is the gate sweep's most expensive.)
     "q142_ann_ivf_stream_pq" -> ((s, dir) => {
       val idx = idxDir("q142", dir)
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfstrpq-ckpt",
-          pq = true)
-        idxBuilt.add(idx)
+          layout = Ann.IvfLayout.Pq(4, 8))
       }
-      Ann.ivfIndexTopKPq(s, idx,
-        t(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 16)
+      probeIvf(s, idx, t(s, dir, "embeddings"))
     }),
 
     // RESIDUAL-PQ STREAM append — the deepest stream cell, completing
@@ -1324,14 +1290,11 @@ object SparkEntry {
     // residual replay with both towers trained on even ids).
     "q143_ann_ivf_stream_pqr" -> ((s, dir) => {
       val idx = idxDir("q143", dir)
-      if (!idxBuilt.contains(idx)) {
+      buildOnce(idx) {
         buildHalfStreamRest(s, dir, idx, "graft-ivfstrpqr-ckpt",
-          pqr = true)
-        idxBuilt.add(idx)
+          layout = Ann.IvfLayout.PqResidual(4, 8), nlist = 8)
       }
-      Ann.ivfIndexTopKPq(s, idx,
-        t(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 10, nprobe = 8)
+      probeIvf(s, idx, t(s, dir, "embeddings"), nprobe = 8)
     }),
 
     // MinHash-LSH near-dup candidate pairs, Jaccard-verified (rows-only)
@@ -3517,7 +3480,7 @@ object SparkEntry {
   /** The IVF build-summary oracle (q60/q116/q122/q125 _build lines):
     * the replayed quantized-integer k-means fit (kmeansOracleCtes) at
     * the layout's nlist, plus one more assignment pass (d5/a5) against
-    * the FINAL centroids — exactly what writeIvfIndex/writeIvfIndexPq
+    * the FINAL centroids — exactly what writeIvfIndex
     * persist as the cell layout: per-cell row counts and the integer
     * centroid norm Σqc² (empty cells appear on neither side). */
   private def ivfBuildOracleSql(nlist: Int): String =

@@ -50,16 +50,19 @@ object Tables {
       t(spark, dir, n).createOrReplaceTempView(n)
     }
 
-  /** Session defaults shared by Verify / Bench / tests. 32 shuffle
-    * partitions for local[32]; AQE on so skewed joins re-plan at runtime;
-    * nanos-as-long so the `events` table (TIMESTAMP_NANOS parquet) loads. */
-  def session(master: String = "local[32]", app: String = "graft"): SparkSession = {
+  /** The session Verify, Profile and Explain share (Bench keeps the
+    * same settings inline, in its timed harness): `local[cpus]` with
+    * `cpus` shuffle partitions (SPARK_GRAFT_CPUS, default 32); AQE on
+    * so skewed joins re-plan at runtime; nanos-as-long so the `events`
+    * table (TIMESTAMP_NANOS parquet) loads; UTC; micros on write; UI
+    * off. */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      : SparkSession = {
     val s = SparkSession.builder()
-      .master(master)
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")

@@ -502,10 +502,9 @@ class ApiServer(spark: SparkSession, conf: ProjectConf, port: Int = 0,
           val queries = Seq((0L, vec)).toDF("query_id", "__q")
           val hits = (ds.format, params.get("id"), params.get("vec")) match {
             case ("ann_index", _, _) =>
-              // dispatch on the index's OWN layout (manifest quant) via
-              // the shared Ann.ivfIndexTopKAuto — the manifest is the
-              // authority; routing by anything client-side would turn a
-              // stale flag into a 500. Scores keep each layout's native
+              // the shared Ann.ivfIndexTopKAuto ranks under the index's
+              // OWN manifest-recorded layout — nothing client-side
+              // names it. Scores keep each layout's native
               // metric column (cosine `score` / integer `d2q` /
               // `d2pq`) — renaming them would hide which metric ranked
               // the hits.

@@ -262,15 +262,9 @@ object RecipeConf {
             s"the index at ${ds.path} was built with '$actual' — " +
             "drifted geometry; rebuild (mode overwrite) to change it")
       ds.options.get("nlist").foreach(v => drift("nlist", v, mf.nlist.toString))
-      ds.options.get("quantize").foreach { v =>
-        val built = mf.quant match {
-          case 0 => "false"; case 1 => "sq8"
-          case _ => if (mf.pqRes == 1) "pqr" else "pq" }
-        val norm = if (v == "true") "sq8" else v
-        drift("quantize", norm, built)
-      }
-      ds.options.get("pq_m").foreach(v => drift("pq_m", v, mf.pqM.toString))
-      ds.options.get("pq_ksub").foreach(v => drift("pq_ksub", v, mf.pqKsub.toString))
+      val declared = annLayout(ds, Some(mf.layout))
+      if (declared != mf.layout)
+        drift("quantize/pq_m/pq_ksub", describe(declared), describe(mf.layout))
       graft.sim.Ann.appendIvfIndex(df,
         cId = ds.options.getOrElse("id",
           sys.error("ann_index sink needs options.id (vector id column)")),
@@ -318,35 +312,20 @@ object RecipeConf {
     case "ann_index" if mode != "create" && mode != "overwrite" =>
       sys.error(s"ann_index sink only supports mode create/overwrite/" +
         s"append/compact/delete, got '$mode'")
-    // options.quantize selects the cell layout: false/absent = float,
-    // true/sq8 = int8 scalar grids (FAISS-IVF-SQ8), pq = product-
-    // quantized m-byte codes (FAISS-IVFPQ; options.pq_m/pq_ksub set the
-    // code geometry). Probe with the matching ann_topk quantized: knob —
-    // each probe refuses the other layouts loudly.
+    // options.quantize selects the cell layout (annLayout): false/absent
+    // = float, true/sq8 = int8 scalar grids (FAISS-IVF-SQ8), pq =
+    // product-quantized m-byte codes (FAISS-IVFPQ; options.pq_m/pq_ksub
+    // set the code geometry), pqr = PQ over RESIDUALS (the true
+    // FAISS-IVFPQ shape). The manifest records it; ann_topk probes read
+    // it from there and never restate it.
     case "ann_index" =>
-      val cId = ds.options.getOrElse("id",
-        sys.error("ann_index sink needs options.id (vector id column)"))
-      val cVec = ds.options.getOrElse("vec",
-        sys.error("ann_index sink needs options.vec (embedding column)"))
-      val nlist = sinkIntOpt(ds, "nlist", 16)
-      ds.options.getOrElse("quantize", "false") match {
-        case "false" => graft.sim.Ann.writeIvfIndex(df, cId, cVec,
-          ds.path, nlist = nlist, quantize = false)
-        case "true" | "sq8" => graft.sim.Ann.writeIvfIndex(df, cId, cVec,
-          ds.path, nlist = nlist, quantize = true)
-        case "pq" => graft.sim.Ann.writeIvfIndexPq(df, cId, cVec,
-          ds.path, nlist = nlist,
-          m = sinkIntOpt(ds, "pq_m", 8), ksub = sinkIntOpt(ds, "pq_ksub", 256))
-        // pqr = PQ over RESIDUALS (the true FAISS-IVFPQ shape); probed
-        // with the same ann_topk quantized: pq — the probe dispatches
-        // on the manifest's pq_res
-        case "pqr" => graft.sim.Ann.writeIvfIndexPq(df, cId, cVec,
-          ds.path, nlist = nlist,
-          m = sinkIntOpt(ds, "pq_m", 8), ksub = sinkIntOpt(ds, "pq_ksub", 256),
-          residual = true)
-        case v => sys.error(
-          s"ann_index sink: options.quantize must be true/false/sq8/pq/pqr, got '$v'")
-      }
+      graft.sim.Ann.writeIvfIndex(df,
+        cId = ds.options.getOrElse("id",
+          sys.error("ann_index sink needs options.id (vector id column)")),
+        cVec = ds.options.getOrElse("vec",
+          sys.error("ann_index sink needs options.vec (embedding column)")),
+        path = ds.path, nlist = sinkIntOpt(ds, "nlist", 16),
+        layout = annLayout(ds, None))
     // persisted near-dup band index (shingles + band tables, manifest
     // last) — the corpus side of incremental near-dup dedup, signed
     // once; same whole-or-nothing contract as ann_index
@@ -527,6 +506,20 @@ object RecipeConf {
         idsSubmitted = Some(submitted), idsMatched = Some(matched))
     } finally { ids.unpersist(); () }
   }
+
+  /** The IVF cell layout an ann_index dataset block declares; a knob it
+    * leaves out reads as the `built` index's, or as the build default. */
+  private def annLayout(ds: DatasetConf, built: Option[graft.sim.Ann.IvfLayout])
+      : graft.sim.Ann.IvfLayout =
+    graft.sim.Ann.IvfLayout.parse(
+      ds.options.getOrElse("quantize", built.fold("false")(_.option)),
+      sinkIntOpt(ds, "pq_m", built.fold(8)(_.m)),
+      sinkIntOpt(ds, "pq_ksub", built.fold(256)(_.ksub)))
+
+  /** A layout in the ann_index options that declare it. */
+  private def describe(l: graft.sim.Ann.IvfLayout): String =
+    if (l.m == 0) s"quantize: ${l.option}"
+    else s"quantize: ${l.option}, pq_m: ${l.m}, pq_ksub: ${l.ksub}"
 
   private def sinkIntOpt(ds: DatasetConf, key: String, dflt: Int): Int = {
     val s = ds.options.getOrElse(key, dflt.toString)
@@ -1458,21 +1451,9 @@ object RecipeConf {
             require(ds.format == "ann_index",
               s"$op: dataset '$name' has format '${ds.format}' — " +
                 "'index' must name an ann_index dataset")
-            // quantized routes to the layout's probe (true/sq8 → int8
-            // grids, pq → ADC); each entry point refuses the other
-            // layouts loudly, so a stale YAML flag cannot silently
-            // score the wrong space
-            knob("quantized", "false") match {
-              case "false" => graft.sim.Ann.ivfIndexTopK(spark, ds.path,
-                df, id, vec, k = k, nprobe = knobInt("nprobe", 4))
-              case "true" | "sq8" => graft.sim.Ann.ivfIndexTopKQuantized(
-                spark, ds.path, df, id, vec, k = k,
-                nprobe = knobInt("nprobe", 4))
-              case "pq" => graft.sim.Ann.ivfIndexTopKPq(spark, ds.path,
-                df, id, vec, k = k, nprobe = knobInt("nprobe", 4))
-              case v => sys.error(
-                s"$op: quantized must be true/false/sq8/pq, got '$v'")
-            }
+            // the index ranks under its own manifest-recorded layout
+            graft.sim.Ann.ivfIndexTopKAuto(spark, ds.path, df, id, vec,
+              k = k, nprobe = knobInt("nprobe", 4))
           case Some(_) => sys.error(s"$op: 'index' is blank — name an " +
             "ann_index dataset or use dataset:/method: for direct scoring")
           case None =>

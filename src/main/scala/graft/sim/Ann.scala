@@ -158,69 +158,64 @@ object Ann {
     * corpus in `assigned/`, hive-PARTITIONED BY the cell id. A probe
     * filters on `__cell`, so Spark prunes whole cell directories at the
     * scan — each query batch reads nprobe/nlist of the corpus bytes,
-    * which is the property that makes IVF work at 100 TB. */
-  /** `quantize = true` builds the FAISS-IVF-SQ8 configuration: cells
-    * store int8 GRIDS (one quarter of the float bytes — the QuantBench
-    * 3.8× parquet measurement — which at 100 TB is the difference in
-    * what a probe's pruned cell scan reads) plus the [[int8Params]]
-    * codebook as a third index table; probes quantize the QUERY under
-    * the stored codebook and rank by the exact integer grid distance
-    * ([[quantizedTopK]]'s contract) via [[ivfIndexTopKQuantized]].
-    * The float and quantized layouts are distinct index formats — the
-    * manifest records which one was built and each probe entry point
-    * refuses the other's layout loudly (scoring float cosine against
-    * grids, or grids against floats, would be silently wrong). */
+    * which is the property that makes IVF work at 100 TB.
+    *
+    * `layout` fixes what the cells store ([[IvfLayout]]: float vectors,
+    * SQ8 grids, PQ or residual-PQ codes) and is recorded in the
+    * manifest; every later probe, append and stream reads it from there.
+    * The coarse quantizer is the same for all four, so one cell geometry
+    * serves every layout. Torn-build discipline: the manifest is
+    * retracted first and re-issued last. */
   def writeIvfIndex(corpus: DataFrame, cId: String, cVec: String,
       path: String, nlist: Int = 16, seed: Long = 42L,
-      quantize: Boolean = false): Unit = {
-    ivf(corpus.sparkSession, path).rebuild()
+      layout: IvfLayout = IvfLayout.Float): Unit = {
+    val spark = corpus.sparkSession
+    ivf(spark, path).rebuild()
+    // ONE decode of the corpus for the whole build (r16): the coarse
+    // fit's regime probe + collect, the codebook fit (SQ8's params
+    // aggregation; PQ's dims probe plus its m per-subspace agg+collect
+    // pairs) and the assignment/write pass are separate actions that
+    // each re-scanned and re-decoded the source — 3-4 decodes for SQ8,
+    // ~12 for raw-space PQ (the standard iterative-fit cache, MLlib
+    // k-means discipline), released when the build returns.
+    val base = corpus.select(col(cId), col(cVec))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
     // deterministic quantized-integer k-means (Cluster.fitCentroids's
     // engine-portable contract) — the cell layout is replayable from
     // (data, nlist, seed) alone, so the index build itself sits under
     // the cross-engine oracle, not just the probe
-    val scale = 10000
-    // ONE decode of the corpus for the whole build (r16): the fit's
-    // regime probe + collect, the assignment/write pass and (SQ8) the
-    // params aggregation are separate actions that each re-scanned and
-    // re-decoded the source — 3-4 serial decodes of what is often one
-    // file at gate SF, and 3-4 full corpus reads at any scale (the
-    // standard iterative-fit cache, MLlib k-means discipline), released
-    // when the build returns.
-    val base = corpus.select(col(cId), col(cVec))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
     val qcents = graft.sim.Cluster.fitCentroidsQ(
-      base, cId, cVec, nlist, seed, iters = 4, scale = scale)
-    val centsQDf = corpus.sparkSession
-      .createDataFrame(qcents).toDF("cid", "qcv")
-    // cell assignment in the SAME integer space the fit ran in: argmin
-    // of Σ(qvᵢ−qcᵢ)², ties to the smaller cell. Rows with a NULL /
-    // wrong-dimension vector keep a NULL cell: they land in the hive
-    // null-partition directory — visible for quarantine, never probed —
-    // instead of failing the whole 100-TB build.
-    val corpusQ = base.select(col(cId).as("neighbor_id"),
-        col(cVec).as("__cv"))
-      .withColumn("__qv", transform(col("__cv"),
-        x => floor(x.cast("double") * scale).cast("long")))
-    val assigned0 = graft.sim.Cluster
-      .clusterAssign(corpusQ, "neighbor_id", "__qv", centsQDf, "cid", "qcv")
-      .withColumn("__cell", col("cluster_id").cast("int"))
-    val assigned =
-      if (!quantize) assigned0.select("neighbor_id", "__cv", "__cell")
-      else {
-        // the codebook is fit on the SAME corpus the cells store, and
-        // persisted as the index's third table — a probe quantizing its
-        // queries under any other params would sit on a different grid
-        val params = int8Params(base, cVec)
-        params.coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-        quantizeInt8(assigned0, "__cv", params, "qvec")
-          .select("neighbor_id", "qvec", "__cell")
-      }
+      base, cId, cVec, nlist, seed, iters = 4, scale = PqScale)
+    val assigned0raw = assignCells(
+      base.select(col(cId).as("neighbor_id"), col(cVec).as("__cv")),
+      spark.createDataFrame(qcents).toDF("cid", "qcv"))
+    // the RESIDUAL fit caches the assignment for the build: fitPqQ's
+    // dims probe, its per-subspace agg+collect pairs and the final
+    // encode are all separate ACTIONS over this frame, and each would
+    // otherwise recompute the full assignment subtree (the residual
+    // build spent a measured 10.4 s at sf0.1 mostly re-assigning the
+    // corpus 9×). Every other layout fits on `base` and runs exactly
+    // ONE action over this frame (the cell write), so caching there
+    // would be a corpus-sized materialization with zero reuse (r12
+    // review).
+    val assigned0 =
+      if (layout.residual) assigned0raw.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else assigned0raw
     // row count observed ON the write itself (r15: the Observation API
     // replaces the former footer-count read-back job — one less Spark
     // job per build, same number)
     val obs = org.apache.spark.sql.Observation()
-    assigned
+    try {
+    val coarse = qcents.map(_._2)
+    // the codebook is fit on the SAME corpus the cells store, and
+    // persisted as the index's third table — a probe quantizing its
+    // queries under any other codebook would sit on a different grid
+    val book = layout.fit(base, cId, cVec, assigned0, coarse, seed)
+    for (b <- book; t <- layout.table)
+      b.coalesce(1).write.mode("overwrite").parquet(s"$path/$t")
+    layout.encode(assigned0, book, coarse)
       // one output dir (and typically one file) per cell. observe ABOVE
       // the exchange (r16, the r15 advice): below it the metric ran in
       // the shuffle map stage, where a fetch-failure retry re-runs map
@@ -229,21 +224,34 @@ object Ann {
       .repartition(col("__cell"))
       .observe(obs, count(lit(1)).as("rows"))
       .write.mode("overwrite").partitionBy("__cell").parquet(s"$path/assigned")
+    } finally { if (layout.residual) { assigned0.unpersist(); () } }
     // centroids table carries both spaces: __centroid (double) feeds the
     // probe's cell ranking, __qcentroid (quantized longs) is the
     // integer-exact artifact oracle checks read
-    corpus.sparkSession.createDataFrame(
+    spark.createDataFrame(
         qcents.map { case (c, qv) =>
-          (c.toInt, qv.map(_.toDouble / scale), qv)
+          (c.toInt, qv.map(_.toDouble / PqScale), qv)
         })
       .toDF("__cell", "__centroid", "__qcentroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     // the certificate, written LAST (rows observed on the write job)
-    ivf(corpus.sparkSession, path).write(buildCert(
-      observedRows(obs, corpus.sparkSession, s"$path/assigned"), nlist,
-      quant = if (quantize) 1 else 0))
+    ivf(spark, path).write(buildCert(
+      observedRows(obs, spark, s"$path/assigned"), nlist, layout))
     } finally { base.unpersist(false); () }
   }
+
+  /** Cell assignment in the SAME integer space the coarse fit ran in:
+    * argmin of Σ(qvᵢ−qcᵢ)², ties to the smaller cell. `rows` carries
+    * (neighbor_id, __cv), `centsQ` (cid, qcv). Rows with a NULL /
+    * wrong-dimension vector keep a NULL cell: they land in the hive
+    * null-partition directory — visible for quarantine, never probed —
+    * instead of failing the whole 100-TB build. */
+  private def assignCells(rows: DataFrame, centsQ: DataFrame): DataFrame =
+    graft.sim.Cluster.clusterAssign(
+        rows.withColumn("__qv", transform(col("__cv"),
+          x => floor(x.cast("double") * PqScale).cast("long"))),
+        "neighbor_id", "__qv", centsQ, "cid", "qcv")
+      .withColumn("__cell", col("cluster_id").cast("int"))
 
   /** The certified row total off a build's Observation, bounded (r16,
     * the r15 advice): `Observation.get` blocks forever if the metrics
@@ -272,20 +280,185 @@ object Ann {
       "writeIvfIndex / the ann_index sink", "neighbor_id", Seq("assigned"),
       Seq("stream"))
 
-  /** A build's certificate. `quant` encodes the LAYOUT: 0 float cells,
-    * 1 int8 scalar grids (SQ8), 2 product-quantized codes (PQ, with
-    * `pq_m`/`pq_ksub`/`pq_res` recording the code geometry a probe must
-    * reuse verbatim). `geom_id` is a fresh geometry identity per
-    * (re)build (nanoTime: two rebuilds in one millisecond still
-    * differ), PRESERVED by append and compaction — the streaming
-    * writer's per-batch tripwire against an out-of-band retrain
+  /** A build's certificate: the cell count, the [[IvfLayout]] (`quant`
+    * 0 float, 1 SQ8, 2 PQ, with `pq_m`/`pq_ksub`/`pq_res` the code
+    * geometry) and `geom_id`, a fresh geometry identity per (re)build
+    * (nanoTime: two rebuilds in one millisecond still differ),
+    * PRESERVED by append and compaction — the streaming writer's
+    * per-batch tripwire against an out-of-band retrain
     * (version/built_ms change on every compaction too). */
-  private def buildCert(rows: Long, nlist: Int, quant: Int, pqM: Int = 0,
-      pqKsub: Int = 0, pqRes: Int = 0) =
-    graft.engine.LayoutFs.Manifest(rows, geometry = Seq(
-      "nlist" -> nlist.toLong, "quant" -> quant.toLong,
-      "pq_m" -> pqM.toLong, "pq_ksub" -> pqKsub.toLong,
-      "pq_res" -> pqRes.toLong, "geom_id" -> System.nanoTime()))
+  private def buildCert(rows: Long, nlist: Int, layout: IvfLayout) =
+    graft.engine.LayoutFs.Manifest(rows, geometry =
+      ("nlist" -> nlist.toLong) +: layout.geometry :+
+        ("geom_id" -> System.nanoTime()))
+
+  /** The cell layout of a persisted IVF index: fixed when the index is
+    * built, recorded in its manifest, and read back from there by every
+    * probe, append and stream — no caller restates it, because ranking
+    * one layout's cells under another layout's metric would be silently
+    * wrong. Each case owns its codebook table, its fit, its encode and
+    * its probe-side ranking:
+    *  - `Float`: cells store the vectors; probes rank by exact cosine
+    *    ([[bruteForceTopK]]'s contract, column `score`).
+    *  - `Sq8`, FAISS-IVF-SQ8: cells store int8 GRIDS (a quarter of the
+    *    float bytes — the QuantBench 3.8× parquet measurement — which at
+    *    100 TB is the difference in what a pruned cell scan reads) under
+    *    the [[int8Params]] codebook in `params/`; probes quantize the
+    *    QUERY under it and rank by the exact integer grid distance
+    *    ([[quantizedTopK]]'s contract, column `d2q`).
+    *  - `Pq(m, ksub)`, FAISS-IVFPQ (Jégou et al. 2011): cells store m
+    *    one-byte codes (16–32× smaller scans than float, vs SQ8's ~4×)
+    *    under the per-subspace codebooks in `pq/`; probes rank by exact
+    *    integer ADC under the stored codebooks ([[pqTopK]]'s contract,
+    *    column `d2pq`) — partition pruning × code shrink multiply.
+    *  - `PqResidual(m, ksub)`, the true IVFPQ train step (Jégou et al.
+    *    §IV): the codebooks fit on — and the codes encode — the integer
+    *    RESIDUALS qv − qc[cell]. Residuals concentrate around zero inside
+    *    every cell, so a fixed codebook budget spends its codewords on
+    *    the within-cell structure the ADC ranks. Both grids share
+    *    [[PqScale]], so the residual is EXACT long subtraction and the
+    *    whole train/encode replays in an external SQL engine (the q125
+    *    oracle); probes build one ADC grid per (query, probed cell).
+    *    Raw-space and residual-space codes are incomparable geometries.
+    *
+    * `option` is the layout's YAML spelling (ann_index
+    * `options.quantize`), `name` its name in error messages. */
+  private[graft] sealed abstract class IvfLayout(val name: String,
+      val option: String, val table: Option[String], quant: Int) {
+    /** PQ code geometry (subspaces, centroids each); 0 for the others. */
+    def m: Int = 0
+    def ksub: Int = 0
+    private[Ann] def residual = this.isInstanceOf[IvfLayout.PqResidual]
+
+    /** The manifest keys: the on-disk format every index keeps. */
+    private[Ann] def geometry: Seq[(String, Long)] = Seq(
+      "quant" -> quant.toLong, "pq_m" -> m.toLong,
+      "pq_ksub" -> ksub.toLong, "pq_res" -> (if (residual) 1L else 0L))
+
+    /** Fit the codebook table on the build's corpus (`base`: id and
+      * vector) or, for residual PQ, on its cell assignment; None for
+      * the float layout. */
+    private[Ann] def fit(base: DataFrame, cId: String, cVec: String,
+        assigned: DataFrame, coarse: IndexedSeq[IndexedSeq[Long]],
+        seed: Long): Option[DataFrame] = this match {
+      case IvfLayout.Float => None
+      case IvfLayout.Sq8 => Some(int8Params(base, cVec))
+      case IvfLayout.Pq(m, ksub) =>
+        Some(pqCodebooks(base, cId, cVec, m, ksub, seed))
+      case IvfLayout.PqResidual(m, ksub) =>
+        // integer residuals: coarse centroids ride a plan literal (the
+        // declared-small nlist × dim table), subtraction is exact on
+        // the shared grid; rows with no cell (NULL/ragged vectors)
+        // yield NULL residuals and sit out of the fit
+        val coarseLit = typedlit(coarse.map(_.toSeq))
+        val res = assigned
+          .filter(col("__cell").isNotNull)
+          .select(col("neighbor_id"),
+            zip_with(col("__qv"),
+              element_at(coarseLit, col("__cell") + 1),
+              (a, b) => a - b).as("__rv"))
+        Some(base.sparkSession.createDataFrame(
+            fitPqQ(res, "neighbor_id", "__rv", m, ksub, seed, iters = 4,
+              preQuantized = true))
+          .toDF("sub", "cid", "qcv"))
+    }
+
+    /** THE encode — the build, [[appendIvfIndex]] and the stream sink
+      * all run it: cell-assigned rows (neighbor_id, __cv, __cell) →
+      * (neighbor_id, payload, __cell), the payload in the layout's own
+      * column (`__cv`, `qvec` or `codes`), under `book` and, for
+      * residual PQ, the coarse centroids (read only there). */
+    private[Ann] def encode(assigned: DataFrame, book: Option[DataFrame],
+        coarse: => IndexedSeq[IndexedSeq[Long]]): DataFrame = {
+      val cells = assigned.select("neighbor_id", "__cv", "__cell")
+      this match {
+        case IvfLayout.Float => cells
+        case IvfLayout.Sq8 =>
+          quantizeInt8(assigned, "__cv", book.get, "qvec")
+            .select("neighbor_id", "qvec", "__cell")
+        case IvfLayout.Pq(_, _) =>
+          encodePq(cells, "__cv", book.get, "codes")
+            .select("neighbor_id", "codes", "__cell")
+        case IvfLayout.PqResidual(_, _) =>
+          encodePqResidual(cells, "__cv", "__cell", coarse, book.get,
+              "codes")
+            .select("neighbor_id", "codes", "__cell")
+      }
+    }
+
+    /** Rank the probed cells' rows: `probes` (query_id, __qv raw,
+      * __cell) against the live cells, under the layout's metric. */
+    private[Ann] def rank(probes: DataFrame, query: => DataFrame,
+        cells: DataFrame, centroids: DataFrame, book: Option[DataFrame],
+        k: Int, excludeSelf: Boolean): DataFrame = this match {
+      case IvfLayout.Float =>
+        scoreAndRank(probes.join(cells, Seq("__cell")), k, excludeSelf)
+      case IvfLayout.Sq8 =>
+        val probesQ = quantizeInt8(probes, "__qv", book.get, "__qq")
+          .select("query_id", "__qq", "__cell")
+        rankByGridDistance(
+          probesQ.join(cells.withColumnRenamed("qvec", "__qc"), Seq("__cell")),
+          k, excludeSelf)
+      case _ =>
+        val (m, dsub, cbSeq) = collectPqCodebooks(book.get)
+        val codes = cells.withColumnRenamed("codes", "__codes")
+        val cand =
+          if (!residual) {
+            // raw-space codes: the ADC grid depends on the query alone —
+            // it rides the (tiny, broadcast) query side and probes
+            // re-attach it by query id so the candidate join stays narrow
+            val qAdc = broadcast(withAdc(query, "__qv", m, dsub, cbSeq,
+              "__adc").drop("__qv"))
+            probes.drop("__qv").join(qAdc, Seq("query_id"))
+              .join(codes, Seq("__cell"))
+          } else {
+            // RESIDUAL codes: the grid depends on (query, probed cell) —
+            // each probe row subtracts its cell's coarse centroid (exact
+            // long arithmetic on the shared grid) and builds its own
+            // ADC. Still queries × nprobe rows: tiny, and the per-row
+            // grid is the same m·ksub·dsub work the raw path does once
+            // per query.
+            val coarseLit = typedlit(coarseCentroids(centroids))
+            val cbLit = typedlit(cbSeq)
+            val valid = col("__qv").isNotNull &&
+              size(col("__qv")) === lit(m * dsub) &&
+              !exists(col("__qv"), x => x.isNull)
+            probes
+              .withColumn("__pq_rqv", zip_with(
+                transform(col("__qv"),
+                  x => floor(x.cast("double") * PqScale).cast("long")),
+                element_at(coarseLit, col("__cell") + 1),
+                (a, b) => a - b))
+              .withColumn("__adc", when(valid,
+                adcGrid(col("__pq_rqv"), m, dsub, cbSeq.head.length, cbLit)))
+              .drop("__qv", "__pq_rqv")
+              .join(codes, Seq("__cell"))
+          }
+        rankByAdc(cand, m, k, excludeSelf)
+    }
+  }
+
+  private[graft] object IvfLayout {
+    case object Float extends IvfLayout("FLOAT", "false", None, 0)
+    case object Sq8 extends IvfLayout("int8-QUANTIZED (SQ8)", "sq8",
+      Some("params"), 1)
+    final case class Pq(override val m: Int, override val ksub: Int)
+      extends IvfLayout("PRODUCT-QUANTIZED (PQ)", "pq", Some("pq"), 2)
+    final case class PqResidual(override val m: Int, override val ksub: Int)
+      extends IvfLayout("PRODUCT-QUANTIZED (PQ)", "pqr", Some("pq"), 2)
+
+    /** The layout an ann_index `options.quantize` names (`true` is
+      * `sq8`); `m`/`ksub` are read only for the PQ layouts. */
+    def parse(quantize: String, m: => Int, ksub: => Int): IvfLayout =
+      quantize match {
+        case "false" => Float
+        case "true" | "sq8" => Sq8
+        case "pq" => Pq(m, ksub)
+        case "pqr" => PqResidual(m, ksub)
+        case v => sys.error(s"ann_index sink: options.quantize must be " +
+          s"true/false/sq8/pq/pqr, got '$v'")
+      }
+  }
 
   /** The typed view of an IVF certificate. Pre-quantization
     * certificates (no `quant`) read as the float layout, pre-PQ ones
@@ -303,13 +476,11 @@ object Ann {
     def streamMarks: Map[String, Long] = cert.streamMarks
     /** A purge's replaced `__cell=N/name` files, in dead-file grace. */
     def deadFiles: Seq[String] = cert.deadFiles.getOrElse("assigned", Nil)
-    def layoutName: String = quant match {
-      case 0 => "FLOAT"; case 1 => "int8-QUANTIZED (SQ8)"
-      case _ => "PRODUCT-QUANTIZED (PQ)"
-    }
-    def probeName: String = quant match {
-      case 0 => "ivfIndexTopK"; case 1 => "ivfIndexTopKQuantized"
-      case _ => "ivfIndexTopKPq"
+    def layout: IvfLayout = (quant, pqRes) match {
+      case (0, _) => IvfLayout.Float
+      case (1, _) => IvfLayout.Sq8
+      case (_, 0) => IvfLayout.Pq(pqM, pqKsub)
+      case _ => IvfLayout.PqResidual(pqM, pqKsub)
     }
   }
 
@@ -320,75 +491,16 @@ object Ann {
     ivf(spark, path).manifest().filter(_.geom("nlist").isDefined)
       .map(IvfManifest(_))
 
-  /** Shared probe-side index opener: existence, torn-build / staleness
-    * guards (manifest written LAST; centroid table must agree with its
-    * nlist), and the float-vs-quantized LAYOUT check — scoring float
-    * cosine against int8 grids (or grids against floats) would be
-    * silently wrong, so each probe entry point names the right one.
-    * Cost: one tiny-file read + a count on the nlist-row centroid
-    * table; the 100-TB assigned/ table is never touched by the check. */
-  private def openIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, probe: String, wantQuant: Int)
-      : (DataFrame, DataFrame, IvfManifest) = {
-    val art = ivf(spark, path)
-    // name a wrong path / not-an-index directory instead of surfacing a
-    // bare parquet PATH_NOT_FOUND from one of the two sub-reads
-    def requireTable(t: String): Unit =
-      require(art.fs.exists(art.at(t)),
-        s"$probe: '$path' is not a complete IVF index (missing $t/ — " +
-          "build one with writeIvfIndex or the ann_index sink)")
-    Seq("assigned", "centroids").foreach(requireTable)
-    // a long-lived JVM (the API server) must never silently probe a
-    // dir someone rebuilt under it — both torn states fail loudly, and
-    // the whole open runs in the version-stable bracket
-    art.open(probe) { cert =>
-    val mf = IvfManifest(cert)
-    // the three layouts are distinct index FORMATS — scoring float
-    // cosine against grids, grids against floats, or ADC against
-    // either would be silently wrong, so each probe entry point names
-    // the one that matches the manifest
-    require(mf.quant == wantQuant,
-      s"$probe: '$path' is a ${mf.layoutName} index — probe it with " +
-        s"${mf.probeName} (ranking one layout's cells under another " +
-        "layout's metric would be silently wrong)")
-    // quantized layouts have a third table — checked AFTER the layout
-    // test (a float dir should say FLOAT, not "missing params/")
-    wantQuant match {
-      case 1 => requireTable("params"); case 2 => requireTable("pq")
-      case _ =>
-    }
-    val centDfRaw = spark.read.parquet(s"$path/centroids")
-    val nCent = centDfRaw.count()
-    require(nCent == mf.nlist,
-      s"$probe: '$path' is torn — manifest says nlist=${mf.nlist} but " +
-        s"centroids/ has $nCent rows (index rebuilt out-of-band " +
-        "mid-probe?); rebuild with writeIvfIndex")
-    // STREAMED epochs (appendIvfIndexStream) probe alongside the built
-    // table — a two-table union, each side pruned on __cell
-    // independently — until compactIvfIndex folds them in; then the
-    // tombstones are suppressed AFTER the union, so the takedown
-    // covers built and still-streaming rows alike across all three
-    // layouts.
-    //
-    // NOT rebalanced (r16, A/B'd and rejected): wrapping the assigned
-    // frame in Ops.rebalance kept DPP alive (PartitionFilters still
-    // carried the dynamicpruning subquery) but regressed every probe
-    // line cold — q60 1.27 → 1.68, q116 1.42 → 1.71, q127 1.96 → 2.22,
-    // q136 1.44 → 1.62 s (back-to-back, clean) — the probe-side serial
-    // stage is dominated by the pruned cells' parquet DECODE, which an
-    // exchange after the scan cannot parallelize (the q01/q128 lesson);
-    // at corpus scale the cells split into many tasks by themselves.
-    val live = art.suppress(
-      art.withLiveEpochs(art.liveTable("assigned", cert), "stream",
-        cert.streamMarks),
-      art.tombstoneSnapshot())
-    (centDfRaw, live, mf)
-    }
-  }
+  /** The stored coarse centroids as quantized longs, by cell. */
+  private def coarseCentroids(centroids: DataFrame)
+      : IndexedSeq[IndexedSeq[Long]] =
+    centroids.select(col("__cell").cast("int"), col("__qcentroid"))
+      .collect().sortBy(_.getInt(0))
+      .map(_.getSeq[Long](1).toIndexedSeq).toIndexedSeq
 
   /** Rank each query's nprobe nearest cells by float centroid distance:
     * (query_id, __qv raw, __cell) probe rows — the cell keys drive the
-    * partition-pruned assigned/ scan in both probe flavors. */
+    * partition-pruned assigned/ scan for every layout. */
   private def probeCells(queries: DataFrame, qId: String, qVec: String,
       centDfRaw: DataFrame, nprobe: Int): DataFrame = {
     val centDf = broadcast(centDfRaw)
@@ -404,46 +516,6 @@ object Ann {
       .withColumn("__pr", row_number().over(probeW))
       .filter(col("__pr") <= nprobe)
       .select("query_id", "__qv", "__cell")
-  }
-
-  /** Query a persisted IVF index: pick each query's nprobe nearest
-    * centroids (tiny broadcast), then join the probes against the
-    * partitioned corpus — the `__cell` keys drive partition pruning so
-    * only probed cell directories are read. Exact cosine re-ranks the
-    * probed cells' vectors (the [[bruteForceTopK]] scoring contract). */
-  def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, qId: String, qVec: String,
-      k: Int, nprobe: Int = 4, excludeSelf: Boolean = true): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val (centDfRaw, assigned, _) =
-      openIvfIndex(spark, path, "ivfIndexTopK", wantQuant = 0)
-    val probes = probeCells(queries, qId, qVec, centDfRaw, nprobe)
-    scoreAndRank(probes.join(assigned, Seq("__cell")), k, excludeSelf)
-  }
-
-  /** Probe an int8-quantized IVF index (writeIvfIndex `quantize =
-    * true`): cells rank by float centroid distance as usual, the QUERY
-    * vectors quantize under the index's own persisted codebook, and
-    * candidates rank by the exact integer grid distance —
-    * [[quantizedTopK]]'s contract, so an exhaustive probe
-    * (nprobe = nlist) must reproduce the brute-force quantized answer
-    * (the q25 ≡ q60 discipline, on the quantized pair q113 ≡ q116).
-    * Output: (query_id, neighbor_id, d2q, rank). */
-  def ivfIndexTopKQuantized(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, qId: String, qVec: String,
-      k: Int, nprobe: Int = 4, excludeSelf: Boolean = true): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val (centDfRaw, assigned, _) =
-      openIvfIndex(spark, path, "ivfIndexTopKQuantized", wantQuant = 1)
-    val params = spark.read.parquet(s"$path/params")
-    val probes = probeCells(queries, qId, qVec, centDfRaw, nprobe)
-    val probesQ = quantizeInt8(probes, "__qv", params, "__qq")
-      .select("query_id", "__qq", "__cell")
-    rankByGridDistance(
-      probesQ.join(assigned.withColumnRenamed("qvec", "__qc"), Seq("__cell")),
-      k, excludeSelf)
   }
 
   /** Embedding near-duplicate pairs within a blocking column: exact
@@ -698,8 +770,8 @@ object Ann {
   }
 
   /** Shared integer-grid scoring tail — ONE implementation for the
-    * brute-force ([[quantizedTopK]]) and persisted-index
-    * ([[ivfIndexTopKQuantized]]) probes, the scoreAndRank discipline:
+    * brute-force ([[quantizedTopK]]) and persisted-index (SQ8
+    * [[ivfIndexTopKAuto]]) probes, the scoreAndRank discipline:
     * the q113 ≡ q116 shared-oracle contract holds BY CONSTRUCTION only
     * while the two entry points cannot drift on the distance, the
     * NULL-grid exclusion, the tie-break, or excludeSelf. Candidates
@@ -779,14 +851,16 @@ object Ann {
     }
   }
 
-  /** The PQ family's ONE quantization scale: encode (primitive UDF
-    * loop), the query-side ADC grids, and the per-subspace k-means fits
-    * must all place values on the same floor(x·scale) integer grid —
-    * three spellings, one constant, so they cannot drift. */
+  /** The IVF family's ONE quantization scale: the coarse cell fit and
+    * assignment, the PQ encode (primitive UDF loop), the query-side ADC
+    * grids and the per-subspace k-means fits must all place values on
+    * the same floor(x·scale) integer grid — the residual qv − qc[cell]
+    * is exact only because they do — so one constant, not one per
+    * spelling. */
   private val PqScale = 10000
 
   /** [[fitPqQ]] as a persistable (sub, cid, qcv) DataFrame — the PQ
-    * index's codebook table ([[writeIvfIndexPq]] stores it as pq/). */
+    * index's codebook table ([[writeIvfIndex]] stores it as pq/). */
   def pqCodebooks(corpus: DataFrame, cId: String, cVec: String,
       m: Int = 8, ksub: Int = 256, seed: Long = 42L,
       iters: Int = 4): DataFrame =
@@ -980,7 +1054,7 @@ object Ann {
     * ([[rankByAdc]]), never a re-scan of the codebook. */
   /** The m × ksub ADC grid over a MATERIALIZED quantized-vector column
     * — shared by the raw-space query side ([[withAdc]]) and the
-    * residual probe rows ([[ivfIndexTopKPq]]'s pq_res branch). */
+    * residual probe rows ([[IvfLayout]]'s residual ranking). */
   private def adcGrid(qv: Column, m: Int, dsub: Int, ksub: Int,
       cbLit: Column): Column =
     transform(sequence(lit(0), lit(m - 1)), s =>
@@ -1046,7 +1120,7 @@ object Ann {
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, m: Int = 8, ksub: Int = 256, seed: Long = 42L,
       iters: Int = 4, excludeSelf: Boolean = true): DataFrame = {
-    // ONE decode of the corpus (r16, the writeIvfIndexPq note): the
+    // ONE decode of the corpus (r16, the writeIvfIndex note): the
     // inline codebook fit runs a dims probe plus m agg+collect pairs,
     // each of which re-scanned the source; the caller's final action
     // then reads the cache once more for the encode.
@@ -1079,133 +1153,41 @@ object Ann {
     rankByAdc(q.crossJoin(c), m, k, excludeSelf)
   }
 
-  /** Persist an IVF-PQ index — the FAISS-IVFPQ configuration and the
-    * natural completion of the quantized family: the coarse k-means
-    * cell layout of [[writeIvfIndex]] (partition-pruned probes), cells
-    * storing m-BYTE PQ codes instead of vectors (16–32× smaller scans
-    * than float, vs SQ8's ~4×), plus the per-subspace codebooks as the
-    * index's pq/ table. Probes rank by integer ADC under the STORED
-    * codebooks ([[ivfIndexTopKPq]]); the manifest records quant=2 and
-    * the code geometry, and every other probe refuses the layout
-    * loudly. Same torn-build discipline as the float/SQ8 builds
-    * (manifest retracted first, re-issued last). */
-  /** `residual = true` builds the TRUE FAISS-IVFPQ configuration: the
-    * PQ codebooks fit on (and the codes encode) the integer RESIDUALS
-    * qv − qc[cell] instead of the raw vectors. Residuals concentrate
-    * around zero inside every cell, so a fixed codebook budget spends
-    * its codewords on the within-cell structure the ADC actually ranks
-    * — the quality step that makes IVFPQ the production configuration
-    * (Jégou et al. §IV). Both quantized grids share [[PqScale]], so
-    * the residual is EXACT long subtraction and the whole train/encode
-    * replays in an external SQL engine (the q125 oracle: coarse tower
-    * → residual CTE → per-subspace towers). The manifest records
-    * pq_res = 1; [[ivfIndexTopKPq]] dispatches on it — raw-space and
-    * residual-space codes are incomparable geometries. */
-  def writeIvfIndexPq(corpus: DataFrame, cId: String, cVec: String,
-      path: String, nlist: Int = 16, seed: Long = 42L,
-      m: Int = 8, ksub: Int = 256, residual: Boolean = false): Unit = {
-    ivf(corpus.sparkSession, path).rebuild()
-    val scale = 10000
-    // ONE decode of the corpus for the whole build (r16, the
-    // writeIvfIndex note, and much bigger here): the coarse fit's
-    // probe + collect, fitPqQ's dims probe plus its m per-subspace
-    // agg + collect pairs, and the encode/write pass are all separate
-    // actions — the raw-space PQ build re-scanned the source ~12×.
-    val base = corpus.select(col(cId), col(cVec))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // coarse quantizer: the same fit + integer-space cell assignment as
-    // the float/SQ8 layouts — one cell geometry across all three
-    val qcents = graft.sim.Cluster.fitCentroidsQ(
-      base, cId, cVec, nlist, seed, iters = 4, scale = scale)
-    val centsQDf = corpus.sparkSession
-      .createDataFrame(qcents).toDF("cid", "qcv")
-    val corpusQ = base.select(col(cId).as("neighbor_id"),
-        col(cVec).as("__cv"))
-      .withColumn("__qv", transform(col("__cv"),
-        x => floor(x.cast("double") * scale).cast("long")))
-    // the RESIDUAL path caches the assignment for the build: fitPqQ's
-    // dims probe, its per-subspace agg+collect pairs, and the final
-    // encode are all separate ACTIONS over this frame, and each would
-    // otherwise recompute the full assignment subtree (the residual
-    // build spent a measured 10.4 s at sf0.1 mostly re-assigning the
-    // corpus 9×). The raw-space path
-    // fits its codebooks on `corpus` directly and runs exactly ONE
-    // action over this frame (the coded write), so caching there would
-    // be pure overhead — a corpus-sized materialization with zero
-    // reuse (r12 review).
-    val assigned0raw = graft.sim.Cluster
-      .clusterAssign(corpusQ, "neighbor_id", "__qv", centsQDf, "cid", "qcv")
-      .withColumn("__cell", col("cluster_id").cast("int"))
-    val assigned0 =
-      if (residual) assigned0raw.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else assigned0raw
-    val obsPq = org.apache.spark.sql.Observation()
-    try {
-    // PQ codebooks fit on the SAME corpus the cells store, persisted as
-    // the third table — a probe building ADC under any other codebook
-    // would score a different geometry (the SQ8 params/ contract)
-    val coarseByCell = qcents.map(_._2)
-    val cb =
-      if (!residual) pqCodebooks(base, cId, cVec, m, ksub, seed)
-      else {
-        // integer residuals: coarse centroids ride a plan literal (the
-        // declared-small nlist × dim table), subtraction is exact on
-        // the shared grid; rows with no cell (NULL/ragged vectors)
-        // yield NULL residuals and sit out of the fit
-        val coarseLit = typedlit(coarseByCell.map(_.toSeq))
-        val res = assigned0
-          .filter(col("__cell").isNotNull)
-          .select(col("neighbor_id"),
-            zip_with(col("__qv"),
-              element_at(coarseLit, col("__cell") + 1),
-              (a, b) => a - b).as("__rv"))
-        corpus.sparkSession.createDataFrame(
-            fitPqQ(res, "neighbor_id", "__rv", m, ksub, seed, iters = 4,
-              preQuantized = true))
-          .toDF("sub", "cid", "qcv")
-      }
-    cb.coalesce(1).write.mode("overwrite").parquet(s"$path/pq")
-    val coded =
-      if (!residual) encodePq(assigned0.select("neighbor_id", "__cv", "__cell"),
-        "__cv", cb, "codes")
-      else encodePqResidual(assigned0.select("neighbor_id", "__cv", "__cell"),
-        "__cv", "__cell", coarseByCell, cb, "codes")
-    coded
-      .select("neighbor_id", "codes", "__cell")
-      // observe ABOVE the exchange — the writeIvfIndex retry note
-      .repartition(col("__cell"))
-      .observe(obsPq, count(lit(1)).as("rows"))
-      .write.mode("overwrite").partitionBy("__cell").parquet(s"$path/assigned")
-    } finally { if (residual) { assigned0.unpersist(); () } }
-    corpus.sparkSession.createDataFrame(
-        qcents.map { case (c, qv) =>
-          (c.toInt, qv.map(_.toDouble / scale), qv)
-        })
-      .toDF("__cell", "__centroid", "__qcentroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    // observed on the coded write (the writeIvfIndex Observation note)
-    ivf(corpus.sparkSession, path).write(buildCert(
-      observedRows(obsPq, corpus.sparkSession, s"$path/assigned"), nlist,
-      quant = 2, pqM = m, pqKsub = ksub, pqRes = if (residual) 1 else 0))
-    } finally { base.unpersist(false); () }
+  /** Load and validate a persisted index's geometry (manifest +
+    * centroids), with the append family's torn-index refusals — shared
+    * by the per-call encode path and the streaming sink's once-at-start
+    * load. */
+  private[graft] def loadIndexGeometry(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      caller: String): (IvfManifest, DataFrame) = {
+    val art = ivf(spark, path)
+    val m = IvfManifest(art.certified(caller))
+    val c = spark.read.parquet(s"$path/centroids")
+    require(c.count() == m.nlist,
+      s"$caller: '$path' is torn — manifest says nlist=${m.nlist} " +
+        s"but centroids/ disagrees; rebuild with writeIvfIndex")
+    // quantized layouts carry a codebook table the batch must encode
+    // under — name a torn index and the rebuild remedy BEFORE the
+    // parquet read (the probe's contract; r11 ADVICE: a bare
+    // PATH_NOT_FOUND here broke the index family's loud-refusal rule)
+    m.layout.table.foreach(t => require(art.fs.exists(art.at(t)),
+      s"$caller: '$path' is a ${m.layout.name} index missing " +
+        s"its $t/ table — torn build; rebuild with writeIvfIndex " +
+        "before appending"))
+    (m, c)
   }
 
   /** Encode a batch under a persisted index's STORED geometry — the
     * shared core of [[appendIvfIndex]] and the streaming append sink
-    * ([[graft.streaming.EventStream.appendIvfIndexStream]]): the
-    * increment path exact and near-dup dedup already had
-    * (incrementalDedup / the q107 band-index append) and the ANN index
-    * lacked — a new embedding batch no longer forces a full rebuild.
-    * Cells assign under the stored centroids (the build's
-    * integer-space argmin), payloads encode under the stored codebook
-    * for quantized layouts (SQ8 params / PQ codebooks — batch
-    * statistics would put the rows on a DIFFERENT grid than the cells
-    * they join). Geometry always comes FROM the manifest — there are
-    * no tuning parameters to drift (the YAML sink cross-checks any
-    * declared options and refuses mismatches loudly). Works for all
-    * three layouts.
+    * ([[graft.streaming.EventStream.appendIvfIndexStream]]): a new
+    * embedding batch no longer forces a full rebuild. Cells assign
+    * under the stored centroids (the build's integer-space argmin) and
+    * the payload runs the layout's one [[IvfLayout]] encode under the
+    * stored codebook (batch statistics would put the rows on a
+    * DIFFERENT grid than the cells they join). Geometry always comes
+    * FROM the manifest — there are no tuning parameters to drift (the
+    * YAML sink cross-checks any declared options and refuses
+    * mismatches loudly).
     *
     * Semantics: for the FLOAT layout an exhaustive probe after an
     * append still equals brute-force cosine over corpus ∪ batch (the
@@ -1214,92 +1196,29 @@ object Ann {
     * deliberately: comparability across increments IS the index
     * contract (FAISS adds to a trained index the same way); re-train
     * (rebuild) when the embedding distribution drifts. Returns
-    * (neighbor_id, payload, __cell) rows in the layout's own payload
-    * column, plus the manifest. Torn-index states refuse loudly
-    * before any table read (the openIvfIndex contract). */
-  /** Load and validate a persisted index's geometry (manifest +
-    * centroids), with the append family's torn-index refusals —
-    * shared by the per-call encode path and the streaming sink's
-    * once-at-start load. */
-  private[graft] def loadIndexGeometry(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      caller: String): (IvfManifest, DataFrame) = {
-    val m = IvfManifest(ivf(spark, path).certified(caller))
-    val c = spark.read.parquet(s"$path/centroids")
-    require(c.count() == m.nlist,
-      s"$caller: '$path' is torn — manifest says nlist=${m.nlist} " +
-        s"but centroids/ disagrees; rebuild with writeIvfIndex")
-    // quantized layouts carry a codebook table the batch must encode
-    // under — name a torn index and the rebuild remedy BEFORE the
-    // parquet read (openIvfIndex's contract; r11 ADVICE: a bare
-    // PATH_NOT_FOUND here broke the index family's loud-refusal rule)
-    val extraTable = m.quant match {
-      case 1 => Some("params"); case 2 => Some("pq"); case _ => None
-    }
-    extraTable.foreach { t =>
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t")),
-        s"$caller: '$path' is a ${m.layoutName} index missing " +
-          s"its $t/ table — torn build; rebuild with writeIvfIndex " +
-          "before appending")
-    }
-    (m, c)
-  }
-
+    * (neighbor_id, payload, __cell) rows plus the manifest. Torn-index
+    * states refuse loudly before any table read.
+    *
+    * `pre` = (manifest, centroids) and `preExtra` = the codebook table,
+    * validated and cached by a long-running caller (the streaming sink
+    * loads them once at stream start — the per-batch torn checks would
+    * otherwise repeat a count job per trigger; the caller keeps its own
+    * geom_id tripwire against out-of-band retrains). */
   private[graft] def encodeUnderStoredGeometry(batch: DataFrame,
       cId: String, cVec: String, path: String, caller: String,
       pre: Option[(IvfManifest, DataFrame)] = None,
       preExtra: Option[DataFrame] = None)
       : (DataFrame, IvfManifest) = {
     val spark = batch.sparkSession
-    // `pre` = (manifest, centroids) validated and cached by a
-    // long-running caller (the streaming sink loads geometry once at
-    // stream start — the per-batch torn checks would otherwise repeat
-    // a count job per trigger; the caller keeps its own geom_id
-    // tripwire against out-of-band retrains)
     val (mf, centDf) =
       pre.getOrElse(loadIndexGeometry(spark, path, caller))
-    val scale = 10000
-    val centsQ = centDf.select(col("__cell").cast("long").as("cid"),
-      col("__qcentroid").as("qcv"))
-    val batchQ = batch.select(col(cId).as("neighbor_id"),
-        col(cVec).as("__cv"))
-      .withColumn("__qv", transform(col("__cv"),
-        x => floor(x.cast("double") * scale).cast("long")))
-    val assigned0 = graft.sim.Cluster
-      .clusterAssign(batchQ, "neighbor_id", "__qv", centsQ, "cid", "qcv")
-      .withColumn("__cell", col("cluster_id").cast("int"))
-    val rows = mf.quant match {
-      case 0 => assigned0.select("neighbor_id", "__cv", "__cell")
-      case 1 =>
-        // preExtra = the codebook table a long-running caller loaded
-        // (and persisted) once at stream start — the per-call read is
-        // the batch-append path
-        val params = preExtra.getOrElse(
-          spark.read.parquet(s"$path/params"))
-        quantizeInt8(assigned0, "__cv", params, "qvec")
-          .select("neighbor_id", "qvec", "__cell")
-      case _ =>
-        val cb = preExtra.getOrElse(spark.read.parquet(s"$path/pq"))
-        if (mf.pqRes == 0)
-          encodePq(assigned0.select("neighbor_id", "__cv", "__cell"),
-              "__cv", cb, "codes")
-            .select("neighbor_id", "codes", "__cell")
-        else {
-          // residual layout: the batch encodes against the STORED
-          // coarse centroids' residual space, like the build
-          val coarse = centDf
-            .select(col("__cell").cast("int"), col("__qcentroid"))
-            .collect().sortBy(_.getInt(0))
-            .map(_.getSeq[Long](1).toIndexedSeq).toIndexedSeq
-          encodePqResidual(
-              assigned0.select("neighbor_id", "__cv", "__cell"),
-              "__cv", "__cell", coarse, cb, "codes")
-            .select("neighbor_id", "codes", "__cell")
-        }
-    }
-    (rows, mf)
+    val assigned0 = assignCells(
+      batch.select(col(cId).as("neighbor_id"), col(cVec).as("__cv")),
+      centDf.select(col("__cell").cast("long").as("cid"),
+        col("__qcentroid").as("qcv")))
+    val book = mf.layout.table.map(t =>
+      preExtra.getOrElse(spark.read.parquet(s"$path/$t")))
+    (mf.layout.encode(assigned0, book, coarseCentroids(centDf)), mf)
   }
 
   /** Append a batch to a persisted IVF index under its EXISTING
@@ -1309,11 +1228,11 @@ object Ann {
     * an append extends, never retrains). Row accounting is
     * incremental: the encode is row-preserving (NULL/ragged vectors
     * keep a NULL cell, they are written, never dropped), so the new
-    * total is certified + batch — an O(batch) count instead of
-    * re-listing every footer of a 100-TB table per append. Duplicate
-    * ids are the CALLER's contract (append kept rows — run the
-    * incremental dedup gate first, the q107 discipline); an append
-    * never dedups. */
+    * total is certified + the rows the staged write observed — no
+    * second job over the batch, and never a re-listing of every footer
+    * of a 100-TB table per append. Duplicate ids are the CALLER's
+    * contract (append kept rows — run the incremental dedup gate
+    * first, the q107 discipline); an append never dedups. */
   def appendIvfIndex(batch: DataFrame, cId: String, cVec: String,
       path: String): Unit = {
     val art = ivf(batch.sparkSession, path)
@@ -1321,11 +1240,14 @@ object Ann {
       val (rows, mf) =
         encodeUnderStoredGeometry(batch, cId, cVec, path, "appendIvfIndex")
       val stagedP = art.stage("assigned", "append")
+      // observed above the exchange — the writeIvfIndex retry note
+      val obs = org.apache.spark.sql.Observation()
       rows.repartition(col("__cell"))
+        .observe(obs, count(lit(1)).as("rows"))
         .write.mode("overwrite").partitionBy("__cell")
         .parquet(stagedP.toString)
-      art.swap(Seq("assigned" -> stagedP),
-        mf.cert.next(rows = mf.rows + batch.select(col(cId)).count()))
+      art.swap(Seq("assigned" -> stagedP), mf.cert.next(rows = mf.rows +
+        observedRows(obs, batch.sparkSession, stagedP.toString)))
     }
   }
 
@@ -1334,8 +1256,8 @@ object Ann {
     * Tombstone semantics, LSM-style: the ids append to a tiny
     * `deletes/` table (declared-small — takedowns are bounded by
     * legal/ops reality, not corpus scale), every probe anti-joins it
-    * BROADCAST (openIvfIndex — one shared filter across all three
-    * layouts, covering built AND still-streaming rows), and the next
+    * BROADCAST (ivfIndexTopKAuto — one shared filter across every
+    * layout, covering built AND still-streaming rows), and the next
     * [[compactIvfIndex]] purges the tombstoned rows physically. Until
     * that purge the bytes remain on disk — callers with hard-erasure
     * deadlines run the fold as part of the takedown. Ids absent from
@@ -1549,87 +1471,74 @@ object Ann {
       compactIvfIndex(spark, path); ()
     }
 
-  /** Probe a persisted IVF-PQ index: cells rank by float centroid
-    * distance (the shared probeCells), each query builds its ADC grid
-    * under the index's OWN pq/ codebooks, and candidates in the probed
-    * cells rank by exact integer ADC — [[pqTopK]]'s contract, so an
-    * exhaustive probe (nprobe = nlist) must reproduce the brute-force
-    * PQ answer (spec- and oracle-pinned, the q113 ≡ q116 shape).
-    * Output: (query_id, neighbor_id, d2pq, rank). At scale a probe
-    * reads nprobe/nlist of the CODE bytes — the two compressions
-    * (partition pruning × 32× code shrink) multiply. */
-  def ivfIndexTopKPq(spark: org.apache.spark.sql.SparkSession,
+  /** Query a persisted IVF index: pick each query's nprobe nearest
+    * centroids (tiny broadcast), then join the probes against the
+    * partitioned corpus — the `__cell` keys drive partition pruning so
+    * only probed cell directories are read — and rank the probed cells'
+    * rows under the index's OWN [[IvfLayout]], read from its manifest:
+    * float cosine, SQ8 integer grid distance or PQ ADC. An exhaustive
+    * probe (nprobe = nlist) reproduces the layout's brute-force answer
+    * ([[bruteForceTopK]], [[quantizedTopK]], [[pqTopK]] — the q25 ≡ q60
+    * discipline). Output keeps the layout's native metric column
+    * (`score` / `d2q` / `d2pq`) plus (query_id, neighbor_id, rank) —
+    * renaming would hide which metric ranked the hits. Shared by the
+    * driver queries, the YAML `ann_topk` step, the API `_knn` route
+    * and the streaming ingest probe.
+    *
+    * The open: existence, torn-build / staleness guards (manifest
+    * written LAST; centroid table must agree with its nlist; a
+    * quantized layout's codebook table must exist). Cost: one tiny-file
+    * read + a count on the nlist-row centroid table; the 100-TB
+    * assigned/ table is never touched by the check. */
+  def ivfIndexTopKAuto(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, qId: String, qVec: String,
       k: Int, nprobe: Int = 4, excludeSelf: Boolean = true): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val (centDfRaw, assigned, mf) =
-      openIvfIndex(spark, path, "ivfIndexTopKPq", wantQuant = 2)
-    val cb = spark.read.parquet(s"$path/pq")
-    val (m, dsub, cbSeq) = collectPqCodebooks(cb)
-    val probes = probeCells(queries, qId, qVec, centDfRaw, nprobe)
-    val cand =
-      if (mf.pqRes == 0) {
-        // raw-space codes: the ADC grid depends on the query alone —
-        // it rides the (tiny, broadcast) query side and probes
-        // re-attach it by query id so the candidate join stays narrow
-        val qAdc = broadcast(withAdc(queryProjection(queries, qId, qVec),
-          "__qv", m, dsub, cbSeq, "__adc").drop("__qv"))
-        probes.drop("__qv").join(qAdc, Seq("query_id"))
-          .join(assigned.withColumnRenamed("codes", "__codes"),
-            Seq("__cell"))
-      } else {
-        // RESIDUAL codes: the grid depends on (query, probed cell) —
-        // each probe row subtracts its cell's coarse centroid (exact
-        // long arithmetic on the shared grid) and builds its own ADC.
-        // Still queries × nprobe rows: tiny, and the per-row grid is
-        // the same m·ksub·dsub work the raw path does once per query.
-        val coarse = centDfRaw
-          .select(col("__cell").cast("int"), col("__qcentroid"))
-          .collect().sortBy(_.getInt(0))
-          .map(_.getSeq[Long](1).toSeq).toSeq
-        val coarseLit = typedlit(coarse)
-        val cbLit = typedlit(cbSeq)
-        val valid = col("__qv").isNotNull &&
-          size(col("__qv")) === lit(m * dsub) &&
-          !exists(col("__qv"), x => x.isNull)
-        probes
-          .withColumn("__pq_rqv", zip_with(
-            transform(col("__qv"),
-              x => floor(x.cast("double") * PqScale).cast("long")),
-            element_at(coarseLit, col("__cell") + 1),
-            (a, b) => a - b))
-          .withColumn("__adc", when(valid,
-            adcGrid(col("__pq_rqv"), m, dsub, cbSeq.head.length, cbLit)))
-          .drop("__qv", "__pq_rqv")
-          .join(assigned.withColumnRenamed("codes", "__codes"),
-            Seq("__cell"))
-      }
-    rankByAdc(cand, m, k, excludeSelf)
-  }
-
-  /** Manifest-dispatched probe across the three index layouts — the
-    * manifest is the AUTHORITY for which metric ranks the hits (float
-    * cosine / SQ8 integer grid / PQ ADC): routing on anything
-    * caller-side would turn a stale flag into the wrong metric (each
-    * single-layout entry point refuses the others loudly for exactly
-    * that reason; this one routes instead). Output keeps the layout's
-    * native metric column (`score` / `d2q` / `d2pq`) plus
-    * (query_id, neighbor_id, rank) — renaming would hide which metric
-    * ranked the hits. A missing manifest refuses loudly BEFORE any
-    * table read (the openIvfIndex torn-build contract). Shared by the
-    * API `_knn` route and the streaming ingest probe. */
-  def ivfIndexTopKAuto(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, qId: String, qVec: String,
-      k: Int, nprobe: Int = 4, excludeSelf: Boolean = true): DataFrame = {
-    val mf = IvfManifest(ivf(spark, path).certified("ivfIndexTopKAuto"))
-    mf.quant match {
-      case 1 => ivfIndexTopKQuantized(spark, path, queries, qId, qVec,
-        k, nprobe, excludeSelf)
-      case 2 => ivfIndexTopKPq(spark, path, queries, qId, qVec,
-        k, nprobe, excludeSelf)
-      case _ => ivfIndexTopK(spark, path, queries, qId, qVec,
-        k, nprobe, excludeSelf)
+    val probe = "ivfIndexTopKAuto"
+    val art = ivf(spark, path)
+    // name a wrong path / not-an-index directory instead of surfacing a
+    // bare parquet PATH_NOT_FOUND from one of the sub-reads
+    def requireTable(t: String): Unit =
+      require(art.fs.exists(art.at(t)),
+        s"$probe: '$path' is not a complete IVF index (missing $t/ — " +
+          "build one with writeIvfIndex or the ann_index sink)")
+    Seq("assigned", "centroids").foreach(requireTable)
+    // a long-lived JVM (the API server) must never silently probe a
+    // dir someone rebuilt under it — both torn states fail loudly, and
+    // the whole open runs in the version-stable bracket
+    art.open(probe) { cert =>
+    val mf = IvfManifest(cert)
+    val layout = mf.layout
+    layout.table.foreach(requireTable)
+    val book = layout.table.map(t => spark.read.parquet(s"$path/$t"))
+    val centDfRaw = spark.read.parquet(s"$path/centroids")
+    val nCent = centDfRaw.count()
+    require(nCent == mf.nlist,
+      s"$probe: '$path' is torn — manifest says nlist=${mf.nlist} but " +
+        s"centroids/ has $nCent rows (index rebuilt out-of-band " +
+        "mid-probe?); rebuild with writeIvfIndex")
+    // STREAMED epochs (appendIvfIndexStream) probe alongside the built
+    // table — a two-table union, each side pruned on __cell
+    // independently — until compactIvfIndex folds them in; then the
+    // tombstones are suppressed AFTER the union, so the takedown
+    // covers built and still-streaming rows alike, in every layout.
+    //
+    // NOT rebalanced (r16, A/B'd and rejected): wrapping the assigned
+    // frame in Ops.rebalance kept DPP alive (PartitionFilters still
+    // carried the dynamicpruning subquery) but regressed every probe
+    // line cold — q60 1.27 → 1.68, q116 1.42 → 1.71, q127 1.96 → 2.22,
+    // q136 1.44 → 1.62 s (back-to-back, clean) — the probe-side serial
+    // stage is dominated by the pruned cells' parquet DECODE, which an
+    // exchange after the scan cannot parallelize (the q01/q128 lesson);
+    // at corpus scale the cells split into many tasks by themselves.
+    val live = art.suppress(
+      art.withLiveEpochs(art.liveTable("assigned", cert), "stream",
+        cert.streamMarks),
+      art.tombstoneSnapshot())
+    layout.rank(probeCells(queries, qId, qVec, centDfRaw, nprobe),
+      queryProjection(queries, qId, qVec), live, centDfRaw, book, k,
+      excludeSelf)
     }
   }
 }

@@ -369,7 +369,7 @@ object EventStream {
     * decontaminate → classify → quality+PII now has a semantic
     * neighbor lookup): each micro-batch of arriving query vectors runs
     * the BATCH index probe VERBATIM, manifest-dispatched across the
-    * float/SQ8/PQ layouts ([[graft.sim.Ann.ivfIndexTopKAuto]] — the
+    * index layouts ([[graft.sim.Ann.ivfIndexTopKAuto]] — the
     * manifest is the authority, so gate and batch probe cannot drift),
     * and appends its hits to `outPath`.
     *
@@ -387,7 +387,7 @@ object EventStream {
     * [[classifyStream]] duplicate-id caveat — an id arriving in TWO
     * micro-batches probes twice and emits both results; dedup the
     * ids at ingest first). A missing/torn index
-    * refuses at STREAM START, not first batch (the openIvfIndex loud
+    * refuses at STREAM START, not first batch (the probe's loud
     * contract).
     *
     * Sink idempotency (r12 review): foreachBatch is AT-LEAST-ONCE — a
@@ -446,11 +446,12 @@ object EventStream {
     * embeddings is encoded under the index's STORED geometry (cells
     * under the build's centroids, payload under the build's SQ8
     * grid / PQ codebooks — [[graft.sim.Ann.encodeUnderStoredGeometry]],
-    * shared with the batch append so stream and batch cannot drift)
+    * the layout's one encode, shared with the batch append and the
+    * build so they cannot drift)
     * and lands in the index's `stream/` table, hive-partitioned by
     * (__epoch, __cell). This closes the ingest loop: rows the router
-    * admits become PROBE-VISIBLE immediately — every probe flavor
-    * reads built ∪ streamed (openIvfIndex unions the two, each side
+    * admits become PROBE-VISIBLE immediately — the probe
+    * reads built ∪ streamed (ivfIndexTopKAuto unions the two, each side
     * still partition-pruned on __cell) — and
     * [[graft.sim.Ann.compactIvfIndex]] folds the epochs into the main
     * table off the hot path (the LSM shape).
@@ -532,11 +533,8 @@ object EventStream {
     // entries); released when THIS query terminates, via a one-shot
     // listener — the sink may outlive this method by days
     val cent = cent0.persist()
-    val extra = (mf0.quant match {
-      case 1 => Some(s"$indexPath/params")
-      case 2 => Some(s"$indexPath/pq")
-      case _ => None
-    }).map(p => spark.read.parquet(p).persist())
+    val extra = mf0.layout.table
+      .map(t => spark.read.parquet(s"$indexPath/$t").persist())
     val q = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)

@@ -710,8 +710,8 @@ class ApiServerSpec extends SparkSpec {
       // would refuse the layout → a 500): exhaustive probe returns
       // hits ranked by the ADC metric (d2pq column, top hit still 7 —
       // the identical vector shares every code, the ADC floor)
-      graft.sim.Ann.writeIvfIndexPq(emb, "vid", "v", s"$dir/knn-idx-pq",
-        nlist = 4, m = 2, ksub = 8)
+      graft.sim.Ann.writeIvfIndex(emb, "vid", "v", s"$dir/knn-idx-pq",
+        nlist = 4, layout = graft.sim.Ann.IvfLayout.Pq(2, 8))
       val confPq = RecipeConf.load(
         s"""datasets:
            |  idxpq: {path: $dir/knn-idx-pq, format: ann_index}

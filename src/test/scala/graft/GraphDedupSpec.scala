@@ -257,7 +257,7 @@ class GraphDedupSpec extends SparkSpec {
       .select("query_id", "neighbor_id")
     val idxPath = scratch("graft-ivf")
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxPath, nlist = 8)
-    val fromIndex = Ann.ivfIndexTopK(spark, idxPath, q, "vec_id", "embedding",
+    val fromIndex = Ann.ivfIndexTopKAuto(spark, idxPath, q, "vec_id", "embedding",
         k = 5, nprobe = 4, excludeSelf = true)
       .select("query_id", "neighbor_id")
     val nExact = exact.count()
@@ -279,7 +279,7 @@ class GraphDedupSpec extends SparkSpec {
       s"expected dynamic partition pruning on the assigned scan:\n$p")
     // a wrong path names itself instead of a bare parquet read error
     val e2 = intercept[IllegalArgumentException] {
-      Ann.ivfIndexTopK(spark, s"$idxPath/nope", q, "vec_id", "embedding", k = 2)
+      Ann.ivfIndexTopKAuto(spark, s"$idxPath/nope", q, "vec_id", "embedding", k = 2)
     }
     assert(e2.getMessage.contains("not a complete IVF index"), e2.getMessage)
     // torn-build guards (r8 VERDICT #7): the manifest is written LAST,
@@ -294,26 +294,26 @@ class GraphDedupSpec extends SparkSpec {
     // the torn-build require gets to speak
     new java.io.File(s"$idxPath/._MANIFEST.json.crc").delete()
     val e3 = intercept[IllegalStateException] {
-      Ann.ivfIndexTopK(spark, idxPath, q, "vec_id", "embedding", k = 2)
+      Ann.ivfIndexTopKAuto(spark, idxPath, q, "vec_id", "embedding", k = 2)
     }
     assert(e3.getMessage.contains("no build manifest"), e3.getMessage)
     java.nio.file.Files.writeString(mf.toPath,
       mfText.replace("\"nlist\": 8", "\"nlist\": 4"))
     val e4 = intercept[IllegalArgumentException] {
-      Ann.ivfIndexTopK(spark, idxPath, q, "vec_id", "embedding", k = 2)
+      Ann.ivfIndexTopKAuto(spark, idxPath, q, "vec_id", "embedding", k = 2)
     }
     assert(e4.getMessage.contains("torn"), e4.getMessage)
   }
 
-  test("int8 IVF index: exhaustive probe equals brute-force quantized; layouts refuse each other") {
+  test("int8 IVF index: exhaustive probe equals brute-force quantized; the probe answers in the grid metric") {
     val e = Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter(col("vec_id") % 100 === 0)
     val idxQ = scratch("graft-ivfq")
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxQ, nlist = 8,
-      quantize = true)
+      layout = Ann.IvfLayout.Sq8)
     // exhaustive probe (nprobe = nlist) must EQUAL the brute-force
     // quantized answer — same codebook, same grid, same ranking
-    val viaIndex = Ann.ivfIndexTopKQuantized(spark, idxQ, q,
+    val viaIndex = Ann.ivfIndexTopKAuto(spark, idxQ, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     val qv = Ann.quantizeInt8(e, "embedding", Ann.int8Params(e, "embedding"))
     val direct = Ann.quantizedTopK(qv.filter(col("vec_id") % 100 === 0), qv,
@@ -325,29 +325,25 @@ class GraphDedupSpec extends SparkSpec {
     assert(new java.io.File(s"$idxQ/params").exists())
     assert(spark.read.parquet(s"$idxQ/assigned").columns.toSet ==
       Set("neighbor_id", "qvec", "__cell"))
-    // layout checks are LOUD in both directions
-    val eF = intercept[IllegalArgumentException] {
-      Ann.ivfIndexTopK(spark, idxQ, q, "vec_id", "embedding", k = 2)
-    }
-    assert(eF.getMessage.contains("QUANTIZED"), eF.getMessage)
+    // the one probe ranks by the layout the manifest records: the SQ8
+    // index answers in the integer grid metric, a float index in cosine
+    assert(viaIndex.columns.toSeq == Seq("query_id", "neighbor_id", "d2q", "rank"))
     val idxF = scratch("graft-ivff")
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxF, nlist = 8)
-    val eQ = intercept[IllegalArgumentException] {
-      Ann.ivfIndexTopKQuantized(spark, idxF, q, "vec_id", "embedding", k = 2)
-    }
-    assert(eQ.getMessage.contains("FLOAT"), eQ.getMessage)
+    assert(Ann.ivfIndexTopKAuto(spark, idxF, q, "vec_id", "embedding", k = 2)
+      .columns.toSeq == Seq("query_id", "neighbor_id", "score", "rank"))
   }
 
-  test("IVF-PQ index: exhaustive ADC probe equals brute-force PQ; planted duplicate; layouts refuse each other") {
+  test("IVF-PQ index: exhaustive ADC probe equals brute-force PQ; planted duplicate; the probe answers in the ADC metric") {
     val e = Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter(col("vec_id") % 100 === 0)
     val idx = scratch("graft-ivfpq")
-    Ann.writeIvfIndexPq(e, "vec_id", "embedding", idx, nlist = 8,
-      m = 4, ksub = 8)
+    Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 8,
+      layout = Ann.IvfLayout.Pq(4, 8))
     // exhaustive probe (nprobe = nlist) must EQUAL the brute-force PQ
     // ranking — same codebooks (same corpus + seed), same codes, same
     // ADC arithmetic
-    val viaIndex = Ann.ivfIndexTopKPq(spark, idx, q,
+    val viaIndex = Ann.ivfIndexTopKAuto(spark, idx, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     val direct = Ann.pqTopK(q, e, "vec_id", "embedding",
       "vec_id", "embedding", k = 5, m = 4, ksub = 8)
@@ -389,21 +385,13 @@ class GraphDedupSpec extends SparkSpec {
       .select("codes").collect()
     assert(codes.forall(_.isNullAt(0)),
       "malformed vectors must encode to NULL codes")
-    // layout checks are LOUD in all directions
-    val eF = intercept[IllegalArgumentException] {
-      Ann.ivfIndexTopK(spark, idx, q, "vec_id", "embedding", k = 2)
-    }
-    assert(eF.getMessage.contains("PRODUCT-QUANTIZED"), eF.getMessage)
-    val eQ = intercept[IllegalArgumentException] {
-      Ann.ivfIndexTopKQuantized(spark, idx, q, "vec_id", "embedding", k = 2)
-    }
-    assert(eQ.getMessage.contains("PRODUCT-QUANTIZED"), eQ.getMessage)
+    // the one probe ranks by the layout the manifest records: the PQ
+    // index answers in the ADC metric, a float index in cosine
+    assert(viaIndex.columns.toSeq == Seq("query_id", "neighbor_id", "d2pq", "rank"))
     val idxF = scratch("graft-ivff2")
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxF, nlist = 8)
-    val ePq = intercept[IllegalArgumentException] {
-      Ann.ivfIndexTopKPq(spark, idxF, q, "vec_id", "embedding", k = 2)
-    }
-    assert(ePq.getMessage.contains("FLOAT"), ePq.getMessage)
+    assert(Ann.ivfIndexTopKAuto(spark, idxF, q, "vec_id", "embedding", k = 2)
+      .columns.toSeq == Seq("query_id", "neighbor_id", "score", "rank"))
   }
 
   test("residual IVF-PQ: planted duplicate at the ADC floor; geometry recorded in the manifest; drift refused at append") {
@@ -414,15 +402,15 @@ class GraphDedupSpec extends SparkSpec {
       col("embedding"))
     val corpus = e.unionByName(planted)
     val idx = scratch("graft-ivfpqr")
-    Ann.writeIvfIndexPq(corpus, "vec_id", "embedding", idx, nlist = 4,
-      m = 4, ksub = 8, residual = true)
+    Ann.writeIvfIndex(corpus, "vec_id", "embedding", idx, nlist = 4,
+      layout = Ann.IvfLayout.PqResidual(4, 8))
     assert(Ann.readManifest(spark, idx).exists(m =>
       m.quant == 2 && m.pqRes == 1))
     // an exact copy lands in the same cell (same vector, same argmin),
     // has the same residual, hence the same codes — its ADC distance
     // is the query-to-own-codeword floor and must equal the rank-1
     // distance (ties by id can put a code-sharing vector first)
-    val hits = Ann.ivfIndexTopKPq(spark, idx, q, "vec_id", "embedding",
+    val hits = Ann.ivfIndexTopKAuto(spark, idx, q, "vec_id", "embedding",
       k = 5, nprobe = 4)
     val best = hits.filter(col("rank") === 1)
       .select(col("query_id"), col("d2pq").as("best_d2"))
@@ -490,9 +478,9 @@ class GraphDedupSpec extends SparkSpec {
     Ann.appendIvfIndex(part2, "vec_id", "embedding", idxA)
     val idxB = scratch("graft-ivf-reb")
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxB, nlist = 8)
-    val viaAppend = Ann.ivfIndexTopK(spark, idxA, q,
+    val viaAppend = Ann.ivfIndexTopKAuto(spark, idxA, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
-    val viaRebuild = Ann.ivfIndexTopK(spark, idxB, q,
+    val viaRebuild = Ann.ivfIndexTopKAuto(spark, idxB, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     assert(viaAppend.exceptAll(viaRebuild).count() == 0 &&
       viaRebuild.exceptAll(viaAppend).count() == 0,
@@ -506,14 +494,14 @@ class GraphDedupSpec extends SparkSpec {
     // with EVERYTHING on part1's grid
     val idxQ = scratch("graft-ivfq-app")
     Ann.writeIvfIndex(part1, "vec_id", "embedding", idxQ, nlist = 8,
-      quantize = true)
+      layout = Ann.IvfLayout.Sq8)
     Ann.appendIvfIndex(part2, "vec_id", "embedding", idxQ)
     val params1 = spark.read.parquet(s"$idxQ/params")
     val allOnGrid1 = Ann.quantizeInt8(e, "embedding", params1)
     val directQ = Ann.quantizedTopK(
       allOnGrid1.filter(col("vec_id") % 100 === 0), allOnGrid1,
       "vec_id", "qvec", "vec_id", "qvec", k = 5)
-    val probeQ = Ann.ivfIndexTopKQuantized(spark, idxQ, q,
+    val probeQ = Ann.ivfIndexTopKAuto(spark, idxQ, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     assert(probeQ.exceptAll(directQ).count() == 0 &&
       directQ.exceptAll(probeQ).count() == 0,
@@ -556,9 +544,9 @@ class GraphDedupSpec extends SparkSpec {
     runStream(idx, ck1)
     val idxFull = scratch("ivfstr-reb")
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxFull, nlist = 8)
-    val viaStream = Ann.ivfIndexTopK(spark, idx, q,
+    val viaStream = Ann.ivfIndexTopKAuto(spark, idx, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
-    val viaRebuild = Ann.ivfIndexTopK(spark, idxFull, q,
+    val viaRebuild = Ann.ivfIndexTopKAuto(spark, idxFull, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     assert(viaStream.exceptAll(viaRebuild).count() == 0 &&
       viaRebuild.exceptAll(viaStream).count() == 0,
@@ -567,7 +555,7 @@ class GraphDedupSpec extends SparkSpec {
     // dynamic partition pruning still fires on the probed cell join
     // (both union sides are hive-partitioned by __cell, and the
     // runtime __cell IN filter pushes through the union)
-    val plan = Ann.ivfIndexTopK(spark, idx, q,
+    val plan = Ann.ivfIndexTopKAuto(spark, idx, q,
       "vec_id", "embedding", k = 5, nprobe = 2)
       .queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),
@@ -597,7 +585,7 @@ class GraphDedupSpec extends SparkSpec {
     Ann.compactIvfIndex(spark, idx)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/stream")),
       "the second fold did not collect the graced epoch dirs")
-    val viaCompacted = Ann.ivfIndexTopK(spark, idx, q,
+    val viaCompacted = Ann.ivfIndexTopKAuto(spark, idx, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     assert(viaCompacted.exceptAll(viaRebuild).count() == 0 &&
       viaRebuild.exceptAll(viaCompacted).count() == 0,
@@ -674,14 +662,14 @@ class GraphDedupSpec extends SparkSpec {
     // EVERYTHING on part1's params
     val idxQ = scratch("ivfstr-q")
     Ann.writeIvfIndex(part1, "vec_id", "embedding", idxQ, nlist = 8,
-      quantize = true)
+      layout = Ann.IvfLayout.Sq8)
     runStream(idxQ, scratch("ivfstr-ckq") + "/ck")
     val params1 = spark.read.parquet(s"$idxQ/params")
     val allOnGrid1 = Ann.quantizeInt8(e, "embedding", params1)
     val directQ = Ann.quantizedTopK(
       allOnGrid1.filter(col("vec_id") % 100 === 0), allOnGrid1,
       "vec_id", "qvec", "vec_id", "qvec", k = 5)
-    val probeQ = Ann.ivfIndexTopKQuantized(spark, idxQ, q,
+    val probeQ = Ann.ivfIndexTopKAuto(spark, idxQ, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     assert(probeQ.exceptAll(directQ).count() == 0 &&
       directQ.exceptAll(probeQ).count() == 0,
@@ -694,16 +682,16 @@ class GraphDedupSpec extends SparkSpec {
     // that the epoch sink preserves the CODE geometry end-to-end, the
     // last unpinned (layout × route) cell
     val idxP = scratch("ivfstr-pq")
-    Ann.writeIvfIndexPq(part1, "vec_id", "embedding", idxP, nlist = 8,
-      m = 4, ksub = 8)
+    Ann.writeIvfIndex(part1, "vec_id", "embedding", idxP, nlist = 8,
+      layout = Ann.IvfLayout.Pq(4, 8))
     runStream(idxP, scratch("ivfstr-ckp") + "/ck")
     val idxPb = scratch("ivfstr-pqb")
-    Ann.writeIvfIndexPq(part1, "vec_id", "embedding", idxPb, nlist = 8,
-      m = 4, ksub = 8)
+    Ann.writeIvfIndex(part1, "vec_id", "embedding", idxPb, nlist = 8,
+      layout = Ann.IvfLayout.Pq(4, 8))
     Ann.appendIvfIndex(part2, "vec_id", "embedding", idxPb)
-    val probeP = Ann.ivfIndexTopKPq(spark, idxP, q,
+    val probeP = Ann.ivfIndexTopKAuto(spark, idxP, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
-    val probePb = Ann.ivfIndexTopKPq(spark, idxPb, q,
+    val probePb = Ann.ivfIndexTopKAuto(spark, idxPb, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     assert(probeP.exceptAll(probePb).count() == 0 &&
       probePb.exceptAll(probeP).count() == 0,
@@ -718,7 +706,7 @@ class GraphDedupSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(new org.apache.hadoop.fs.Path(s"$idxP/stream")),
       "compaction left the PQ stream/ table behind")
-    val probePc = Ann.ivfIndexTopKPq(spark, idxP, q,
+    val probePc = Ann.ivfIndexTopKAuto(spark, idxP, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     assert(probePc.exceptAll(probePb).count() == 0 &&
       probePb.exceptAll(probePc).count() == 0,
@@ -728,16 +716,16 @@ class GraphDedupSpec extends SparkSpec {
     // codebooks — encodeUnderStoredGeometry's pqRes branch, whose
     // batch twin is q134's driver-gated path). Same twin construction.
     val idxR = scratch("ivfstr-pqr")
-    Ann.writeIvfIndexPq(part1, "vec_id", "embedding", idxR, nlist = 4,
-      m = 4, ksub = 8, residual = true)
+    Ann.writeIvfIndex(part1, "vec_id", "embedding", idxR, nlist = 4,
+      layout = Ann.IvfLayout.PqResidual(4, 8))
     runStream(idxR, scratch("ivfstr-ckr") + "/ck")
     val idxRb = scratch("ivfstr-pqrb")
-    Ann.writeIvfIndexPq(part1, "vec_id", "embedding", idxRb, nlist = 4,
-      m = 4, ksub = 8, residual = true)
+    Ann.writeIvfIndex(part1, "vec_id", "embedding", idxRb, nlist = 4,
+      layout = Ann.IvfLayout.PqResidual(4, 8))
     Ann.appendIvfIndex(part2, "vec_id", "embedding", idxRb)
-    val probeR = Ann.ivfIndexTopKPq(spark, idxR, q,
+    val probeR = Ann.ivfIndexTopKAuto(spark, idxR, q,
       "vec_id", "embedding", k = 5, nprobe = 4)
-    val probeRb = Ann.ivfIndexTopKPq(spark, idxRb, q,
+    val probeRb = Ann.ivfIndexTopKAuto(spark, idxRb, q,
       "vec_id", "embedding", k = 5, nprobe = 4)
     assert(probeR.exceptAll(probeRb).count() == 0 &&
       probeRb.exceptAll(probeR).count() == 0,
@@ -749,7 +737,7 @@ class GraphDedupSpec extends SparkSpec {
     // discipline exists to prevent)
     val geomBefore = Ann.readManifest(spark, idxQ).get.geomId
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxQ, nlist = 8,
-      quantize = true)
+      layout = Ann.IvfLayout.Sq8)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idxQ/stream")),
       "rebuild left old-geometry streamed epochs behind")
     val mfReb = Ann.readManifest(spark, idxQ).get
@@ -792,18 +780,18 @@ class GraphDedupSpec extends SparkSpec {
       .count() / nT
     val sq8 = scratch("clrec-sq8")
     Ann.writeIvfIndex(cv, "vec_id", "embedding", sq8, nlist = 16,
-      quantize = true)
+      layout = Ann.IvfLayout.Sq8)
     val pq = scratch("clrec-pq")
-    Ann.writeIvfIndexPq(cv, "vec_id", "embedding", pq, nlist = 16,
-      m = 4, ksub = 64)
+    Ann.writeIvfIndex(cv, "vec_id", "embedding", pq, nlist = 16,
+      layout = Ann.IvfLayout.Pq(4, 64))
     val pqr = scratch("clrec-pqr")
-    Ann.writeIvfIndexPq(cv, "vec_id", "embedding", pqr, nlist = 16,
-      m = 4, ksub = 64, residual = true)
-    def probeS(np: Int) = recall(Ann.ivfIndexTopKQuantized(spark, sq8, qs,
+    Ann.writeIvfIndex(cv, "vec_id", "embedding", pqr, nlist = 16,
+      layout = Ann.IvfLayout.PqResidual(4, 64))
+    def probeS(np: Int) = recall(Ann.ivfIndexTopKAuto(spark, sq8, qs,
       "vec_id", "embedding", k = 10, nprobe = np))
-    def probeP(np: Int) = recall(Ann.ivfIndexTopKPq(spark, pq, qs,
+    def probeP(np: Int) = recall(Ann.ivfIndexTopKAuto(spark, pq, qs,
       "vec_id", "embedding", k = 10, nprobe = np))
-    def probeR(np: Int) = recall(Ann.ivfIndexTopKPq(spark, pqr, qs,
+    def probeR(np: Int) = recall(Ann.ivfIndexTopKAuto(spark, pqr, qs,
       "vec_id", "embedding", k = 10, nprobe = np))
     val (s1, s8) = (probeS(1), probeS(16))
     val (p8, r8) = (probeP(16), probeR(16))
@@ -860,8 +848,8 @@ class GraphDedupSpec extends SparkSpec {
       .count() / nT
     val sq8 = scratch("clrec-op-sq8")
     Ann.writeIvfIndex(cv, "vec_id", "embedding", sq8, nlist = 64,
-      quantize = true)
-    def probeS(np: Int) = recall(Ann.ivfIndexTopKQuantized(spark, sq8, qs,
+      layout = Ann.IvfLayout.Sq8)
+    def probeS(np: Int) = recall(Ann.ivfIndexTopKAuto(spark, sq8, qs,
       "vec_id", "embedding", k = 10, nprobe = np))
     val (s1, s4, s16) = (probeS(1), probeS(4), probeS(16))
     info(f"over-partitioned sq8 recall@10: np1=$s1%.3f np4=$s4%.3f " +
@@ -1859,7 +1847,7 @@ class GraphDedupSpec extends SparkSpec {
     val victimStreamed = 1000001L
     Ann.deleteFromIvfIndex(
       Seq(victimBuilt, victimStreamed).toDF("vec_id"), "vec_id", idx)
-    val probedDf = Ann.ivfIndexTopK(spark, idx, q,
+    val probedDf = Ann.ivfIndexTopKAuto(spark, idx, q,
       "vec_id", "embedding", k = 5, nprobe = 8)
     val probed = probedDf.select("neighbor_id").as[Long].collect().toSet
     assert(!probed.contains(victimBuilt) && !probed.contains(victimStreamed),
@@ -1872,7 +1860,7 @@ class GraphDedupSpec extends SparkSpec {
     assert(probePlan.contains("BroadcastHashJoin") &&
       probePlan.toLowerCase.contains("leftanti"),
       s"tombstone anti-join is not broadcast:\n$probePlan")
-    val prunedPlan = Ann.ivfIndexTopK(spark, idx, q,
+    val prunedPlan = Ann.ivfIndexTopKAuto(spark, idx, q,
         "vec_id", "embedding", k = 5, nprobe = 2)
       .queryExecution.executedPlan.toString
     assert(prunedPlan.toLowerCase.contains("dynamicpruning"),
@@ -1921,7 +1909,7 @@ class GraphDedupSpec extends SparkSpec {
       "the purge must RETAIN folded epoch dirs one cycle (probe grace)")
     val mf = Ann.readManifest(spark, idx).get
     assert(mf.rows == e.count() + 4 - 2, mf.toString)
-    val probedAfter = Ann.ivfIndexTopK(spark, idx, q,
+    val probedAfter = Ann.ivfIndexTopKAuto(spark, idx, q,
         "vec_id", "embedding", k = 5, nprobe = 8)
       .select("neighbor_id").as[Long].collect().toSet
     assert(!probedAfter.contains(victimBuilt) &&
@@ -1937,7 +1925,7 @@ class GraphDedupSpec extends SparkSpec {
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/assigned/$rel")),
         s"dead file $rel must be collected by the next entry")
     }
-    val probedCollected = Ann.ivfIndexTopK(spark, idx, q,
+    val probedCollected = Ann.ivfIndexTopKAuto(spark, idx, q,
         "vec_id", "embedding", k = 5, nprobe = 8)
       .select("neighbor_id").as[Long].collect().toSet
     assert(probedCollected == probedAfter,
@@ -2000,11 +1988,11 @@ class GraphDedupSpec extends SparkSpec {
     Ann.writeIvfIndex(e, "vec_id", "embedding", idx, nlist = 8)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/deletes")),
       "rebuild left stale tombstones")
-    assert(Ann.ivfIndexTopK(spark, idx, e.filter(col("vec_id") === 31L),
+    assert(Ann.ivfIndexTopKAuto(spark, idx, e.filter(col("vec_id") === 31L),
         "vec_id", "embedding", k = 1, nprobe = 8, excludeSelf = false)
       .filter(col("neighbor_id") === 31L).count() > 0,
       "a stale tombstone suppressed a rebuilt row")
-    // the QUANTIZED layouts execute the same openIvfIndex anti-join
+    // the QUANTIZED layouts execute the same probe anti-join
     // (q136 gates the float probe; this runs the SQ8 and PQ probes
     // with live tombstones — the shared-opener claim, executed):
     // an identical-twin query must find its twin at rank 1 until the
@@ -2014,15 +2002,15 @@ class GraphDedupSpec extends SparkSpec {
           org.apache.spark.sql.DataFrame)](
       ("sq8",
         (p: String) => Ann.writeIvfIndex(e, "vec_id", "embedding", p,
-          nlist = 4, quantize = true),
+          nlist = 4, layout = Ann.IvfLayout.Sq8),
         (p: String, qs: org.apache.spark.sql.DataFrame) =>
-          Ann.ivfIndexTopKQuantized(spark, p, qs, "vec_id", "embedding",
+          Ann.ivfIndexTopKAuto(spark, p, qs, "vec_id", "embedding",
             k = 1, nprobe = 4, excludeSelf = false)),
       ("pq",
-        (p: String) => Ann.writeIvfIndexPq(e, "vec_id", "embedding", p,
-          nlist = 4, m = 4, ksub = 8),
+        (p: String) => Ann.writeIvfIndex(e, "vec_id", "embedding", p,
+          nlist = 4, layout = Ann.IvfLayout.Pq(4, 8)),
         (p: String, qs: org.apache.spark.sql.DataFrame) =>
-          Ann.ivfIndexTopKPq(spark, p, qs, "vec_id", "embedding",
+          Ann.ivfIndexTopKAuto(spark, p, qs, "vec_id", "embedding",
             k = 1, nprobe = 4, excludeSelf = false)))) {
       val p = scratch(s"ivfdel-$quant")
       build(p)
@@ -2108,12 +2096,12 @@ class GraphDedupSpec extends SparkSpec {
           !mfS.streamMarks.get(tag).exists(ep <= _) }
     assert(liveDirs < 2,
       s"live backlog of $liveDirs epochs survived a compactAfterEpochs=2 sink")
-    val viaAuto = Ann.ivfIndexTopK(spark, idx2,
+    val viaAuto = Ann.ivfIndexTopKAuto(spark, idx2,
       e.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
       k = 5, nprobe = 4)
     val idx2Full = scratch("ivfauto-reb")
     Ann.writeIvfIndex(e, "vec_id", "embedding", idx2Full, nlist = 4)
-    val viaRebuild2 = Ann.ivfIndexTopK(spark, idx2Full,
+    val viaRebuild2 = Ann.ivfIndexTopKAuto(spark, idx2Full,
       e.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
       k = 5, nprobe = 4)
     assert(viaAuto.exceptAll(viaRebuild2).count() == 0 &&

@@ -506,7 +506,7 @@ class ModulesSpec extends SparkSpec {
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxF, nlist = 8)
     val idxQ = scratch("annps-q")
     Ann.writeIvfIndex(e, "vec_id", "embedding", idxQ, nlist = 8,
-      quantize = true)
+      layout = Ann.IvfLayout.Sq8)
     // the arriving queries as a 3-file dir + maxFilesPerTrigger=1 →
     // three REAL micro-batches, so the union-of-batches contract is
     // what's tested, not a single-batch degenerate case
@@ -531,7 +531,7 @@ class ModulesSpec extends SparkSpec {
     assert(batchesF >= 2,
       s"expected multiple micro-batches, got $batchesF — the union " +
         "contract was not exercised")
-    val batF = Ann.ivfIndexTopK(spark, idxF, q0, "vec_id", "embedding",
+    val batF = Ann.ivfIndexTopKAuto(spark, idxF, q0, "vec_id", "embedding",
       k = 5, nprobe = 8)
     assert(gotF.exceptAll(batF).count() == 0 &&
       batF.exceptAll(gotF).count() == 0,
@@ -541,7 +541,7 @@ class ModulesSpec extends SparkSpec {
     val (gotQ, _) = streamed(idxQ)
     assert(gotQ.columns.contains("d2q"),
       s"manifest dispatch missed: got columns ${gotQ.columns.mkString(",")}")
-    val batQ = Ann.ivfIndexTopKQuantized(spark, idxQ, q0,
+    val batQ = Ann.ivfIndexTopKAuto(spark, idxQ, q0,
       "vec_id", "embedding", k = 5, nprobe = 8)
     assert(gotQ.exceptAll(batQ).count() == 0 &&
       batQ.exceptAll(gotQ).count() == 0,

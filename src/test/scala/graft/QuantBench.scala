@@ -222,20 +222,20 @@ object QuantBench {
         val pqrIdx = s"$tmp/cl-$label-pqr"
         val tb1 = System.nanoTime()
         Ann.writeIvfIndex(cv, "vec_id", "embedding", sq8Idx, nlist,
-          quantize = true)
-        Ann.writeIvfIndexPq(cv, "vec_id", "embedding", pqIdx, nlist,
-          m = m, ksub = ksub)
-        Ann.writeIvfIndexPq(cv, "vec_id", "embedding", pqrIdx, nlist,
-          m = m, ksub = ksub, residual = true)
+          layout = Ann.IvfLayout.Sq8)
+        Ann.writeIvfIndex(cv, "vec_id", "embedding", pqIdx, nlist,
+          layout = Ann.IvfLayout.Pq(m, ksub))
+        Ann.writeIvfIndex(cv, "vec_id", "embedding", pqrIdx, nlist,
+          layout = Ann.IvfLayout.PqResidual(m, ksub))
         println(f"[quant] clustered-$label n=$cn builds (sq8+pq+pqr, " +
           f"clusters=$clusters, nlist=$nlist, m=$m, ksub=$ksub): " +
           f"${(System.nanoTime() - tb1) / 1e9}%6.1f s one-time")
         for (np <- probes) {
-          val rS = cRecall(Ann.ivfIndexTopKQuantized(spark, sq8Idx, cqs,
+          val rS = cRecall(Ann.ivfIndexTopKAuto(spark, sq8Idx, cqs,
             "vec_id", "embedding", k = 10, nprobe = np))
-          val rP = cRecall(Ann.ivfIndexTopKPq(spark, pqIdx, cqs,
+          val rP = cRecall(Ann.ivfIndexTopKAuto(spark, pqIdx, cqs,
             "vec_id", "embedding", k = 10, nprobe = np))
-          val rR = cRecall(Ann.ivfIndexTopKPq(spark, pqrIdx, cqs,
+          val rR = cRecall(Ann.ivfIndexTopKAuto(spark, pqrIdx, cqs,
             "vec_id", "embedding", k = 10, nprobe = np))
           println(f"[quant] clustered-$label n=$cn recall@10 " +
             f"nprobe=$np%-3d sq8=$rS%.3f pq=$rP%.3f pqr=$rR%.3f")

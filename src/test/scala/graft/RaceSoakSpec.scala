@@ -99,7 +99,7 @@ class RaceSoakSpec extends SparkSpec {
     val queries = e.filter(col("vec_id") % 16 === 0).persist()
     val pre = Ann.loadIndexGeometry(spark, idx, "RaceSoakSpec")
     def probe(): AnyRef =
-      Ann.ivfIndexTopK(spark, idx, queries, "vec_id", "embedding",
+      Ann.ivfIndexTopKAuto(spark, idx, queries, "vec_id", "embedding",
           k = 5, nprobe = 4, excludeSelf = false)
         .select("query_id", "neighbor_id", "rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -139,7 +139,7 @@ class RaceSoakSpec extends SparkSpec {
       nlist = 4)
     val queries = e.filter(col("vec_id") % 16 === 0).persist()
     def probe(): AnyRef =
-      Ann.ivfIndexTopK(spark, idx, queries, "vec_id", "embedding",
+      Ann.ivfIndexTopKAuto(spark, idx, queries, "vec_id", "embedding",
           k = 5, nprobe = 4, excludeSelf = false)
         .select("query_id", "neighbor_id", "rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))

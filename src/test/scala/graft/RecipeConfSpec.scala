@@ -1137,7 +1137,7 @@ class RecipeConfSpec extends SparkSpec {
     // cell-partitioned corpus + centroids on disk, queryable end-to-end
     assert(spark.read.parquet(s"$dir/ann_out/centroids").count() == 4)
     val q = spark.read.parquet(s"$dir/ann_in").limit(3)
-    val hits = graft.sim.Ann.ivfIndexTopK(spark, s"$dir/ann_out",
+    val hits = graft.sim.Ann.ivfIndexTopKAuto(spark, s"$dir/ann_out",
       q, "vec_id", "embedding", k = 2, nprobe = 2)
     assert(hits.count() == 6) // 3 queries × k=2
 
@@ -1190,8 +1190,8 @@ class RecipeConfSpec extends SparkSpec {
     assert(e.getMessage.contains("must name an ann_index dataset"), e.getMessage)
 
     // the int8 layout end-to-end from YAML: quantize: true sink, then
-    // ann_topk quantized: true probes it exhaustively — must equal the
-    // brute-force quantized ranking; the float probe refuses the layout
+    // ann_topk probes it exhaustively under the layout its manifest
+    // records — must equal the brute-force quantized ranking
     val qc = RecipeConf.load(
       s"""datasets:
          |  vectors: {path: $dir/ann_in, format: parquet}
@@ -1205,11 +1205,7 @@ class RecipeConfSpec extends SparkSpec {
          |    input: vectors
          |    steps:
          |      - ann_topk: {id: vec_id, vec: embedding, k: 2,
-         |                   index: the_ann_q, nprobe: 4, quantized: true}
-         |  wrongprobe:
-         |    input: vectors
-         |    steps:
-         |      - ann_topk: {id: vec_id, vec: embedding, k: 2, index: the_ann_q}
+         |                   index: the_ann_q, nprobe: 4}
          |""".stripMargin)
     RecipeConf.run(spark, qc, "build")
     val vq = graft.sim.Ann.quantizeInt8(
@@ -1220,15 +1216,10 @@ class RecipeConfSpec extends SparkSpec {
     val probedQ = RecipeConf.run(spark, qc, "probe")
     assert(probedQ.exceptAll(directQ).isEmpty && directQ.exceptAll(probedQ).isEmpty,
       "YAML quantized probe diverges from brute-force quantized")
-    val eQ = intercept[IllegalArgumentException] {
-      RecipeConf.run(spark, qc, "wrongprobe")
-    }
-    assert(eQ.getMessage.contains("QUANTIZED"), eQ.getMessage)
 
     // the IVF-PQ layout end-to-end from YAML: quantize: pq sink with
-    // explicit code geometry, then ann_topk quantized: pq probes it
-    // exhaustively — must equal the brute-force PQ ranking; a stale
-    // float flag refuses the layout
+    // explicit code geometry, then ann_topk probes it exhaustively —
+    // must equal the brute-force PQ ranking
     val pc = RecipeConf.load(
       s"""datasets:
          |  vectors: {path: $dir/ann_in, format: parquet}
@@ -1243,11 +1234,7 @@ class RecipeConfSpec extends SparkSpec {
          |    input: vectors
          |    steps:
          |      - ann_topk: {id: vec_id, vec: embedding, k: 2,
-         |                   index: the_ann_pq, nprobe: 4, quantized: pq}
-         |  wrongprobe:
-         |    input: vectors
-         |    steps:
-         |      - ann_topk: {id: vec_id, vec: embedding, k: 2, index: the_ann_pq}
+         |                   index: the_ann_pq, nprobe: 4}
          |""".stripMargin)
     RecipeConf.run(spark, pc, "build")
     val vecs = spark.read.parquet(s"$dir/ann_in")
@@ -1257,10 +1244,6 @@ class RecipeConfSpec extends SparkSpec {
     assert(probedPq.exceptAll(directPq).isEmpty &&
       directPq.exceptAll(probedPq).isEmpty,
       "YAML PQ probe diverges from brute-force PQ")
-    val ePq = intercept[IllegalArgumentException] {
-      RecipeConf.run(spark, pc, "wrongprobe")
-    }
-    assert(ePq.getMessage.contains("PRODUCT-QUANTIZED"), ePq.getMessage)
   }
 
   test("ann_index append from YAML extends the index; drifted geometry options refuse loudly") {
@@ -1401,7 +1384,7 @@ class RecipeConfSpec extends SparkSpec {
     RecipeConf.run(spark, conf, "takedown", mode = "delete")
     val victim = vecs.orderBy("vec_id").limit(1)
       .select("vec_id").collect()(0).getLong(0)
-    val probed = graft.sim.Ann.ivfIndexTopK(spark, idxPath,
+    val probed = graft.sim.Ann.ivfIndexTopKAuto(spark, idxPath,
       vecs.filter(col("vec_id") === victim), "vec_id", "embedding",
       k = 1, nprobe = 4, excludeSelf = false)
     assert(probed.filter(col("neighbor_id") === victim).isEmpty,
