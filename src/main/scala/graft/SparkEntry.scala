@@ -1297,14 +1297,12 @@ object SparkEntry {
       probeIvf(s, idx, t(s, dir, "embeddings"), nprobe = 8)
     }),
 
-    // MinHash-LSH near-dup candidate pairs, Jaccard-verified (rows-only)
-    // (rebalanced — the shingle + 64-hash minhash signature kernel is
-    // the expensive scan-level stage; one unsplittable file = one core
-    // without it. No-op on real multi-file corpora.)
+    // MinHash-LSH near-dup candidate pairs, Jaccard-verified (rows-only;
+    // minhashNearDups spreads the one-file table before its signing
+    // kernel itself)
     "q26_minhash_pairs" -> ((s, dir) =>
-      Dedup.minhashNearDups(
-        graft.operators.Ops.rebalance(t(s, dir, "documents")),
-        "doc_id", "text", threshold = 0.6)),
+      Dedup.minhashNearDups(t(s, dir, "documents"), "doc_id", "text",
+        threshold = 0.6)),
 
     // SimHash near-dup pairs — md5-hash variant so DuckDB can recompute
     // the 60-bit signatures bit-for-bit (murmur3 is Spark-only).

@@ -257,24 +257,39 @@ object Dedup {
     * threshold. At scale the band join is the only shuffle and buckets are
     * naturally balanced by the hash; AQE splits skewed buckets.
     *
+    * The input is spread with [[graft.operators.Ops.rebalance]] before
+    * the shingle kernel, which is the expensive scan-level stage: one
+    * unsplittable file would otherwise sign every row on one core. The
+    * spread is a no-op on an input that is already parallel. The shingle
+    * frame is the one materialization point: the band join and the
+    * verify join both read it.
+    *
     * @return (id_a, id_b, jaccard) with id_a < id_b
     */
   def minhashNearDups(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.6): DataFrame = {
+      threshold: Double = 0.6): DataFrame =
+    // shingle sets as sorted hashed longs: set semantics survive, every
+    // downstream compare/intersect runs on primitives instead of strings
+    lshPairs(graft.engine.CacheScope.cache(
+        graft.operators.Ops.rebalance(df).select(col(idCol).as("id"),
+          shingleHash(col(textCol), shingleSize).as("shingles"))
+        .filter(size(col("shingles")) > 0)),
+      numHashes, bands, threshold)
+
+  /** The pair pipeline of the minhash family over a frame that already
+    * holds its shingles: (id, shingles), shingle sets non-empty. The
+    * caller caches that frame, since it is read twice here: by the band
+    * join and by the verify join. */
+  private def lshPairs(base: DataFrame, numHashes: Int, bands: Int,
+      threshold: Double): DataFrame = {
     // bands > numHashes would make every band slice EMPTY (one global
     // bucket → the full n²/2 cross product); a non-divisor would
     // silently drop trailing hashes
     require(bands >= 1 && numHashes % bands == 0,
       s"bands must divide numHashes (got bands=$bands, numHashes=$numHashes)")
     val rowsPerBand = numHashes / bands
-    // shingle sets as sorted hashed longs: set semantics survive, every
-    // downstream compare/intersect runs on primitives instead of strings.
-    // Cached: the frame serves the band join and the verify join.
-    val base = graft.engine.CacheScope.cache(df.select(
-      col(idCol).as("id"), shingleHash(col(textCol), shingleSize).as("shingles"))
-      .filter(size(col("shingles")) > 0))
     // band join carries ONLY (band, bucket, id): the wide shingle arrays
     // never enter the shuffle; candidates dedup on the narrow pair
     val banded = base
@@ -303,19 +318,44 @@ object Dedup {
     * (ties → min id), the same quality-aware survivor rule as
     * [[dedupKeepBest]] lifted to NEAR-dup clusters. Signature knobs
     * pass through to [[minhashNearDups]] so callers composing this with
-    * the incremental family can hold ONE similarity criterion. */
+    * the incremental family can hold ONE similarity criterion.
+    *
+    * One materialization point: the input is spread with
+    * [[graft.operators.Ops.rebalance]] (a no-op on an already parallel
+    * input) and cached once with its shingle set as a column. The band
+    * join, the Jaccard verify, connected components and the survivor
+    * anti-join all read that one frame, and so does whatever the caller
+    * builds on the result. Connected components runs its rounds while
+    * this plan is built, so without the cache every one of its jobs, and
+    * then the caller's write, would re-run the upstream plan (in a
+    * recipe: the scan, the scrub and the quality kernel) from scratch. */
   def minhashDedup(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.6, keepScore: Option[String] = None,
       shingleSize: Int = 3, numHashes: Int = 64,
-      bands: Int = 16): DataFrame = {
-    val pairs = minhashNearDups(df, idCol, textCol,
-      shingleSize = shingleSize, numHashes = numHashes, bands = bands,
-      threshold = threshold)
-    keepScore match {
-      case None => keepMinPerCluster(df, idCol, pairs)
-      case Some(s) => keepBestPerCluster(df, idCol, pairs, s)
-    }
+      bands: Int = 16): DataFrame =
+    minhashDedupNoSpread(graft.operators.Ops.rebalance(df), idCol, textCol,
+      threshold, keepScore, shingleSize, numHashes, bands)
+
+  /** [[minhashDedup]] over an input the caller has already spread, or
+    * chosen not to: the incremental near-dup family passes its batch
+    * survivors, a post-join frame that [[graft.operators.Ops.rebalance]]
+    * would repartition a second time. */
+  private[graft] def minhashDedupNoSpread(df: DataFrame, idCol: String,
+      textCol: String, threshold: Double, keepScore: Option[String] = None,
+      shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
+    val base = graft.engine.CacheScope.cache(
+      df.withColumn(ShingleCol, shingleHash(col(textCol), shingleSize)))
+    val pairs = lshPairs(base.select(col(idCol).as("id"), col(ShingleCol).as("shingles"))
+        .filter(size(col("shingles")) > 0),
+      numHashes, bands, threshold)
+    (keepScore match {
+      case None => keepMinPerCluster(base, idCol, pairs)
+      case Some(s) => keepBestPerCluster(base, idCol, pairs, s)
+    }).drop(ShingleCol)
   }
+
+  /** The shingle-set column [[minhashDedup]]'s cached input carries. */
+  private[graft] val ShingleCol = "__minhash_sh"
 
   /** Shingle frame shared by the incremental near-dup family: one row
     * per input row, (out, sh) with sh the sorted hashed shingle set. */
@@ -883,7 +923,9 @@ object Dedup {
     * [[minhashDedup]] WITHIN the survivors (two batch copies of one new
     * doc must not both survive; corpus rows are never touched). The
     * signature parameters govern BOTH passes — one similarity
-    * criterion, vs-corpus and within-batch alike. */
+    * criterion, vs-corpus and within-batch alike. The within-batch pass
+    * does not spread its input again: the verdicts already spread the
+    * batch, and the survivors are a post-join frame. */
   def incrementalNearDedup(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, shingleSize: Int = 3,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.6,
@@ -892,7 +934,7 @@ object Dedup {
       shingleSize, numHashes, bands, threshold, bloomFpp)
     val novel = batch.join(
       verdicts.filter(!col("kept")).select(col(idCol)), Seq(idCol), "left_anti")
-    minhashDedup(novel, idCol, textCol, threshold,
+    minhashDedupNoSpread(novel, idCol, textCol, threshold,
       shingleSize = shingleSize, numHashes = numHashes, bands = bands)
   }
 
@@ -1129,7 +1171,8 @@ object Dedup {
   /** [[incrementalNearDedup]] against a persisted index — drop verdicted
     * rows, then [[minhashDedup]] within the survivors with the INDEX
     * MANIFEST's signature parameters, so the vs-corpus and within-batch
-    * criteria cannot drift. */
+    * criteria cannot drift. As in [[incrementalNearDedup]], the
+    * survivors are not spread a second time. */
   def incrementalNearDedupIndexed(batch: DataFrame, indexPath: String,
       idCol: String, textCol: String, threshold: Double = 0.6,
       bloomFpp: Option[Double] = None): DataFrame = {
@@ -1139,7 +1182,7 @@ object Dedup {
       textCol, threshold, bloomFpp)
     val novel = batch.join(
       verdicts.filter(!col("kept")).select(col(idCol)), Seq(idCol), "left_anti")
-    minhashDedup(novel, idCol, textCol, threshold,
+    minhashDedupNoSpread(novel, idCol, textCol, threshold,
       shingleSize = shingleSize, numHashes = numHashes, bands = bands)
   }
 

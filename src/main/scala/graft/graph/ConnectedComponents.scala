@@ -15,9 +15,11 @@ import org.apache.spark.storage.StorageLevel
   * deterministic, unlike the reference's per-run random uuid
   * (code/recipes.py:2040-2048), and therefore oracle-checkable.
   *
-  * Shape: the symmetrized edge list is clustered on its source once and
-  * persisted. Round 1 is the SEED: the aggregate that materializes the
-  * edges already computes min(self, neighbours), so no round starts from
+  * Shape: the symmetrized edge list is built in ONE pass over the edges
+  * (each row emits both directions), clustered on its source once and
+  * persisted, so the plan behind `edges` (a scan, a pair join) runs once.
+  * Round 1 is the SEED: the aggregate that materializes the edges
+  * already computes min(self, neighbours), so no round starts from
   * identity labels. Every later round is ONE propagation action — the
   * labels meet the edges on the edges' own clustering key, the
   * neighbour labels regroup on the node (one shuffle) — that carries the
@@ -41,9 +43,15 @@ object ConnectedComponents {
     require(maxIter >= 1, s"maxIter must be at least 1 (the seed round), got $maxIter")
     val Array(srcC, dstC) = edges.columns.take(2)
     // symmetrize + distinct once, clustered on src: the seed aggregate
-    // reads it in place, and every round joins the labels on that key
-    val sym = edges.select(col(srcC).as("src"), col(dstC).as("dst"))
-      .union(edges.select(col(dstC).as("src"), col(srcC).as("dst")))
+    // reads it in place, and every round joins the labels on that key.
+    // Each edge row emits both directions, so `edges` is read in ONE
+    // pass: a union of two projections would plan, and run, the whole
+    // edge pipeline (a scan, the minhash pair join) twice
+    val sym = edges
+      .select(explode(array(
+        struct(col(srcC).as("src"), col(dstC).as("dst")),
+        struct(col(dstC).as("src"), col(srcC).as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
       .repartition(col("src"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -543,24 +543,33 @@ object Ops {
     *     frame that slips through costs low parallelism, not
     *     wrong results. Callers that KNOW a wide frame is small can
     *     `.cache()` it first (a cached plan reports measured bytes)
-    *     or repartition explicitly. */
+    *     or repartition explicitly.
+    * A frame whose topmost wide operator is already a round-robin
+    * `repartition(n)` with n ≥ `target` (a YAML `rebalance` step, an
+    * earlier rebalance) comes back unchanged: AQE keeps that fixed
+    * width, so a second spread would only add an exchange. */
   def rebalance(df: DataFrame, target: Int = 0): DataFrame = {
     val goal =
       if (target > 0) target
       else df.sparkSession.sparkContext.defaultParallelism
     import org.apache.spark.sql.catalyst.plans.{logical => lp}
-    val scanLevel = df.queryExecution.optimizedPlan.collectFirst {
+    // the topmost wide operator: everything above it is row-local
+    df.queryExecution.optimizedPlan.collectFirst {
       case p @ (_: lp.Join | _: lp.Aggregate | _: lp.Window | _: lp.Sort |
           _: lp.RepartitionOperation | _: lp.GlobalLimit |
           _: lp.Deduplicate) => p
-    }.isEmpty
-    if (!scanLevel) {
-      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est <= BigInt(goal) * 128L * 1024 * 1024) df.repartition(goal)
-      else df
+    } match {
+      case None =>
+        if (df.rdd.getNumPartitions >= goal) df else df.repartition(goal)
+      // already spread by an explicit repartition to a fixed width (a
+      // YAML rebalance step, a caller's own rebalance), which AQE does
+      // not coalesce: a second spread would only add an exchange
+      case Some(r: lp.Repartition) if r.shuffle && r.numPartitions >= goal => df
+      case Some(_) =>
+        val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+        if (est <= BigInt(goal) * 128L * 1024 * 1024) df.repartition(goal)
+        else df
     }
-    else if (df.rdd.getNumPartitions >= goal) df
-    else df.repartition(goal)
   }
 
   /** [[rebalance]] for STREAMING frames (r15): a micro-batch sourced

@@ -741,7 +741,8 @@ object EventStream {
             val survivors = batch.join(
               verdicts.filter(!col("kept")).select(col(idCol)),
               Seq(idCol), "left_anti")
-            val admitted = Dedup.minhashDedup(survivors, idCol, textCol,
+            // survivors is a post-join frame: no second spread
+            val admitted = Dedup.minhashDedupNoSpread(survivors, idCol, textCol,
               threshold, shingleSize = pre._1, numHashes = pre._2,
               bands = pre._3)
             Dedup.appendNearDupStreamBatch(admitted, indexPath, idCol,

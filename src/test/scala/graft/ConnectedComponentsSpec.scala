@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.graph.ConnectedComponents
 
 /** Min-label connected components: the seed round folds round 1 into
@@ -13,37 +12,12 @@ class ConnectedComponentsSpec extends SparkSpec {
   private def labels(df: org.apache.spark.sql.DataFrame): Map[Any, Any] =
     df.collect().map(r => r.get(0) -> r.get(1)).toMap
 
-  /** The jobs `body` runs, as (SQL execution id or None for a plain RDD
-    * job, stage count), tagged by a job group of their own so no other
-    * suite's job is counted. */
-  private def jobsOf(body: => Unit): Seq[(Option[String], Int)] = {
-    val sc = spark.sparkContext
-    val group = s"cc-jobs-${System.nanoTime}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Option[String], Int)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          seen.add((Option(e.properties.getProperty("spark.sql.execution.id")),
-            e.stageInfos.size))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "connected components job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toSeq
-  }
-
   test("star graph of diameter 2: one propagation action and one narrow scan per round") {
     // center 5, leaves 1..4 and 6..9: the seed labels the center 1, one
     // round spreads 1 to every leaf, one more confirms — 3 rounds
     val edges = ((1L to 4L) ++ (6L to 9L)).map(l => (5L, l)).toDF("src", "dst")
     var out: Map[Any, Any] = Map.empty
-    val jobs = jobsOf { out = labels(ConnectedComponents.run(edges)) }
+    val jobs = sparkWork { out = labels(ConnectedComponents.run(edges)) }.jobs
     assert(out == (1L to 9L).map(n => (n: Any) -> (1L: Any)).toMap)
     val rounds = 3
     val (sqlJobs, rddJobs) = jobs.partition(_._1.isDefined)
@@ -103,6 +77,25 @@ class ConnectedComponentsSpec extends SparkSpec {
     val strs = Seq(("b", "c"), ("c", "a"), ("x", "y"), ("q", "q")).toDF("src", "dst")
     assert(labels(ConnectedComponents.run(strs)) ==
       Map[Any, Any]("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x", "q" -> "q"))
+  }
+
+  test("the edge plan is evaluated once: one pass over a lazy parquet edge list") {
+    // reversed duplicates, a self-loop and NULL endpoints behind a file
+    // scan: symmetrizing must read the file once, not once per direction
+    val path = s"${scratch("cc-edges")}/edges"
+    Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 1L), (3L, 2L), (2L, 3L), (5L, 5L), (6L, 7L),
+      (7L, null), (null, 9L), (9L, 8L))
+      .toDF("src", "dst").coalesce(1).write.parquet(path)
+    val edges = spark.read.parquet(path)
+    var out: Map[Any, Any] = Map.empty
+    val work = sparkWork { out = labels(ConnectedComponents.run(edges)) }
+    assert(work.rowsScanned(path) == 9,
+      s"the edge file (9 rows) was not read exactly once: ${work.scanRows}")
+    // the NULL node touches 7 (component 6) and 9 (component 8) and takes
+    // the smaller label, linking nothing
+    assert(out == Map[Any, Any](1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L,
+      6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 8L, (null: Any) -> 6L))
   }
 
   test("random graphs: min-label propagation agrees with star contraction") {

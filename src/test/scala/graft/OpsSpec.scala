@@ -356,6 +356,11 @@ class OpsSpec extends SparkSpec {
     // default target = session parallelism
     assert(Ops.rebalance(one).rdd.getNumPartitions ==
       spark.sparkContext.defaultParallelism)
+    // already spread by a repartition to at least the target, row-local
+    // work above it: no second exchange
+    val spread = r.filter(col("id") % 2 === 0)
+    assert(Ops.rebalance(spread, target = 8) eq spread)
+    assert(Ops.rebalance(spread, target = 16).rdd.getNumPartitions == 16)
   }
 
   test("rebalance on WIDE frames: estimated-small lands at exactly the " +

@@ -2003,6 +2003,79 @@ class RecipeConfSpec extends SparkSpec {
     assert(out.forall(r => Set("train", "val")(r.getAs[String]("split"))))
   }
 
+  test("the curate shape reads its corpus once: minhash dedup is the one materialization point") {
+    import spark.implicits._
+    // 240 docs in ONE parquet file: 40-word texts over a small
+    // vocabulary, every 4th word a stopword so quality keeps them; every
+    // 5th doc is a one-word edit of the doc before it (a near-dup pair),
+    // every 16th is too short for quality, every 23rd carries a heldout
+    // doc's first 10 words (contaminated at n = 8), and some PII
+    val rnd = new scala.util.Random(20261021L)
+    val stop = Vector("the", "of", "and", "to", "with", "that")
+    val vocab = (1 to 120).map(i => s"w${i}rd").toVector
+    def pick(v: Vector[String]) = v(rnd.nextInt(v.size))
+    def words(n: Int): Vector[String] =
+      Vector.tabulate(n)(j => if (j % 4 == 0) pick(stop) else pick(vocab))
+    val heldout = (1 to 4).map(h => s"h$h" -> words(20))
+    val docs = (0 until 240).foldLeft(Vector.empty[(String, Vector[String])]) {
+      case (acc, i) =>
+        val ws =
+          if (i % 5 == 4) acc.last._2.updated(rnd.nextInt(acc.last._2.size), pick(vocab))
+          else if (i % 16 == 0) words(10)
+          else if (i % 23 == 3) heldout(i % 4)._2.take(10) ++ words(30)
+          else words(40)
+        acc :+ (f"d$i%03d" -> ws)
+    }
+    val corpusPath = s"$dir/curate_once_corpus"
+    docs.map { case (id, ws) =>
+        (id, ws.mkString(" ") + (if (id.endsWith("7")) s" mail $id@x.org" else ""))
+      }.toDF("id", "text").coalesce(1).write.mode("overwrite").parquet(corpusPath)
+    heldout.map { case (id, ws) => (id, ws.mkString(" ")) }.toDF("id", "text")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/curate_once_heldout")
+    val conf = RecipeConf.load(
+      s"""datasets:
+         |  corpus: {path: $corpusPath, format: parquet}
+         |  heldout: {path: $dir/curate_once_heldout, format: parquet}
+         |  curated: {path: $dir/curate_once_out, format: parquet}
+         |recipes:
+         |  curate:
+         |    input: corpus
+         |    steps:
+         |      - scrub: {select: [text]}
+         |      - quality: {id: id, text: text, min_words: 25}
+         |      - dedup: {id: id, text: text, method: minhash, threshold: 0.7}
+         |      - decontaminate: {dataset: heldout, id: id, text: text, n: 8}
+         |      - split: {id: id, salt: once, splits: {train: 0.8, val: 0.1, test: 0.1}}
+         |    output: curated
+         |""".stripMargin)
+    // plan build (connected components runs its rounds there) + write
+    val work = sparkWork { RecipeConf.run(spark, conf, "curate") }
+    val rows = spark.read.parquet(s"$dir/curate_once_out").select("id", "split")
+      .as[(String, String)].collect().map { case (i, s) => s"$i,$s" }.sorted
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // the same rows as before the step input was cached (pinned from
+    // the commit that re-ran the upstream plan once per action)
+    assert(rows.length == 171 && digest ==
+      "61cd9cd19b87b20ec3758cccbc7eb752587380c485e335c265cacf2c8919cfec",
+      s"rows=${rows.length} digest=$digest")
+    // one scan of the corpus across plan build and write: the minhash
+    // step caches its input, and its pair jobs, connected components,
+    // the survivor join and decontaminate's two references all read it
+    assert(work.rowsScanned(corpusPath) == 240,
+      s"the corpus (240 rows) was not scanned exactly once: ${work.scanRows}")
+    // the cached step input (its plan carries the shingle column) is
+    // spread before the shingle kernel: no stage that builds or reads it
+    // runs on one core
+    val shingled = work.stages.filter(_.rddNames.exists(_.contains(graft.dedup.Dedup.ShingleCol)))
+    assert(shingled.nonEmpty, s"no stage touched the cached step input: ${work.stages}")
+    if (spark.sparkContext.defaultParallelism > 1)
+      assert(shingled.forall(_.tasks > 1), s"a shingle stage ran one task: $shingled")
+    // 32 jobs before, when the scan, scrub and quality kernel re-ran per
+    // action and connected components planned the pair join twice
+    assert(work.jobs.size <= 25, s"job count grew: ${work.jobs.size} (${work.jobs})")
+  }
+
   test("lm_score step trains on a named reference dataset with its own text column") {
     import spark.implicits._
     Seq((1L, "aa bb"), (2L, "zz")).toDF("doc_id", "text")

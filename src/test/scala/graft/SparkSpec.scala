@@ -57,9 +57,86 @@ object TestScratch {
   }
 }
 
+/** One stage that ran: its task count and the names of the RDDs in it
+  * (a cached frame's RDD is named after its plan). */
+final case class StageRun(tasks: Int, rddNames: Seq[String])
+
+/** The Spark work a block ran: its jobs as (SQL execution id or None for
+  * a plain RDD job, stage count), the stages that ran, and the rows each
+  * file scan produced, keyed by the scan's location. */
+final case class SparkWork(jobs: Seq[(Option[String], Int)],
+    stages: Seq[StageRun], scanRows: Map[String, Long]) {
+  /** Rows read from the files under `path`, over every scan of them. */
+  def rowsScanned(path: String): Long =
+    scanRows.collect { case (loc, n) if loc.contains(path) => n }.sum
+}
+
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   import scala.jdk.CollectionConverters._
+
+  /** The jobs, stages and file-scan rows `body` runs, tagged by a job
+    * group of their own so no other suite's work is counted. Scan rows
+    * come from each file scan's "number of output rows" metric (a scan
+    * that builds a cache included), found in the SQL plans as they are
+    * planned and re-planned, and summed over the group's tasks. Reads of
+    * cached blocks are not file reads and do not count. */
+  def sparkWork(body: => Unit): SparkWork = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val sc = spark.sparkContext
+    val group = s"spark-work-${System.nanoTime}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Option[String], Int)]()
+    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRun]()
+    // scan row-count accumulator id → the scan's location
+    val scanAcc = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val scanRows = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    def scans(p: SparkPlanInfo): Unit = {
+      p.metadata.get("Location").foreach { loc =>
+        p.metrics.filter(_.name == "number of output rows")
+          .foreach(m => scanAcc.put(m.accumulatorId, loc))
+      }
+      p.children.foreach(scans)
+    }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.add((Option(e.properties.getProperty("spark.sql.execution.id")),
+            e.stageInfos.size))
+          e.stageIds.foreach(stageIds.add)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        if (stageIds.contains(i.stageId))
+          stages.add(StageRun(i.numTasks, i.rddInfos.map(_.name)))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stageIds.contains(e.stageId)) e.taskInfo.accumulables.foreach { a =>
+          Option(scanAcc.get(a.id)).foreach { loc =>
+            val n = a.update.map(_.toString.toLong).getOrElse(0L)
+            scanRows.merge(loc, n, (x: Long, y: Long) => x + y)
+          }
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => scans(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => scans(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "spark work of one test block")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    SparkWork(jobs.asScala.toSeq, stages.asScala.toSeq,
+      scanRows.asScala.map { case (k, v) => k -> v }.toMap)
+  }
 
   /** Each case owns the operator caches it builds, like an API request
     * does: they are released when the case ends, so the shared session
